@@ -28,7 +28,7 @@ MAX_CODES = 255  # 0..254 usable, 255 reserved for escape
 MAX_SYM_LEN = 8
 _TRAIN_SAMPLE = 1 << 14  # training-time/quality sweet spot: a 16 KiB prefix
 # sample gives within ~0.5% of the 64 KiB-sample size on id-suffix streams
-# at roughly half the training cost (scripts/exp_conf.py-style sweep)
+# at roughly half the training cost (fresh-process sample-size sweep)
 _TRAIN_ITERS = 5
 _U64_1 = np.uint64(1)
 _FULL64 = np.uint64(0xFFFFFFFFFFFFFFFF)

@@ -51,55 +51,11 @@ class DecodeOptions:
     max_errors: int = 0
     fail_fast: bool = False
 
-TOKEN_SPARK_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("tokens", ArrayType(IntegerType(), False), False),
-        StructField("n_tok", IntegerType(), False),
-        StructField("source", StringType(), False),
-    ]
-)
-
-_TOKEN_PA_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("tokens", pa.list_(pa.int32())),
-        ("n_tok", pa.int32()),
-        ("source", pa.string()),
-    ]
-)
-
 
 _ALL_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
-# output-coalescer bounds (rows AND bytes) before the Arrow IPC return —
-# env-overridable so deployments (and scaling experiments) can tune the
-# batch size crossing the Python->JVM boundary without a code change.
-# NOTE: read at import time on driver AND executors; both sides must see
-# the same environment for the setting to take effect in the kernel.
-def _env_int(name: str, default: int) -> int:
-    """Positive-int env override: malformed or non-positive values fall
-    back to the default with a warning instead of raising on every import
-    (driver AND executors import this module) or silently breaking the
-    coalescer's flush conditions with 0/negative bounds."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    try:
-        v = int(raw)
-    except ValueError:
-        v = -1
-    if v < 1:
-        import warnings
-
-        warnings.warn(
-            f"{name}={raw!r} is not a positive integer; using {default}"
-        )
-        return default
-    return v
-
-
-_COALESCE_ROWS = _env_int("SPARK_GRAFT_DECODE_BATCH_ROWS", 16384)
-_COALESCE_BYTES = _env_int("SPARK_GRAFT_DECODE_BATCH_BYTES", 16 << 20)
+# output-coalescer bounds (rows AND bytes) before the Arrow IPC return
+_COALESCE_ROWS = 16384
+_COALESCE_BYTES = 16 << 20
 
 
 def _build_schemas(cfg, cols: tuple[str, ...]):
@@ -384,10 +340,6 @@ def make_decode_kernel(
             yield from pa.Table.from_batches(buf).combine_chunks().to_batches()
 
     return kernel
-
-
-def decode_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    yield from make_decode_kernel(_ALL_COLUMNS, _TOKEN_PA_SCHEMA)(batches)
 
 
 def _resolve_columns(columns: list[str] | None, cfg) -> tuple[str, ...]:

@@ -64,23 +64,30 @@ _MAX_COLLECTED = 100_000
 _SEARCH_BLOCK = 1 << 16
 
 
-def prune_to_candidates(
-    chunk_df: DataFrame, cand: DataFrame, max_collected: int = _MAX_COLLECTED
-) -> DataFrame:
-    """Push a candidate chunk_id set into the chunk table's scan — the one
-    place the collect-vs-semijoin pushdown policy lives (lookup_docs and
-    the extras zone map both prune through it). Small sets are collected
-    into a driver-side In() filter that reaches the parquet row-group
-    stats, so skipped chunks' blob bytes are never read; sets past
-    max_collected stay distributed as a left-semi join (blobs read, never
-    decoded). cand: any DataFrame with a chunk_id column."""
+def split_candidates(
+    chunk_df: DataFrame, cand: DataFrame
+) -> tuple[DataFrame, DataFrame, bool]:
+    """-> (candidate chunks, every other chunk, any candidates) for a
+    candidate chunk_id set — the one place the collect-vs-semijoin
+    pushdown policy lives (lookup, the token and extras indexes and the
+    mutation rewrite all prune through it). Sets of at most _MAX_COLLECTED
+    ids are collected into a driver-side In() filter that reaches the
+    parquet row-group stats, so skipped chunks' blob bytes are never read;
+    larger sets stay distributed as a left-semi / left-anti join pair
+    (blobs read, never decoded). cand: any DataFrame with a chunk_id
+    column."""
     cand = cand.select("chunk_id")
-    ids = [r["chunk_id"] for r in cand.limit(max_collected + 1).collect()]
+    ids = [r["chunk_id"] for r in cand.limit(_MAX_COLLECTED + 1).collect()]
     if not ids:
-        return chunk_df.limit(0)
-    if len(ids) <= max_collected:
-        return chunk_df.where(F.col("chunk_id").isin(ids))
-    return chunk_df.join(cand, "chunk_id", "left_semi")
+        return chunk_df.limit(0), chunk_df, False
+    if len(ids) <= _MAX_COLLECTED:
+        mask = F.col("chunk_id").isin(ids)
+        return chunk_df.where(mask), chunk_df.where(~mask), True
+    return (
+        chunk_df.join(cand, "chunk_id", "left_semi"),
+        chunk_df.join(cand, "chunk_id", "left_anti"),
+        True,
+    )
 
 
 def recover_salt_plan(
@@ -179,29 +186,28 @@ def _normalize_keys(chunk_df: DataFrame, keys) -> tuple[DataFrame, bool]:
     return kdf, had_source
 
 
-def _bracketed_meta(chunk_df: DataFrame, validate: bool) -> DataFrame:
-    """Chunk metadata + the zone-map right edge (next chunk's first doc).
-    validate=True additionally proves the single-run precondition's
-    detectable half: within every (source, part_id), chunk_seq strictly
-    ascends and first_doc_id never descends."""
+def _bracketed_meta(chunk_df: DataFrame) -> DataFrame:
+    """Chunk metadata + the zone-map right edge (next chunk's first doc),
+    after proving the single-run precondition's detectable half: within
+    every (source, part_id), chunk_seq strictly ascends and first_doc_id
+    never descends."""
     meta = chunk_df.select(*_META_COLS)
     w = Window.partitionBy("source", "part_id").orderBy("chunk_seq")
-    if validate:
-        checked = meta.withColumn("__prev_first", F.lag("first_doc_id").over(w)) \
-            .withColumn("__prev_seq", F.lag("chunk_seq").over(w))
-        bad = checked.where(
-            (F.col("chunk_seq") == F.col("__prev_seq"))
-            | (F.col("first_doc_id") < F.col("__prev_first"))
-        ).take(1)
-        if bad:
-            r = bad[0]
-            raise PipelineContractError(
-                "chunk table violates the single-encode-run layout lookup "
-                f"relies on: group ({r['source']!r}, part {r['part_id']}) "
-                f"has chunk_seq {r['chunk_seq']} with first_doc_id "
-                f"{r['first_doc_id']!r} out of order — was this table a "
-                "union of independent encode runs? Decode + filter instead."
-            )
+    checked = meta.withColumn("__prev_first", F.lag("first_doc_id").over(w)) \
+        .withColumn("__prev_seq", F.lag("chunk_seq").over(w))
+    bad = checked.where(
+        (F.col("chunk_seq") == F.col("__prev_seq"))
+        | (F.col("first_doc_id") < F.col("__prev_first"))
+    ).take(1)
+    if bad:
+        r = bad[0]
+        raise PipelineContractError(
+            "chunk table violates the single-encode-run layout lookup "
+            f"relies on: group ({r['source']!r}, part {r['part_id']}) "
+            f"has chunk_seq {r['chunk_seq']} with first_doc_id "
+            f"{r['first_doc_id']!r} out of order — was this table a "
+            "union of independent encode runs? Decode + filter instead."
+        )
     return meta.withColumn("__next_first", F.lead("first_doc_id").over(w))
 
 
@@ -209,7 +215,6 @@ def candidate_hits(
     chunk_df: DataFrame,
     keys,
     salts: dict[str, int] | None = None,
-    validate: bool = True,
 ) -> DataFrame:
     """(chunk_id, __k_doc) pairs: for each requested (source, doc_id) key,
     the chunks whose zone-map bracket can contain it — the shared pruning
@@ -217,7 +222,7 @@ def candidate_hits(
     which needs to know WHICH keys target each candidate chunk. Superset
     semantics: a paired chunk may not actually hold the key."""
     kdf, _ = _normalize_keys(chunk_df, keys)
-    meta = _bracketed_meta(chunk_df, validate)
+    meta = _bracketed_meta(chunk_df)
     k = kdf.select(
         F.col("source").alias("__k_src"), F.col("doc_id").alias("__k_doc")
     )
@@ -261,7 +266,6 @@ def candidate_chunk_ids(
     chunk_df: DataFrame,
     keys,
     salts: dict[str, int] | None = None,
-    validate: bool = True,
 ) -> DataFrame:
     """Distinct chunk_ids that can contain the requested (source, doc_id)
     keys — a candidate SUPERSET in the data-skipping sense (kept chunks
@@ -271,9 +275,9 @@ def candidate_chunk_ids(
     covered sources each key prunes to its ONE hash-assigned part; others
     bracket every part of the source. MUST be the exact encode plan —
     prefer recover_salt_plan, which certifies against the table."""
-    return candidate_hits(
-        chunk_df, keys, salts=salts, validate=validate
-    ).select("chunk_id").distinct()
+    return candidate_hits(chunk_df, keys, salts=salts).select(
+        "chunk_id"
+    ).distinct()
 
 
 def lookup_docs(
@@ -282,8 +286,6 @@ def lookup_docs(
     cfg=None,
     columns: list[str] | None = None,
     salts: dict[str, int] | None = None,
-    max_collected: int = _MAX_COLLECTED,
-    validate: bool = True,
 ) -> DataFrame:
     """Decode exactly the docs named by `keys` from an encoded chunk table.
 
@@ -303,8 +305,8 @@ def lookup_docs(
     kdf, had_source = _normalize_keys(chunk_df, keys)
     if salts is None:
         salts = recover_salt_plan(chunk_df)
-    cand = candidate_chunk_ids(chunk_df, kdf, salts=salts, validate=validate)
-    pruned = prune_to_candidates(chunk_df, cand, max_collected)
+    cand = candidate_chunk_ids(chunk_df, kdf, salts=salts)
+    pruned, _, _ = split_candidates(chunk_df, cand)
     want = list(_resolve_columns(columns, cfg))
     dec_cols = (
         None

@@ -24,9 +24,6 @@ from pyspark.sql import DataFrame
 
 FEATURE_DIM = 16
 
-MEDIA_SCHEMA = (
-    "media_id long, media binary, kind string, width int, height int"
-)
 FEATURES_SCHEMA = "media_id long, kind string, n_bytes long, features array<float>"
 
 _FEAT_PA = pa.schema(

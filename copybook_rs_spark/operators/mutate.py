@@ -73,10 +73,10 @@ from copybook_rs_spark.operators.encode import (
 )
 from copybook_rs_spark.operators.extras import _check_schema_fp
 from copybook_rs_spark.operators.lookup import (
-    _MAX_COLLECTED,
     _bracketed_meta,
     candidate_hits,
     recover_salt_plan,
+    split_candidates,
 )
 from copybook_rs_spark.plans.partition import plan_salts, with_part_id
 
@@ -98,25 +98,6 @@ def _doc_id_array(doc_b: bytes, doc_l: np.ndarray) -> pa.StringArray:
     offs = _offsets32(doc_l, len(doc_l), "doc_id bytes")
     return pa.StringArray.from_buffers(
         len(doc_l), pa.py_buffer(offs.tobytes()), pa.py_buffer(doc_b)
-    )
-
-
-def _split_candidates(
-    chunk_df: DataFrame, cand_ids: DataFrame, max_collected: int
-) -> tuple[DataFrame, DataFrame, bool]:
-    """-> (candidate chunks, untouched chunks, any_candidates). Small
-    candidate sets collect into an In() filter the parquet scan can push
-    down (untouched blobs are never read); larger ones stay distributed."""
-    ids = [r["chunk_id"] for r in cand_ids.limit(max_collected + 1).collect()]
-    if not ids:
-        return chunk_df.limit(0), chunk_df, False
-    if len(ids) <= max_collected:
-        mask = F.col("chunk_id").isin(ids)
-        return chunk_df.where(mask), chunk_df.where(~mask), True
-    return (
-        chunk_df.join(cand_ids, "chunk_id", "left_semi"),
-        chunk_df.join(cand_ids, "chunk_id", "left_anti"),
-        True,
     )
 
 
@@ -311,12 +292,10 @@ def _make_mutation_kernel(cfg: EncodeConfig, op: str):
     return kernel
 
 
-def _per_chunk_deletes(
-    chunk_df: DataFrame, keys, salts, validate
-) -> DataFrame:
+def _per_chunk_deletes(chunk_df: DataFrame, keys, salts) -> DataFrame:
     """(chunk_id, __del_ids) — requested keys grouped onto their zone-map
     candidate chunks (superset; the kernel applies the exact filter)."""
-    hits = candidate_hits(chunk_df, keys, salts=salts, validate=validate)
+    hits = candidate_hits(chunk_df, keys, salts=salts)
     return hits.groupBy("chunk_id").agg(
         F.collect_set("__k_doc").alias("__del_ids")
     )
@@ -327,7 +306,6 @@ def _route_inserts(
     new_df: DataFrame,
     cfg: EncodeConfig,
     salts: dict[str, int],
-    validate: bool,
 ) -> tuple[DataFrame, DataFrame]:
     """-> ((chunk_id, __new sorted struct list), leftover token rows).
     Docs of sources already in the table go to their hash part under
@@ -351,7 +329,7 @@ def _route_inserts(
     fresh = new_df.where(~F.col("source").isin(list(table_sources)))
     existing = new_df.where(F.col("source").isin(list(table_sources)))
     routed = with_part_id(existing, salts)
-    meta = _bracketed_meta(chunk_df, validate)
+    meta = _bracketed_meta(chunk_df)
     # the part's lowest-seq chunk also owns every key below its first doc
     w = Window.partitionBy("source", "part_id")
     meta = meta.withColumn(
@@ -425,8 +403,6 @@ def _apply_mutation(
     new_df: DataFrame | None,
     cfg: EncodeConfig,
     salts: dict[str, int] | None,
-    validate: bool,
-    max_collected: int,
     op: str,
 ) -> DataFrame:
     """Shared fused driver plan: per-chunk delete targets + per-chunk
@@ -436,20 +412,18 @@ def _apply_mutation(
     if salts is None:
         salts = recover_salt_plan(chunk_df)
     per_del = (
-        _per_chunk_deletes(chunk_df, del_keys, salts, validate)
+        _per_chunk_deletes(chunk_df, del_keys, salts)
         if del_keys is not None else None
     )
     per_new, leftovers = (
-        _route_inserts(chunk_df, new_df, cfg, salts, validate)
+        _route_inserts(chunk_df, new_df, cfg, salts)
         if new_df is not None else (None, None)
     )
     if per_del is not None and per_new is not None:
         per_chunk = per_del.join(per_new, "chunk_id", "full_outer")
     else:
         per_chunk = per_del if per_del is not None else per_new
-    cand_chunks, untouched, any_cand = _split_candidates(
-        chunk_df, per_chunk.select("chunk_id"), max_collected
-    )
+    cand_chunks, untouched, any_cand = split_candidates(chunk_df, per_chunk)
     out = untouched
     if any_cand:
         joined = cand_chunks.join(per_chunk, "chunk_id", "left")
@@ -470,8 +444,6 @@ def delete_docs(
     keys,
     cfg: EncodeConfig | None = None,
     salts: dict[str, int] | None = None,
-    validate: bool = True,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Remove the named (source, doc_id) docs from an encoded chunk table,
     touching only the chunks that can contain them (module docstring).
@@ -485,8 +457,7 @@ def delete_docs(
     salts: encode-time salt plan; omitted -> recover_salt_plan (recover
     once and pass in when issuing many mutations against one table)."""
     return _apply_mutation(
-        chunk_df, keys, None, cfg or EncodeConfig(), salts, validate,
-        max_collected, "delete_docs",
+        chunk_df, keys, None, cfg or EncodeConfig(), salts, "delete_docs"
     )
 
 
@@ -495,16 +466,13 @@ def insert_docs(
     new_df: DataFrame,
     cfg: EncodeConfig | None = None,
     salts: dict[str, int] | None = None,
-    validate: bool = True,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Insert NEW documents into an encoded chunk table at their canonical
     position (module docstring). new_df: token-table rows (doc_id, tokens,
     source + every cfg extras column). A doc_id already present in its
     target chunk fails typed — use upsert_docs to replace."""
     return _apply_mutation(
-        chunk_df, None, new_df, cfg or EncodeConfig(), salts, validate,
-        max_collected, "insert_docs",
+        chunk_df, None, new_df, cfg or EncodeConfig(), salts, "insert_docs"
     )
 
 
@@ -513,8 +481,6 @@ def upsert_docs(
     new_df: DataFrame,
     cfg: EncodeConfig | None = None,
     salts: dict[str, int] | None = None,
-    validate: bool = True,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Replace-or-insert: old copies of every incoming doc_id are dropped
     and the new rows merged in the SAME per-chunk rewrite (fused — no
@@ -522,6 +488,5 @@ def upsert_docs(
     Ids not present simply insert."""
     return _apply_mutation(
         chunk_df, new_df.select("source", "doc_id"), new_df,
-        cfg or EncodeConfig(), salts, validate, max_collected,
-        "upsert_docs",
+        cfg or EncodeConfig(), salts, "upsert_docs",
     )

@@ -18,9 +18,7 @@ need between "deduped token table" and "training loader":
 
 Scale notes: the per-source running token count defaults to a two-phase
 DISTRIBUTED prefix sum over the narrow (source, order, length) triples
-(`_distributed_prefix_sum`) — no one-task-per-source window anywhere; the
-single-window variant remains available (distributed_cumsum=False) as the
-equivalence reference. The heavy data movement (token slices -> sequences)
+(`_distributed_prefix_sum`) — no one-task-per-source window anywhere. The heavy data movement (token slices -> sequences)
 is seq-keyed and fully parallel.
 
 Single-fat-exchange paths (round-4 verdict #3, tightened round 6): only
@@ -43,21 +41,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from copybook_rs_spark.operators.decode import _env_int
-
 # Auto-broadcast ceiling for the positions join: one cumsum row per doc,
 # so row count == doc count and ~4M rows build a few-hundred-MB hashed
 # relation (guide §3.1's comfortable zone under the 8 GB broadcast cap).
-# Parameterised for deployments with bigger drivers; above it the join
-# falls back to a shuffle join of the fat side — the case the
-# write_bucketed_tokens layout exists for. _env_int = warn-and-default on
-# malformed values (the round-4 env-knob discipline), never an import error.
-_PACK_BROADCAST_MAX_DOCS = _env_int("SPARK_GRAFT_PACK_BROADCAST_DOCS", 4_000_000)
+# Above it the join falls back to a shuffle join of the fat side — the
+# case the write_bucketed_tokens layout exists for.
+_PACK_BROADCAST_MAX_DOCS = 4_000_000
 
 
-def _distributed_prefix_sum(
-    base: DataFrame, broadcast_positions: bool | None = None
-) -> DataFrame:
+def _distributed_prefix_sum(base: DataFrame) -> DataFrame:
     """Per-source running token count WITHOUT a one-task-per-source window:
     the classic two-phase distributed prefix sum, on the NARROW (source,
     __ord, __len) triples only (token arrays never ride through it).
@@ -165,9 +157,7 @@ def _distributed_prefix_sum(
         .select("source", "__ord", "__cum_end")
         .localCheckpoint(eager=False)
     )
-    if broadcast_positions is None:
-        broadcast_positions = n <= _PACK_BROADCAST_MAX_DOCS
-    if broadcast_positions:
+    if n <= _PACK_BROADCAST_MAX_DOCS:
         return base.join(F.broadcast(cum_narrow), ["source", "__ord"])
     # merge hint pins a sort-merge join: never lets the planner broadcast
     # the un-estimatable side (= the token arrays) by mistake; a bucketed
@@ -179,8 +169,6 @@ def pack_sequences(
     df: DataFrame,
     seq_len: int,
     doc_order: str = "doc_id",
-    distributed_cumsum: bool = True,
-    broadcast_positions: bool | None = None,
 ) -> DataFrame:
     """Token table -> packed-sequence table
     (source, seq_id, tokens, n_tokens, n_docs, boundaries) — boundaries =
@@ -193,11 +181,10 @@ def pack_sequences(
     global start offset. Every sequence has exactly seq_len tokens except
     the last one per source. Zero-token documents contribute nothing.
 
-    broadcast_positions: None (default) broadcasts the narrow cumsum table
-    into the positions join when the doc count is known small (the token
-    arrays then move through ONE exchange, the seq-keyed reassembly);
-    False pins the shuffle-join plan (the bucketed-table path); True
-    forces the broadcast regardless of count."""
+    The narrow cumsum table is broadcast into the positions join when the
+    doc count is at most _PACK_BROADCAST_MAX_DOCS (the token arrays then
+    move through ONE exchange, the seq-keyed reassembly); above it a
+    shuffle join runs (the bucketed-table path)."""
     if seq_len < 1:
         raise ValueError("seq_len must be >= 1")
     L = F.lit(int(seq_len)).cast("long")
@@ -205,16 +192,9 @@ def pack_sequences(
         "source", F.col(doc_order).alias("__ord"), "tokens",
         F.size("tokens").cast("long").alias("__len"),
     )
-    if distributed_cumsum:
-        cum = _distributed_prefix_sum(base, broadcast_positions)
-    else:
-        w = (
-            Window.partitionBy("source")
-            .orderBy("__ord")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = base.withColumn("__cum_end", F.sum("__len").over(w))
-    cum = cum.withColumn("__cum_start", F.col("__cum_end") - F.col("__len"))
+    cum = _distributed_prefix_sum(base).withColumn(
+        "__cum_start", F.col("__cum_end") - F.col("__len")
+    )
     parts = (
         cum.filter(F.col("__len") > 0)
         .withColumn(

@@ -28,7 +28,7 @@ candidacy, never to wrong data.
    the chunk table's own min/max token envelope — authoritative columns
    of the table, so the range test is exact pruning even for unknown
    chunks. Small candidate sets push into the parquet scan as an
-   In(chunk_id) filter via the shared `prune_to_candidates`.
+   In(chunk_id) filter via the shared `lookup.split_candidates`.
 
 3. **Search** (`docs_with_token`): prune -> decode candidates -> exact
    JVM-side per-document occurrence count (`F.filter` on the token
@@ -61,10 +61,7 @@ from pyspark.sql.types import (
 
 from copybook_rs_spark import blob as blob_mod
 from copybook_rs_spark.errors import PipelineContractError, TruncatedBlobError
-from copybook_rs_spark.operators.lookup import (
-    _MAX_COLLECTED,
-    prune_to_candidates,
-)
+from copybook_rs_spark.operators.lookup import split_candidates
 from copybook_rs_spark.operators.zonemap import certify_blob_crc, refresh_index
 
 # exact bitmap ceiling: ranges up to this many BITS store exact presence
@@ -278,7 +275,6 @@ def docs_with_all_tokens(
     index_df: DataFrame,
     tokens,
     cfg=None,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Conjunctive document search: every (doc_id, source) whose token
     array contains EVERY needle in `tokens`. A qualifying doc's chunk
@@ -294,9 +290,7 @@ def docs_with_all_tokens(
         return chunk_df.sparkSession.createDataFrame(
             [], "doc_id string, source string"
         )
-    return _docs_with_tokens(
-        chunk_df, index_df, needles, "all", cfg, max_collected
-    )
+    return _docs_with_tokens(chunk_df, index_df, needles, "all", cfg)
 
 
 def docs_with_any_token(
@@ -304,7 +298,6 @@ def docs_with_any_token(
     index_df: DataFrame,
     tokens,
     cfg=None,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Disjunctive document search: every (doc_id, source) whose token
     array contains AT LEAST ONE needle. Candidates = union of per-needle
@@ -320,9 +313,7 @@ def docs_with_any_token(
         return chunk_df.sparkSession.createDataFrame(
             [], "doc_id string, source string"
         )
-    return _docs_with_tokens(
-        chunk_df, index_df, needles, "any", cfg, max_collected
-    )
+    return _docs_with_tokens(chunk_df, index_df, needles, "any", cfg)
 
 
 def _docs_with_tokens(
@@ -331,7 +322,6 @@ def _docs_with_tokens(
     needles: list[int],
     mode: str,
     cfg,
-    max_collected: int,
 ) -> DataFrame:
     """Shared prune → decode → exact boolean filter behind the
     conjunctive and disjunctive searches (one index pass either way —
@@ -340,7 +330,7 @@ def _docs_with_tokens(
     from copybook_rs_spark.operators.decode import decode_tokens
 
     cand = _candidate_ids(chunk_df, index_df, needles, mode=mode)
-    pruned = prune_to_candidates(chunk_df, cand, max_collected)
+    pruned, _, _ = split_candidates(chunk_df, cand)
     dec = decode_tokens(pruned, columns=["doc_id", "tokens", "source"], cfg=cfg)
     if mode == "all":
         # exists-with-== coerces int32/int64 element types like
@@ -374,7 +364,6 @@ def filter_chunks_by_token(
     chunk_df: DataFrame,
     index_df: DataFrame,
     token: int,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Chunk-skip pushdown for token membership. Returns the CANDIDATE
     chunk rows (data-skipping contract: kept chunks may hold only
@@ -393,7 +382,7 @@ def filter_chunks_by_token(
         # overflow F.lit / the numpy probe below with an untyped error)
         return chunk_df.limit(0)
     cand = _candidate_ids(chunk_df, index_df, [token])
-    return prune_to_candidates(chunk_df, cand, max_collected)
+    return split_candidates(chunk_df, cand)[0]
 
 
 def _candidate_ids(
@@ -461,7 +450,6 @@ def docs_with_token(
     index_df: DataFrame,
     token: int,
     cfg=None,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Exact document search: every (doc_id, source, n_hits) whose token
     array contains `token`, with n_hits = occurrence count. Equal to
@@ -476,9 +464,7 @@ def docs_with_token(
         return spark.createDataFrame(
             [], "doc_id string, source string, n_hits int"
         )
-    pruned = filter_chunks_by_token(
-        chunk_df, index_df, token, max_collected=max_collected
-    )
+    pruned = filter_chunks_by_token(chunk_df, index_df, token)
     dec = decode_tokens(pruned, columns=["doc_id", "tokens", "source"], cfg=cfg)
     return (
         dec.select(

@@ -68,10 +68,7 @@ from copybook_rs_spark.config import decimal_params
 import zlib
 
 from copybook_rs_spark.errors import PipelineContractError, TruncatedBlobError
-from copybook_rs_spark.operators.lookup import (
-    _MAX_COLLECTED,
-    prune_to_candidates,
-)
+from copybook_rs_spark.operators.lookup import split_candidates
 
 INDEX_SCHEMA = StructType(
     [
@@ -300,7 +297,6 @@ def filter_chunks_by_extras(
     lo=None,
     hi=None,
     etype: str | None = None,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Chunk-skip pushdown for a range predicate on an extra column, using
     an advisory build_extras_index table. Returns the CANDIDATE chunk rows
@@ -376,7 +372,7 @@ def filter_chunks_by_extras(
     unknown = meta.join(known, on, "left_anti").select("chunk_id")
     passing = meta.join(cand_idx, on, "left_semi").select("chunk_id")
     cand = passing.unionByName(unknown).distinct()
-    return prune_to_candidates(chunk_df, cand, max_collected)
+    return split_candidates(chunk_df, cand)[0]
 
 
 def decode_where(
@@ -387,7 +383,6 @@ def decode_where(
     hi=None,
     columns: list[str] | None = None,
     cfg=None,
-    max_collected: int = _MAX_COLLECTED,
 ) -> DataFrame:
     """Decode exactly the documents where ANY element of `column` lies in
     [lo, hi] (either bound optional, both inclusive), pruning non-
@@ -419,7 +414,6 @@ def decode_where(
         lo=lo,
         hi=hi,
         etype=etype,
-        max_collected=max_collected,
     )
     want = list(_resolve_columns(columns, cfg))
     dec_cols = (

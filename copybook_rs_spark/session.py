@@ -34,9 +34,7 @@ def warm_python_workers(spark: SparkSession, cores: int) -> None:
     few tasks. `cores` simultaneous one-row tasks force the daemon to fork
     a full worker pool once through the SAME mapInArrow path the kernels
     use; every later kernel task reuses a warm worker. No data or results
-    are touched. Opt out with SPARK_GRAFT_WARM_WORKERS=0."""
-    if os.environ.get("SPARK_GRAFT_WARM_WORKERS", "1") == "0":
-        return
+    are touched."""
     if getattr(spark, "_cbsp_workers_warm", False):
         return
     sc = spark.sparkContext

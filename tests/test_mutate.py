@@ -162,9 +162,7 @@ def test_insert_new_docs_bracket_edges_and_fresh_source(spark):
         want = _tok_rows(df.unionByName(ndf))
         assert got == want
         # inserted docs are servable through the point-lookup path
-        hit = lookup_docs(
-            after, [r[0] for r in new_rows], cfg=cfg, validate=True
-        )
+        hit = lookup_docs(after, [r[0] for r in new_rows], cfg=cfg)
         assert sorted(r["doc_id"] for r in hit.collect()) == sorted(
             r[0] for r in new_rows
         )

@@ -844,9 +844,29 @@ def test_split_train_val_deterministic_and_stratified(spark, docs):
         split_train_val(docs, train_pct=95, val_pct=10)
 
 
-def test_pack_sequences_distributed_cumsum_matches_window(spark):
-    # the two-phase distributed prefix sum must produce exactly the same
-    # packing as the single-window reference path, at several parallelisms
+def _pack_reference(rows, seq_len):
+    """Plain-Python packing: per source, docs sorted by doc_id,
+    concatenated, cut every seq_len tokens ->
+    {(source, seq_id): (tokens, boundaries, n_docs)}."""
+    out = {}
+    for src in sorted({r[3] for r in rows}):
+        flat, starts = [], []
+        for doc_id, toks, _, _ in sorted(r for r in rows if r[3] == src):
+            starts.append((len(flat), len(toks)))
+            flat.extend(toks)
+        for seq in range((len(flat) + seq_len - 1) // seq_len):
+            lo, hi = seq * seq_len, (seq + 1) * seq_len
+            out[(src, seq)] = (
+                flat[lo:hi],
+                [p - lo for p, n in starts if n and lo <= p < hi],
+                sum(1 for p, n in starts if n and p < hi and p + n > lo),
+            )
+    return out
+
+
+def test_pack_sequences_distributed_cumsum_matches_reference(spark):
+    # the two-phase distributed prefix sum must produce exactly the
+    # plain-Python concat-and-cut packing, at several parallelisms
     from copybook_rs_spark.operators.packing import pack_sequences
 
     rng = np.random.default_rng(13)
@@ -859,16 +879,13 @@ def test_pack_sequences_distributed_cumsum_matches_window(spark):
     df = spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string"
     )
-    want = {
-        (r["source"], r["seq_id"]): list(r["tokens"])
-        for r in pack_sequences(df, 32, distributed_cumsum=False).collect()
-    }
+    want = _pack_reference(rows, 32)
     for reparts in (1, 5, 23):
         got = {
-            (r["source"], r["seq_id"]): list(r["tokens"])
-            for r in pack_sequences(
-                df.repartition(reparts), 32, distributed_cumsum=True
-            ).collect()
+            (r["source"], r["seq_id"]): (
+                list(r["tokens"]), list(r["boundaries"]), r["n_docs"]
+            )
+            for r in pack_sequences(df.repartition(reparts), 32).collect()
         }
         assert got == want, reparts
 

@@ -230,13 +230,14 @@ def test_pack_sequences_plan_quality(spark):
     assert "BroadcastHashJoin" in fplan or "BroadcastQueryStage" in fplan
 
 
-def test_pack_sequences_bucketed_single_fat_exchange(spark, tmp_path):
+def test_pack_sequences_bucketed_single_fat_exchange(spark, tmp_path, monkeypatch):
     # round-4 verdict #3: over a table bucketed+sorted by the order key,
     # the positions join runs with NO exchange on the fat (token-array)
     # side — the plan's only hashpartitioning exchanges are the narrow
     # cumsum rows shuffling to the bucket layout and the unavoidable
     # seq-keyed reassembly; and the packed output is identical to the
     # unbucketed path
+    from copybook_rs_spark.operators import packing
     from copybook_rs_spark.operators.packing import (
         pack_sequences,
         write_bucketed_tokens,
@@ -252,11 +253,14 @@ def test_pack_sequences_bucketed_single_fat_exchange(spark, tmp_path):
     try:
         spark.sql("DROP TABLE IF EXISTS __test_tok_bucketed")
         bt = write_bucketed_tokens(df, "__test_tok_bucketed", 4)
-        # broadcast_positions=False pins the at-scale fallback (the plan
+        # a zero broadcast ceiling pins the at-scale fallback (the plan
         # write_bucketed_tokens exists for); the default would broadcast
         # the narrow side at this row count and skip the join exchange
-        # entirely (asserted in test_pack_sequences_plan_quality)
-        packed = pack_sequences(bt, 16, broadcast_positions=False)
+        # entirely (asserted in test_pack_sequences_plan_quality). The
+        # join strategy is fixed when pack_sequences is called.
+        with monkeypatch.context() as m:
+            m.setattr(packing, "_PACK_BROADCAST_MAX_DOCS", 0)
+            packed = pack_sequences(bt, 16)
         plan = packed._jdf.queryExecution().executedPlan().toString()
         assert "Bucketed: true" in plan  # fat scan supplies the join layout
         ex = [

@@ -986,21 +986,6 @@ def test_decode_ledger_compaction_keeps_blob_crc(spark, tmp_path):
     )
 
 
-def test_decode_batch_env_validation(monkeypatch):
-    # ADVICE r5 #4: malformed/non-positive batch-size env overrides fall
-    # back to the default with a warning instead of raising on import or
-    # silently breaking the output coalescer's flush conditions
-    from copybook_rs_spark.operators.decode import _env_int
-
-    assert _env_int("SPARK_GRAFT_TEST_UNSET", 7) == 7
-    monkeypatch.setenv("SPARK_GRAFT_TEST_BATCH", "123")
-    assert _env_int("SPARK_GRAFT_TEST_BATCH", 7) == 123
-    for bad in ("abc", "0", "-5", "1.5", ""):
-        monkeypatch.setenv("SPARK_GRAFT_TEST_BATCH", bad)
-        with pytest.warns(UserWarning):
-            assert _env_int("SPARK_GRAFT_TEST_BATCH", 7) == 7
-
-
 def test_run_decode_resumable_detects_extras_append(spark, tmp_path):
     # append_extra_column rewrites only the extras tail: chunk_id AND the
     # body-crc column are unchanged, so the membership fingerprint's
