@@ -11,7 +11,6 @@ from copybook_rs_spark.operators.extras import (  # noqa: F401
 from copybook_rs_spark.operators.decode import (  # noqa: F401
     decode_tokens,
     read_decoded,
-    run_decode,
     run_decode_resumable,
 )
 from copybook_rs_spark.operators.lookup import (  # noqa: F401

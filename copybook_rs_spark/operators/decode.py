@@ -8,6 +8,7 @@ here by crc32-verified blobs + array equality pytest fixtures).
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterator
 
@@ -42,7 +43,7 @@ class DecodeOptions:
 
     policy: "strict" (default — first corrupt chunk fails the job) or
     "lenient" (corrupt chunks are skipped and counted).
-    max_errors: lenient error budget; run_decode fails typed
+    max_errors: lenient error budget; run_decode_resumable fails typed
     (CBSP205) once the total corrupt-chunk count exceeds it.
     fail_fast: lenient, but abort on the first error after counting it
     (report-then-stop, vs strict's raw raise)."""
@@ -358,21 +359,14 @@ def _resolve_columns(columns: list[str] | None, cfg) -> tuple[str, ...]:
     return tuple(c for c in all_cols if c in set(columns))
 
 
-def _plan_decode(
-    chunk_df: DataFrame,
-    columns: list[str] | None,
-    cfg,
-    min_parallelism: int | None = None,
-):
+def _plan_decode(chunk_df: DataFrame, columns: list[str] | None, cfg):
     """Shared column-resolution / schema / parallelism planning for
-    decode_tokens and run_decode (single source of truth)."""
+    decode_tokens and run_decode_resumable (single source of truth)."""
     cols = _resolve_columns(columns, cfg)
     out_pa, out_spark = _build_schemas(cfg, cols)
     tok64 = cfg is not None and cfg.token_dtype == "int64"
     src = chunk_df.select("blob", "source")
-    want = min_parallelism or (
-        2 * chunk_df.sparkSession.sparkContext.defaultParallelism
-    )
+    want = 2 * chunk_df.sparkSession.sparkContext.defaultParallelism
     nparts = src.rdd.getNumPartitions()
     if nparts < want:
         # size-aware rebalance: the shuffle only pays when it unlocks real
@@ -421,7 +415,6 @@ def _input_bytes(df: DataFrame) -> int | None:
 def decode_tokens(
     chunk_df: DataFrame,
     columns: list[str] | None = None,
-    min_parallelism: int | None = None,
     cfg=None,
 ) -> DataFrame:
     """Chunk table -> token table. Only blob+source are read from parquet
@@ -437,9 +430,7 @@ def decode_tokens(
     chunks first: the shuffle moves COMPRESSED bytes (~0.26 B/token), ~100x
     cheaper than the decode it unblocks. Large chunk tables (>= cores
     partitions, the 100 TB case) are left untouched — no shuffle."""
-    src, cols, out_pa, out_spark, tok64 = _plan_decode(
-        chunk_df, columns, cfg, min_parallelism
-    )
+    src, cols, out_pa, out_spark, tok64 = _plan_decode(chunk_df, columns, cfg)
     return src.mapInArrow(make_decode_kernel(cols, out_pa, tok64=tok64), out_spark)
 
 
@@ -481,106 +472,13 @@ def _hadoop_path(spark, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def _publish_staging(spark, staging: str, out_dir: str) -> None:
-    """Promote the staging directory to out_dir through the Hadoop FS API
-    (works on any Spark filesystem). A previous publish at out_dir is
-    renamed ASIDE (out_dir.__old__), never deleted before the new data is
-    in place — so no crash window destroys the prior dataset: a failure
-    mid-swap leaves the old output recoverable at .__old__ and the new one
-    intact in staging. run_decode only calls this AFTER the error-budget
-    check passes — a failed run leaves no complete-looking dataset at
-    out_dir."""
-    fs, src = _hadoop_path(spark, staging)
-    dst = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
-    old = spark._jvm.org.apache.hadoop.fs.Path(out_dir + ".__old__")
-    parent = dst.getParent()
-    if parent is not None and not fs.exists(parent):
-        fs.mkdirs(parent)
-    if fs.exists(old):
-        fs.delete(old, True)
-    had_prev = fs.exists(dst)
-    if had_prev and not fs.rename(dst, old):
-        raise EngineError(
-            f"failed to move previous output aside: {out_dir}", code="CBSP301"
-        )
-    if not fs.rename(src, dst):
-        if had_prev:
-            fs.rename(old, dst)  # restore the prior publish before failing
-        raise EngineError(
-            f"failed to publish decode output {staging} -> {out_dir}",
-            code="CBSP301",
-        )
-    if had_prev:
-        fs.delete(old, True)
-
-
 def _drop_staging(spark, staging: str) -> None:
     try:
         fs, p = _hadoop_path(spark, staging)
         if fs.exists(p):
             fs.delete(p, True)
     except Exception:
-        pass  # best-effort cleanup; the staging suffix marks it non-final
-
-
-def run_decode(
-    chunk_df: DataFrame,
-    out_dir: str,
-    options: DecodeOptions | None = None,
-    columns: list[str] | None = None,
-    cfg=None,
-) -> dict:
-    """Materialize a decode under an error policy ("continue until
-    max_errors corrupt chunks, then fail" — the production lenient mode of
-    the reference's DecodeOptions). Writes the token table to out_dir and
-    returns a run summary {n_errors, error_samples}; raises
-    ErrorBudgetExceededError (CBSP205) once the total corrupt-chunk count
-    exceeds options.max_errors. Error counts flow through Spark
-    accumulators — no second audit pass over the data. Accumulator caveat:
-    if a SUCCEEDED task is re-executed (speculation, stage retry after
-    executor loss) its errors count again, so the budget can trip
-    pessimistically on an unlucky run; audit_chunks gives the exact count
-    for forensics. Failed-task updates are never applied."""
-    opts = options or DecodeOptions()
-    spark = chunk_df.sparkSession
-    sc = spark.sparkContext
-    err_acc = sc.accumulator(0)
-    sample_acc = sc.accumulator([], _SampleParam())
-    src, cols, out_pa, out_spark, tok64 = _plan_decode(chunk_df, columns, cfg)
-    decoded = src.mapInArrow(
-        make_decode_kernel(cols, out_pa, opts, err_acc, sample_acc, tok64), out_spark
-    )
-    # Write to a staging path and publish AFTER the budget check: a lenient
-    # run that exceeds max_errors must not leave a complete-looking parquet
-    # dataset (with _SUCCESS) at out_dir for later consumers to find.
-    staging = out_dir.rstrip("/") + ".__staging__"
-    try:
-        decoded.write.mode("overwrite").parquet(staging)
-    except Exception as e:
-        _drop_staging(spark, staging)
-        # a task-side budget abort (or fail_fast) arrives wrapped by Py4J;
-        # surface it as the typed driver-side error
-        if "CBSP205" in str(e):
-            raise ErrorBudgetExceededError(
-                f"decode aborted mid-flight: error budget exceeded "
-                f"(max_errors={opts.max_errors})"
-            ) from e
-        raise
-    n_errors = int(err_acc.value)
-    summary = {
-        "n_errors": n_errors,
-        "error_samples": list(sample_acc.value),
-        "out_dir": out_dir,
-    }
-    if opts.policy == "lenient" and n_errors > opts.max_errors:
-        _drop_staging(spark, staging)
-        raise ErrorBudgetExceededError(
-            f"decode finished with {n_errors} corrupt chunks "
-            f"> max_errors={opts.max_errors}; samples: "
-            f"{summary['error_samples'][:3]}"
-        )
-    _publish_staging(spark, staging, out_dir)
-    return summary
+        pass  # best-effort cleanup; the .staging- prefix marks it non-final
 
 
 _COMPLETE_MARKER = "_DECODE_COMPLETE"
@@ -598,7 +496,19 @@ def read_decoded(spark, out_dir: str) -> DataFrame:
             "resume it with run_decode_resumable",
             code="CBSP301",
         )
-    out = spark.read.parquet(os.path.join(out_dir, "shards"))
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    shards_root = os.path.join(out_dir, "shards")
+    root_p = jpath(shards_root)
+    if not fs.exists(root_p) or not any(
+        st.getPath().getName().startswith("__shard=")
+        for st in fs.listStatus(root_p)
+    ):
+        # every shard was empty (empty chunk table), so no shard dir holds
+        # a parquet footer: the schema is the one pinned at the first run
+        meta_p = jpath(os.path.join(out_dir, _RESUME_META))
+        meta = json.loads(_fs_read_small(spark, fs, meta_p))
+        return spark.createDataFrame([], meta["schema"])
+    out = spark.read.parquet(shards_root)
     # the __shard=NNNNN dirs are partition-discovered as a column; it is an
     # engine-internal, not part of the user schema
     return out.drop("__shard")
@@ -647,12 +557,17 @@ def run_decode_resumable(
     cfg=None,
     n_shards: int = 64,
 ) -> dict:
-    """run_decode with checkpoint-resume: the chunk table is split into
-    `n_shards` deterministic shards (hash of the (source, part_id) group
-    key), each decoded and committed as its own Spark job under
-    shards/__shard=NNNNN/ — so a 100 TB decode that dies at 95% re-runs
-    only the missing shards instead of restarting from zero (encode has had
-    manifest-gated resume since round 1, sources/manifest.py:115).
+    """The engine's materialized decode: writes the token table under
+    out_dir under an error policy ("continue until max_errors corrupt
+    chunks, then fail typed CBSP205" — the production lenient mode of the
+    reference's DecodeOptions); read the result with read_decoded. The
+    chunk table is split into `n_shards` deterministic shards (hash of the
+    (source, part_id) group key), each decoded and committed as its own
+    Spark job under shards/__shard=NNNNN/ — so a 100 TB decode that dies
+    at 95% re-runs only the missing shards instead of restarting from zero
+    (encode has had manifest-gated resume since round 1,
+    sources/manifest.py:115). n_shards=1 is one all-or-nothing commit.
+    Shards that hold no chunks run no job and leave no dir.
 
     Resume correctness:
     - Shard membership is a pure function of the data, never of
@@ -682,15 +597,15 @@ def run_decode_resumable(
     - The lenient error budget is CUMULATIVE across runs (baseline = sum
       of committed shards' recorded errors) and checked BEFORE the shard
       commits: an over-budget shard is dropped, stays pending, and is
-      re-decoded after the table is repaired — mirroring run_decode's
-      "no complete-looking dataset past the budget" stance, and the
-      check runs again before the final marker (so re-invoking with a
-      TIGHTER budget over fully-committed shards fails typed instead of
-      re-certifying). The _DECODE_COMPLETE marker is written only after
+      re-decoded after the table is repaired — no complete-looking
+      dataset past the budget — and the check runs again before the
+      final marker (so re-invoking with a TIGHTER budget over
+      fully-committed shards fails typed instead of re-certifying). The _DECODE_COMPLETE marker is written only after
       every shard committed within budget; read_decoded refuses datasets
-      without it. Caveat (inherited from run_decode's accumulator
-      semantics): if a SUCCEEDED task is re-executed (speculation, stage
-      retry), its errors count again and the inflated number is what the
+      without it. Error counts flow through Spark accumulators (no
+      second audit pass; failed-task updates are never applied). Caveat:
+      if a SUCCEEDED task is re-executed (speculation, stage retry), its
+      errors count again and the inflated number is what the
       shard sidecar records — the persisted budget is conservative, never
       permissive; audit_chunks gives the exact count for forensics.
 
@@ -704,8 +619,6 @@ def run_decode_resumable(
     Returns {n_errors (cumulative), error_samples (this run), out_dir,
     shards_done, shards_skipped}.
     """
-    import json as _json
-
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
     opts = options or DecodeOptions()
@@ -768,7 +681,7 @@ def run_decode_resumable(
     meta_path = jpath(os.path.join(out_dir, _RESUME_META))
     if fs.exists(meta_path):
         try:
-            meta = _json.loads(_fs_read_small(spark, fs, meta_path))
+            meta = json.loads(_fs_read_small(spark, fs, meta_path))
             meta_shards = int(meta["n_shards"])
         except Exception as e:
             raise EngineError(
@@ -810,7 +723,7 @@ def run_decode_resumable(
             fs.mkdirs(parent)
         _fs_write_small_atomic(
             spark, fs, meta_path,
-            _json.dumps({"n_shards": n_shards, "schema": schema_fp}),
+            json.dumps({"n_shards": n_shards, "schema": schema_fp}),
         )
 
     # a pre-existing complete marker is stale the moment we re-run — drop
@@ -829,7 +742,7 @@ def run_decode_resumable(
         shard_dirs = []
         _fs_write_small_atomic(
             spark, fs, meta_path,
-            _json.dumps({"n_shards": n_shards, "schema": schema_fp}),
+            json.dumps({"n_shards": n_shards, "schema": schema_fp}),
         )
 
     # ---- validate each committed shard's membership against the CURRENT
@@ -847,7 +760,7 @@ def run_decode_resumable(
         side = None
         if fs.exists(errs_p):
             try:
-                side = _json.loads(_fs_read_small(spark, fs, errs_p))
+                side = json.loads(_fs_read_small(spark, fs, errs_p))
             except Exception:
                 side = None
         want = cur_fp.get(sid, (0, 0, 0))
@@ -877,9 +790,9 @@ def run_decode_resumable(
     sample_acc = sc.accumulator([], _SampleParam())
     src_all = chunk_df.withColumn("__shard", shard_col)
     shards_done = 0
-    for s in range(n_shards):
-        if s in committed:
-            continue
+    # empty shards (absent from cur_fp) run no job; a committed shard that
+    # has since become empty was already invalidated above
+    for s in sorted(cur_fp.keys() - committed):
         shard_df = src_all.filter(F.col("__shard") == s).drop("__shard")
         src, cols, out_pa, out_spark, tok64 = _plan_decode(shard_df, columns, cfg)
         decoded = src.mapInArrow(
@@ -915,7 +828,7 @@ def run_decode_resumable(
         _fs_write_small(
             spark, fs,
             jpath(os.path.join(staging, _SHARD_ERRORS)),
-            _json.dumps(
+            json.dumps(
                 {
                     "n_errors": shard_errors,
                     "n_chunks": n_s,

@@ -145,27 +145,6 @@ def _presence_bits(vals: np.ndarray) -> tuple[int, int, int, bytes]:
     return 1, 0, n_distinct, np.packbits(presence, bitorder="little").tobytes()
 
 
-def _maybe_contains(kind: int, ref: int, bits: bytes, token: int) -> bool:
-    """Probe one index row. kind 0 is exact; kind 1 may answer a false
-    'maybe' (bounded by the Bloom sizing) but never a false 'no'.
-    Reference implementation — the scan path uses the batch-vectorized
-    `_probe_batch` (proven equal in tests/test_token_index.py)."""
-    if not bits:
-        return False
-    if kind == 0:
-        pos = token - ref
-        if pos < 0 or pos >= 8 * len(bits):
-            return False
-        return bool((bits[pos >> 3] >> (pos & 7)) & 1)
-    m_bits = 8 * len(bits)
-    arr = np.frombuffer(bits, dtype=np.uint8)
-    for p in _bloom_positions(np.array([token], dtype=np.int64), m_bits):
-        p = int(p)
-        if not (arr[p >> 3] >> (p & 7)) & 1:
-            return False
-    return True
-
-
 def _probe_batch(
     kinds: np.ndarray,
     refs: np.ndarray,
@@ -174,11 +153,13 @@ def _probe_batch(
     conj: bool,
 ) -> np.ndarray:
     """Vectorized probe over a whole batch of index rows (round-6 item:
-    the per-row `_maybe_contains` loop paid Python/numpy call overhead
-    O(rows x needles) on the path the module advertises as cheap).
+    a per-row scalar probe paid Python/numpy call overhead O(rows x
+    needles) on the path the module advertises as cheap).
 
-    Returns one bool per row = all/any(needle maybe-present). Bit-for-bit
-    the same answers as `_maybe_contains`:
+    Returns one bool per row = all/any(needle maybe-present). kind 0 rows
+    are exact; kind 1 (Bloom) rows may answer a false 'maybe' (bounded by
+    the Bloom sizing) but never a false 'no'. Bit-for-bit the same answers
+    as the scalar reference `_maybe_contains` in tests/test_token_index.py:
     - all rows' bits buffers are concatenated once; bitmap rows answer
       with one gather + shift per needle;
     - Bloom rows group by m_bits (a handful of distinct power-of-two

@@ -74,12 +74,10 @@ def merge_manifest_parts(parts: DataFrame) -> DataFrame:
     )
 
 
-def write_encoded(
-    chunk_df: DataFrame, out_dir: str, mode: str = "overwrite"
-) -> None:
-    """Write chunk table (partitioned by source — Iceberg-style partition
-    pruning on the hot key) and its manifest. Spark's job-commit protocol
-    provides the atomic temp+rename.
+def write_encoded(chunk_df: DataFrame, out_dir: str) -> None:
+    """Overwrite out_dir with the chunk table (partitioned by source —
+    Iceberg-style partition pruning on the hot key) and its manifest.
+    Spark's job-commit protocol provides the atomic temp+rename.
 
     The two post-write jobs (uniqueness guard, manifest build) are
     independent reads of the written files, so they run concurrently from
@@ -89,40 +87,24 @@ def write_encoded(
     this function returns (a failed write_encoded never leaves a
     manifest-certified dir: the exception from either thread propagates).
 
-    mode="append" is REFUSED (typed): appending here would land the new
-    chunk files before the uniqueness guard can see them (an id clash
-    would leave the chunks dir permanently duplicated) and would re-append
-    a FULL-table manifest next to the existing one (doubling every prior
-    group's totals). Incremental appends are the streaming API's job —
-    streaming/incremental.py commit_batch writes batch-scoped chunk files
-    + manifest PARTS and merge_manifest_parts folds them losslessly."""
-    if mode == "append":
-        raise PipelineContractError(
-            "write_encoded(mode='append') is not supported: appended chunk "
-            "files cannot be guarded or rolled back and the manifest would "
-            "double-count prior groups — use the incremental writer "
-            "(streaming/incremental.py) for appends"
-        )
+    There is no append mode: appended chunk files would land before the
+    uniqueness guard could see them, and a full-table manifest would
+    double-count prior groups. Incremental appends are the streaming
+    API's job — streaming/incremental.py commit_batch writes batch-scoped
+    chunk files + manifest PARTS and merge_manifest_parts folds them
+    losslessly."""
     chunks_path = os.path.join(out_dir, "chunks")
     manifest_path = os.path.join(out_dir, "manifest")
-    chunk_df.write.mode(mode).partitionBy("source").parquet(chunks_path)
+    chunk_df.write.mode("overwrite").partitionBy("source").parquet(chunks_path)
     spark = chunk_df.sparkSession
     written = spark.read.parquet(chunks_path)
-    if mode != "overwrite":
-        # error/errorifexists/ignore: under 'ignore' a pre-existing dir is
-        # left untouched by the write, so the rollback below could delete a
-        # manifest this call does NOT own — keep the sequential
-        # guard-then-manifest order for these modes instead
-        assert_unique_chunk_ids(written)
-        build_manifest(written).write.mode(mode).parquet(manifest_path)
-        return
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as pool:
         guard = pool.submit(assert_unique_chunk_ids, written)
         manifest_err: Exception | None = None
         try:
-            build_manifest(written).write.mode(mode).parquet(manifest_path)
+            build_manifest(written).write.mode("overwrite").parquet(manifest_path)
         except Exception as e:  # report AFTER the guard's verdict
             manifest_err = e
         try:
@@ -130,8 +112,8 @@ def write_encoded(
         except Exception:
             # roll back the concurrently-written manifest: a guard failure
             # must leave no certified-looking dir (the sequential order's
-            # postcondition). Overwrite mode only — the dir holds nothing
-            # but this call's output. Hadoop FS API = any Spark filesystem.
+            # postcondition). The overwritten dir holds nothing but this
+            # call's output. Hadoop FS API = any Spark filesystem.
             jvm = spark._jvm
             jpath = jvm.org.apache.hadoop.fs.Path(manifest_path)
             fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())

@@ -67,8 +67,8 @@ def _live_part_dirs(spark: SparkSession, root: str) -> list[str]:
 
     Listed through the Hadoop FileSystem API so the streaming sink works on
     any Spark filesystem (HDFS / object stores), the same portability
-    stance as decode's _publish_staging — a driver-local os.listdir would
-    see nothing there."""
+    stance as run_decode_resumable — a driver-local os.listdir would see
+    nothing there."""
     from copybook_rs_spark.operators.decode import _hadoop_path
 
     fs, p = _hadoop_path(spark, root)
@@ -289,8 +289,8 @@ def incremental_decode(
       sources with stable file names (e.g. a compacted chunk table).
     - Each batch's rows are written to a hidden .staging- dir and
       committed by one atomic rename, so readers of out_dir/tokens never
-      see a partially-written batch (same stance as run_decode's staging
-      publish); a replayed decode batch whose final dir already exists
+      see a partially-written batch (same stance as run_decode_resumable's
+      shard commits); a replayed decode batch whose final dir already exists
       drops its (byte-identical, decode is deterministic) recompute.
 
     Per-trigger work is O(new chunks) + the ledger scan, never O(table

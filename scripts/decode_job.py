@@ -8,11 +8,18 @@ Usage (cluster):
     python scripts/make_pyfiles.py          # -> dist/copybook_rs_spark.zip
     spark-submit --py-files dist/copybook_rs_spark.zip \
         scripts/decode_job.py --input s3://.../enc/chunks \
-        --output s3://.../tokens_decoded --resumable
+        --output s3://.../tokens_decoded
 
 Usage (local smoke):
     python scripts/decode_job.py --input /tmp/enc_job/chunks \
         --output /tmp/dec_job --columns doc_id,n_tok
+
+The output is shard-committed (run_decode_resumable): out_dir/shards/
+plus a _DECODE_COMPLETE marker, read back with read_decoded. Re-running
+over the same --output resumes: committed shards whose chunks are
+unchanged are skipped, the rest are decoded. A re-run with different
+--columns, --token-dtype or --extra-columns fails typed (CBSP301, exit 2)
+instead of overwriting; use a fresh --output.
 
 Flags:
     --columns        projection (dependency closure enforced; pushdown
@@ -20,13 +27,13 @@ Flags:
                      never decompressed)
     --policy         strict (default): first corrupt chunk fails the job;
                      lenient: skip-and-count under --max-errors
-    --resumable      shard-committed run (run_decode_resumable): a crashed
-                     job re-runs only missing shards; --shards sets the
-                     granularity. Without it, run_decode writes in one
-                     atomic publish.
-    --verify         after decoding, re-check size(tokens) == n_tok and
-                     doc/token totals against the chunk-table stats; exit 3
-                     on mismatch.
+    --shards         commit granularity (default 1: one all-or-nothing
+                     commit); more shards let a crashed job re-run only
+                     the missing ones. A resume must pass the same value.
+    --verify         after decoding, read the output back (read_decoded)
+                     and re-check size(tokens) == n_tok and doc/token
+                     totals against the chunk-table stats; exit 3 on
+                     mismatch.
 
 Exit codes: 0 ok; 2 typed engine error (CBSP*, e.g. corrupt chunk under
 strict, budget exceeded, resume-meta mismatch); 3 --verify mismatch;
@@ -58,8 +65,7 @@ def main() -> int:
     ap.add_argument("--policy", default="strict", choices=["strict", "lenient"])
     ap.add_argument("--max-errors", type=int, default=0)
     ap.add_argument("--fail-fast", action="store_true")
-    ap.add_argument("--resumable", action="store_true")
-    ap.add_argument("--shards", type=int, default=64)
+    ap.add_argument("--shards", type=int, default=1)
     ap.add_argument(
         "--token-dtype", default="int32", choices=["int32", "int64"],
         help="must match the encode config (schema-fingerprinted)",
@@ -80,7 +86,6 @@ def main() -> int:
     from copybook_rs_spark.operators.decode import (
         DecodeOptions,
         read_decoded,
-        run_decode,
         run_decode_resumable,
     )
 
@@ -94,15 +99,10 @@ def main() -> int:
     chunk_df = spark.read.parquet(args.input)
     t0 = time.time()
     try:
-        if args.resumable:
-            summary = run_decode_resumable(
-                chunk_df, args.output, options=opts, columns=columns,
-                cfg=cfg, n_shards=args.shards,
-            )
-        else:
-            summary = run_decode(
-                chunk_df, args.output, options=opts, columns=columns, cfg=cfg
-            )
+        summary = run_decode_resumable(
+            chunk_df, args.output, options=opts, columns=columns,
+            cfg=cfg, n_shards=args.shards,
+        )
     except EngineError as e:
         print(json.dumps({"error": f"{type(e).__name__}: {e}"}))
         return 2
@@ -129,11 +129,7 @@ def main() -> int:
     report["decode_seconds"] = round(elapsed, 3)
 
     if args.verify:
-        out = (
-            read_decoded(spark, args.output)
-            if args.resumable
-            else spark.read.parquet(args.output)
-        )
+        out = read_decoded(spark, args.output)
         have = set(out.columns)
         checks_ok = True
         # record which checks actually RAN: a --columns projection that

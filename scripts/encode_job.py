@@ -13,9 +13,10 @@ Usage (local smoke):
 Flags mirror the reference CLI's decode command surface
 (crates/copybook-cli/src/main.rs:301: input/output/codec/threads ->
 input/output/codec/parallelism): --codec forces a codec ('auto' default),
---resume skips groups already committed in the manifest, --verify runs the
-round-trip check after encoding and fails nonzero on any mismatch (exit-code
-discipline à la the reference's README exit-code table).
+--resume skips groups already committed in the manifest, --verify decodes
+the written chunk table, compares per-source row digests against the input
+and fails nonzero on any mismatch (exit-code discipline à la the
+reference's README exit-code table).
 """
 
 from __future__ import annotations
@@ -63,7 +64,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     from copybook_rs_spark.config import EncodeConfig
-    from copybook_rs_spark.operators import encode_tokens, roundtrip_mismatches
+    from copybook_rs_spark.operators import decode_tokens, encode_tokens
+    from copybook_rs_spark.operators.verify import hash_mismatched_sources
     from copybook_rs_spark.plans.partition import plan_salts, with_part_id
     from copybook_rs_spark.sources import manifest as mani
     from copybook_rs_spark.sources.tokens import token_table
@@ -132,7 +134,10 @@ def main() -> int:
         "schema_fingerprint": cfg.fingerprint,
     }
     if args.verify:
-        bad = roundtrip_mismatches(df, cfg).count()
+        # decode what was WRITTEN, not an in-memory re-encode of the input
+        bad = hash_mismatched_sources(
+            df, decode_tokens(mani.read_chunks(spark, args.output), cfg=cfg)
+        ).count()
         report["verify_mismatches"] = bad
         print(json.dumps(report))
         return 2 if bad else 0

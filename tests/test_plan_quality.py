@@ -64,9 +64,7 @@ def test_token_range_chunk_skip(spark, written):
     assert 0 < kept < total
     # completeness: every doc holding an in-range token survives the skip
     full = decode_tokens(chunks).filter(F.exists("tokens", lambda t: t <= 50))
-    skipped = decode_tokens(cand, min_parallelism=8).filter(
-        F.exists("tokens", lambda t: t <= 50)
-    )
+    skipped = decode_tokens(cand).filter(F.exists("tokens", lambda t: t <= 50))
     assert full.count() == skipped.count()
 
 

@@ -319,11 +319,15 @@ def test_pregrouped_rejects_duplicate_ids(spark):
 
 def test_run_decode_rejects_unknown_columns(spark, tok_df, tmp_path):
     from copybook_rs_spark.functions.projection import UnknownColumnError
-    from copybook_rs_spark.operators.decode import run_decode
+    from copybook_rs_spark.operators.decode import run_decode_resumable
 
     chunks = encode_tokens(tok_df.limit(50), CFG)
+    out = tmp_path / "x"
     with pytest.raises(UnknownColumnError):
-        run_decode(chunks, str(tmp_path / "x"), columns=["doc_id", "token"])
+        run_decode_resumable(
+            chunks, str(out), columns=["doc_id", "token"], n_shards=1
+        )
+    assert not out.exists()  # validated before any metadata write
 
 
 def test_encode_repeat_identical(spark, tok_df):
@@ -860,21 +864,3 @@ def test_register_views_null_fp_and_empty_dir_fail_typed(spark, tmp_path):
     with pytest.raises(PipelineContractError, match="empty or not"):
         register_views(spark, out2, prefix="emptyfp", cfg=cfg)
 
-
-def test_write_encoded_refuses_append_mode(spark, tok_df, tmp_path):
-    # round-6 review: append-mode write_encoded is broken BY CONSTRUCTION
-    # (chunk files land before the guard can see an id clash, and the
-    # full-table manifest re-aggregate would double-count every prior
-    # group on success) — it must fail typed, pointing at the incremental
-    # writer, and must touch NOTHING: chunks and manifest stay intact
-    from copybook_rs_spark.errors import PipelineContractError
-
-    out = str(tmp_path / "enc_app")
-    chunk_df = encode_tokens(tok_df, CFG)
-    mani.write_encoded(chunk_df, out)
-    before_m = sorted(map(tuple, mani.read_manifest(spark, out).collect()))
-    before_n = mani.read_chunks(spark, out).count()
-    with pytest.raises(PipelineContractError, match="append"):
-        mani.write_encoded(chunk_df.limit(1), out, mode="append")
-    assert sorted(map(tuple, mani.read_manifest(spark, out).collect())) == before_m
-    assert mani.read_chunks(spark, out).count() == before_n

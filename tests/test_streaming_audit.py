@@ -97,8 +97,14 @@ def _corrupt_n(chunks, n):
 def test_bounded_error_decode_policy(spark, tmp_path):
     # the reference's DecodeOptions lenient mode: continue until max_errors
     # corrupt chunks, then fail typed (CBSP205)
-    from copybook_rs_spark.errors import ErrorBudgetExceededError
-    from copybook_rs_spark.operators.decode import DecodeOptions, run_decode
+    import os
+
+    from copybook_rs_spark.errors import EngineError, ErrorBudgetExceededError
+    from copybook_rs_spark.operators.decode import (
+        DecodeOptions,
+        read_decoded,
+        run_decode_resumable,
+    )
 
     df = synthetic_tokens(spark, "mixed", 600)
     cfg = EncodeConfig(chunk_values=1024, target_values_per_part=4096, shuffle_partitions=8)
@@ -108,39 +114,44 @@ def test_bounded_error_decode_policy(spark, tmp_path):
     corrupted = _corrupt_n(chunks, 3)
 
     # budget >= actual errors: succeeds, reports exact counts + samples
-    ok = run_decode(
+    ok = run_decode_resumable(
         corrupted,
         str(tmp_path / "ok"),
         DecodeOptions(policy="lenient", max_errors=n_bad),
+        n_shards=1,
     )
     assert ok["n_errors"] == n_bad
     assert any("CBSP" in s for s in ok["error_samples"])
     # skipped chunks are absent, everything else decodes
-    got = spark.read.parquet(str(tmp_path / "ok"))
+    got = read_decoded(spark, str(tmp_path / "ok"))
     lost_docs = corrupted.filter("chunk_seq < 3").agg(F.sum("n_rows")).collect()[0][0]
     assert got.count() == df.count() - lost_docs
 
     # budget < actual errors: typed failure after counting — and NO
-    # complete-looking output dataset left behind (staging-path publish:
-    # out_dir only exists after the budget check passes)
-    import os
-
+    # complete-looking output left behind: no completion marker, no
+    # committed shard, no staging leftovers, and read_decoded refuses it
+    fail = str(tmp_path / "fail")
     with pytest.raises(ErrorBudgetExceededError, match="CBSP205"):
-        run_decode(
+        run_decode_resumable(
             corrupted,
-            str(tmp_path / "fail"),
+            fail,
             DecodeOptions(policy="lenient", max_errors=n_bad - 1),
+            n_shards=1,
         )
-    assert not os.path.exists(str(tmp_path / "fail"))
-    assert not os.path.exists(str(tmp_path / "fail.__staging__"))
+    assert not os.path.exists(os.path.join(fail, "_DECODE_COMPLETE"))
+    shards_root = os.path.join(fail, "shards")
+    assert not os.path.exists(shards_root) or not os.listdir(shards_root)
+    with pytest.raises(EngineError, match="incomplete"):
+        read_decoded(spark, fail)
 
     # clean table under the same policy: zero errors
-    clean = run_decode(
-        chunks, str(tmp_path / "clean"), DecodeOptions(policy="lenient", max_errors=0)
+    clean = str(tmp_path / "clean")
+    summary = run_decode_resumable(
+        chunks, clean, DecodeOptions(policy="lenient", max_errors=0), n_shards=1
     )
-    assert clean["n_errors"] == 0
-    assert os.path.exists(str(tmp_path / "clean") + "/_SUCCESS")
-    assert not os.path.exists(str(tmp_path / "clean.__staging__"))
+    assert summary["n_errors"] == 0
+    assert os.path.exists(os.path.join(clean, "_DECODE_COMPLETE"))
+    assert os.listdir(os.path.join(clean, "shards")) == ["__shard=00000"]
 
 
 def test_merge_manifest_parts_rejects_mixed_schema_fp(spark):
@@ -330,24 +341,96 @@ def test_partial_consolidated_dir_is_not_live(spark, tmp_path):
         read_manifest_parts(spark, str(tmp_path / "nowhere"))
 
 
-def test_run_decode_republish_preserves_and_swaps(spark, tmp_path):
-    # re-running run_decode over an existing out_dir swaps in the new data
-    # (old moved aside, never deleted first) and cleans the aside dir
-    import os
+def _rows(df):
+    return sorted(
+        (r["doc_id"], tuple(r["tokens"]), r["n_tok"], r["source"])
+        for r in df.collect()
+    )
 
-    from copybook_rs_spark.operators.decode import run_decode
+
+def test_run_decode_resumable_rerun_same_out_dir(spark, tmp_path):
+    # re-running the single-shard decode over its own out_dir returns the
+    # same rows without decoding again; a re-run with a different output
+    # schema fails typed and leaves the committed output readable
+    from copybook_rs_spark.errors import EngineError
+    from copybook_rs_spark.operators.decode import (
+        read_decoded,
+        run_decode_resumable,
+    )
 
     df = synthetic_tokens(spark, "mixed", 200)
     cfg = EncodeConfig(chunk_values=1024, target_values_per_part=4096,
                        shuffle_partitions=4)
     chunks = encode_tokens(df, cfg).cache()
     out = str(tmp_path / "out")
-    run_decode(chunks, out)
-    first = spark.read.parquet(out).count()
-    run_decode(chunks, out)  # re-publish over the existing dataset
-    assert spark.read.parquet(out).count() == first == df.count()
-    assert not os.path.exists(out + ".__old__")
-    assert not os.path.exists(out + ".__staging__")
+    s1 = run_decode_resumable(chunks, out, n_shards=1)
+    assert (s1["shards_done"], s1["shards_skipped"]) == (1, 0)
+    first = _rows(read_decoded(spark, out))
+    assert len(first) == df.count()
+    s2 = run_decode_resumable(chunks, out, n_shards=1)
+    assert (s2["shards_done"], s2["shards_skipped"]) == (0, 1)
+    assert _rows(read_decoded(spark, out)) == first
+    with pytest.raises(EngineError, match="CBSP301"):
+        run_decode_resumable(chunks, out, columns=["doc_id"], n_shards=1)
+    assert _rows(read_decoded(spark, out)) == first
+
+
+def test_run_decode_resumable_skips_empty_shards(spark, tmp_path):
+    # with more shards than (source, part_id) groups most shards are empty:
+    # only the k non-empty ones run a job and get a dir, and a re-run over
+    # the unchanged table skips exactly those k
+    import os
+
+    from copybook_rs_spark.operators.decode import (
+        read_decoded,
+        run_decode_resumable,
+    )
+
+    df = synthetic_tokens(spark, "mixed", 400)
+    chunks = encode_tokens(df, CFG).cache()
+    k = (
+        chunks.select(F.pmod(F.xxhash64("source", "part_id"), F.lit(64)))
+        .distinct()
+        .count()
+    )
+    assert 0 < k < 64
+    out = str(tmp_path / "dec")
+    s1 = run_decode_resumable(chunks, out, n_shards=64)
+    assert (s1["shards_done"], s1["shards_skipped"]) == (k, 0)
+    dirs = os.listdir(os.path.join(out, "shards"))
+    assert len([d for d in dirs if d.startswith("__shard=")]) == k
+    assert _rows(read_decoded(spark, out)) == _rows(decode_tokens(chunks))
+    s2 = run_decode_resumable(chunks, out, n_shards=64)
+    assert (s2["shards_done"], s2["shards_skipped"]) == (0, k)
+
+
+def test_run_decode_resumable_empty_table(spark, tmp_path):
+    # an empty chunk table completes with no shard dirs, and read_decoded
+    # returns 0 rows under the schema pinned in _RESUME_META.json — both
+    # for a fresh out_dir and for one whose committed shards all emptied
+    from copybook_rs_spark.operators.decode import (
+        read_decoded,
+        run_decode_resumable,
+    )
+
+    df = synthetic_tokens(spark, "mixed", 120)
+    chunks = encode_tokens(df, CFG).cache()
+    empty = chunks.filter(F.lit(False))
+    full, fresh = str(tmp_path / "full"), str(tmp_path / "fresh")
+    run_decode_resumable(chunks, full, n_shards=4)
+    want = [(f.name, f.dataType) for f in read_decoded(spark, full).schema]
+
+    s = run_decode_resumable(empty, fresh, n_shards=4)
+    assert (s["shards_done"], s["shards_skipped"], s["n_errors"]) == (0, 0, 0)
+    got = read_decoded(spark, fresh)
+    assert got.count() == 0
+    assert [(f.name, f.dataType) for f in got.schema] == want
+
+    s = run_decode_resumable(empty, full, n_shards=4)
+    assert (s["shards_done"], s["shards_skipped"]) == (0, 0)
+    got = read_decoded(spark, full)
+    assert got.count() == 0
+    assert [(f.name, f.dataType) for f in got.schema] == want
 
 
 def test_streaming_exact_dedup_stateful(spark, tmp_path):

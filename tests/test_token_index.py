@@ -338,13 +338,34 @@ def test_any_token_disjunction_matches_brute_force(spark, chunks, index):
         docs_with_any_token(chunks, index, [], cfg=CFG)
 
 
+def _maybe_contains(kind: int, ref: int, bits: bytes, token: int) -> bool:
+    """Scalar reference probe of one index row: kind 0 is exact; kind 1
+    may answer a false 'maybe' (bounded by the Bloom sizing) but never a
+    false 'no'. The scan path uses the batch-vectorized `_probe_batch`."""
+    from copybook_rs_spark.operators.token_index import _bloom_positions
+
+    if not bits:
+        return False
+    if kind == 0:
+        pos = token - ref
+        if pos < 0 or pos >= 8 * len(bits):
+            return False
+        return bool((bits[pos >> 3] >> (pos & 7)) & 1)
+    m_bits = 8 * len(bits)
+    arr = np.frombuffer(bits, dtype=np.uint8)
+    for p in _bloom_positions(np.array([token], dtype=np.int64), m_bits):
+        p = int(p)
+        if not (arr[p >> 3] >> (p & 7)) & 1:
+            return False
+    return True
+
+
 def test_probe_batch_matches_scalar_reference():
     # round-6 vectorization: _probe_batch must answer bit-for-bit like the
     # per-row _maybe_contains fold it replaced, across bitmap rows, Bloom
     # rows of several m_bits sizes, empty-bits rows and out-of-range
     # needles, for both the conjunctive and disjunctive folds
     from copybook_rs_spark.operators.token_index import (
-        _maybe_contains,
         _presence_bits,
         _probe_batch,
     )
