@@ -73,6 +73,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from typing import NamedTuple
 
 import numpy as np
 
@@ -80,6 +81,7 @@ from copybook_rs_spark.codecs import bitpack as bp
 from copybook_rs_spark.codecs import core
 from copybook_rs_spark.codecs import fsst as fsst_mod
 from copybook_rs_spark.codecs import varint as vi
+from copybook_rs_spark.config import decimal_params
 from copybook_rs_spark.errors import (
     BadMagicError,
     BadVersionError,
@@ -105,6 +107,149 @@ def _body_crc(body, vmin: int, vmax: int) -> int:
     lane gate and chunk-skip envelope) without re-checksumming the purely
     structural lengths, which every section validates against anyway."""
     return zlib.crc32(_VRANGE.pack(vmin, vmax), zlib.crc32(body)) & 0xFFFFFFFF
+
+
+# ------------------------------------------------------------------ readers
+# The only code that parses the blob framing (_frame, _doc_parts,
+# _values_parts, _extras_columns): decode, describe and the extras
+# rewriters all go through them, so a framing fault raises the same typed
+# error on every path.
+
+class _Frame(NamedTuple):
+    version: int
+    n_rows: int
+    n_values: int
+    vmin: int
+    vmax: int
+    main: memoryview  # header + doc/lengths/values sections
+    doc: memoryview
+    lengths: memoryview
+    values: memoryview
+    tail: memoryview  # extras section (empty when the blob has none)
+
+
+def _frame(blob: bytes | memoryview) -> _Frame:
+    """Header checks (length, magic, version, section bounds) and the body
+    crc -> the header fields and memoryviews of each section."""
+    buf = memoryview(blob)
+    if len(buf) < HEADER_LEN:
+        raise TruncatedBlobError(f"blob shorter than header: {len(buf)}")
+    (
+        magic, version, _vcodec, n_rows, n_values, crc, sd, sl, sv, vmin, vmax,
+    ) = _HEADER.unpack_from(buf)
+    if magic != MAGIC:
+        raise BadMagicError(f"bad magic {magic!r}")
+    if version != VERSION:
+        raise BadVersionError(f"unsupported version {version}")
+    end = HEADER_LEN + sd + sl + sv
+    if len(buf) < end:
+        raise TruncatedBlobError(f"blob truncated: need {end}, have {len(buf)}")
+    body = buf[HEADER_LEN:end]
+    if _body_crc(body, vmin, vmax) != crc:
+        raise CrcMismatchError("chunk body crc32 mismatch")
+    return _Frame(
+        version, n_rows, n_values, vmin, vmax, buf[:end],
+        body[:sd], body[sd : sd + sl], body[sd + sl :], buf[end:],
+    )
+
+
+def _sized(buf: memoryview, off: int, what: str) -> tuple[memoryview, int]:
+    """A len:u32-prefixed field at off -> (field, offset past it)."""
+    if len(buf) < off + 4:
+        raise TruncatedBlobError(f"{what} length truncated")
+    (ln,) = _U32.unpack_from(buf, off)
+    off += 4
+    if len(buf) < off + ln:
+        raise TruncatedBlobError(f"{what} truncated")
+    return buf[off : off + ln], off + ln
+
+
+_DOC_ENC_NAMES = {
+    0: "raw",
+    1: "fsst",
+    2: "front-coded",
+    3: "alphabet-pack",
+    4: "template",
+}
+
+
+def _doc_parts(doc_sec: memoryview) -> tuple[memoryview, memoryview]:
+    """Doc section -> (doc-lengths payload, doc byte stream); the stream
+    starts with a known encoding id."""
+    if len(doc_sec) < 4:
+        raise HeaderInvalidError("doc section too short")
+    (dl_len,) = _U32.unpack_from(doc_sec)
+    if 4 + dl_len > len(doc_sec):
+        raise HeaderInvalidError("doc-length payload overruns section")
+    stream = doc_sec[4 + dl_len :]
+    if not len(stream):
+        raise HeaderInvalidError("doc-bytes encoding flag missing")
+    if stream[0] not in _DOC_ENC_NAMES:
+        raise HeaderInvalidError(f"unknown doc-bytes encoding {stream[0]}")
+    return doc_sec[4 : 4 + dl_len], stream
+
+
+_VALUES_MODE_NAMES = {0: "plain", 1: "docdelta"}
+
+
+def _values_parts(sec: memoryview) -> tuple[int, tuple[memoryview, ...]]:
+    """Values section -> (mode, payloads): mode 0 (all values,), mode 1
+    (firsts, intra)."""
+    if len(sec) < 1:
+        raise HeaderInvalidError("values section mode byte missing")
+    mode = sec[0]
+    if mode == 0:
+        return 0, (sec[1:],)
+    if mode != 1:
+        raise HeaderInvalidError(f"unknown values section mode {mode}")
+    firsts, off = _sized(sec, 1, "doc-aware firsts")
+    return 1, (firsts, sec[off:])
+
+
+def _extras_columns(tail: memoryview) -> list[tuple[str, str, memoryview, memoryview]]:
+    """Extras section -> [(name, etype, lens payload, values section)] in
+    section order; etype is "int64"/"float32"/"float64"/"string"/
+    "decimal(p,s)". Verifies the section crc and walks the grammar with
+    bounds, etype and decimal(p,s) checks; nothing is decompressed."""
+    if len(tail) == 0:
+        return []
+    if len(tail) < 5:
+        raise TruncatedBlobError("extras section truncated")
+    (crc,) = _U32.unpack_from(tail)
+    body = tail[4:]
+    if (zlib.crc32(body) & 0xFFFFFFFF) != crc:
+        raise CrcMismatchError("extras section crc32 mismatch")
+    off = 1
+    cols = []
+    for _ in range(body[0]):
+        if len(body) < off + 1:
+            raise TruncatedBlobError("extras name length truncated")
+        nl = body[off]
+        off += 1
+        if len(body) < off + nl + 1:
+            raise TruncatedBlobError("extras name truncated")
+        try:
+            name = bytes(body[off : off + nl]).decode("utf-8")
+        except UnicodeDecodeError as e:
+            raise HeaderInvalidError("extras column name not utf-8") from e
+        etype = body[off + nl]
+        off += nl + 1
+        if etype == ETYPE_DECIMAL:
+            if len(body) < off + 2:
+                raise TruncatedBlobError("extras decimal params truncated")
+            p_, s_ = body[off], body[off + 1]
+            off += 2
+            if not (1 <= p_ <= 18) or not (0 <= s_ <= p_):
+                raise HeaderInvalidError(f"extras[{name}]: invalid decimal({p_},{s_})")
+            ename = f"decimal({p_},{s_})"
+        elif etype in ETYPE_NAMES:
+            ename = ETYPE_NAMES[etype]
+        else:
+            raise HeaderInvalidError(f"extras[{name}]: unknown etype {etype}")
+        lbuf, off = _sized(body, off, "extras lengths")
+        vbuf, off = _sized(body, off, "extras values")
+        cols.append((name, ename, lbuf, vbuf))
+    return cols
 
 
 _PACK_ALPHABET_MAX = 16
@@ -366,14 +511,8 @@ def _decode_template(buf: memoryview, doc_lens: np.ndarray) -> bytes:
     vals_l, lens_l = [], []
     for _ in range(int(k)):
         for dest in (vals_l, lens_l):
-            if len(buf) < off + 4:
-                raise TruncatedBlobError("template payload length truncated")
-            (ln,) = _U32.unpack_from(buf, off)
-            off += 4
-            if len(buf) < off + ln:
-                raise TruncatedBlobError("template payload truncated")
-            dest.append(core.decode_array(buf[off : off + ln]))
-            off += ln
+            payload, off = _sized(buf, off, "template payload")
+            dest.append(core.decode_array(payload))
     for arr in vals_l + lens_l:
         if len(arr) != n:
             raise CountMismatchError("template payload count != n_rows")
@@ -478,14 +617,10 @@ def _decode_doc_bytes(
     if enc == 2:
         if doc_lens is None:
             raise HeaderInvalidError("front-coded doc bytes need doc_lens")
-        if len(body) < 4:
-            raise TruncatedBlobError("front-code lcp length truncated")
-        (lcp_len,) = _U32.unpack_from(body)
-        if len(body) < 4 + lcp_len:
-            raise TruncatedBlobError("front-code lcp payload truncated")
-        lcp = core.decode_array(body[4 : 4 + lcp_len])
+        lcp_payload, off = _sized(body, 0, "front-code lcp")
+        lcp = core.decode_array(lcp_payload)
         suf_expected = int((np.asarray(doc_lens, dtype=np.int64) - lcp).sum()) if len(lcp) == len(doc_lens) else -1
-        suf = _decode_doc_bytes(body[4 + lcp_len :], max(suf_expected, 0))
+        suf = _decode_doc_bytes(body[off:], max(suf_expected, 0))
         return _front_decode(lcp, doc_lens, suf)
     if enc == 4:
         if doc_lens is None:
@@ -576,10 +711,7 @@ def _decode_values(
     x mod 2**32 == x for every certified value, so the lane is exact; the
     caller's min/max cross-check catches a lying header. Halves memory
     traffic on the decode hot path (int32 is the contract dtype anyway)."""
-    if len(buf) < 1:
-        raise HeaderInvalidError("values section mode byte missing")
-    mode = buf[0]
-    body = buf[1:]
+    mode, parts = _values_parts(buf)
     if mode == 0:
         if cert32:
             # int32-native leaf path: a terminal bitpack of width <= 31
@@ -587,24 +719,15 @@ def _decode_values(
             # materialization, no downstream astype (values >= 0 and
             # < 2**31 by construction, so the int32 view is exact; the
             # caller's min/max cross-check still guards the header)
-            v32 = core.try_decode_u32(body)
+            v32 = core.try_decode_u32(parts[0])
             if v32 is not None and (len(v32) == 0 or int(v32.max()) < (1 << 31)):
                 return v32.view(np.int32)
-        return core.decode_array(body)
-    if mode != 1:
-        raise HeaderInvalidError(f"unknown values section mode {mode}")
-    if len(body) < 4:
-        raise TruncatedBlobError("doc-aware values header truncated")
-    (f_len,) = _U32.unpack_from(body)
-    if len(body) < 4 + f_len:
-        raise TruncatedBlobError("doc-aware firsts truncated")
-    firsts = core.decode_array(body[4 : 4 + f_len])
+        return core.decode_array(parts[0])
+    firsts = core.decode_array(parts[0])
     # u32-native intra decode when the payload is a terminal bitpack
     # (w <= 32 guarantees the 32-bit-lane eligibility below for free)
-    intra32 = core.try_decode_u32(body[4 + f_len :]) if cert32 else None
-    intra_zz = (
-        intra32 if intra32 is not None else core.decode_array(body[4 + f_len :])
-    )
+    intra32 = core.try_decode_u32(parts[1]) if cert32 else None
+    intra_zz = intra32 if intra32 is not None else core.decode_array(parts[1])
     lens = np.ascontiguousarray(lengths, dtype=np.int64)
     n_docs = len(lens)
     starts = np.zeros(n_docs, dtype=np.int64)
@@ -750,14 +873,8 @@ def _decode_float_section(buf: memoryview, n: int, etype: int) -> np.ndarray:
     out = np.empty((n, itemsize), dtype=np.uint8)
     off = 0
     for j in range(itemsize):
-        if len(body) < off + 4:
-            raise TruncatedBlobError("float plane length truncated")
-        (ln,) = _U32.unpack_from(body, off)
-        off += 4
-        if len(body) < off + ln:
-            raise TruncatedBlobError("float plane truncated")
-        plane = core.decode_array(body[off : off + ln])
-        off += ln
+        payload, off = _sized(body, off, "float plane")
+        plane = core.decode_array(payload)
         if len(plane) != n:
             raise CountMismatchError("float plane count mismatch")
         if n and (int(plane.min()) < 0 or int(plane.max()) > 255):
@@ -795,8 +912,6 @@ def _encode_extras(
     fsst_cache: {name: tables|[]|None} — per-STRING-column FSST reuse, the
     same group-level contract as _encode_doc_bytes's cached_tables. Returns
     (section bytes, {name: tables_used}) so the caller can cache."""
-    from copybook_rs_spark.config import decimal_params
-
     parts = [bytes([len(extras)])]
     tables_out: dict = {}
     for name, etype_name, lens, vals in extras:
@@ -859,18 +974,8 @@ def append_extras(
     lens/n_rows mismatches raise typed errors. Pure function of the data:
     appending the same columns to the same blob yields identical bytes at
     any parallelism."""
-    buf = memoryview(blob_bytes)
-    if len(buf) < HEADER_LEN:
-        raise TruncatedBlobError("blob shorter than header")
-    magic, version, _, n_rows, _, _, sd, sl, sv, _, _ = _HEADER.unpack_from(buf)
-    if magic != MAGIC:
-        raise BadMagicError(f"bad magic {magic!r}")
-    if version != VERSION:
-        raise HeaderInvalidError(f"unsupported version {version}")
-    end = HEADER_LEN + sd + sl + sv
-    if len(buf) < end:
-        raise TruncatedBlobError("blob truncated before extras")
-    existing = decode_extras(buf, n_rows)  # dict preserves section order
+    f = _frame(blob_bytes)
+    existing = _decode_extras(f, None)  # dict preserves section order
     seen = set(existing)
     for name, _etype, el, _ev in new_extras:
         if name in seen:
@@ -878,13 +983,13 @@ def append_extras(
                 f"extras[{name}]: column already exists in blob"
             )
         seen.add(name)
-        if len(el) != n_rows:
+        if len(el) != f.n_rows:
             raise CountMismatchError(f"extras[{name}]: lengths != n_rows")
     all_extras = [
         (n, et, el, ev) for n, (et, el, ev) in existing.items()
     ] + list(new_extras)
     sec, _ = _encode_extras(all_extras, fsst_cache)
-    return bytes(buf[:end]) + sec
+    return bytes(f.main) + sec
 
 
 def drop_extras(
@@ -902,18 +1007,8 @@ def drop_extras(
     columns re-encoding is decode-equal but only byte-equal when the
     original tail was also per-chunk-trained (a cross-chunk FSST cache at
     original encode time can differ)."""
-    buf = memoryview(blob_bytes)
-    if len(buf) < HEADER_LEN:
-        raise TruncatedBlobError("blob shorter than header")
-    magic, version, _, n_rows, _, _, sd, sl, sv, _, _ = _HEADER.unpack_from(buf)
-    if magic != MAGIC:
-        raise BadMagicError(f"bad magic {magic!r}")
-    if version != VERSION:
-        raise HeaderInvalidError(f"unsupported version {version}")
-    end = HEADER_LEN + sd + sl + sv
-    if len(buf) < end:
-        raise TruncatedBlobError("blob truncated before extras")
-    existing = decode_extras(buf, n_rows)
+    f = _frame(blob_bytes)
+    existing = _decode_extras(f, None)
     missing = set(names) - set(existing)
     if missing:
         raise HeaderInvalidError(
@@ -926,22 +1021,23 @@ def drop_extras(
     ]
     dropped = {n: v for n, v in existing.items() if n in names}
     if not kept:
-        return bytes(buf[:end]), dropped
+        return bytes(f.main), dropped
     sec, _ = _encode_extras(kept, None)
-    return bytes(buf[:end]) + sec, dropped
+    return bytes(f.main) + sec, dropped
 
 
 def decode_extras(
     blob_bytes: bytes | memoryview,
-    n_rows: int,
     names: "set[str] | None" = None,
 ) -> dict[str, tuple[str, np.ndarray, np.ndarray]]:
     """Decode the trailing extras section -> {name: (etype, lengths, values)}
     where etype is "int64"/"float32"/"float64"/"string"/"decimal(p,s)" and
     values is an int64 / float32 / float64 / uint8-byte-stream / unscaled-
-    int64 array respectively.
+    int64 array respectively. Each column's lengths are checked against
+    the header's n_rows.
     Empty dict when the blob has no extras. Raises typed CBSP* errors on
-    any corruption (own crc32 + per-column count checks).
+    any corruption: the blob framing and body crc are checked as in
+    decode_chunk, then the section's own crc32 and per-column counts.
 
     names=None decodes every column; a set pushes projection INTO the
     section — skipped columns' payloads are walked (the section is
@@ -950,64 +1046,15 @@ def decode_extras(
     column), but skipped columns' count/negative-length validations do
     not run — audit_chunks with the table's EncodeConfig remains the
     full-validation surface."""
-    buf = memoryview(blob_bytes)
-    if len(buf) < HEADER_LEN:
-        raise TruncatedBlobError("blob shorter than header")
-    _, _, _, hdr_rows, _, _, sd, sl, sv, _, _ = _HEADER.unpack_from(buf)
-    end = HEADER_LEN + sd + sl + sv
-    if len(buf) < end:
-        raise TruncatedBlobError("blob truncated before extras")
-    tail = buf[end:]
-    if len(tail) == 0:
-        return {}
-    if len(tail) < 5:
-        raise TruncatedBlobError("extras section truncated")
-    (crc,) = _U32.unpack_from(tail)
-    body = tail[4:]
-    if (zlib.crc32(body) & 0xFFFFFFFF) != crc:
-        raise CrcMismatchError("extras section crc32 mismatch")
-    n_extra = body[0]
-    off = 1
+    return _decode_extras(_frame(blob_bytes), names)
+
+
+def _decode_extras(
+    f: _Frame, names: "set[str] | None"
+) -> dict[str, tuple[str, np.ndarray, np.ndarray]]:
+    n_rows = f.n_rows
     out: dict[str, tuple[str, np.ndarray, np.ndarray]] = {}
-    for _ in range(n_extra):
-        if len(body) < off + 1:
-            raise TruncatedBlobError("extras name length truncated")
-        nl = body[off]
-        off += 1
-        if len(body) < off + nl + 5:
-            raise TruncatedBlobError("extras name truncated")
-        try:
-            name = bytes(body[off : off + nl]).decode("utf-8")
-        except UnicodeDecodeError as e:
-            raise HeaderInvalidError("extras column name not utf-8") from e
-        off += nl
-        etype = body[off]
-        off += 1
-        dec_ps: "tuple[int, int] | None" = None
-        if etype == ETYPE_DECIMAL:
-            if len(body) < off + 2 + 4:
-                raise TruncatedBlobError("extras decimal params truncated")
-            p_, s_ = body[off], body[off + 1]
-            off += 2
-            if not (1 <= p_ <= 18) or not (0 <= s_ <= p_):
-                raise HeaderInvalidError(
-                    f"extras[{name}]: invalid decimal({p_},{s_})"
-                )
-            dec_ps = (p_, s_)
-        elif etype not in ETYPE_NAMES:
-            raise HeaderInvalidError(f"extras[{name}]: unknown etype {etype}")
-        (pl_len,) = _U32.unpack_from(body, off)
-        off += 4
-        if len(body) < off + pl_len + 4:
-            raise TruncatedBlobError("extras lengths truncated")
-        lbuf = body[off : off + pl_len]
-        off += pl_len
-        (pv_len,) = _U32.unpack_from(body, off)
-        off += 4
-        if len(body) < off + pv_len:
-            raise TruncatedBlobError("extras values truncated")
-        vbuf = body[off : off + pv_len]
-        off += pv_len
+    for name, etype, lbuf, vbuf in _extras_columns(f.tail):
         if names is not None and name not in names:
             continue  # projection: nothing decompressed for skipped columns
         lens = core.decode_array(lbuf)
@@ -1016,28 +1063,22 @@ def decode_extras(
         if n_rows and (lens < 0).any():
             raise PayloadCorruptError(f"extras[{name}]: negative length")
         n_vals = int(lens.sum()) if n_rows else 0
-        if etype == ETYPE_INT64:
-            vals: np.ndarray = core.decode_array(vbuf)
-        elif dec_ps is not None:
-            vals = core.decode_array(vbuf)
-            lim = 10 ** dec_ps[0]
-            if len(vals) and ((vals >= lim) | (vals <= -lim)).any():
-                raise PayloadCorruptError(
-                    f"extras[{name}]: unscaled value exceeds decimal"
-                    f"({dec_ps[0]},{dec_ps[1]}) precision"
-                )
-        elif etype in _FLOAT_DTYPES:
-            vals = _decode_float_section(vbuf, n_vals, etype)
-        else:
+        if etype == "string":
             vals = np.frombuffer(_decode_doc_bytes(vbuf, n_vals), dtype=np.uint8)
+        elif etype in ("float32", "float64"):
+            vals = _decode_float_section(vbuf, n_vals, ETYPE_IDS[etype])
+        else:  # int64, or decimal(p,s) as its unscaled int64s
+            vals = core.decode_array(vbuf)
+            dp = decimal_params(etype)
+            if dp is not None and len(vals):
+                lim = 10 ** dp[0]
+                if ((vals >= lim) | (vals <= -lim)).any():
+                    raise PayloadCorruptError(
+                        f"extras[{name}]: unscaled value exceeds {etype} precision"
+                    )
         if n_vals != len(vals):
             raise CountMismatchError(f"extras[{name}]: values count mismatch")
-        ename = (
-            f"decimal({dec_ps[0]},{dec_ps[1]})"
-            if dec_ps is not None
-            else ETYPE_NAMES[etype]
-        )
-        out[name] = (ename, lens, vals)
+        out[name] = (etype, lens, vals)
     return out
 
 
@@ -1124,43 +1165,22 @@ def decode_chunk(
     Raises structured CBSP1xx errors on any corruption; never returns wrong
     data (reference corruption-detector stance,
     crates/copybook-corruption-detectors/src/lib.rs:17)."""
-    buf = memoryview(blob)
-    if len(buf) < HEADER_LEN:
-        raise TruncatedBlobError(f"blob shorter than header: {len(buf)}")
-    (
-        magic, version, _vcodec, n_rows, n_values, crc, sd, sl, sv, vmin, vmax,
-    ) = _HEADER.unpack_from(buf)
-    if magic != MAGIC:
-        raise BadMagicError(f"bad magic {magic!r}")
-    if version != VERSION:
-        raise BadVersionError(f"unsupported version {version}")
-    end = HEADER_LEN + sd + sl + sv
-    if len(buf) < end:
-        raise TruncatedBlobError(f"blob truncated: need {end}, have {len(buf)}")
-    body = buf[HEADER_LEN:end]
-    if _body_crc(body, vmin, vmax) != crc:
-        raise CrcMismatchError("chunk body crc32 mismatch")
+    f = _frame(blob)
+    n_rows, n_values = f.n_rows, f.n_values
     doc_bytes: bytes | None = None
     doc_lens: np.ndarray | None = None
     if need_docs:
-        doc_sec = body[:sd]
-        if len(doc_sec) < 4:
-            raise HeaderInvalidError("doc section too short")
-        (dl_len,) = _U32.unpack_from(doc_sec)
-        if 4 + dl_len > sd:
-            raise HeaderInvalidError("doc-length payload overruns section")
-        doc_lens = core.decode_array(doc_sec[4 : 4 + dl_len])
+        dl_payload, stream = _doc_parts(f.doc)
+        doc_lens = core.decode_array(dl_payload)
         if len(doc_lens) != n_rows:
             raise CountMismatchError("doc_lens count != n_rows")
         if n_rows and (doc_lens < 0).any():
             raise PayloadCorruptError("negative doc_id length")
         expected_doc_len = int(doc_lens.sum()) if n_rows else 0
-        doc_bytes = _decode_doc_bytes(
-            doc_sec[4 + dl_len :], expected_doc_len, doc_lens
-        )
+        doc_bytes = _decode_doc_bytes(stream, expected_doc_len, doc_lens)
         if len(doc_bytes) != expected_doc_len:
             raise CountMismatchError("doc_id bytes length mismatch")
-    lengths = core.decode_array(body[sd : sd + sl])
+    lengths = core.decode_array(f.lengths)
     if len(lengths) != n_rows:
         raise CountMismatchError("lengths count != n_rows")
     if n_rows and (lengths < 0).any():
@@ -1172,11 +1192,11 @@ def decode_chunk(
         raise CountMismatchError("sum(lengths) != n_values")
     values: np.ndarray | None = None
     if need_values:
-        cert32 = -(2**31) <= vmin and vmax < 2**31
-        values = _decode_values(body[sd + sl : sd + sl + sv], n_values, lengths, cert32)
+        cert32 = -(2**31) <= f.vmin and f.vmax < 2**31
+        values = _decode_values(f.values, n_values, lengths, cert32)
         if len(values) != n_values:
             raise CountMismatchError("values count != n_values")
-        if n_values and (int(values.min()) != vmin or int(values.max()) != vmax):
+        if n_values and (int(values.min()) != f.vmin or int(values.max()) != f.vmax):
             # defense in depth: v3 puts vmin/vmax INSIDE the body crc
             # (_body_crc), so header tampering already fails the checksum;
             # this cross-check additionally catches any payload that
@@ -1185,14 +1205,7 @@ def decode_chunk(
     return doc_bytes, doc_lens, lengths, values
 
 
-_DOC_ENC_NAMES = {
-    0: "raw",
-    1: "fsst",
-    2: "front-coded",
-    3: "alphabet-pack",
-    4: "template",
-}
-_VALUES_MODE_NAMES = {0: "plain", 1: "docdelta"}
+_VALUES_KEYS = {0: ("payload",), 1: ("firsts", "intra")}
 
 
 def describe_chunk(blob_bytes: bytes | memoryview) -> dict:
@@ -1201,170 +1214,67 @@ def describe_chunk(blob_bytes: bytes | memoryview) -> dict:
     encoding, the values-section mode, and the full codec tree of every
     integer payload (codecs/core.py:describe_payload). The chunk-level
     analogue of the reference's inspect command: debugging one blob out of
-    a 100 TB table costs header reads, not a decode. Raises the usual
-    typed CBSP errors on malformed framing; the body crc IS verified (a
-    description of corrupt bytes would be a lie)."""
-    buf = memoryview(blob_bytes)
-    if len(buf) < HEADER_LEN:
-        raise TruncatedBlobError(f"blob shorter than header: {len(buf)}")
-    (
-        magic, version, vcodec, n_rows, n_values, crc, sd, sl, sv, vmin, vmax,
-    ) = _HEADER.unpack_from(buf)
-    if magic != MAGIC:
-        raise BadMagicError(f"bad magic {magic!r}")
-    if version != VERSION:
-        raise BadVersionError(f"unsupported version {version}")
-    end = HEADER_LEN + sd + sl + sv
-    if len(buf) < end:
-        raise TruncatedBlobError(f"blob truncated: need {end}, have {len(buf)}")
-    body = buf[HEADER_LEN:end]
-    if _body_crc(body, vmin, vmax) != crc:
-        raise CrcMismatchError("chunk body crc32 mismatch")
+    a 100 TB table costs header reads, not a decode. The blob is read
+    through the same framing readers as decode_chunk and decode_extras
+    (body and extras crcs verified — a description of corrupt bytes would
+    be a lie), so it raises the same typed CBSP error on every framing
+    fault they reject; payload-declared counts are also cross-checked
+    against the header."""
+    f = _frame(blob_bytes)
+    dl_payload, stream = _doc_parts(f.doc)
+    mode, parts = _values_parts(f.values)
     out: dict = {
-        "version": version,
-        "n_rows": n_rows,
-        "n_values": n_values,
-        "vmin": vmin,
-        "vmax": vmax,
+        "version": f.version,
+        "n_rows": f.n_rows,
+        "n_values": f.n_values,
+        "vmin": f.vmin,
+        "vmax": f.vmax,
         "bytes": {
-            "total": len(buf),
+            "total": len(f.main) + len(f.tail),
             "header": HEADER_LEN,
-            "doc_section": sd,
-            "lengths_section": sl,
-            "values_section": sv,
-            "extras_section": len(buf) - end,
+            "doc_section": len(f.doc),
+            "lengths_section": len(f.lengths),
+            "values_section": len(f.values),
+            "extras_section": len(f.tail),
         },
+        "doc_lens": core.describe_payload(dl_payload),
+        "doc_bytes": {"encoding": _DOC_ENC_NAMES[stream[0]], "bytes": len(stream)},
+        "lengths": core.describe_payload(f.lengths),
     }
-    # doc section: doc-lens payload tree + the byte-stream encoding id.
-    # Inconsistent framing RAISES (review finding: silently skipping a
-    # section would let the description repeat a lying header)
-    doc_sec = body[:sd]
-    if sd:
-        if len(doc_sec) < 4:
-            raise HeaderInvalidError("doc section too short")
-        (dl_len,) = _U32.unpack_from(doc_sec)
-        if 4 + dl_len > sd:
-            raise HeaderInvalidError("doc-length payload overruns section")
-        out["doc_lens"] = core.describe_payload(doc_sec[4 : 4 + dl_len])
-        stream = doc_sec[4 + dl_len :]
-        if not len(stream):
-            raise HeaderInvalidError("doc byte-stream missing")
-        enc = stream[0]
-        out["doc_bytes"] = {
-            "encoding": _DOC_ENC_NAMES.get(enc, f"unknown({enc})"),
-            "bytes": len(stream),
-        }
-    out["lengths"] = core.describe_payload(body[sd : sd + sl])
     # structural cross-checks: the description must not repeat a lying
     # header — payload-declared counts are compared against it (the
     # inspection-level analogue of decode's count validation; no values
     # are decompressed for any of this)
-    if out["lengths"].get("n") != n_rows:
+    if out["lengths"]["n"] != f.n_rows:
         raise CountMismatchError(
-            f"lengths payload declares {out['lengths'].get('n')} rows, "
-            f"header says {n_rows}"
+            f"lengths payload declares {out['lengths']['n']} rows, "
+            f"header says {f.n_rows}"
         )
-    if "doc_lens" in out and out["doc_lens"].get("n") != n_rows:
+    if out["doc_lens"]["n"] != f.n_rows:
         raise CountMismatchError("doc_lens payload count != header n_rows")
-    vals_sec = body[sd + sl : sd + sl + sv]
-    if sv == 0 and n_values:
-        raise HeaderInvalidError("values section missing")
-    if len(vals_sec):
-        mode = vals_sec[0]
-        vdesc: dict = {
-            "mode": _VALUES_MODE_NAMES.get(mode, f"unknown({mode})"),
-            "bytes": sv,
-        }
-        declared = None
-        if mode == 0:
-            vdesc["payload"] = core.describe_payload(vals_sec[1:])
-            declared = vdesc["payload"].get("n")
-        elif mode == 1:
-            if len(vals_sec) < 5:
-                raise TruncatedBlobError("values mode-1 header truncated")
-            (f_len,) = _U32.unpack_from(vals_sec, 1)
-            if 5 + f_len > sv:
-                raise HeaderInvalidError("firsts payload overruns section")
-            vdesc["firsts"] = core.describe_payload(vals_sec[5 : 5 + f_len])
-            vdesc["intra"] = core.describe_payload(vals_sec[5 + f_len :])
-            # every token is either a document's first or an intra delta
-            declared = vdesc["firsts"].get("n", 0) + vdesc["intra"].get("n", 0)
-        else:
-            raise HeaderInvalidError(f"unknown values section mode {mode}")
-        if declared is not None and declared != n_values:
-            raise CountMismatchError(
-                f"values section declares {declared} values, header says "
-                f"{n_values}"
-            )
-        out["values"] = vdesc
-    # extras: walk the self-delimiting grammar — names/types/sizes and
-    # each column's payload trees, nothing decompressed
-    tail = buf[end:]
-    if len(tail):
-        ex: list[dict] = []
-        if len(tail) < 5:
-            raise TruncatedBlobError("extras section truncated")
-        (ex_crc,) = _U32.unpack_from(tail)
-        bodye = tail[4:]
-        if (zlib.crc32(bodye) & 0xFFFFFFFF) != ex_crc:
-            raise CrcMismatchError("extras section crc32 mismatch")
-        n_extra = bodye[0]
-        off = 1
-        # same bounds discipline as decode_extras: a crafted blob whose
-        # extras crc is valid over malformed grammar must raise typed
-        # CBSP errors here too, never raw IndexError/struct.error (the
-        # bit-flip fuzz can't reach this path — flips break the crc first)
-        for _ in range(n_extra):
-            if len(bodye) < off + 1:
-                raise TruncatedBlobError("extras name length truncated")
-            nl = bodye[off]
-            off += 1
-            if len(bodye) < off + nl + 1:
-                raise TruncatedBlobError("extras name truncated")
-            try:
-                name = bytes(bodye[off : off + nl]).decode("utf-8")
-            except UnicodeDecodeError as e:
-                raise HeaderInvalidError(
-                    "extras column name not utf-8"
-                ) from e
-            off += nl
-            etype = bodye[off]
-            off += 1
-            dec_ps = None
-            if etype == ETYPE_DECIMAL:
-                if len(bodye) < off + 2:
-                    raise TruncatedBlobError("extras decimal params truncated")
-                dec_ps = (bodye[off], bodye[off + 1])
-                off += 2
-            if len(bodye) < off + 4:
-                raise TruncatedBlobError("extras lengths size truncated")
-            (pl_len,) = _U32.unpack_from(bodye, off)
-            off += 4
-            if len(bodye) < off + pl_len:
-                raise TruncatedBlobError("extras lengths payload overruns section")
-            lbuf = bodye[off : off + pl_len]
-            off += pl_len
-            if len(bodye) < off + 4:
-                raise TruncatedBlobError("extras values size truncated")
-            (pv_len,) = _U32.unpack_from(bodye, off)
-            off += 4
-            if len(bodye) < off + pv_len:
-                raise TruncatedBlobError("extras values payload overruns section")
-            vbuf = bodye[off : off + pv_len]
-            off += pv_len
-            ename = (
-                f"decimal({dec_ps[0]},{dec_ps[1]})"
-                if dec_ps is not None
-                else ETYPE_NAMES.get(etype, f"unknown({etype})")
-            )
-            col: dict = {
+    trees = [core.describe_payload(p) for p in parts]
+    # every token is either a document's first or an intra delta
+    declared = sum(t["n"] for t in trees)
+    if declared != f.n_values:
+        raise CountMismatchError(
+            f"values section declares {declared} values, header says "
+            f"{f.n_values}"
+        )
+    out["values"] = {
+        "mode": _VALUES_MODE_NAMES[mode],
+        "bytes": len(f.values),
+        **dict(zip(_VALUES_KEYS[mode], trees)),
+    }
+    if len(f.tail):
+        out["extras"] = []
+        for name, etype, lbuf, vbuf in _extras_columns(f.tail):
+            col = {
                 "name": name,
-                "etype": ename,
+                "etype": etype,
                 "lens": core.describe_payload(lbuf),
-                "values_bytes": pv_len,
+                "values_bytes": len(vbuf),
             }
-            if etype == ETYPE_INT64 or dec_ps is not None:
-                col["values"] = core.describe_payload(vbuf)
-            ex.append(col)
-        out["extras"] = ex
+            if etype == "int64" or etype.startswith("decimal"):
+                col["values"] = core.describe_payload(vbuf)  # one int payload
+            out["extras"].append(col)
     return out

@@ -828,9 +828,91 @@ def estimate_sizes(s: ChunkStats) -> dict[str, int]:
 
 # ----------------------------------------------------------------- decoders
 
-def _need(buf: memoryview, k: int, what: str) -> None:
+def _need(buf: memoryview, k: int, *what: str) -> None:
     if len(buf) < k:
-        raise TruncatedBlobError(f"payload truncated reading {what}")
+        raise TruncatedBlobError(f"payload truncated reading {' '.join(what)}")
+
+
+# fixed header after the codec id: n:u32 first, then the header fields
+_HEADERS = {
+    CODEC_PLAIN: _HDR_PLAIN,
+    CODEC_BITPACK: _HDR_PLAIN,
+    CODEC_FOR: _HDR_FOR,
+    CODEC_DELTA: _U32,
+    CODEC_RLE: _HDR_RLE,
+    CODEC_DICT: _HDR_RLE,
+    CODEC_PATCH: _HDR_PATCH,
+    CODEC_PFOR: _HDR_PFOR,
+    CODEC_FSST: _HDR_PLAIN,  # n:u32 passes:u8
+}
+# describe_payload's names for the header fields _parse returns
+_FIELD_NAMES = {
+    CODEC_PLAIN: ("width",),
+    CODEC_BITPACK: ("width",),
+    CODEC_FOR: ("ref",),
+    CODEC_DELTA: (),
+    CODEC_RLE: ("n_runs",),
+    CODEC_DICT: ("n_distinct",),
+    CODEC_PATCH: ("mode", "n_exceptions"),
+    CODEC_PFOR: ("ref", "width", "n_exceptions", "packed_bytes"),
+    CODEC_FSST: ("passes",),  # the stream lengths stay internal
+}
+
+
+def _two_subs(rest: memoryview, what: str) -> tuple[memoryview, memoryview]:
+    """The len1 sub1 len2 sub2 tail shared by rle, dict, patch and pfor."""
+    _need(rest, 4, what, "len1")
+    (l1,) = _U32.unpack_from(rest)
+    _need(rest, 8 + l1, what, "sub1")
+    (l2,) = _U32.unpack_from(rest, 4 + l1)
+    _need(rest, 8 + l1 + l2, what, "sub2")
+    return rest[4 : 4 + l1], rest[8 + l1 : 8 + l1 + l2]
+
+
+def _parse(payload: bytes | memoryview):
+    """The payload grammar's one reader -> (codec id, n, header fields,
+    data, sub-payloads). Checks the codec id, the header bounds, the
+    header-field ranges and the extents of data and sub-payloads, so
+    decode_array and describe_payload reject the same framing faults.
+    Nothing is decompressed. For fsst the header fields are (passes,
+    stream lengths) and data holds the tables followed by the codes.
+    Runs once per payload on the decode hot path, hence the inline checks."""
+    buf = memoryview(payload)
+    if not len(buf):
+        raise TruncatedBlobError("payload truncated reading codec id")
+    cid = buf[0]
+    hs = _HEADERS.get(cid)
+    if hs is None:  # CODEC_DOCDELTA is a chunk-level mode tag, not a codec
+        raise UnknownCodecError(f"unknown codec id {cid}")
+    if len(buf) < 1 + hs.size:
+        raise TruncatedBlobError(f"payload truncated reading {CODEC_NAMES[cid]} header")
+    n, *hdr = hs.unpack_from(buf, 1)
+    rest = buf[1 + hs.size :]
+    if cid in (CODEC_PLAIN, CODEC_BITPACK, CODEC_PFOR):  # fixed-size data block
+        w = hdr[1] if cid == CODEC_PFOR else hdr[0]
+        if cid == CODEC_PLAIN:
+            if w != 4 and w != 8:
+                raise PayloadCorruptError(f"plain width {w}")
+            size = n * w
+        else:
+            if w > 64:
+                raise PayloadCorruptError(f"{CODEC_NAMES[cid]} width {w}")
+            size = bp.packed_size(n, w)
+        if len(rest) < size:
+            raise TruncatedBlobError(f"payload truncated reading {CODEC_NAMES[cid]} data")
+        if cid != CODEC_PFOR:
+            return cid, n, hdr, rest[:size], ()
+        return cid, n, hdr + [size], rest[:size], _two_subs(rest[size:], "pfor")
+    if cid == CODEC_FSST:
+        passes = hdr[0]
+        if passes > _FSST_MAX_PASSES:
+            raise PayloadCorruptError(f"fsst passes {passes}")
+        _need(rest, 4 * (passes + 1), "fsst lengths")
+        lens = struct.unpack_from(f"<{passes + 1}I", rest)
+        return cid, n, [passes, lens], rest[4 * (passes + 1) :], ()
+    if cid in (CODEC_FOR, CODEC_DELTA):
+        return cid, n, hdr, rest[:0], (rest,)
+    return cid, n, hdr, rest[:0], _two_subs(rest, CODEC_NAMES[cid])  # rle, dict, patch
 
 
 def describe_payload(payload: bytes | memoryview) -> dict:
@@ -838,130 +920,41 @@ def describe_payload(payload: bytes | memoryview) -> dict:
     {codec, n, bytes, ...params, children: [...]} — the engine's "inspect"
     surface (the reference ships a copybook-level inspect command; this is
     its chunk-level analogue for debugging one blob out of a 100 TB table).
-    Raises the same typed CBSP errors as decode_array on malformed framing,
-    but touches only headers and sub-payload lengths."""
-    buf = memoryview(payload)
-    _need(buf, 1, "codec id")
-    cid = buf[0]
-    body = buf[1:]
-    out: dict = {
-        "codec": CODEC_NAMES.get(cid, f"unknown({cid})"),
-        "bytes": len(buf),
-    }
-    if cid not in CODEC_NAMES:
-        raise UnknownCodecError(f"unknown codec id {cid}")
-
-    def _two_subs(rest, what):
-        _need(rest, 4, f"{what} len1")
-        (l1,) = _U32.unpack_from(rest)
-        _need(rest, 4 + l1 + 4, f"{what} sub1")
-        (l2,) = _U32.unpack_from(rest, 4 + l1)
-        _need(rest, 8 + l1 + l2, f"{what} sub2")
-        return (
-            describe_payload(rest[4 : 4 + l1]),
-            describe_payload(rest[8 + l1 : 8 + l1 + l2]),
-        )
-
-    if cid in (CODEC_PLAIN, CODEC_BITPACK):
-        _need(body, 5, "header")
-        n, width = _HDR_PLAIN.unpack_from(body)
-        out.update(n=n, width=width)
-    elif cid == CODEC_FOR:
-        _need(body, 12, "for header")
-        n, ref = _HDR_FOR.unpack_from(body)
-        out.update(n=n, ref=ref, children=[describe_payload(body[12:])])
-    elif cid == CODEC_DELTA:
-        _need(body, 4, "delta header")
-        (n,) = _U32.unpack_from(body)
-        out.update(n=n, children=[describe_payload(body[4:])])
-    elif cid == CODEC_RLE:
-        _need(body, 8, "rle header")
-        n, n_runs = _HDR_RLE.unpack_from(body)
-        values, lengths = _two_subs(body[8:], "rle")
-        out.update(n=n, n_runs=n_runs, children=[values, lengths])
-    elif cid == CODEC_DICT:
-        _need(body, 8, "dict header")
-        n, d = _HDR_RLE.unpack_from(body)
-        uniques, indices = _two_subs(body[8:], "dict")
-        out.update(n=n, n_distinct=d, children=[uniques, indices])
-    elif cid == CODEC_PATCH:
-        _need(body, 16, "patch header")
-        n, mode, n_exc = _HDR_PATCH.unpack_from(body)
-        gaps, vals = _two_subs(body[16:], "patch")
-        out.update(n=n, mode=mode, n_exceptions=n_exc, children=[gaps, vals])
-    elif cid == CODEC_PFOR:
-        _need(body, 17, "pfor header")
-        n, ref, w, n_exc = _HDR_PFOR.unpack_from(body)
-        packed = bp.packed_size(n, w)
-        _need(body, 17 + packed, "pfor packed data")
-        gaps, high = _two_subs(body[17 + packed :], "pfor")
-        out.update(
-            n=n, ref=ref, width=w, n_exceptions=n_exc,
-            packed_bytes=packed, children=[gaps, high],
-        )
-    elif cid == CODEC_FSST:
-        _need(body, 5, "fsst header")
-        (n,) = _U32.unpack_from(body)
-        passes = body[4]
-        out.update(n=n, passes=passes)
-    else:  # e.g. CODEC_DOCDELTA: a chunk-level mode tag, never a payload id
-        raise UnknownCodecError(f"codec id {cid} is not a payload codec")
+    Reads the payload through the same parser as decode_array, so it
+    raises the same typed CBSP error on every framing fault decode_array
+    rejects before decompressing (codec id, header bounds, field ranges,
+    data and sub-payload extents)."""
+    cid, n, hdr, _data, subs = _parse(payload)
+    out: dict = {"codec": CODEC_NAMES[cid], "bytes": len(payload), "n": n}
+    out.update(zip(_FIELD_NAMES[cid], hdr))
+    if subs:
+        out["children"] = [describe_payload(s) for s in subs]
     return out
 
 
 def decode_array(payload: bytes | memoryview) -> np.ndarray:
     """Inverse of encode_array; returns int64 array. Raises structured errors
     on corruption (never returns wrong data silently)."""
-    buf = memoryview(payload)
-    _need(buf, 1, "codec id")
-    cid = buf[0]
-    body = buf[1:]
+    cid, n, hdr, data, subs = _parse(payload)
     if cid == CODEC_PLAIN:
-        _need(body, 5, "plain header")
-        n, width = _HDR_PLAIN.unpack_from(body)
-        if width not in (4, 8):
-            raise PayloadCorruptError(f"plain width {width}")
-        _need(body, 5 + n * width, "plain data")
-        return np.frombuffer(
-            body, dtype=f"<i{width}", count=n, offset=5
-        ).astype(np.int64)
+        return np.frombuffer(data, dtype=f"<i{hdr[0]}", count=n).astype(np.int64)
     if cid == CODEC_BITPACK:
-        _need(body, 5, "bitpack header")
-        n, width = _HDR_PLAIN.unpack_from(body)
-        if width > 64:
-            raise PayloadCorruptError(f"bitpack width {width}")
-        u = bp.unpack(body[5:], n, width)
+        u = bp.unpack(data, n, hdr[0])
         return u.view(np.int64) if u.flags.owndata else u.astype(np.int64)
     if cid == CODEC_FOR:
-        _need(body, 12, "for header")
-        n, ref = _HDR_FOR.unpack_from(body)
-        sub = decode_array(body[12:])
+        sub = decode_array(subs[0])
         if len(sub) != n:
             raise CountMismatchError(f"for: {len(sub)} != {n}")
-        return (sub.view(np.uint64) + np.uint64(ref % (1 << 64))).view(np.int64)
+        return (sub.view(np.uint64) + np.uint64(hdr[0] % (1 << 64))).view(np.int64)
     if cid == CODEC_DELTA:
-        _need(body, 4, "delta header")
-        (n,) = _U32.unpack_from(body)
-        zz = decode_array(body[4:])
+        zz = decode_array(subs[0])
         if len(zz) != n:
             raise CountMismatchError(f"delta: {len(zz)} != {n}")
         deltas = vi.zigzag_decode(zz.view(np.uint64))
         return np.cumsum(deltas.view(np.uint64)).view(np.int64)
     if cid == CODEC_RLE:
-        _need(body, 8, "rle header")
-        n, n_runs = _HDR_RLE.unpack_from(body)
-        off = 8
-        _need(body, off + 4, "rle len1")
-        (len1,) = _U32.unpack_from(body, off)
-        off += 4
-        _need(body, off + len1, "rle values")
-        run_vals = decode_array(body[off : off + len1])
-        off += len1
-        _need(body, off + 4, "rle len2")
-        (len2,) = _U32.unpack_from(body, off)
-        off += 4
-        _need(body, off + len2, "rle lengths")
-        run_lens = decode_array(body[off : off + len2])
+        (n_runs,) = hdr
+        run_vals, run_lens = map(decode_array, subs)
         if len(run_vals) != n_runs or len(run_lens) != n_runs:
             raise CountMismatchError("rle: run count mismatch")
         if (run_lens < 0).any():
@@ -970,20 +963,8 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
             raise CountMismatchError("rle: total length mismatch")
         return np.repeat(run_vals, run_lens)
     if cid == CODEC_DICT:
-        _need(body, 8, "dict header")
-        n, d = _HDR_RLE.unpack_from(body)
-        off = 8
-        _need(body, off + 4, "dict len1")
-        (len1,) = _U32.unpack_from(body, off)
-        off += 4
-        _need(body, off + len1, "dict values")
-        uniq = decode_array(body[off : off + len1])
-        off += len1
-        _need(body, off + 4, "dict len2")
-        (len2,) = _U32.unpack_from(body, off)
-        off += 4
-        _need(body, off + len2, "dict indices")
-        idx = decode_array(body[off : off + len2])
+        (d,) = hdr
+        uniq, idx = map(decode_array, subs)
         if len(uniq) != d:
             raise CountMismatchError("dict: dictionary size mismatch")
         if len(idx) != n:
@@ -992,26 +973,9 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
             raise PayloadCorruptError("dict: index out of range")
         return uniq[idx]
     if cid == CODEC_PFOR:
-        _need(body, 17, "pfor header")
-        n, ref, w, n_exc = _HDR_PFOR.unpack_from(body)
-        if w > 64:
-            raise PayloadCorruptError(f"pfor width {w}")
-        off = 17
-        psize = bp.packed_size(n, w)
-        _need(body, off + psize, "pfor packed")
-        resid = bp.unpack(body[off : off + psize], n, w)
-        off += psize
-        _need(body, off + 4, "pfor len1")
-        (len1,) = _U32.unpack_from(body, off)
-        off += 4
-        _need(body, off + len1, "pfor positions")
-        gaps = decode_array(body[off : off + len1])
-        off += len1
-        _need(body, off + 4, "pfor len2")
-        (len2,) = _U32.unpack_from(body, off)
-        off += 4
-        _need(body, off + len2, "pfor high residuals")
-        high = decode_array(body[off : off + len2])
+        ref, w, n_exc, _ = hdr
+        resid = bp.unpack(data, n, w)
+        gaps, high = map(decode_array, subs)
         if len(gaps) != n_exc or len(high) != n_exc:
             raise CountMismatchError("pfor: exception count mismatch")
         if n_exc > n:
@@ -1023,20 +987,8 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
             resid[pos] |= high.view(np.uint64) << np.uint64(w)
         return (resid + np.uint64(ref % (1 << 64))).view(np.int64)
     if cid == CODEC_PATCH:
-        _need(body, 16, "patch header")
-        n, mode, n_exc = _HDR_PATCH.unpack_from(body)
-        off = 16
-        _need(body, off + 4, "patch len1")
-        (len1,) = _U32.unpack_from(body, off)
-        off += 4
-        _need(body, off + len1, "patch positions")
-        gaps = decode_array(body[off : off + len1])
-        off += len1
-        _need(body, off + 4, "patch len2")
-        (len2,) = _U32.unpack_from(body, off)
-        off += 4
-        _need(body, off + len2, "patch values")
-        exc_vals = decode_array(body[off : off + len2])
+        mode, n_exc = hdr
+        gaps, exc_vals = map(decode_array, subs)
         if len(gaps) != n_exc or len(exc_vals) != n_exc:
             raise CountMismatchError("patch: exception count mismatch")
         if n_exc > n:
@@ -1046,30 +998,18 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
             pos = _exc_positions(gaps, n, "patch")
             out[pos] = exc_vals
         return out
-    if cid == CODEC_FSST:
-        _need(body, 5, "fsst header")
-        (n,) = _U32.unpack_from(body, 0)
-        passes = body[4]
-        if passes > _FSST_MAX_PASSES:
-            raise PayloadCorruptError(f"fsst passes {passes}")
-        off = 5
-        _need(body, off + 4 * (passes + 1), "fsst lengths")
-        lens = [
-            _U32.unpack_from(body, off + 4 * i)[0] for i in range(passes + 1)
-        ]
-        off += 4 * (passes + 1)
-        tables = []
-        for _ in range(passes):
-            table, used = fsst_mod.SymbolTable.deserialize(body[off:])
-            tables.append(table)
-            off += used
-        _need(body, off + lens[-1], "fsst codes")
-        stream = np.frombuffer(body, dtype=np.uint8, count=lens[-1], offset=off)
-        for p in range(passes - 1, -1, -1):
-            stream = fsst_mod.decompress(stream, tables[p], lens[p])
-        u = vi.varint_decode(stream.tobytes(), n)
-        return vi.zigzag_decode(u)
-    raise UnknownCodecError(f"unknown codec id {cid}")
+    passes, lens = hdr  # fsst
+    tables, off = [], 0
+    for _ in range(passes):
+        table, used = fsst_mod.SymbolTable.deserialize(data[off:])
+        tables.append(table)
+        off += used
+    _need(data, off + lens[-1], "fsst codes")
+    stream = np.frombuffer(data, dtype=np.uint8, count=lens[-1], offset=off)
+    for p in range(passes - 1, -1, -1):
+        stream = fsst_mod.decompress(stream, tables[p], lens[p])
+    u = vi.varint_decode(stream.tobytes(), n)
+    return vi.zigzag_decode(u)
 
 
 def try_decode_u32(payload: bytes | memoryview) -> np.ndarray | None:
@@ -1080,25 +1020,19 @@ def try_decode_u32(payload: bytes | memoryview) -> np.ndarray | None:
     caller's 32-bit arithmetic lane needs no further certification. Half
     the memory traffic of decode_array + astype on the decode hot path."""
     buf = memoryview(payload)
-    if len(buf) < 6:
+    if not len(buf) or buf[0] not in (CODEC_FOR, CODEC_BITPACK):
         return None
-    if buf[0] == CODEC_FOR:
-        if len(buf) < 13:
-            return None
-        n, ref = _HDR_FOR.unpack_from(buf, 1)
-        if not 0 <= ref < (1 << 32):
-            return None
-        sub = try_decode_u32(buf[13:])
-        if sub is None:
-            return None
-        if len(sub) != n:
-            raise CountMismatchError(f"for: {len(sub)} != {n}")
-        if len(sub) and ref + int(sub.max()) >= (1 << 32):
-            return None  # would wrap the 32-bit lane; take the 64-bit path
-        return sub + np.uint32(ref)
-    if buf[0] != CODEC_BITPACK:
+    cid, n, hdr, data, subs = _parse(buf)
+    if cid == CODEC_BITPACK:
+        return bp.unpack32(data, n, hdr[0]) if hdr[0] <= 32 else None
+    (ref,) = hdr
+    if not 0 <= ref < (1 << 32):
         return None
-    n, width = _HDR_PLAIN.unpack_from(buf, 1)
-    if width > 32:
+    sub = try_decode_u32(subs[0])
+    if sub is None:
         return None
-    return bp.unpack32(buf[6:], n, width)
+    if len(sub) != n:
+        raise CountMismatchError(f"for: {len(sub)} != {n}")
+    if len(sub) and ref + int(sub.max()) >= (1 << 32):
+        return None  # would wrap the 32-bit lane; take the 64-bit path
+    return sub + np.uint32(ref)

@@ -31,7 +31,6 @@ from copybook_rs_spark.operators.token_index import (  # noqa: F401
     filter_chunks_by_token,
     refresh_token_index,
 )
-from copybook_rs_spark.operators.verify import roundtrip_mismatches  # noqa: F401
 from copybook_rs_spark.operators.zonemap import (  # noqa: F401
     build_extras_index,
     decode_where,

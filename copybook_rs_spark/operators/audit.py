@@ -69,7 +69,7 @@ def make_audit_kernel(check_int32: bool = True, extra_names: tuple = ()):
                     if extra_names:
                         # extras carry their own crc, independent of the
                         # main body crc — audit them too
-                        ex = blob.decode_extras(raw, len(doc_lens))
+                        ex = blob.decode_extras(raw)
                         missing = [c for c in extra_names if c not in ex]
                         if missing:
                             raise CountMismatchError(

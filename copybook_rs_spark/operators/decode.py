@@ -149,7 +149,7 @@ def _decode_one(
     # projection pushes INTO the extras section: unrequested columns'
     # payloads are walked but never decompressed
     extras = (
-        blob.decode_extras(blob_bytes, n, names=set(extra_cols))
+        blob.decode_extras(blob_bytes, names=set(extra_cols))
         if extra_cols
         else {}
     )

@@ -190,7 +190,7 @@ def _make_mutation_kernel(cfg: EncodeConfig, op: str):
                     continue
                 # rewriting for sure now — decode the extras tail too
                 vals = vals.astype(np.int64, copy=False)
-                extras_d = blob.decode_extras(buf, len(doc_l))
+                extras_d = blob.decode_extras(buf)
                 extras = [
                     (name, *extras_d[name]) for name, _ in extra_specs
                 ]

@@ -60,7 +60,7 @@ from pyspark.sql.types import (
 )
 
 from copybook_rs_spark import blob as blob_mod
-from copybook_rs_spark.errors import PipelineContractError, TruncatedBlobError
+from copybook_rs_spark.errors import PipelineContractError
 from copybook_rs_spark.operators.lookup import split_candidates
 from copybook_rs_spark.operators.zonemap import certify_blob_crc, refresh_index
 
@@ -224,8 +224,6 @@ def _make_token_index_kernel():
             out: dict[str, list] = {f.name: [] for f in _INDEX_PA}
             for i in range(batch.num_rows):
                 mv = base[boff[i] : boff[i + 1]]
-                if len(mv) < blob_mod.HEADER_LEN:
-                    raise TruncatedBlobError("blob shorter than header")
                 certify_blob_crc(ids[i], crcs[i], mv)
                 _, _, _, vals = blob_mod.decode_chunk(mv, need_docs=False)
                 kind, ref, n_distinct, bits = _presence_bits(vals)

@@ -4,7 +4,7 @@ The engine-side analogue of the reference's `copybook verify` command and
 RoundTripConfig::run (crates/copybook-cli/src/commands/verify.rs,
 crates/copybook-codec/src/roundtrip.rs:89): decode(encode(df)) must equal df
 exactly, reported as a mismatch DataFrame (empty == pass) instead of a CLI
-report. Full-outer join on doc_id catches drops, duplicates and corruption.
+report.
 """
 
 from __future__ import annotations
@@ -14,38 +14,6 @@ from pyspark.sql import DataFrame, functions as F
 from copybook_rs_spark.config import EncodeConfig
 from copybook_rs_spark.operators.decode import decode_tokens
 from copybook_rs_spark.operators.encode import encode_tokens
-
-
-def roundtrip_mismatches(df: DataFrame, cfg: EncodeConfig | None = None) -> DataFrame:
-    """Rows where decode(encode(df)) differs from df (must be empty).
-
-    Sort-merge/hash equi-join on doc_id — built-in, test-scale only
-    (SURVEY.md §2.3); production verification samples per partition.
-    ASSUMES unique doc_ids (the join pairs every left dup with every right
-    dup); for inputs with duplicate ids use hash_mismatched_sources, whose
-    commutative digest sums verify the multiset exactly.
-    """
-    decoded = decode_tokens(encode_tokens(df, cfg), cfg=cfg)
-    a = df.select(
-        F.col("doc_id"),
-        F.col("tokens").alias("tokens_a"),
-        F.col("n_tok").alias("n_tok_a"),
-        F.col("source").alias("source_a"),
-    )
-    b = decoded.select(
-        F.col("doc_id"),
-        F.col("tokens").alias("tokens_b"),
-        F.col("n_tok").alias("n_tok_b"),
-        F.col("source").alias("source_b"),
-    )
-    joined = a.join(b, "doc_id", "full_outer")
-    return joined.filter(
-        F.col("tokens_a").isNull()
-        | F.col("tokens_b").isNull()
-        | (F.col("tokens_a") != F.col("tokens_b"))
-        | (F.col("n_tok_a") != F.col("n_tok_b"))
-        | (F.col("source_a") != F.col("source_b"))
-    )
 
 
 def _row_digest() -> "F.Column":
@@ -59,8 +27,8 @@ def hash_mismatched_sources(original: DataFrame, decoded: DataFrame) -> DataFram
     digests) must match between the original table and the decoded
     artifact. Each side is a partial+final hash-aggregation over a
     low-cardinality key — the only shuffled data is one row per source, vs
-    the row-level full-outer join of roundtrip_mismatches (exact but
-    shuffle-heavy; kept for tests). Digest sums are DECIMAL(38,0): exact
+    a row-level full-outer join on doc_id (exact but shuffle-heavy; the
+    tests keep one as their reference). Digest sums are DECIMAL(38,0): exact
     (ANSI-safe, no overflow below ~10^19 rows per source), commutative, so
     row order never matters. Collision odds per differing row are ~2^-64
     (the reference's SHA-256-receipt stance, roundtrip.rs:89, at aggregate

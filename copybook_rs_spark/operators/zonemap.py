@@ -67,7 +67,7 @@ from copybook_rs_spark import blob as blob_mod
 from copybook_rs_spark.config import decimal_params
 import zlib
 
-from copybook_rs_spark.errors import PipelineContractError, TruncatedBlobError
+from copybook_rs_spark.errors import PipelineContractError
 from copybook_rs_spark.operators.lookup import split_candidates
 
 INDEX_SCHEMA = StructType(
@@ -194,11 +194,8 @@ def _make_index_kernel(cols: tuple[str, ...]):
             out: dict[str, list] = {f.name: [] for f in _INDEX_PA}
             for i in range(batch.num_rows):
                 mv = base[boff[i] : boff[i + 1]]
-                if len(mv) < blob_mod.HEADER_LEN:
-                    raise TruncatedBlobError("blob shorter than header")
                 certify_blob_crc(ids[i], crcs[i], mv)
-                n_rows = blob_mod._HEADER.unpack_from(mv)[3]
-                ex = blob_mod.decode_extras(mv, n_rows, names=want)
+                ex = blob_mod.decode_extras(mv, names=want)
                 missing = want - set(ex)
                 if missing:
                     raise PipelineContractError(

@@ -51,7 +51,7 @@ def surface1() -> None:
     )
     r = blob.decode_chunk(b)
     assert r[0] == doc_bytes and (r[3] == vals).all()
-    ex = blob.decode_extras(b, 1500)
+    ex = blob.decode_extras(b)
     assert (ex["body"][1] == tl).all()
     random.seed(2)
     typed = 0

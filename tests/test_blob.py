@@ -6,6 +6,8 @@ corruption detectors (crates/copybook-corruption-detectors/src/lib.rs:17,41).
 """
 
 import hashlib
+import struct
+import zlib
 
 import numpy as np
 import pytest
@@ -14,6 +16,7 @@ from copybook_rs_spark import blob
 from copybook_rs_spark.errors import (
     BadMagicError,
     BlobFormatError,
+    CountMismatchError,
     CrcMismatchError,
     EngineError,
     TruncatedBlobError,
@@ -162,19 +165,22 @@ def test_blob_extras_roundtrip_and_corruption():
     assert b[: len(plain)] == plain  # prefix-compatible
     odb, odl, otl, otv = blob.decode_chunk(b)  # main decode ignores extras
     assert odb == db
-    ex = blob.decode_extras(b, 3)
+    ex = blob.decode_extras(b)
     assert ex["aux"][0] == "int64"
     np.testing.assert_array_equal(ex["aux"][1], el)
     np.testing.assert_array_equal(ex["aux"][2], ev)
-    assert blob.decode_extras(plain, 3) == {}
+    assert blob.decode_extras(plain) == {}
     # bit-flip inside the extras section must raise (own crc)
     bad = bytearray(b)
     bad[len(plain) + 10] ^= 0x20
     with pytest.raises(EngineError):
-        blob.decode_extras(bytes(bad), 3)
-    # wrong n_rows -> typed count error
-    with pytest.raises(EngineError):
-        blob.decode_extras(b, 4)
+        blob.decode_extras(bytes(bad))
+    # header n_rows sits outside the body crc: a patched count must still
+    # fail the extras' per-column count check
+    rows4 = bytearray(b)
+    struct.pack_into("<I", rows4, 6, 4)
+    with pytest.raises(CountMismatchError):
+        blob.decode_extras(bytes(rows4))
 
 
 def test_blob_extras_truncation_sweep():
@@ -196,10 +202,10 @@ def test_blob_extras_truncation_sweep():
     plain, _ = blob.encode_chunk(db, dl, tl, tv)
     for cut in range(len(plain), len(b)):
         try:
-            blob.decode_extras(b[:cut], 40)
+            blob.decode_extras(b[:cut])
         except EngineError as e:
             assert str(e).startswith("CBSP"), (cut, e)
-    full = blob.decode_extras(b, 40)
+    full = blob.decode_extras(b)
     np.testing.assert_array_equal(full["aux"][2], ev)
     assert full["emb"][2].tobytes() == fv.tobytes()  # bit-exact floats
 
@@ -426,17 +432,17 @@ def test_decode_extras_projection():
         db, dl, tl, tv,
         extras=[("aux", "int64", el, ev), ("emb", "float32", fl, fv)],
     )
-    only = blob.decode_extras(b, 30, names={"emb"})
+    only = blob.decode_extras(b, names={"emb"})
     assert set(only) == {"emb"}
     assert only["emb"][2].tobytes() == fv.tobytes()
-    both = blob.decode_extras(b, 30)
+    both = blob.decode_extras(b)
     assert set(both) == {"aux", "emb"}
     # a bit-flip inside the SKIPPED column's payload still trips the crc
     plain, _ = blob.encode_chunk(db, dl, tl, tv)
     bad = bytearray(b)
     bad[len(plain) + 12] ^= 0x10
     with pytest.raises(EngineError):
-        blob.decode_extras(bytes(bad), 30, names={"emb"})
+        blob.decode_extras(bytes(bad), names={"emb"})
 
 
 def test_describe_chunk_codec_tree():
@@ -566,7 +572,7 @@ def test_describe_chunk_malformed_extras_valid_crc_typed():
         with pytest.raises(EngineError):
             blob.describe_chunk(crafted)
         with pytest.raises(EngineError):
-            blob.decode_extras(crafted, n)
+            blob.decode_extras(crafted)
 
 
 def test_mode1_values_without_docs_typed():
@@ -654,7 +660,7 @@ def test_resealed_crc_mutation_fuzz_typed_or_clean():
         crafted = reseal(raw)
         for fn in (
             lambda c: blob.decode_chunk(c),
-            lambda c: blob.decode_extras(c, n),
+            lambda c: blob.decode_extras(c),
             lambda c: blob.describe_chunk(c),
         ):
             try:
@@ -664,3 +670,134 @@ def test_resealed_crc_mutation_fuzz_typed_or_clean():
             except Exception as e:  # noqa: BLE001 - the assertion itself
                 bad.append((trial, fn.__name__, type(e).__name__, str(e)[:80]))
     assert not bad, bad[:5]
+
+
+# ------------------------------------------------------- parser agreement
+
+_N_AGREE = 20
+
+
+def _agree_blob() -> bytes:
+    docs = [f"d{i:03d}" for i in range(_N_AGREE)]
+    b, _ = blob.encode_chunk(
+        "".join(docs).encode(),
+        np.full(_N_AGREE, 4, dtype=np.int64),
+        np.full(_N_AGREE, 3, dtype=np.int64),
+        np.arange(3 * _N_AGREE, dtype=np.int64),
+        extras=[
+            ("aux", "int64", np.ones(_N_AGREE, dtype=np.int64),
+             np.arange(_N_AGREE, dtype=np.int64)),
+            ("price", "decimal(10,2)", np.ones(_N_AGREE, dtype=np.int64),
+             np.arange(_N_AGREE, dtype=np.int64)),
+        ],
+    )
+    return b
+
+
+def _craft(patch) -> bytes:
+    """Apply patch(raw, end) to a fresh blob (end = offset of the extras
+    tail), then recompute the body crc and the extras crc."""
+    raw = bytearray(_agree_blob())
+    sd, sl, sv = struct.unpack_from("<III", raw, 22)
+    end = blob.HEADER_LEN + sd + sl + sv
+    patch(raw, end)
+    vmin, vmax = struct.unpack_from("<qq", raw, 34)
+    crc = zlib.crc32(struct.pack("<qq", vmin, vmax), zlib.crc32(bytes(raw[blob.HEADER_LEN:end])))
+    struct.pack_into("<I", raw, 18, crc & 0xFFFFFFFF)
+    struct.pack_into("<I", raw, end, zlib.crc32(bytes(raw[end + 4:])) & 0xFFFFFFFF)
+    return bytes(raw)
+
+
+def _set(off_fn, value):
+    def patch(raw, end):
+        raw[off_fn(raw, end)] = value
+    return patch
+
+
+_VERSION = _set(lambda raw, end: 4, 9)
+# per extras column: name_len:u8 name etype:u8 [p:u8 s:u8 if decimal] ...
+_ETYPE = _set(lambda raw, end: raw.index(b"\x03aux", end) + 4, 7)
+_PRECISION = _set(lambda raw, end: raw.index(b"\x05price", end) + 7, 40)
+_DOC_ENC = _set(
+    lambda raw, end: blob.HEADER_LEN + 4 + struct.unpack_from("<I", raw, blob.HEADER_LEN)[0],
+    9,
+)
+
+
+def _append(c):
+    one = np.ones(_N_AGREE, dtype=np.int64)
+    return blob.append_extras(c, [("new", "int64", one, one)])
+
+
+_AGREEMENT_CASES = {
+    # id: (expected code, crafted input, decode side, describe/rewrite side)
+    "version-append_extras": ("CBSP102", lambda: _craft(_VERSION), blob.decode_chunk, _append),
+    "version-drop_extras": ("CBSP102", lambda: _craft(_VERSION), blob.decode_chunk,
+                            lambda c: blob.drop_extras(c, {"aux"})),
+    "version-decode_extras": ("CBSP102", lambda: _craft(_VERSION), blob.decode_chunk,
+                              blob.decode_extras),
+    "extras-etype-7": ("CBSP105", lambda: _craft(_ETYPE), blob.decode_extras, blob.describe_chunk),
+    "extras-decimal-40-2": ("CBSP105", lambda: _craft(_PRECISION), blob.decode_extras,
+                            blob.describe_chunk),
+    "doc-encoding-9": ("CBSP105", lambda: _craft(_DOC_ENC), blob.decode_chunk, blob.describe_chunk),
+    "plain-width-3": ("CBSP204", lambda: b"\x00" + struct.pack("<IB", 4, 3) + bytes(12),
+                      "decode_array", "describe_payload"),
+    "bitpack-width-70": ("CBSP204", lambda: b"\x01" + struct.pack("<IB", 4, 70) + bytes(64),
+                         "decode_array", "describe_payload"),
+    "fsst-passes-9": ("CBSP204", lambda: b"\x05" + struct.pack("<IB", 4, 9) + bytes(64),
+                      "decode_array", "describe_payload"),
+    "plain-short-data": ("CBSP104", lambda: b"\x00" + struct.pack("<IB", 1000, 4) + bytes(16),
+                         "decode_array", "describe_payload"),
+}
+
+
+def _raised_code(fn, arg):
+    try:
+        fn(arg)
+    except EngineError as e:
+        return e.code
+    return None
+
+
+@pytest.mark.parametrize("case", sorted(_AGREEMENT_CASES))
+def test_parser_agreement_decode_and_describe_reject_alike(case):
+    # every framing layer has one reader: a fault the decode side rejects
+    # is rejected with the same CBSP code by describe and the extras
+    # rewriters (crafted with valid crcs, so only the parsers can catch it)
+    from copybook_rs_spark.codecs import core
+
+    code, make, decode_side, other_side = _AGREEMENT_CASES[case]
+    if isinstance(decode_side, str):
+        decode_side, other_side = getattr(core, decode_side), getattr(core, other_side)
+    crafted = make()
+    assert _raised_code(decode_side, crafted) == code
+    assert _raised_code(other_side, crafted) == code
+
+
+def test_inspect_chunk_cli_blob_file(tmp_path):
+    # scripts/inspect_chunk.py --blob-file needs no Spark: JSON on a good
+    # blob, a typed CBSP error and a non-zero exit on a bad one
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = Path(__file__).resolve().parent.parent / "scripts" / "inspect_chunk.py"
+    good = tmp_path / "good.bin"
+    good.write_bytes(_agree_blob())
+    bad = tmp_path / "bad.bin"
+    bad.write_bytes(_craft(_DOC_ENC))
+    ok = subprocess.run(
+        [sys.executable, str(script), "--blob-file", str(good)],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert ok.returncode == 0, ok.stderr
+    desc = json.loads(ok.stdout)
+    assert {"bytes", "values", "extras"} <= set(desc)
+    assert [c["name"] for c in desc["extras"]] == ["aux", "price"]
+    err = subprocess.run(
+        [sys.executable, str(script), "--blob-file", str(bad)],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert err.returncode != 0
+    assert "CBSP105" in err.stderr

@@ -13,17 +13,44 @@ import pytest
 from pyspark.sql import functions as F
 
 from copybook_rs_spark.config import EncodeConfig
-from copybook_rs_spark.operators import (
-    decode_tokens,
-    encode_tokens,
-    roundtrip_mismatches,
-)
+from copybook_rs_spark.operators import decode_tokens, encode_tokens
 from copybook_rs_spark.plans.partition import plan_salts, with_part_id
 from copybook_rs_spark.sources import manifest as mani
 from copybook_rs_spark.sources.tokens import synthetic_tokens, token_table
 
 SF_DIR = "/root/testdata/sf0.001"
 CFG = EncodeConfig(chunk_values=4096, target_values_per_part=12_288, shuffle_partitions=8)
+
+
+def roundtrip_mismatches(df, cfg=None):
+    """Rows where decode(encode(df)) differs from df (must be empty).
+
+    Full-outer join on doc_id catches drops, duplicates and corruption —
+    exact but shuffle-heavy, so it is the tests' reference; the scale path
+    is operators.verify.hash_mismatched_sources. ASSUMES unique doc_ids
+    (the join pairs every left dup with every right dup).
+    """
+    decoded = decode_tokens(encode_tokens(df, cfg), cfg=cfg)
+    a = df.select(
+        F.col("doc_id"),
+        F.col("tokens").alias("tokens_a"),
+        F.col("n_tok").alias("n_tok_a"),
+        F.col("source").alias("source_a"),
+    )
+    b = decoded.select(
+        F.col("doc_id"),
+        F.col("tokens").alias("tokens_b"),
+        F.col("n_tok").alias("n_tok_b"),
+        F.col("source").alias("source_b"),
+    )
+    joined = a.join(b, "doc_id", "full_outer")
+    return joined.filter(
+        F.col("tokens_a").isNull()
+        | F.col("tokens_b").isNull()
+        | (F.col("tokens_a") != F.col("tokens_b"))
+        | (F.col("n_tok_a") != F.col("n_tok_b"))
+        | (F.col("source_a") != F.col("source_b"))
+    )
 
 
 @pytest.fixture(scope="module")
