@@ -5,7 +5,6 @@ from copybook_rs_spark.codecs.core import (  # noqa: F401
     CODEC_IDS,
     CODEC_NAMES,
     ChunkStats,
-    choose_codec,
     decode_array,
     encode_array,
     estimate_sizes,

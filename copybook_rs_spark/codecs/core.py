@@ -787,11 +787,6 @@ def _lower_bounds(s: ChunkStats) -> dict[str, int]:
     return out
 
 
-def choose_codec(vals: np.ndarray, stats: ChunkStats | None = None, **_) -> str:
-    """Name of the codec auto-selection would use (try-encode, exact)."""
-    return encode_array(vals, codec="auto", stats=stats)[1]
-
-
 def estimate_sizes(s: ChunkStats) -> dict[str, int]:
     """Closed-form size estimates (non-cascaded layouts) — used for tests and
     observability, NOT for selection (selection try-encodes)."""

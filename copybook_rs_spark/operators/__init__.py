@@ -1,7 +1,7 @@
 """Engine operators: encode / decode / verify — partition-parallel
 mapInArrow pipelines with zero per-row Python (SURVEY.md §2.10)."""
 
-from copybook_rs_spark.operators.encode import compact_chunks, encode_tokens, prepare_grouped  # noqa: F401
+from copybook_rs_spark.operators.encode import encode_tokens, prepare_grouped  # noqa: F401
 from copybook_rs_spark.operators.extras import (  # noqa: F401
     append_extra_column,
     drop_extra_column,
@@ -20,21 +20,15 @@ from copybook_rs_spark.operators.lookup import (  # noqa: F401
 )
 from copybook_rs_spark.operators.mutate import (  # noqa: F401
     delete_docs,
-    insert_docs,
     upsert_docs,
 )
 from copybook_rs_spark.operators.token_index import (  # noqa: F401
     build_token_index,
-    docs_with_all_tokens,
-    docs_with_any_token,
     docs_with_token,
     filter_chunks_by_token,
-    refresh_token_index,
 )
 from copybook_rs_spark.operators.zonemap import (  # noqa: F401
     build_extras_index,
     decode_where,
     filter_chunks_by_extras,
-    refresh_extras_index,
-    refresh_index,
 )

@@ -434,26 +434,6 @@ def decode_tokens(
     return src.mapInArrow(make_decode_kernel(cols, out_pa, tok64=tok64), out_spark)
 
 
-def filter_chunks_by_token_range(
-    chunk_df: DataFrame, lo: int | None = None, hi: int | None = None
-) -> DataFrame:
-    """Chunk-skip pushdown for token-range predicates: keep only chunks
-    whose [min_token, max_token] envelope overlaps [lo, hi]. Metadata-only —
-    Catalyst pushes the comparison into the parquet scan (row-group min/max
-    stats prune whole files), so skipped chunks are never read, let alone
-    decompressed. The result is a CANDIDATE set: kept chunks may also hold
-    out-of-range tokens (exactly the Iceberg data-skipping contract); apply
-    the exact predicate after decode. The blob header (crc-certified since
-    format v3) carries the same certified
-    range inside each blob, so the envelope survives re-sharding."""
-    cond = F.lit(True)
-    if lo is not None:
-        cond = cond & (F.col("max_token") >= F.lit(int(lo)))
-    if hi is not None:
-        cond = cond & (F.col("min_token") <= F.lit(int(hi)))
-    return chunk_df.filter(cond)
-
-
 class _SampleParam:
     """AccumulatorParam for a bounded list of error samples."""
 

@@ -75,18 +75,6 @@ def minhash_buckets(
     return bands
 
 
-def bucket_sizes(df: DataFrame, **kw) -> DataFrame:
-    """(band_idx, bucket, n_docs) — observability face of the LSH index;
-    feed `.filter(n_docs > cap)` to audit what near_dup_candidates drops.
-    Band defaults live on minhash_buckets itself, so every caller audits
-    the same index."""
-    return (
-        minhash_buckets(df, **kw)
-        .groupBy("band_idx", "bucket")
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
 def near_dup_candidates(
     df: DataFrame, max_bucket_size: int = 1024, **kw
 ) -> DataFrame:
@@ -97,7 +85,7 @@ def near_dup_candidates(
     B^2/2 pairs, so one boilerplate cluster would otherwise turn the
     equi-join quadratic). Oversized buckets are near-always exact/near-exact
     boilerplate, which exact_dedup handles in O(n); audit what was dropped
-    via bucket_sizes(df).filter(n_docs > cap).
+    by counting minhash_buckets(df) rows per (band_idx, bucket).
 
     Recall: defaults (n_seeds=16, band_size=2 -> 8 bands of 2) give
     P[candidate] = 1 - (1 - s^2)^8 ~ 0.9997 at shingle-Jaccard s = 0.8

@@ -568,35 +568,6 @@ def prepare_grouped(
     )
 
 
-def compact_chunks(
-    chunk_df: DataFrame,
-    cfg: EncodeConfig | None = None,
-    salts: dict[str, int] | None = None,
-) -> DataFrame:
-    """Re-encode a chunk table into canonical form (Iceberg-style table
-    maintenance): incremental/streaming appends accumulate per-batch chunk
-    cuts and batch-prefixed chunk ids; compaction decodes and re-encodes.
-    Because group membership, intra-group order, chunk cuts and blob bytes
-    are all pure functions of the DATA (CLAUDE.md invariant 2), the output
-    is byte-identical to a fresh full encode of the underlying token table,
-    no matter how many batches produced the input — asserted in
-    tests/test_spark_pipeline.py::test_compaction_restores_canonical_chunks."""
-    from copybook_rs_spark.operators.decode import decode_tokens
-
-    cfg = cfg or EncodeConfig()
-    # lossless-maintenance guard: a cfg that does not match the table's
-    # schema fingerprint would silently drop extras / misread dtypes
-    fps = [r["schema_fp"] for r in chunk_df.select("schema_fp").distinct().collect()]
-    bad = [f for f in fps if f != cfg.fingerprint]
-    if bad:
-        raise PipelineContractError(
-            f"compact_chunks: table schema_fp {bad[0][:12]}… does not match "
-            f"cfg fingerprint {cfg.fingerprint[:12]}… — pass the EncodeConfig "
-            "the table was written with"
-        )
-    return encode_tokens(decode_tokens(chunk_df, cfg=cfg), cfg, salts=salts)
-
-
 def encode_tokens(
     df: DataFrame,
     cfg: EncodeConfig | None = None,

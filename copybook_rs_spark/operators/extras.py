@@ -22,10 +22,10 @@ would make blob bytes order-dependent (the encode path can cache per group
 only because its chunks are generated group-contiguously).
 
 Schema bookkeeping: appended rows carry the WIDENED config's schema_fp
-(base extra_columns + the new colspec), so `compact_chunks` and
-`merge_manifest_parts` keep their lossless-maintenance guarantees — the
-base cfg no longer matches (typed error instead of silently dropping the
-new column on re-encode) and the widened cfg round-trips everything.
+(base extra_columns + the new colspec), so mutation keeps
+its lossless guarantee — the base cfg no longer matches (typed error
+instead of silently dropping the new column on a rewrite) and the widened
+cfg round-trips everything.
 """
 
 from __future__ import annotations
@@ -64,7 +64,7 @@ _SPARK_VALUE_TYPES = {
 def widen_config(cfg: EncodeConfig, colspec: str) -> EncodeConfig:
     """The EncodeConfig describing a table after append_extra_column:
     same settings, extra_columns + colspec, fingerprint recomputed. Use it
-    for decode_tokens / compact_chunks over the appended table."""
+    for decode_tokens / upsert_docs over the appended table."""
     return replace(
         cfg, extra_columns=tuple(cfg.extra_columns) + (colspec,), fingerprint=""
     )
@@ -284,7 +284,7 @@ def append_extra_column(
     cfg: the EncodeConfig the table was written with (default base
     config); the chunk rows' schema_fp must match it (typed error
     otherwise), and the result carries `widen_config(cfg, colspec)`'s
-    fingerprint — decode/compact the appended table with that config.
+    fingerprint — decode or mutate the appended table with that config.
     values_df: (doc_id, <value_col>). Every document of the chunk table
     must be covered exactly once with a castable non-null value —
     missing documents and duplicate doc_ids fail typed at execution.

@@ -5,8 +5,9 @@ and filtering (crates/copybook-cli/src/commands/decode.rs drives a full
 scan; crates/copybook-core/src/projection.rs:48 narrows WIDTH, not rows).
 On a 100 TB chunk table a full decode for a handful of doc ids is the one
 access pattern the encode layout can already beat — this module is the
-row-skipping counterpart of `filter_chunks_by_token_range`'s data-skipping
-contract, built from metadata the chunk table has carried since v1:
+doc-id counterpart of the token index's data-skipping contract
+(operators/token_index.py), built from metadata the chunk table has
+carried since v1:
 
 1. **Zone map.** Docs within a (source, part_id) group are sorted by
    doc_id before chunking (plans/partition.py::repartition_for_encode) and

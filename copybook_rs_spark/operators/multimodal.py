@@ -1,17 +1,10 @@
 """Multimodal columns: images/audio/video as opaque binary + typed metadata.
 
-The Spark-side plumbing is real — schema, partition-parallel mapInArrow over
-Arrow binary buffers, batch shapes, deterministic feature vectors — and so
-is the decode for the formats a dependency-free engine can own: 24-bit BMP,
-8-bit PNG (stdlib zlib inflate, all five scanline filters), 16-bit PCM WAV.
-jpeg/mp3/mp4 remain declared hooks (`decode_media` raises
-NotImplementedError: pillow/ffmpeg are not in this container); wiring a
-real codec changes one function, not the pipeline.
-
 Media rows: (media_id long, media binary, meta struct<kind string,
-width int, height int>). `fake_features` derives a deterministic
-FEATURE_DIM-float vector from the bytes (rolling uint64 hash -> floats), so
-the distributed path is testable end-to-end without codecs.
+width int, height int>). `extract_features` derives a deterministic
+FEATURE_DIM-float vector from the bytes (a byte-level weighted per-lane
+mean), partition-parallel via mapInArrow over the Arrow binary buffers.
+Nothing is decoded: the kernel works for any container format.
 """
 
 from __future__ import annotations
@@ -36,226 +29,11 @@ _FEAT_PA = pa.schema(
 )
 
 
-def _decode_bmp(data: bytes) -> np.ndarray:
-    """Pure-numpy decoder for uncompressed 24-bit BMP -> uint8 HxWx3 RGB.
-    No imaging library needed; covers the windows-bitmap baseline
-    (BITMAPINFOHEADER, bottom-up rows, 4-byte row padding)."""
-    import struct as _struct
-
-    if len(data) < 54 or data[:2] != b"BM":
-        raise ValueError("not a BMP file")
-    (pix_off,) = _struct.unpack_from("<I", data, 10)
-    hdr_size, width, height = _struct.unpack_from("<Iii", data, 14)
-    planes, bpp = _struct.unpack_from("<HH", data, 26)
-    (compression,) = _struct.unpack_from("<I", data, 30)
-    if hdr_size < 40 or bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"only uncompressed 24-bit BMP supported (bpp={bpp}, "
-            f"compression={compression})"
-        )
-    bottom_up = height > 0
-    h = abs(height)
-    row_bytes = (width * 3 + 3) & ~3
-    need = pix_off + row_bytes * h
-    if len(data) < need:
-        raise ValueError("BMP pixel data truncated")
-    raw = np.frombuffer(data, dtype=np.uint8, count=row_bytes * h, offset=pix_off)
-    rows = raw.reshape(h, row_bytes)[:, : width * 3].reshape(h, width, 3)
-    if bottom_up:
-        rows = rows[::-1]
-    return rows[:, :, ::-1].copy()  # BGR -> RGB
-
-
-def _decode_wav(data: bytes) -> tuple[np.ndarray, int]:
-    """Pure-numpy decoder for 16-bit PCM WAV -> (int16 [n, channels],
-    sample_rate)."""
-    import struct as _struct
-
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a WAV file")
-    off = 12
-    channels = rate = bits = None
-    payload = None
-    while off + 8 <= len(data):
-        cid = data[off : off + 4]
-        (clen,) = _struct.unpack_from("<I", data, off + 4)
-        body = data[off + 8 : off + 8 + clen]
-        if cid == b"fmt ":
-            fmt, channels, rate = _struct.unpack_from("<HHI", body, 0)
-            (bits,) = _struct.unpack_from("<H", body, 14)
-            if fmt != 1 or bits != 16:
-                raise NotImplementedError(
-                    f"only 16-bit PCM WAV supported (fmt={fmt}, bits={bits})"
-                )
-        elif cid == b"data":
-            payload = body
-        off += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if channels is None or payload is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    wave = np.frombuffer(payload, dtype="<i2")
-    wave = wave[: (len(wave) // channels) * channels].reshape(-1, channels)
-    return wave, rate
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _unfilter_row(f: int, cur: np.ndarray, prev: np.ndarray, bpp: int) -> np.ndarray:
-    """One PNG scanline unfilter (spec §9). cur is the filtered row uint8,
-    prev the reconstructed previous row. None/Up are one vector op; Sub is
-    an EXACT per-lane modular prefix sum (uint8 cumsum wraps like the
-    spec's mod-256 add — 400x the old per-byte loop); Average/Paeth keep
-    their inherent left-to-right dependency but run on plain Python ints
-    over pre-converted lists (10-13x the old loop: numpy SCALAR indexing
-    was the cost, not the arithmetic — a lane-vectorized numpy variant
-    measured no better because per-pixel 3-element array ops pay the same
-    dispatch overhead)."""
-    if f == 0:
-        return cur.copy()
-    if f == 2:  # Up
-        return cur + prev  # uint8 add wraps mod 256, as the spec requires
-    if f == 1:  # Sub: out[x] = cur[x] + out[x-1] per lane -> prefix sum
-        return np.cumsum(
-            cur.reshape(-1, bpp), axis=0, dtype=np.uint8
-        ).reshape(-1)
-    if f not in (3, 4):
-        raise ValueError(f"unknown PNG filter {f}")
-    n = len(cur)
-    ci = cur.tolist()
-    pi = prev.tolist()
-    out = [0] * n
-    if f == 3:  # Average
-        for i in range(n):
-            a = out[i - bpp] if i >= bpp else 0
-            out[i] = (ci[i] + ((a + pi[i]) >> 1)) & 0xFF
-    else:  # Paeth
-        for i in range(n):
-            a = out[i - bpp] if i >= bpp else 0
-            b = pi[i]
-            c = pi[i - bpp] if i >= bpp else 0
-            pa_ = b - c
-            if pa_ < 0:
-                pa_ = -pa_
-            pb = a - c
-            if pb < 0:
-                pb = -pb
-            pc = a + b - 2 * c
-            if pc < 0:
-                pc = -pc
-            pred = a if (pa_ <= pb and pa_ <= pc) else (b if pb <= pc else c)
-            out[i] = (ci[i] + pred) & 0xFF
-    return np.array(out, dtype=np.uint8)
-
-
-def _decode_png(data) -> np.ndarray:
-    """Dependency-free PNG baseline decoder (stdlib zlib inflate): 8-bit
-    greyscale / RGB / grey+alpha / RGBA, non-interlaced -> uint8 HxWx3 RGB
-    (grey replicated, alpha dropped). All five scanline filters supported."""
-    import struct as _struct
-    import zlib as _zlib
-
-    if len(data) < 8 or bytes(data[:8]) != _PNG_SIG:
-        raise ValueError("not a PNG file")
-    off = 8
-    idat: list[bytes] = []
-    w = h = color = None
-    while off + 8 <= len(data):
-        (clen,) = _struct.unpack_from(">I", data, off)
-        ctype = bytes(data[off + 4 : off + 8])
-        if off + 12 + clen > len(data):
-            raise ValueError("PNG chunk truncated")
-        body = data[off + 8 : off + 8 + clen]
-        if ctype == b"IHDR":
-            w, h, bitd, color, comp, filt, interlace = _struct.unpack(
-                ">IIBBBBB", bytes(body)
-            )
-            if bitd != 8 or color not in (0, 2, 4, 6) or comp or filt or interlace:
-                raise NotImplementedError(
-                    f"only 8-bit non-interlaced grey/RGB(A) PNG supported "
-                    f"(bit_depth={bitd}, color={color}, interlace={interlace})"
-                )
-        elif ctype == b"IDAT":
-            idat.append(bytes(body))
-        elif ctype == b"IEND":
-            break
-        off += 12 + clen  # length + type + crc
-    if w is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    ch = {0: 1, 2: 3, 4: 2, 6: 4}[color]
-    stride = w * ch
-    raw = np.frombuffer(_zlib.decompress(b"".join(idat)), dtype=np.uint8)
-    if len(raw) != (stride + 1) * h:
-        raise ValueError("PNG scanline data size mismatch")
-    rows = raw.reshape(h, stride + 1)
-    out = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        prev = _unfilter_row(int(rows[y, 0]), rows[y, 1:], prev, ch)
-        out[y] = prev
-    img = out.reshape(h, w, ch)
-    if ch == 1:
-        return np.repeat(img, 3, axis=2)
-    if ch == 2:
-        return np.repeat(img[:, :, :1], 3, axis=2)
-    return np.ascontiguousarray(img[:, :, :3])
-
-
-def decode_media(data: bytes, kind: str):
-    """Dependency-free media decode for the formats a pure-numpy engine can
-    own: image -> 24-bit BMP or 8-bit PNG to uint8 HxWx3 RGB (sniffed by
-    magic bytes), audio -> 16-bit PCM WAV to (int16 [n, channels], rate).
-    Other containers (jpeg/mp3/mp4) remain a declared hook — wire
-    PIL/soundfile/av here when available."""
-    if kind == "image":
-        if len(data) >= 8 and bytes(data[:8]) == _PNG_SIG:
-            return _decode_png(data)
-        return _decode_bmp(data)
-    if kind == "audio":
-        return _decode_wav(data)
-    raise NotImplementedError(
-        f"media decode for kind={kind!r} requires imaging/audio libraries "
-        "not present in this environment; wire PIL/soundfile/av here"
-    )
-
-
-def decoded_features(data: bytes, kind: str) -> np.ndarray:
-    """FEATURE_DIM float32 vector from the DECODED media (vs fake_features'
-    byte-level hash): per-channel means/extrema + shape for images,
-    channel stats + zero-crossing rate for audio. Deterministic."""
-    out = np.zeros(FEATURE_DIM, dtype=np.float32)
-    if kind == "image":
-        img = decode_media(data, kind).astype(np.float64)
-        h, w, _ = img.shape
-        out[0:3] = img.mean(axis=(0, 1))
-        out[3:6] = img.std(axis=(0, 1))
-        out[6:9] = img.max(axis=(0, 1))
-        out[9:12] = img.min(axis=(0, 1))
-        out[12], out[13] = h, w
-        out[14] = img.mean()
-        out[15] = np.abs(np.diff(img.mean(axis=2), axis=1)).mean() if w > 1 else 0.0
-        return out
-    if kind == "audio":
-        wave, rate = decode_media(data, kind)
-        wv = wave.astype(np.float64)
-        n, ch = wv.shape
-        out[0] = wv.mean()
-        out[1] = wv.std()
-        out[2] = np.abs(wv).mean()
-        out[3] = wv.max()
-        out[4] = wv.min()
-        out[5] = float((np.diff(np.signbit(wv[:, 0])) != 0).mean()) if n > 1 else 0.0
-        out[6], out[7], out[8] = n, ch, rate
-        out[9] = np.sqrt((wv**2).mean())
-        return out
-    raise NotImplementedError(f"no feature extractor for kind={kind!r}")
-
-
 def _binary_views(arr: pa.Array):
     """Zero-copy (offsets, flat uint8 data) views of a binary/utf8 column.
     Rejects nulls with a clear error — a null slot has equal offsets and
     would otherwise masquerade as an empty (and thus corrupt-looking)
-    media value deep inside a decoder. Shared by all three media kernels
-    so validity/large-offset handling lives in one place."""
+    media value."""
     if arr.null_count:
         raise ValueError(
             f"media column contains {arr.null_count} null value(s); "
@@ -317,188 +95,4 @@ def extract_features(media_df: DataFrame) -> DataFrame:
     Deterministic byte-level features (no decode; works for any format)."""
     return media_df.select("media_id", "media", "kind").mapInArrow(
         _feature_kernel, FEATURES_SCHEMA
-    )
-
-
-def _decoded_feature_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for batch in batches:
-        ids = batch.column("media_id").to_numpy(zero_copy_only=False)
-        kinds = batch.column("kind").to_pylist()
-        media = batch.column("media")
-        # zero-copy memoryview slices of the binary column's contiguous
-        # data buffer (same move as _feature_kernel) — no per-item as_py()
-        # blob copies, so tiny media never pay a Python materialization
-        offs, raw_np = _binary_views(media)
-        raw = memoryview(raw_np)
-        n = len(ids)
-        lens = (offs[1:] - offs[:-1]).astype(np.int64)
-        feats = np.zeros((n, FEATURE_DIM), dtype=np.float32)
-        for i in range(n):  # per-MEDIA loop: one row = one whole image/clip,
-            # the same work granularity as one chunk in the codec kernels
-            feats[i] = decoded_features(
-                raw[int(offs[i]) : int(offs[i + 1])], kinds[i]
-            )
-        f_offs = np.arange(0, (n + 1) * FEATURE_DIM, FEATURE_DIM, dtype=np.int32)
-        flist = pa.ListArray.from_arrays(
-            pa.array(f_offs), pa.array(feats.reshape(-1), pa.float32())
-        )
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(ids, pa.int64()), pa.array(kinds, pa.string()),
-             pa.array(lens, pa.int64()), flist],
-            schema=_FEAT_PA,
-        )
-
-
-def extract_decoded_features(media_df: DataFrame) -> DataFrame:
-    """Feature extraction over DECODED media (real BMP/WAV decode via
-    decode_media) — the end-to-end multimodal path."""
-    return media_df.select("media_id", "media", "kind").mapInArrow(
-        _decoded_feature_kernel, FEATURES_SCHEMA
-    )
-
-
-def make_bmp(pixels: np.ndarray) -> bytes:
-    """Serialize uint8 HxWx3 RGB -> 24-bit BMP bytes (test/fixture helper,
-    the exact inverse of _decode_bmp)."""
-    import struct as _struct
-
-    h, w, _ = pixels.shape
-    row_bytes = (w * 3 + 3) & ~3
-    pix = np.zeros((h, row_bytes), dtype=np.uint8)
-    pix[:, : w * 3] = pixels[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
-    body = pix.tobytes()
-    header = _struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
-    dib = _struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    return header + dib + body
-
-
-def make_wav(wave: np.ndarray, rate: int = 16000) -> bytes:
-    """Serialize int16 [n, channels] -> 16-bit PCM WAV bytes (test helper)."""
-    import struct as _struct
-
-    n, ch = wave.shape
-    payload = wave.astype("<i2").tobytes()
-    fmt = _struct.pack("<HHIIHH", 1, ch, rate, rate * ch * 2, ch * 2, 16)
-    chunks = b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + _struct.pack("<I", len(payload)) + payload
-    return b"RIFF" + _struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def make_png(pixels: np.ndarray) -> bytes:
-    """Serialize uint8 HxWx3 RGB -> 8-bit truecolor PNG bytes (filter 0
-    scanlines, one IDAT; test/fixture helper, decodable by _decode_png and
-    any standard viewer)."""
-    import struct as _struct
-    import zlib as _zlib
-
-    h, w, _ = pixels.shape
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            _struct.pack(">I", len(body))
-            + ctype
-            + body
-            + _struct.pack(">I", _zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = _struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    scan = np.zeros((h, w * 3 + 1), dtype=np.uint8)
-    scan[:, 1:] = pixels.reshape(h, w * 3)
-    idat = _zlib.compress(scan.tobytes(), 6)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", idat)
-        + chunk(b"IEND", b"")
-    )
-
-
-def resize_image(pixels: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbour resize of uint8 HxWx3 — pure numpy (two gathers),
-    deterministic. The standard thumbnail/normalization step before
-    feature extraction or model input."""
-    h, w, _ = pixels.shape
-    rows = (np.arange(height) * h // height).astype(np.int64)
-    cols = (np.arange(width) * w // width).astype(np.int64)
-    return pixels[rows][:, cols]
-
-
-def sample_audio(
-    wave: np.ndarray, rate: int, start_ms: int, duration_ms: int
-) -> np.ndarray:
-    """Clip [start_ms, start_ms+duration_ms) of int16 [n, ch] audio —
-    the audio analogue of video frame-sampling. Negative bounds are
-    rejected: Python's negative slicing would silently return audio from
-    the END of the clip (wrong data, no error)."""
-    if start_ms < 0 or duration_ms < 0:
-        raise ValueError(
-            f"start_ms/duration_ms must be non-negative "
-            f"({start_ms}, {duration_ms})"
-        )
-    a = (start_ms * rate) // 1000
-    b = a + (duration_ms * rate) // 1000
-    return wave[a:b]
-
-
-_TRANSFORM_PA = pa.schema(
-    [("media_id", pa.int64()), ("kind", pa.string()), ("media", pa.binary())]
-)
-TRANSFORM_SCHEMA = "media_id long, kind string, media binary"
-
-
-def _transform_kernel(width, height, start_ms, duration_ms):
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column("media_id").to_numpy(zero_copy_only=False)
-            kinds = batch.column("kind").to_pylist()
-            media = batch.column("media")
-            offs, raw_np = _binary_views(media)
-            raw = memoryview(raw_np)
-            out: list[bytes] = []
-            for i in range(len(ids)):  # one row = one whole image/clip
-                data = raw[int(offs[i]) : int(offs[i + 1])]
-                kind = kinds[i]
-                if kind == "image":
-                    img = resize_image(decode_media(data, kind), width, height)
-                    # preserve the container: PNG in -> PNG out, else BMP
-                    is_png = len(data) >= 8 and bytes(data[:8]) == _PNG_SIG
-                    out.append(make_png(img) if is_png else make_bmp(img))
-                elif kind == "audio":
-                    wave, rate = decode_media(data, kind)
-                    out.append(
-                        make_wav(sample_audio(wave, rate, start_ms, duration_ms), rate)
-                    )
-                else:
-                    # video frame-sampling needs a codec this container
-                    # lacks — declared hook, same stance as decode_media
-                    raise NotImplementedError(
-                        f"transform for kind={kind!r} requires av/ffmpeg"
-                    )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(kinds, pa.string()),
-                    pa.array(out, pa.binary()),
-                ],
-                schema=_TRANSFORM_PA,
-            )
-
-    return kernel
-
-
-def transform_media(
-    media_df: DataFrame,
-    width: int = 64,
-    height: int = 64,
-    start_ms: int = 0,
-    duration_ms: int = 1000,
-) -> DataFrame:
-    """Partition-parallel media normalization: images resize to
-    width x height (nearest-neighbour, container preserved), audio clips to
-    [start_ms, start_ms + duration_ms). Binary in, binary out — chains with
-    extract_decoded_features or a model-input sink; the per-row loop
-    works on zero-copy buffer slices (no as_py materialization)."""
-    return media_df.select("media_id", "media", "kind").mapInArrow(
-        _transform_kernel(width, height, start_ms, duration_ms),
-        TRANSFORM_SCHEMA,
     )

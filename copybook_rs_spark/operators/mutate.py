@@ -1,5 +1,5 @@
-"""Encoded-table mutation: physical delete / insert / upsert over a chunk
-table WITHOUT re-encoding the corpus.
+"""Encoded-table mutation: physical delete / upsert over a chunk table
+WITHOUT re-encoding the corpus.
 
 The reference's only mutation story is a full re-run of encode over edited
 input (crates/copybook-cli/src/commands/encode.rs drives whole files); at
@@ -16,15 +16,14 @@ mutations cost O(affected chunks), all through ONE fused rewrite pass:
   all deleted disappear (chunk_seq gaps are legal — the zone map orders by
   seq, it never requires density).
 
-- **insert_docs**: new docs route to their hash-assigned (source, part_id)
-  by the SAME salt plan the encode used, then to the one zone-map bracket
-  chunk inside the part, preserving the sorted-per-part layout point
-  lookups rely on. Parts/sources with no existing chunks take the normal
-  encode path (fresh sources get their own data-sized plan_salts — never
-  a one-part dump). Inserted chunks may exceed the value budget;
-  compact_chunks restores canonical cuts.
-
-- **upsert_docs**: replace-or-insert. FUSED, not delete-then-insert: each
+- **upsert_docs**: replace-or-insert. New docs route to their
+  hash-assigned (source, part_id) by the SAME salt plan the encode used,
+  then to the one zone-map bracket chunk inside the part, preserving the
+  sorted-per-part layout point lookups rely on. Parts/sources with no
+  existing chunks take the normal encode path (fresh sources get their own
+  data-sized plan_salts — never a one-part dump). Chunks that gained docs
+  may exceed the value budget; `encode_tokens(decode_tokens(...))`
+  restores canonical cuts. FUSED, not delete-then-insert: each
   affected chunk is rewritten ONCE — old copies of the incoming doc_ids
   dropped and new docs merged in the same kernel invocation — so there is
   no intermediate table to persist and the blob column shuffles once.
@@ -45,7 +44,7 @@ path's cross-chunk cache is group-order-dependent, which a rewrite cannot
 reproduce — same documented stance as operators/extras.py appends), so a
 rewrite is decode-equal, not byte-equal, to the chunk's canonical encode;
 crc32/enc_bytes change, which is exactly what the resumable-decode
-membership fingerprint and the incremental ledger key on.
+membership fingerprint keys on.
 """
 
 from __future__ import annotations
@@ -147,9 +146,9 @@ def _make_mutation_kernel(cfg: EncodeConfig, op: str):
     then merge __new docs (sorted structs) at their canonical position.
     Either column may be null per row; both null = impossible by
     construction (only candidate chunks reach the kernel), but handled as
-    passthrough. op='insert' treats a surviving duplicate doc_id as a
-    typed clash; for op='upsert' the same check is an internal guard (old
-    copies were just dropped, so it cannot fire on well-formed tables)."""
+    passthrough. A surviving duplicate doc_id fails typed — an internal
+    guard: the delete pass just dropped the old copies, so it cannot fire
+    on well-formed tables."""
     fp = cfg.fingerprint
     extra_specs = cfg.extra_specs()
 
@@ -219,8 +218,7 @@ def _make_mutation_kernel(cfg: EncodeConfig, op: str):
                             f"{op}: duplicate doc_ids in the insert batch "
                             f"for chunk {cid!r} — canonical order of "
                             "duplicate ids is content-tiebroken by the "
-                            "encode path; insert one row per doc_id (or "
-                            "encode duplicates as a fresh batch)"
+                            "encode path; pass one row per doc_id"
                         )
                     old_ids = _doc_id_array(doc_b, doc_l)
                     clash = pc.any(
@@ -228,9 +226,8 @@ def _make_mutation_kernel(cfg: EncodeConfig, op: str):
                     ).as_py()
                     if clash:
                         raise PipelineContractError(
-                            f"{op}: chunk {cid!r} already holds one of the "
-                            "inserted doc_ids — use upsert_docs (or "
-                            "delete_docs first) to replace documents"
+                            f"{op}: chunk {cid!r} still holds one of the "
+                            "inserted doc_ids after its delete pass"
                         )
                     ndl, ndb = _string_parts(new_ids)
                     ntl, ntv = _list_parts(structs.field("tokens"))
@@ -306,6 +303,7 @@ def _route_inserts(
     new_df: DataFrame,
     cfg: EncodeConfig,
     salts: dict[str, int],
+    op: str,
 ) -> tuple[DataFrame, DataFrame]:
     """-> ((chunk_id, __new sorted struct list), leftover token rows).
     Docs of sources already in the table go to their hash part under
@@ -322,9 +320,9 @@ def _route_inserts(
     uncertified = (new_sources & table_sources) - set(salts)
     if uncertified:
         raise PipelineContractError(
-            "insert_docs: cannot certify the encode-time salt plan for "
+            f"{op}: cannot certify the encode-time salt plan for "
             f"source(s) {sorted(uncertified)!r} — pass salts= (the plan "
-            "the table was encoded with) or compact_chunks the table first"
+            "the table was encoded with)"
         )
     fresh = new_df.where(~F.col("source").isin(list(table_sources)))
     existing = new_df.where(F.col("source").isin(list(table_sources)))
@@ -416,7 +414,7 @@ def _apply_mutation(
         if del_keys is not None else None
     )
     per_new, leftovers = (
-        _route_inserts(chunk_df, new_df, cfg, salts)
+        _route_inserts(chunk_df, new_df, cfg, salts, op)
         if new_df is not None else (None, None)
     )
     if per_del is not None and per_new is not None:
@@ -458,21 +456,6 @@ def delete_docs(
     once and pass in when issuing many mutations against one table)."""
     return _apply_mutation(
         chunk_df, keys, None, cfg or EncodeConfig(), salts, "delete_docs"
-    )
-
-
-def insert_docs(
-    chunk_df: DataFrame,
-    new_df: DataFrame,
-    cfg: EncodeConfig | None = None,
-    salts: dict[str, int] | None = None,
-) -> DataFrame:
-    """Insert NEW documents into an encoded chunk table at their canonical
-    position (module docstring). new_df: token-table rows (doc_id, tokens,
-    source + every cfg extras column). A doc_id already present in its
-    target chunk fails typed — use upsert_docs to replace."""
-    return _apply_mutation(
-        chunk_df, None, new_df, cfg or EncodeConfig(), salts, "insert_docs"
     )
 
 

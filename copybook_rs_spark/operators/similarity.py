@@ -4,7 +4,7 @@ Brute-force cosine top-k is the exact baseline (one pass, no shuffle beyond
 the final top-k); the LSH-bucketed variant is the 100 TB path: a seeded
 random-hyperplane signature per vector, bucket equi-join, exact re-rank
 inside the candidate bucket only. Hyperplanes are derived from a fixed seed
-so the index is deterministic and rebuildable on any cluster size.
+so the signatures are deterministic on any cluster size.
 """
 
 from __future__ import annotations
@@ -81,24 +81,6 @@ def lsh_signatures(
     )
 
 
-def build_ann_index(
-    df: DataFrame, dim: int, out_dir: str, n_planes: int = 8, seed: int = 42
-) -> None:
-    """Persist the LSH signature table partitioned by bucket, so a probe
-    reads ONLY its bucket directories (partition pruning — the Iceberg
-    hidden-partitioning shape). The index is a pure function of
-    (data, n_planes, seed): rebuildable on any cluster size, and usable by
-    every later query without recomputing signatures over the corpus."""
-    sigs = lsh_signatures(df, dim, n_planes, seed)
-    sigs.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(out_dir)
-
-
-def read_ann_index(spark, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir)
-
-
 def probe_buckets(
     query: list[float], n_planes: int = 8, seed: int = 42, n_probes: int = 1
 ) -> list[int]:
@@ -125,101 +107,6 @@ def probe_buckets(
     return probes[:n_probes]
 
 
-_IVF_SCHEMA = "vec_id long, list_id int"
-_IVF_PA = pa.schema([("vec_id", pa.int64()), ("list_id", pa.int32())])
-
-
-def train_ivf_centroids(
-    df: DataFrame,
-    dim: int,
-    n_lists: int = 64,
-    sample_cap: int = 65536,
-    iters: int = 10,
-) -> np.ndarray:
-    """Spherical k-means coarse quantizer (IVF), trained driver-side on a
-    deterministic sample (first sample_cap vectors by vec_id — a TakeOrdered,
-    cheap at any scale). Deterministic init (first n_lists sample rows) +
-    fixed Lloyd iterations -> the same centroids on any cluster size.
-    Returns (n_lists, dim) float32, unit-normalized."""
-    rows = (
-        df.select("vec_id", "embedding").orderBy("vec_id").limit(sample_cap).collect()
-    )
-    mat = np.array([r["embedding"] for r in rows], dtype=np.float32)
-    unit = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-    cents = unit[: min(n_lists, len(unit))].copy()
-    if len(cents) < n_lists:
-        n_lists = len(cents)
-    for _ in range(iters):
-        assign = np.argmax(unit @ cents.T, axis=1)
-        for c in range(n_lists):
-            members = unit[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cents[c] = m / max(np.linalg.norm(m), 1e-30)
-    return cents
-
-
-def _ivf_kernel(cents: np.ndarray):
-    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        dim = cents.shape[1]
-        for batch in batches:
-            ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
-            emb = batch.column("embedding")
-            offs = np.frombuffer(emb.buffers()[1], dtype=np.int32)[
-                emb.offset : emb.offset + len(emb) + 1
-            ]
-            flat = emb.values.to_numpy(zero_copy_only=False)
-            mat = flat[offs[0] : offs[-1]].reshape(len(ids), dim)
-            unit = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-30
-            )
-            lists = np.argmax(unit @ cents.T, axis=1).astype(np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()), pa.array(lists, pa.int32())],
-                schema=_IVF_PA,
-            )
-
-    return kernel
-
-
-def ivf_assignments(df: DataFrame, cents: np.ndarray) -> DataFrame:
-    """(vec_id, list_id): nearest-centroid assignment, one BLAS call per
-    Arrow batch (centroids ship in the task closure — n_lists x dim floats)."""
-    return df.select("vec_id", "embedding").mapInArrow(
-        _ivf_kernel(cents), _IVF_SCHEMA
-    )
-
-
-def build_ivf_index(df: DataFrame, cents: np.ndarray, out_dir: str) -> None:
-    """Persist IVF assignments partitioned by list_id: a query reads only
-    its probed inverted lists (partition pruning), the 100 TB ANN shape.
-    Measured on the embeddings fixture: recall@10 = 0.67 scanning 3% of the
-    corpus at n_probe=1 (n_lists=32) vs 0.11 for single-table hyperplane
-    LSH at the same scan budget — see BENCH/BASELINE.md."""
-    ivf_assignments(df, cents).repartition("list_id").write.mode(
-        "overwrite"
-    ).partitionBy("list_id").parquet(out_dir)
-
-
-def ivf_topk(
-    df: DataFrame,
-    cents: np.ndarray,
-    query: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    index: DataFrame | None = None,
-) -> DataFrame:
-    """ANN top-k via IVF: exact cosine re-rank inside the n_probe nearest
-    inverted lists. Pass `index` (build_ivf_index output) to skip the
-    assignment pass."""
-    q = np.asarray(query, dtype=np.float32)
-    qu = q / max(np.linalg.norm(q), 1e-30)
-    probes = [int(x) for x in np.argsort(-(cents @ qu), kind="stable")[:n_probe]]
-    sigs = index if index is not None else ivf_assignments(df, cents)
-    cand = sigs.filter(F.col("list_id").isin(probes)).select("vec_id")
-    return cosine_topk(df.join(cand, "vec_id", "inner"), query, k)
-
-
 def lsh_topk(
     df: DataFrame,
     query: list[float],
@@ -227,20 +114,12 @@ def lsh_topk(
     n_planes: int = 8,
     seed: int = 42,
     n_probes: int = 1,
-    index: DataFrame | None = None,
 ) -> DataFrame:
     """ANN top-k: exact cosine re-rank restricted to the query's probed LSH
-    buckets. Pass `index` (from build_ann_index/read_ann_index) to skip the
-    corpus-wide signature pass — the probe then costs one partition-pruned
-    index read + a semi-join on vec_id. n_probes is the recall knob
-    (recall@10 vs brute force on the embeddings fixture is receipted in
-    BENCH/BASELINE.md)."""
+    buckets. n_probes is the recall knob (recall@10 vs brute force on the
+    embeddings fixture is receipted in BENCH/BASELINE.md)."""
     probes = probe_buckets(query, n_planes, seed, n_probes)
-    sigs = (
-        index
-        if index is not None
-        else lsh_signatures(df, len(query), n_planes, seed)
-    )
+    sigs = lsh_signatures(df, len(query), n_planes, seed)
     cand = sigs.filter(F.col("bucket").isin(probes)).select("vec_id")
     return cosine_topk(df.join(cand, "vec_id", "inner"), query, k)
 
@@ -282,8 +161,7 @@ def _nonzero(df: DataFrame) -> DataFrame:
 def embedding_pairs_exact(df: DataFrame, threshold: float) -> DataFrame:
     """All (id_a < id_b) pairs with cosine >= threshold by brute-force
     self-join — O(n^2): the correctness oracle twin and the small-corpus
-    path. At scale use embedding_near_dup_pairs (LSH-bucketed). Zero-norm
-    vectors never pair (see _nonzero)."""
+    path. Zero-norm vectors never pair (see _nonzero)."""
     nz = _nonzero(df)
     a, b = nz.alias("a"), nz.alias("b")
     return (
@@ -293,80 +171,3 @@ def embedding_pairs_exact(df: DataFrame, threshold: float) -> DataFrame:
             F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
         )
     )
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    dim: int,
-    threshold: float,
-    n_planes: int = 8,
-    seed: int = 42,
-    n_tables: int = 4,
-    max_bucket_size: int = 4096,
-) -> DataFrame:
-    """(id_a < id_b) candidate pairs sharing a random-hyperplane LSH bucket
-    in ANY of n_tables independent signature tables, verified with exact
-    cosine >= threshold. The 100 TB shape: per table one bucket equi-join
-    over the signature table (same plan as MinHash-LSH text dedup), exact
-    re-rank only inside candidate buckets; degenerate buckets above
-    max_bucket_size are dropped (boilerplate/zero vectors — the text-LSH
-    cap argument, operators/dedup.py:near_dup_candidates).
-
-    Recall: P[same bucket in >=1 of t tables] = 1 - (1 - (1 - θ/π)^p)^t for
-    angle θ; tested against embedding_pairs_exact on planted near-dups.
-    Zero-norm vectors never pair (see _nonzero)."""
-    df = _nonzero(df)
-    cand = None
-    for t in range(n_tables):
-        sigs = lsh_signatures(df, dim, n_planes, seed + 1000003 * t)
-        sizes = sigs.groupBy("bucket").agg(F.count("*").alias("_bsz"))
-        keep = sigs.join(
-            sizes.filter(F.col("_bsz") <= max_bucket_size).drop("_bsz"),
-            "bucket",
-        )
-        p = (
-            keep.alias("x")
-            .join(
-                keep.alias("y"),
-                (F.col("x.bucket") == F.col("y.bucket"))
-                & (F.col("x.vec_id") < F.col("y.vec_id")),
-            )
-            .select(
-                F.col("x.vec_id").alias("id_a"), F.col("y.vec_id").alias("id_b")
-            )
-        )
-        cand = p if cand is None else cand.unionAll(p)
-    cand = cand.distinct()
-    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding"))
-    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding"))
-    joined = (
-        cand.join(a.alias("a"), "id_a").join(b.alias("b"), "id_b")
-    )
-    return joined.filter(_pair_cosine() >= threshold).select("id_a", "id_b")
-
-
-def dedup_embeddings(
-    df: DataFrame,
-    dim: int | None = None,
-    threshold: float = 0.9,
-    method: str = "lsh",
-    **kw,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate removal: pairs (exact or LSH) ->
-    connected components -> keep the deterministic representative (min
-    vec_id) per cluster — the embedding-space twin of dedup_near
-    (operators/dedup.py), sharing its clustering operator."""
-    from copybook_rs_spark.operators.dedup import connected_components
-
-    if method == "exact":
-        pairs = embedding_pairs_exact(df, threshold)
-    else:
-        if dim is None:
-            raise ValueError("dedup_embeddings(method='lsh') requires dim")
-        pairs = embedding_near_dup_pairs(df, dim, threshold, **kw)
-    comp = connected_components(pairs)
-    losers = (
-        comp.filter(F.col("doc_id") != F.col("cluster_id"))
-        .select(F.col("doc_id").alias("vec_id"))
-    )
-    return df.join(losers, "vec_id", "left_anti")

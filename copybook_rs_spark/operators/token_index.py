@@ -60,9 +60,8 @@ from pyspark.sql.types import (
 )
 
 from copybook_rs_spark import blob as blob_mod
-from copybook_rs_spark.errors import PipelineContractError
 from copybook_rs_spark.operators.lookup import split_candidates
-from copybook_rs_spark.operators.zonemap import certify_blob_crc, refresh_index
+from copybook_rs_spark.operators.zonemap import certify_blob_crc
 
 # exact bitmap ceiling: ranges up to this many BITS store exact presence
 # (2^17 bits = 16 KiB worst case). GPT-style vocabularies (~50k) fit with
@@ -149,25 +148,25 @@ def _probe_batch(
     kinds: np.ndarray,
     refs: np.ndarray,
     bits_list: list,
-    needles: list[int],
-    conj: bool,
+    token: int,
 ) -> np.ndarray:
     """Vectorized probe over a whole batch of index rows (round-6 item:
-    a per-row scalar probe paid Python/numpy call overhead O(rows x
-    needles) on the path the module advertises as cheap).
+    a per-row scalar probe paid Python/numpy call overhead per row on the
+    path the module advertises as cheap).
 
-    Returns one bool per row = all/any(needle maybe-present). kind 0 rows
-    are exact; kind 1 (Bloom) rows may answer a false 'maybe' (bounded by
+    Returns one bool per row = token maybe-present. kind 0 rows are
+    exact; kind 1 (Bloom) rows may answer a false 'maybe' (bounded by
     the Bloom sizing) but never a false 'no'. Bit-for-bit the same answers
     as the scalar reference `_maybe_contains` in tests/test_token_index.py:
     - all rows' bits buffers are concatenated once; bitmap rows answer
-      with one gather + shift per needle;
+      with one gather + shift;
     - Bloom rows group by m_bits (a handful of distinct power-of-two
-      sizes), and each needle's k positions — row-independent given
-      m_bits — are hashed once per (needle, m_bits), not per row."""
+      sizes), and the token's k positions — row-independent given
+      m_bits — are hashed once per m_bits, not per row."""
     n = len(kinds)
+    out = np.zeros(n, dtype=bool)
     if n == 0:
-        return np.zeros(0, dtype=bool)
+        return out
     # NULL bits (nullable after a parquet round-trip of a hand-maintained
     # index) answer False exactly like the scalar reference's falsy guard
     if any(b is None for b in bits_list):
@@ -184,31 +183,26 @@ def _probe_batch(
     refs = np.asarray(refs, dtype=np.int64)
     bitmap_rows = np.flatnonzero((kinds == 0) & (lens > 0))
     bloom_rows = np.flatnonzero((kinds != 0) & (lens > 0))
-    out = np.ones(n, dtype=bool) if conj else np.zeros(n, dtype=bool)
-    for t in needles:
-        res = np.zeros(n, dtype=bool)
-        if len(bitmap_rows):
-            rr = refs[bitmap_rows]
-            pos = t - rr
-            # the extra t >= ref mask makes the int64 subtraction exact:
-            # a true in-range pos implies t >= ref and a tiny difference
-            # (no wrap); t >= ref with wrap goes negative (excluded);
-            # t < ref (true pos < 0) could wrap POSITIVE without the mask
-            ok = (t >= rr) & (pos >= 0) & (pos < 8 * lens[bitmap_rows])
-            rows = bitmap_rows[ok]
-            p = pos[ok]
-            res[rows] = (buf[offs[rows] + (p >> 3)] >> (p & 7)) & 1 > 0
-        if len(bloom_rows):
-            for m in np.unique(lens[bloom_rows]):
-                rows = bloom_rows[lens[bloom_rows] == m]
-                hit = np.ones(len(rows), dtype=bool)
-                for p in _bloom_positions(
-                    np.array([t], dtype=np.int64), int(m) * 8
-                ):
-                    p = int(p)
-                    hit &= (buf[offs[rows] + (p >> 3)] >> (p & 7)) & 1 > 0
-                res[rows] = hit
-        out = (out & res) if conj else (out | res)
+    t = token
+    if len(bitmap_rows):
+        rr = refs[bitmap_rows]
+        pos = t - rr
+        # the extra t >= ref mask makes the int64 subtraction exact:
+        # a true in-range pos implies t >= ref and a tiny difference
+        # (no wrap); t >= ref with wrap goes negative (excluded);
+        # t < ref (true pos < 0) could wrap POSITIVE without the mask
+        ok = (t >= rr) & (pos >= 0) & (pos < 8 * lens[bitmap_rows])
+        rows = bitmap_rows[ok]
+        p = pos[ok]
+        out[rows] = (buf[offs[rows] + (p >> 3)] >> (p & 7)) & 1 > 0
+    if len(bloom_rows):
+        for m in np.unique(lens[bloom_rows]):
+            rows = bloom_rows[lens[bloom_rows] == m]
+            hit = np.ones(len(rows), dtype=bool)
+            for p in _bloom_positions(np.array([t], dtype=np.int64), int(m) * 8):
+                p = int(p)
+                hit &= (buf[offs[rows] + (p >> 3)] >> (p & 7)) & 1 > 0
+            out[rows] = hit
     return out
 
 
@@ -249,96 +243,6 @@ def build_token_index(chunk_df: DataFrame) -> DataFrame:
     return src.mapInArrow(_make_token_index_kernel(), TOKEN_INDEX_SCHEMA)
 
 
-def docs_with_all_tokens(
-    chunk_df: DataFrame,
-    index_df: DataFrame,
-    tokens,
-    cfg=None,
-) -> DataFrame:
-    """Conjunctive document search: every (doc_id, source) whose token
-    array contains EVERY needle in `tokens`. A qualifying doc's chunk
-    must be a candidate for each needle, so the prune INTERSECTS the
-    per-token candidate sets before the one decode — on exact-bitmap
-    corpora the intersection is usually far smaller than any single
-    needle's set. Exact by construction (decode + all-of filter after)."""
-    needles = sorted({int(t) for t in tokens})
-    if not needles:
-        raise PipelineContractError("docs_with_all_tokens: empty token list")
-    if any(not -(2**63) <= t < 2**63 for t in needles):
-        # one impossible needle makes the conjunction provably empty
-        return chunk_df.sparkSession.createDataFrame(
-            [], "doc_id string, source string"
-        )
-    return _docs_with_tokens(chunk_df, index_df, needles, "all", cfg)
-
-
-def docs_with_any_token(
-    chunk_df: DataFrame,
-    index_df: DataFrame,
-    tokens,
-    cfg=None,
-) -> DataFrame:
-    """Disjunctive document search: every (doc_id, source) whose token
-    array contains AT LEAST ONE needle. Candidates = union of per-needle
-    candidate sets — computed in the same single index pass as the
-    conjunction (any() instead of all(), envelope ORs), then one decode +
-    exact any-of filter. Out-of-int64 needles are provably absent and
-    simply drop out of the disjunction."""
-    needles = sorted({int(t) for t in tokens})
-    if not needles:
-        raise PipelineContractError("docs_with_any_token: empty token list")
-    needles = [t for t in needles if -(2**63) <= t < 2**63]
-    if not needles:
-        return chunk_df.sparkSession.createDataFrame(
-            [], "doc_id string, source string"
-        )
-    return _docs_with_tokens(chunk_df, index_df, needles, "any", cfg)
-
-
-def _docs_with_tokens(
-    chunk_df: DataFrame,
-    index_df: DataFrame,
-    needles: list[int],
-    mode: str,
-    cfg,
-) -> DataFrame:
-    """Shared prune → decode → exact boolean filter behind the
-    conjunctive and disjunctive searches (one index pass either way —
-    see _candidate_ids for the fold algebra). Caller has validated and
-    int64-bounded the needle list."""
-    from copybook_rs_spark.operators.decode import decode_tokens
-
-    cand = _candidate_ids(chunk_df, index_df, needles, mode=mode)
-    pruned, _, _ = split_candidates(chunk_df, cand)
-    dec = decode_tokens(pruned, columns=["doc_id", "tokens", "source"], cfg=cfg)
-    if mode == "all":
-        # exists-with-== coerces int32/int64 element types like
-        # docs_with_token's filter does; array_contains would need an
-        # exact-type literal per token dtype. Single-arg lambda via a
-        # closure factory — a defaulted second arg would make PySpark
-        # bind a 2-arg higher-order lambda.
-        def _has(t):
-            return F.exists(F.col("tokens"), lambda x: x == F.lit(t))
-
-        pred = F.lit(True)
-        for t in needles:
-            pred = pred & _has(t)
-    else:
-        # ONE short-circuiting traversal for the disjunction (K separate
-        # exists-scans would pay K full array passes per decoded doc);
-        # isin keeps the same ==-style coercion semantics
-        pred = F.exists(F.col("tokens"), lambda x: x.isin(needles))
-    return dec.where(pred).select("doc_id", "source")
-
-
-def refresh_token_index(chunk_df: DataFrame, index_df: DataFrame) -> DataFrame:
-    """Incremental maintenance: keep rows whose chunk still exists with
-    the same bytes, drop deleted/rewritten chunks' rows, build summaries
-    for chunks the index does not describe. Equal to a full
-    build_token_index(chunk_df) by construction (see zonemap.refresh_index)."""
-    return refresh_index(chunk_df, index_df, build_token_index)
-
-
 def filter_chunks_by_token(
     chunk_df: DataFrame,
     index_df: DataFrame,
@@ -360,47 +264,31 @@ def filter_chunks_by_token(
         # an out-of-int64 needle provably matches nothing (and would
         # overflow F.lit / the numpy probe below with an untyped error)
         return chunk_df.limit(0)
-    cand = _candidate_ids(chunk_df, index_df, [token])
+    cand = _candidate_ids(chunk_df, index_df, token)
     return split_candidates(chunk_df, cand)[0]
 
 
 def _candidate_ids(
     chunk_df: DataFrame,
     index_df: DataFrame,
-    needles: list[int],
-    mode: str = "all",
+    token: int,
 ) -> DataFrame:
-    """chunk_id DataFrame of chunks that may contain EVERY needle
-    (mode="all") or AT LEAST ONE needle (mode="any"): needle-folded
-    envelope pass ∩ (index-unknown ∪ needle-folded probe pass). ONE index
-    scan and one probe pass regardless of needle count — the per-needle
-    candidate-set fold distributes because the unknown set U is
-    needle-independent:
-      all: ∩_t (R_t ∩ (U ∪ M_t)) == (∩R_t) ∩ (U ∪ ∩M_t)   (exact)
-      any: (∪R_t) ∩ (U ∪ ∪M_t)  ⊇  ∪_t (R_t ∩ (U ∪ M_t))  (conservative
-           superset — a chunk in range only for t but maybe-holding only
-           s survives; the exact post-decode filter absorbs it)
-    Caller guarantees every needle fits int64."""
-    conj = mode == "all"
+    """chunk_id DataFrame of chunks that may contain `token`: envelope
+    pass ∩ (index-unknown ∪ probe pass). Caller guarantees the token
+    fits int64."""
     meta = chunk_df.select("chunk_id", "blob_crc", "min_token", "max_token")
     # the chunk table's own zone map is authoritative: out-of-envelope
-    # chunks cannot contain a needle, known to the index or not
-    cond = F.lit(conj)
-    for t in needles:
-        hit = (F.col("min_token") <= F.lit(t)) & (
-            F.col("max_token") >= F.lit(t)
-        )
-        cond = (cond & hit) if conj else (cond | hit)
-    in_range = meta.where(cond)
+    # chunks cannot contain the token, known to the index or not
+    in_range = meta.where(
+        (F.col("min_token") <= F.lit(token)) & (F.col("max_token") >= F.lit(token))
+    )
 
     @F.pandas_udf("boolean")
     def probe(kind, ref, bits):
         import pandas as pd
 
         return pd.Series(
-            _probe_batch(
-                kind.to_numpy(), ref.to_numpy(), list(bits), needles, conj
-            )
+            _probe_batch(kind.to_numpy(), ref.to_numpy(), list(bits), token)
         )
 
     idx = index_df.select(

@@ -1,7 +1,8 @@
 """Extras zone-map index: chunk-skipping for predicates on extra columns.
 
 The chunk table has carried token zone maps since v1 (min_token/max_token,
-`filter_chunks_by_token_range`) but extra columns had none: a selective
+the envelope `filter_chunks_by_token` bounds its candidates with) but
+extra columns had none: a selective
 predicate on an annotation column (quality score, price band) decoded
 every chunk. This module adds an ADVISORY secondary index:
 
@@ -130,54 +131,6 @@ def certify_blob_crc(chunk_id, stored, mv) -> int:
             "table edited out-of-band?)"
         )
     return actual
-
-
-def refresh_index(chunk_df: DataFrame, index_df: DataFrame, rebuild) -> DataFrame:
-    """Incremental maintenance for any (chunk_id, blob_crc)-keyed advisory
-    index (the extras zone map and the token-membership index share the
-    keying contract): keep rows whose chunk still exists with the same
-    bytes, DROP rows of deleted/rewritten chunks, and run `rebuild` (the
-    index's own build function) over only the chunks the index does not
-    describe. At 100 TB a mutation touches O(affected chunks); the
-    refresh scans blob bytes for exactly those chunks instead of the
-    corpus — the indexes' never-lie contract makes this safe (a stale
-    row could only have degraded pruning, and here it is dropped anyway).
-
-    refreshed == rebuild(chunk_df) row-for-row, by construction: kept
-    rows were built from identical bytes (crc-certified at build time).
-    """
-    meta = chunk_df.select("chunk_id", "blob_crc")
-    on_l = (F.col("l.chunk_id") == F.col("r.chunk_id")) & (
-        F.col("l.blob_crc") == F.col("r.blob_crc")
-    )
-    kept = index_df.alias("l").join(meta.alias("r"), on_l, "left_semi")
-    pending = chunk_df.alias("l").join(
-        index_df.select("chunk_id", "blob_crc").alias("r"), on_l, "left_anti"
-    )
-    return kept.unionByName(rebuild(pending))
-
-
-def refresh_extras_index(
-    chunk_df: DataFrame, index_df: DataFrame, columns, cfg=None
-) -> DataFrame:
-    """refresh_index specialized to the extras zone map. `columns` must be
-    the set the index was built with — kept rows are not re-derived, so a
-    different column list would produce a mixed-coverage index; the
-    cross-check is cheap and typed."""
-    cols = tuple(dict.fromkeys(columns))
-    have = {
-        r["column"] for r in index_df.select("column").distinct().collect()
-    }
-    if have and have != set(cols):
-        raise PipelineContractError(
-            f"refresh_extras_index: index covers columns {sorted(have)} "
-            f"but the refresh asks for {sorted(cols)} — rebuild instead "
-            "(mixed coverage would make filter_chunks_by_extras treat "
-            "partially-covered chunks as fully described)"
-        )
-    return refresh_index(
-        chunk_df, index_df, lambda df: build_extras_index(df, cols, cfg=cfg)
-    )
 
 
 def _make_index_kernel(cols: tuple[str, ...]):

@@ -1,3 +1,2 @@
 """Sources: deterministic token-table derivation from the driver's parquet
-testdata, seeded synthetic fixture generators, and the chunk/manifest table
-schemas (SURVEY.md §2.1)."""
+testdata and the chunk/manifest table schemas (SURVEY.md §2.1)."""

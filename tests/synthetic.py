@@ -1,0 +1,89 @@
+"""Seeded synthetic token tables, one codec-stress profile each (FIXTURES.md
+profiles; the analogue of the reference's copybook-gen templates,
+tools/copybook-gen/src/data.rs:24-110). Output feeds tests/golden_sha256.json,
+so any change to the generators changes the goldens."""
+
+import numpy as np
+import pyarrow as pa
+
+VOCAB = 50257  # GPT-2-ish
+TOKEN_SCHEMA = pa.schema([
+    pa.field("doc_id", pa.string()), pa.field("tokens", pa.list_(pa.int32())),
+    pa.field("n_tok", pa.int32()), pa.field("source", pa.string()),
+])
+PROFILES = ("uniform_hi", "lowcard", "runs", "narrow_range", "texty", "mixed",
+            "skewed_source", "edge")
+
+
+def _profile_doc(rng: np.random.Generator, profile: str) -> np.ndarray:
+    if profile == "uniform_hi":
+        n = int(np.clip(rng.lognormal(6.0, 0.6), 8, 4096))
+        return rng.integers(0, VOCAB, n, dtype=np.int32)
+    if profile == "lowcard":  # Zipf(s=1.3) over 256 symbols
+        n = int(np.clip(rng.lognormal(5.0, 0.5), 8, 2048))
+        p = np.arange(1, 257, dtype=np.float64) ** -1.3
+        p /= p.sum()
+        return rng.choice(256, n, p=p).astype(np.int32)
+    if profile == "runs":
+        n = int(np.clip(rng.lognormal(5.5, 0.5), 8, 4096))
+        out = np.empty(n, dtype=np.int32)
+        pos = 0
+        while pos < n:
+            tok = rng.integers(0, 1000)
+            run = min(int(rng.geometric(0.05)), n - pos)
+            out[pos : pos + run] = tok
+            pos += run
+        return out
+    if profile == "narrow_range":
+        n = int(np.clip(rng.lognormal(5.5, 0.5), 8, 2048))
+        k = int(rng.choice([4, 8, 12]))
+        return (100000 + rng.integers(0, 1 << k, n)).astype(np.int32)
+    if profile == "texty":  # heavy bigram reuse from a 4096-symbol vocab
+        n = int(np.clip(rng.lognormal(5.5, 0.5), 8, 2048))
+        bigrams = rng.integers(0, 4096, (64, 2), dtype=np.int32)
+        picks = rng.integers(0, 64, (n + 1) // 2)
+        return bigrams[picks].reshape(-1)[:n].astype(np.int32)
+    if profile == "edge":
+        kind = int(rng.integers(0, 4))
+        if kind in (0, 1):
+            return rng.integers(0, VOCAB, kind + 1, dtype=np.int32)
+        if kind == 2:
+            n = int(rng.integers(1, 64))
+            return np.full(n, int(rng.integers(0, VOCAB)), dtype=np.int32)
+        return np.array([0, 2**31 - 1, VOCAB - 1], dtype=np.int32)
+    raise ValueError(f"unknown profile {profile}")
+
+
+def synthetic_arrays(profile: str, n_docs: int, seed: int = 42):
+    """Seeded generation -> (doc_ids, token arrays, sources)."""
+    rng = np.random.default_rng(seed)
+    base_profiles = ["uniform_hi", "lowcard", "runs", "narrow_range", "texty"]
+    arrays, sources = [], []
+    for _ in range(n_docs):
+        p = profile
+        if profile == "mixed":
+            p = base_profiles[int(rng.integers(0, len(base_profiles)))]
+        elif profile == "skewed_source":
+            p = "uniform_hi"
+        arrays.append(_profile_doc(rng, p))
+        if profile == "skewed_source":
+            r = rng.random()
+            sources.append("web" if r < 0.90 else "books" if r < 0.95
+                           else "code" if r < 0.99 else "wiki")
+        else:
+            sources.append(profile)
+    return [f"{profile}_{i:08d}" for i in range(n_docs)], arrays, sources
+
+
+def synthetic_tokens(spark, profile: str, n_docs: int, seed: int = 42):
+    """Seeded fixture table as a Spark DataFrame."""
+    doc_ids, arrays, sources = synthetic_arrays(profile, n_docs, seed)
+    lens = np.array([len(a) for a in arrays], dtype=np.int32)
+    values = np.concatenate(arrays) if arrays else np.empty(0, np.int32)
+    offsets = np.zeros(len(arrays) + 1, dtype=np.int32)
+    np.cumsum(lens, out=offsets[1:])
+    tokens = pa.ListArray.from_arrays(pa.array(offsets), pa.array(values, pa.int32()))
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array(doc_ids, pa.string()), "tokens": tokens,
+        "n_tok": pa.array(lens, pa.int32()), "source": pa.array(sources, pa.string()),
+    }, schema=TOKEN_SCHEMA))

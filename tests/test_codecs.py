@@ -13,7 +13,6 @@ from copybook_rs_spark.codecs import varint as vi
 from copybook_rs_spark.codecs import fsst
 from copybook_rs_spark.codecs.core import (
     ChunkStats,
-    choose_codec,
     decode_array,
     encode_array,
 )
@@ -21,6 +20,11 @@ from copybook_rs_spark.errors import CodecError, EngineError
 
 RNG = np.random.default_rng(42)
 ALL_CODECS = ["plain", "bitpack", "for", "delta", "rle", "dict", "fsst"]
+
+
+def choose_codec(vals: np.ndarray, stats: ChunkStats | None = None) -> str:
+    """Name of the codec auto-selection would use (try-encode, exact)."""
+    return encode_array(vals, codec="auto", stats=stats)[1]
 
 
 # ---------- bitpack ----------

@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 from copybook_rs_spark.config import EncodeConfig
 from copybook_rs_spark.errors import EngineError
 from copybook_rs_spark.operators import decode_tokens, encode_tokens
-from copybook_rs_spark.sources.tokens import TOKEN_SCHEMA
+
+from synthetic import TOKEN_SCHEMA
 
 CFG = EncodeConfig(chunk_values=64, target_values_per_part=256, shuffle_partitions=4)
 

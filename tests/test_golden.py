@@ -15,7 +15,8 @@ import pytest
 
 from copybook_rs_spark import blob
 from copybook_rs_spark.codecs import encode_array
-from copybook_rs_spark.sources.tokens import synthetic_arrays
+
+from synthetic import synthetic_arrays
 
 GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "golden_sha256.json")
 PROFILES = ["uniform_hi", "lowcard", "runs", "narrow_range", "texty", "mixed", "edge"]

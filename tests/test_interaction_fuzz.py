@@ -1,5 +1,5 @@
 """Cross-feature interaction fuzz: a seeded sequence of encoded-table
-mutations (delete / insert / upsert / compact) driven against a plain
+mutations (delete / upsert / re-encode) driven against a plain
 Python model of the corpus, with THREE standing invariants re-checked
 after every step:
 
@@ -7,12 +7,12 @@ after every step:
 2. a STALE token-membership index built before any mutation still
    answers needle searches exactly (the prune-never-lie contract under
    arbitrary operator composition — rewritten chunks age out via
-   blob_crc, compaction renames chunk_ids entirely);
+   blob_crc, a decode + re-encode renames chunk_ids entirely);
 3. chunk ids stay unique (storage-layer sanity the mutations promise).
 
 Single-feature tests cover each operator; THIS file exists for the
-interactions (a delete landing in a chunk a later insert re-splits, a
-compact erasing the id space the stale index knows, ...). One fixed seed
+interactions (a delete landing in a chunk a later upsert re-splits, a
+re-encode erasing the id space the stale index knows, ...). One fixed seed
 keeps it deterministic and CI-friendly. Epilogue: schema evolution over
 the mutated table — append a typed extras column, verify values through
 the widened config, drop it, and require the pre-append blobs back
@@ -25,17 +25,16 @@ from pyspark.sql import functions as F
 from copybook_rs_spark.config import EncodeConfig
 from copybook_rs_spark.operators import (
     build_token_index,
-    compact_chunks,
     decode_tokens,
     delete_docs,
     docs_with_token,
     encode_tokens,
-    insert_docs,
-    refresh_token_index,
     upsert_docs,
 )
 from copybook_rs_spark.sources.manifest import assert_unique_chunk_ids
-from copybook_rs_spark.sources.tokens import VOCAB, token_table
+from copybook_rs_spark.sources.tokens import token_table
+
+from synthetic import VOCAB
 
 SF_DIR = "/root/testdata/sf0.001"
 CFG = EncodeConfig(
@@ -101,7 +100,7 @@ def test_mutation_compaction_interaction_fuzz(spark):
             del model[d]
         _check(spark, cur, model, index0, needle)
 
-        # step 2: insert brand-new docs (fresh ids sort after every
+        # step 2: upsert brand-new docs (fresh ids sort after every
         # existing one -> exercises the tail bracket + fresh-part path)
         new_rows = [
             (
@@ -111,7 +110,7 @@ def test_mutation_compaction_interaction_fuzz(spark):
             )
             for i in range(80)
         ]
-        nxt = insert_docs(cur, _rows_df(spark, new_rows), cfg=CFG).cache()
+        nxt = upsert_docs(cur, _rows_df(spark, new_rows), cfg=CFG).cache()
         cur.unpersist(); cur = nxt
         for d, toks, s in new_rows:
             model[d] = (tuple(toks), s)
@@ -141,13 +140,13 @@ def test_mutation_compaction_interaction_fuzz(spark):
             model[d] = (tuple(toks), s)
         _check(spark, cur, model, index0, needle)
 
-        # step 4: compact to canonical form — chunk ids are reassigned
-        # wholesale, the stale index knows NONE of them
-        nxt = compact_chunks(cur, cfg=CFG).cache()
+        # step 4: decode + re-encode to canonical form — chunk ids are
+        # reassigned wholesale, the stale index knows NONE of them
+        nxt = encode_tokens(decode_tokens(cur, cfg=CFG), CFG).cache()
         cur.unpersist(); cur = nxt
         _check(spark, cur, model, index0, needle)
 
-        # step 5: delete across old and inserted docs post-compaction
+        # step 5: delete across old and inserted docs post-re-encode
         ids = sorted(model)
         victims = [ids[i] for i in rng.choice(len(ids), 30, replace=False)]
         victims += [d for d in ("zz_0000", "zz_up_0001") if d in model]
@@ -158,18 +157,15 @@ def test_mutation_compaction_interaction_fuzz(spark):
             del model[d]
         _check(spark, cur, model, index0, needle)
 
-        # refresh over the fully-mutated table == full rebuild
-        refreshed = refresh_token_index(cur, index0)
-        full = build_token_index(cur)
-
-        def canon(df):
+        # the stale index answers exactly like a fresh build over the
+        # fully-mutated table
+        def search(index):
             return sorted(
-                (r["chunk_id"], r["blob_crc"], r["kind"], r["ref"],
-                 r["n_distinct"], bytes(r["bits"]))
-                for r in df.collect()
+                (r["doc_id"], r["n_hits"])
+                for r in docs_with_token(cur, index, needle, cfg=CFG).collect()
             )
 
-        assert canon(refreshed) == canon(full)
+        assert search(index0) == search(build_token_index(cur))
 
         # epilogue: schema evolution over the mutated table — append a
         # typed scalar column, verify through the widened cfg, drop it,

@@ -1,8 +1,11 @@
-"""Knob-creep guard: engine tunables are constants in code.
+"""Knob-creep and dead-code guards.
 
-Environment reads in the package may name only the three deployment
-settings, and only `session.get_spark` and the two spark-submit jobs
-build a SparkSession, so no script carries its own session config."""
+Engine tunables are constants in code: environment reads in the package
+may name only the three deployment settings, and only `session.get_spark`
+and the two spark-submit jobs build a SparkSession, so no script carries
+its own session config. And every top-level package def is reached from
+a real caller (`__spark_entry__.py`, bench, scripts, perfbench), never from
+tests alone."""
 
 import ast
 import pathlib
@@ -13,6 +16,12 @@ BUILDER_FILES = {
     "copybook_rs_spark/session.py",
     "scripts/decode_job.py",
     "scripts/encode_job.py",
+}
+PACKAGE = "copybook_rs_spark"
+# code that runs outside tests; perfbench's own tests are tests
+CALLER_PATHS = ("__spark_entry__.py", "bench.py", "scripts", "perfbench")
+TEST_ONLY_ALLOWED = {
+    "operators/packing.py:write_bucketed_tokens": "ROADMAP direction 1 decides its fate",
 }
 
 
@@ -84,3 +93,103 @@ def test_guard_sees_every_read_form():
     )
     keys = sorted(str(k) for k in _env_keys(ast.parse(src)))
     assert keys == ["A", "B", "C", "None", "None", "None"]
+
+
+def _mentions(tree, with_imports):
+    """Every name a tree mentions: loads, attribute names, identifier-shaped
+    strings (dispatch by name, query keys) and, for callers, imported names.
+    The scan is by name, so a mention reaches every def of that name."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if node.value.isidentifier():
+                yield node.value
+        elif with_imports and isinstance(node, ast.alias):
+            yield node.name.rpartition(".")[2]
+
+
+def _unreached_defs(package, callers):
+    """`package`: {path in the package: module ast}; `callers`: module asts.
+    Returns the sorted "path:name" of every top-level package def (function,
+    class or assigned name) that no caller reaches, directly or through
+    other reached defs. Package imports are not uses, so an `__init__`
+    re-export reaches nothing; module-level statements that are neither
+    defs nor imports run on import and count as callers."""
+    defs = {}
+    seen = set()
+    for tree in callers:
+        seen.update(_mentions(tree, with_imports=True))
+    for rel, tree in package.items():
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [stmt.name]
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            else:
+                seen.update(_mentions(stmt, with_imports=False))
+                continue
+            for name in names:
+                if not (name.startswith("__") and name.endswith("__")):
+                    defs[f"{rel}:{name}"] = set(_mentions(stmt, with_imports=False))
+    by_name = {}
+    for key in defs:
+        by_name.setdefault(key.rpartition(":")[2], []).append(key)
+    reached = set()
+    todo = [key for name in seen for key in by_name.get(name, ())]
+    while todo:
+        key = todo.pop()
+        if key not in reached:
+            reached.add(key)
+            todo.extend(k for name in defs[key] for k in by_name.get(name, ()))
+    return sorted(set(defs) - reached)
+
+
+def test_no_package_def_only_tests_reach():
+    pkg = ROOT / PACKAGE
+    package = {
+        rel[len(PACKAGE) + 1 :]: tree for rel, tree in _sources(pkg)
+    }
+    callers = [
+        tree
+        for path in CALLER_PATHS
+        for rel, tree in (
+            _sources(ROOT / path)
+            if (ROOT / path).is_dir()
+            else [(path, ast.parse((ROOT / path).read_text()))]
+        )
+        if not rel.startswith("perfbench/tests/")
+    ]
+    unreached = _unreached_defs(package, callers)
+    assert unreached == sorted(TEST_ONLY_ALLOWED), (
+        "package defs no caller outside tests reaches — delete them or move "
+        f"them into tests/: {sorted(set(unreached) - set(TEST_ONLY_ALLOWED))}; "
+        f"stale allowlist entries: {sorted(set(TEST_ONLY_ALLOWED) - set(unreached))}"
+    )
+
+
+def test_reachability_scan_on_planted_tree():
+    package = {
+        "__init__.py": "from pkg.ops import reexported\n",
+        "ops.py": (
+            "LIMIT = 4\n"
+            "def entry_op(x):\n    return _helper(x)\n"
+            "def _helper(x):\n    return x < LIMIT\n"
+            "def only_tests():\n    pass\n"
+            "def reexported():\n    pass\n"
+        ),
+    }
+    # a test module calling only_tests() is not a caller: tests never root
+    callers = ["from pkg.ops import entry_op\nentry_op(1)\n"]
+    unreached = _unreached_defs(
+        {rel: ast.parse(src) for rel, src in package.items()},
+        [ast.parse(src) for src in callers],
+    )
+    # reached through a reached def (_helper, LIMIT): not reported; named
+    # only by a test, or only re-exported by __init__: reported
+    assert unreached == ["ops.py:only_tests", "ops.py:reexported"]

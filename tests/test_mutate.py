@@ -1,8 +1,8 @@
-"""Encoded-table mutation: delete / insert / upsert without re-encoding.
+"""Encoded-table mutation: delete / upsert without re-encoding.
 
 The reference's only mutation story is re-running encode over edited input
 (crates/copybook-cli/src/commands/encode.rs drives whole files);
-operators/mutate.py makes a delete/insert cost O(affected chunks). The
+operators/mutate.py makes a delete/upsert cost O(affected chunks). The
 tests pin (a) exact parity with mutate-the-input-then-encode semantics,
 (b) that non-candidate chunks pass through BYTE-identical (the 100 TB
 property: untouched storage never rewrites), (c) zone-map soundness after
@@ -19,7 +19,6 @@ from copybook_rs_spark.operators import (
     decode_tokens,
     delete_docs,
     encode_tokens,
-    insert_docs,
     lookup_docs,
     upsert_docs,
 )
@@ -128,7 +127,7 @@ def test_delete_whole_chunk_disappears_and_lookup_survives(spark):
 def test_insert_back_restores_content(spark, tok_df, chunks, keys):
     deleted = delete_docs(chunks, keys, cfg=CFG).cache()
     try:
-        back = insert_docs(
+        back = upsert_docs(
             deleted, tok_df.where(F.col("doc_id").isin(keys)), cfg=CFG
         )
         assert _tok_rows(decode_tokens(back, cfg=CFG)) == _tok_rows(tok_df)
@@ -157,7 +156,7 @@ def test_insert_new_docs_bracket_edges_and_fresh_source(spark):
             new_rows,
             "doc_id string, tokens array<int>, n_tok int, source string",
         )
-        after = insert_docs(ch, ndf, cfg=cfg).cache()
+        after = upsert_docs(ch, ndf, cfg=cfg).cache()
         got = _tok_rows(decode_tokens(after, cfg=cfg))
         want = _tok_rows(df.unionByName(ndf))
         assert got == want
@@ -171,20 +170,23 @@ def test_insert_new_docs_bracket_edges_and_fresh_source(spark):
         ch.unpersist()
 
 
-def test_insert_existing_doc_raises_typed(spark, tok_df, chunks, keys):
-    dup = tok_df.where(F.col("doc_id") == keys[0])
-    with pytest.raises(Exception, match="CBSP300.*already holds"):
-        insert_docs(chunks, dup, cfg=CFG).count()
-
-
 def test_insert_duplicate_batch_ids_raise_typed(spark, tok_df, chunks, keys):
     deleted = delete_docs(chunks, keys[:1], cfg=CFG).cache()
     try:
         one = tok_df.where(F.col("doc_id") == keys[0])
         with pytest.raises(Exception, match="CBSP300.*duplicate doc_id"):
-            insert_docs(deleted, one.unionByName(one), cfg=CFG).count()
+            upsert_docs(deleted, one.unionByName(one), cfg=CFG).count()
     finally:
         deleted.unpersist()
+
+
+def test_upsert_uncertified_salt_plan_names_upsert(spark, tok_df, chunks, keys):
+    # a source the table already holds, with no certified salt plan, must
+    # fail typed and name the function the caller actually called
+    rows = tok_df.where(F.col("doc_id") == keys[0])
+    with pytest.raises(PipelineContractError) as ei:
+        upsert_docs(chunks, rows, cfg=CFG, salts={})
+    assert str(ei.value).startswith("CBSP300: upsert_docs:"), str(ei.value)
 
 
 def test_mutation_schema_fp_mismatch_raises_typed(spark, tok_df, chunks, keys):
@@ -235,7 +237,7 @@ def test_insert_fresh_source_gets_data_sized_salt_plan(spark, tok_df, chunks):
          for i in range(n_docs)],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    after = insert_docs(chunks, fresh, cfg=CFG)
+    after = upsert_docs(chunks, fresh, cfg=CFG)
     parts = (
         after.where(F.col("source") == "huge_new")
         .select("part_id").distinct().count()
@@ -267,7 +269,7 @@ def test_mutation_preserves_extras(spark):
             [("e9999", [7], 1, "web", [70], "tagX")],
             df.schema,
         )
-        final = insert_docs(after, new, cfg=cfg).cache()
+        final = upsert_docs(after, new, cfg=cfg).cache()
         dec = decode_tokens(final, cfg=cfg)
         want = sorted(
             (r["doc_id"], tuple(r["tokens"]), tuple(r["aux"]), r["tag"])

@@ -50,24 +50,6 @@ def test_chunk_filter_pushdown(spark, written):
     assert "PartitionFilters" in plan
 
 
-def test_token_range_chunk_skip(spark, written):
-    from copybook_rs_spark.operators.decode import filter_chunks_by_token_range
-
-    chunks = mani.read_chunks(spark, written)
-    total = chunks.count()
-    # a narrow band: chunk-level envelopes must skip some chunks, and the
-    # comparison must reach the parquet scan as a pushed filter
-    cand = filter_chunks_by_token_range(chunks, lo=0, hi=50)
-    plan = cand._jdf.queryExecution().executedPlan().toString().replace(" ", "")
-    assert "PushedFilters" in plan and "min_token" in plan
-    kept = cand.count()
-    assert 0 < kept < total
-    # completeness: every doc holding an in-range token survives the skip
-    full = decode_tokens(chunks).filter(F.exists("tokens", lambda t: t <= 50))
-    skipped = decode_tokens(cand).filter(F.exists("tokens", lambda t: t <= 50))
-    assert full.count() == skipped.count()
-
-
 def test_projection_alias_expansion(spark):
     # RENAMES analogue: aliases expand to their covered columns BEFORE the
     # dependency closure, and the `content` alias follows the config schema

@@ -16,7 +16,9 @@ from copybook_rs_spark.config import EncodeConfig
 from copybook_rs_spark.operators import decode_tokens, encode_tokens
 from copybook_rs_spark.plans.partition import plan_salts, with_part_id
 from copybook_rs_spark.sources import manifest as mani
-from copybook_rs_spark.sources.tokens import synthetic_tokens, token_table
+from copybook_rs_spark.sources.tokens import token_table
+
+from synthetic import synthetic_tokens
 
 SF_DIR = "/root/testdata/sf0.001"
 CFG = EncodeConfig(chunk_values=4096, target_values_per_part=12_288, shuffle_partitions=8)
@@ -217,9 +219,7 @@ def test_extras_duplicate_ids_deterministic(spark):
 
 
 def test_compaction_preserves_extras_and_int64(spark):
-    # compact_chunks must be lossless for the generalized schemas too
-    from copybook_rs_spark.operators.encode import compact_chunks
-
+    # a decode -> re-encode must be lossless for the generalized schemas too
     rows = [
         (f"d{i:04d}", [3_000_000_000 + i, 7], 2, "web", [i * 11, i])
         for i in range(150)
@@ -232,7 +232,7 @@ def test_compaction_preserves_extras_and_int64(spark):
                        chunk_values=64, target_values_per_part=256,
                        shuffle_partitions=4)
     chunks = encode_tokens(df, cfg)
-    compacted = compact_chunks(chunks, cfg)
+    compacted = encode_tokens(decode_tokens(chunks, cfg=cfg), cfg)
     assert _chunk_content_hash(compacted) == _chunk_content_hash(chunks)
     dec = decode_tokens(compacted, cfg=cfg)
     bad = (
@@ -298,21 +298,6 @@ def test_audit_catches_corrupt_extras(spark):
     # without cfg, the tamper is invisible (main body crc untouched)
     blind = sum(r["n_error"] for r in audit_summary(corrupted).collect())
     assert blind == 0
-
-
-def test_compact_rejects_mismatched_config(spark):
-    from copybook_rs_spark.errors import PipelineContractError
-    from copybook_rs_spark.operators.encode import compact_chunks
-
-    rows = [(f"d{i:04d}", [1, 2], 2, "web", [i]) for i in range(100)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string, aux array<bigint>"
-    )
-    cfg = EncodeConfig(extra_columns=("aux",), chunk_values=64,
-                       target_values_per_part=256, shuffle_partitions=2)
-    chunks = encode_tokens(df, cfg)
-    with pytest.raises(PipelineContractError, match="schema_fp"):
-        compact_chunks(chunks)  # default cfg would silently drop aux
 
 
 def test_int64_table_audits_clean(spark):
@@ -519,10 +504,8 @@ def test_decode_projection_unknown_column_raises(spark, tok_df):
 
 
 def test_compaction_restores_canonical_chunks(spark, tok_df):
-    """Three incremental batch encodes (batch-prefixed chunk ids, per-batch
-    cuts) -> compact_chunks == fresh full encode, byte-identically."""
-    from copybook_rs_spark.operators import compact_chunks
-
+    """Three batch encodes (batch-prefixed chunk ids, per-batch cuts) ->
+    decode + re-encode == fresh full encode, byte-identically."""
     salts = plan_salts(tok_df, CFG.target_values_per_part, CFG.max_salt,
                        chunk_floor=CFG.chunk_values)
     parts = tok_df.randomSplit([1.0, 1.0, 1.0], seed=17)
@@ -533,8 +516,8 @@ def test_compaction_restores_canonical_chunks(spark, tok_df):
                 "chunk_id", F.concat(F.lit(f"b{i:08d}/"), F.col("chunk_id"))
             )
         )
-    incremental = batches[0].unionAll(batches[1]).unionAll(batches[2])
-    compacted = compact_chunks(incremental, CFG, salts=salts)
+    batched = batches[0].unionAll(batches[1]).unionAll(batches[2])
+    compacted = encode_tokens(decode_tokens(batched, cfg=CFG), CFG, salts=salts)
     fresh = encode_tokens(tok_df, CFG, salts=salts)
     a = sorted((r["chunk_id"], r["crc32"], r["enc_bytes"])
                for r in compacted.select("chunk_id", "crc32", "enc_bytes").collect())
@@ -586,10 +569,9 @@ def test_typed_extras_roundtrip(spark):
         chunk_values=512, target_values_per_part=2048, shuffle_partitions=11,
     )
     assert _chunk_content_hash(chunks) == _chunk_content_hash(encode_tokens(df, cfg2))
-    # compaction is lossless for typed extras too
-    from copybook_rs_spark.operators.encode import compact_chunks
-
-    assert _chunk_content_hash(compact_chunks(chunks, cfg)) == _chunk_content_hash(chunks)
+    # a decode -> re-encode is lossless for typed extras too
+    recoded = encode_tokens(decode_tokens(chunks, cfg=cfg), cfg)
+    assert _chunk_content_hash(recoded) == _chunk_content_hash(chunks)
     # projection: string-only decode
     txt_only = decode_tokens(chunks, columns=["doc_id", "text"], cfg=cfg)
     assert txt_only.columns == ["doc_id", "text"]
@@ -722,10 +704,9 @@ def test_decimal_extras_roundtrip(spark):
     # projection: decimal-only decode never touches token values
     only = decode_tokens(chunks, columns=["doc_id", "price"], cfg=cfg)
     assert only.columns == ["doc_id", "price"] and only.count() == 202
-    # compaction lossless
-    from copybook_rs_spark.operators.encode import compact_chunks
-
-    assert _chunk_content_hash(compact_chunks(chunks, cfg)) == _chunk_content_hash(chunks)
+    # a decode -> re-encode is lossless
+    recoded = encode_tokens(decode_tokens(chunks, cfg=cfg), cfg)
+    assert _chunk_content_hash(recoded) == _chunk_content_hash(chunks)
 
 
 def test_decimal_spec_validation():
@@ -794,100 +775,3 @@ def test_jsonl_envelope_float_extras(spark):
         }
 
     assert bits(back.collect()) == bits(df.collect())
-
-
-def test_register_views_sql_over_encoded_table(spark, tmp_path):
-    from copybook_rs_spark.config import EncodeConfig
-    from copybook_rs_spark.operators import encode_tokens
-    from copybook_rs_spark.sources.manifest import (
-        build_manifest,
-        register_views,
-    )
-    from copybook_rs_spark.sources.tokens import token_table
-
-    cfg = EncodeConfig(chunk_values=8192, target_values_per_part=32_768)
-    tok = token_table(spark, "/root/testdata/sf0.001")
-    out = str(tmp_path / "enc")
-    chunks = encode_tokens(tok, cfg)
-    chunks.write.parquet(out + "/chunks")
-    build_manifest(spark.read.parquet(out + "/chunks")).write.parquet(
-        out + "/manifest"
-    )
-    register_views(spark, out, prefix="t", cfg=cfg)
-    got = spark.sql(
-        "SELECT source, count(*) AS n, sum(n_tok) AS toks "
-        "FROM t_tokens GROUP BY source ORDER BY source"
-    ).collect()
-    want = (
-        tok.groupBy("source")
-        .agg(F.count("*").alias("n"), F.sum("n_tok").alias("toks"))
-        .orderBy("source")
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    n_chunks = spark.sql("SELECT count(*) FROM t_chunks").collect()[0][0]
-    n_groups = spark.sql(
-        "SELECT count(*) FROM t_manifest"
-    ).collect()[0][0]
-    assert n_chunks > 0 and 0 < n_groups <= n_chunks
-
-
-def test_register_views_certifies_schema_fp(spark, tmp_path):
-    from copybook_rs_spark.config import EncodeConfig
-    from copybook_rs_spark.errors import PipelineContractError
-    from copybook_rs_spark.operators import encode_tokens
-    from copybook_rs_spark.sources.manifest import build_manifest, register_views
-    from copybook_rs_spark.sources.tokens import token_table
-
-    cfg = EncodeConfig(
-        token_dtype="int64", chunk_values=8192, target_values_per_part=32_768
-    )
-    tok = token_table(spark, "/root/testdata/sf0.001").withColumn(
-        "tokens", F.col("tokens").cast("array<long>")
-    )
-    out = str(tmp_path / "enc64")
-    encode_tokens(tok.limit(2000), cfg).write.parquet(out + "/chunks")
-    build_manifest(spark.read.parquet(out + "/chunks")).write.parquet(
-        out + "/manifest"
-    )
-    # default cfg fingerprints int32 — must fail typed at registration,
-    # not as an untyped kernel error mid-query
-    with pytest.raises(PipelineContractError, match="schema_fp"):
-        register_views(spark, out, prefix="bad")
-    register_views(spark, out, prefix="ok", cfg=cfg)
-    assert spark.sql("SELECT count(*) FROM ok_tokens").collect()[0][0] == 2000
-
-
-def test_register_views_null_fp_and_empty_dir_fail_typed(spark, tmp_path):
-    # ADVICE r5: a NULL schema_fp (pre-fingerprint table under a
-    # schema-reconciled read) must raise a typed contract error, not an
-    # untyped sorted() TypeError; an empty chunks dir must say so instead
-    # of reporting a misleading "schema_fp(s) []" mismatch
-    from copybook_rs_spark.config import EncodeConfig
-    from copybook_rs_spark.errors import PipelineContractError
-    from copybook_rs_spark.operators import encode_tokens
-    from copybook_rs_spark.sources.manifest import build_manifest, register_views
-    from copybook_rs_spark.sources.tokens import token_table
-
-    cfg = EncodeConfig(chunk_values=8192, target_values_per_part=32_768)
-    tok = token_table(spark, "/root/testdata/sf0.001").limit(2000)
-    out = str(tmp_path / "encnull")
-    chunks = encode_tokens(tok, cfg)
-    # simulate a pre-schema_fp table: null out the fingerprint column
-    chunks.withColumn(
-        "schema_fp", F.lit(None).cast("string")
-    ).write.parquet(out + "/chunks")
-    build_manifest(spark.read.parquet(out + "/chunks")).write.parquet(
-        out + "/manifest"
-    )
-    with pytest.raises(PipelineContractError, match="NULL schema_fp"):
-        register_views(spark, out, prefix="nullfp", cfg=cfg)
-
-    out2 = str(tmp_path / "encempty")
-    chunks.limit(0).write.parquet(out2 + "/chunks")
-    build_manifest(spark.read.parquet(out2 + "/chunks")).write.parquet(
-        out2 + "/manifest"
-    )
-    with pytest.raises(PipelineContractError, match="empty or not"):
-        register_views(spark, out2, prefix="emptyfp", cfg=cfg)
-

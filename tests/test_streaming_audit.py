@@ -1,6 +1,4 @@
-"""Streaming incremental encode + lenient audit operator tests."""
-
-import time
+"""Lenient audit operator and resumable (shard-committed) decode tests."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,77 +6,10 @@ from pyspark.sql import functions as F
 from copybook_rs_spark.config import EncodeConfig
 from copybook_rs_spark.operators import decode_tokens, encode_tokens
 from copybook_rs_spark.operators.audit import audit_chunks, audit_summary
-from copybook_rs_spark.plans.partition import plan_salts
-from copybook_rs_spark.sources import manifest as mani
-from copybook_rs_spark.sources.tokens import synthetic_tokens
-from copybook_rs_spark.streaming import incremental_encode
+
+from synthetic import synthetic_tokens
 
 CFG = EncodeConfig(chunk_values=4096, target_values_per_part=65_536, shuffle_partitions=8)
-
-
-def test_incremental_encode_stream(spark, tmp_path):
-    in_dir = str(tmp_path / "incoming")
-    out_dir = str(tmp_path / "enc")
-    df = synthetic_tokens(spark, "lowcard", 600)
-    salts = plan_salts(df, CFG.target_values_per_part, CFG.max_salt)
-
-    # land two file batches, run the stream to completion each time
-    a, b = df.filter("n_tok % 2 = 0"), df.filter("n_tok % 2 = 1")
-    a.write.mode("append").parquet(in_dir)
-    q = incremental_encode(spark, in_dir, out_dir, CFG, salts=salts)
-    q.awaitTermination(120)
-    b.write.mode("append").parquet(in_dir)
-    q2 = incremental_encode(spark, in_dir, out_dir, CFG, salts=salts)
-    q2.awaitTermination(120)
-
-    chunks = mani.read_chunks(spark, out_dir)
-    dec = decode_tokens(chunks)
-    # bit-identity across the whole stream
-    orig = df.select("doc_id", F.col("tokens").alias("ta"))
-    got = dec.select("doc_id", F.col("tokens").alias("tb"))
-    bad = (
-        orig.join(got, "doc_id", "full_outer")
-        .filter(
-            F.col("ta").isNull() | F.col("tb").isNull() | (F.col("ta") != F.col("tb"))
-        )
-        .count()
-    )
-    assert bad == 0
-    # second micro-batch must not have re-encoded the first (exactly-once)
-    assert dec.count() == df.count()
-    m = mani.read_manifest(spark, out_dir)
-    assert m.agg(F.sum("n_docs")).collect()[0][0] == df.count()
-
-    # the incrementally-merged manifest must equal a full rebuild from the
-    # chunk table (the sink itself never rescans the table: it re-aggregates
-    # one small row per (batch, group) from manifest_parts)
-    full = mani.build_manifest(chunks)
-    merged = m.select(*full.columns)
-    assert merged.exceptAll(full).count() == 0
-    assert full.exceptAll(merged).count() == 0
-
-
-def test_streaming_replay_idempotent(spark, tmp_path):
-    # a foreachBatch retry re-runs the same batch_id: the per-batch overwrite
-    # commit must leave chunks and manifest unchanged (no duplicates)
-    from copybook_rs_spark.streaming.incremental import commit_batch
-
-    out_dir = str(tmp_path / "enc")
-    df = synthetic_tokens(spark, "mixed", 300)
-    chunk_df = encode_tokens(df, CFG).withColumn(
-        "chunk_id", F.concat(F.lit("b00000000/"), F.col("chunk_id"))
-    )
-    commit_batch(chunk_df, out_dir, 0)
-    before = sorted(
-        r["chunk_id"] for r in mani.read_chunks(spark, out_dir).select("chunk_id").collect()
-    )
-    commit_batch(chunk_df, out_dir, 0)  # replay
-    after = sorted(
-        r["chunk_id"] for r in mani.read_chunks(spark, out_dir).select("chunk_id").collect()
-    )
-    assert before == after
-    m = mani.read_manifest(spark, out_dir)
-    assert m.agg(F.sum("n_docs")).collect()[0][0] == df.count()
 
 
 def _corrupt_n(chunks, n):
@@ -154,83 +85,6 @@ def test_bounded_error_decode_policy(spark, tmp_path):
     assert os.listdir(os.path.join(clean, "shards")) == ["__shard=00000"]
 
 
-def test_merge_manifest_parts_rejects_mixed_schema_fp(spark):
-    df = synthetic_tokens(spark, "mixed", 200)
-    part = mani.build_manifest(encode_tokens(df, CFG))
-    other = part.withColumn("schema_fp", F.lit("deadbeef" * 8))
-    # homogeneous parts merge fine
-    assert mani.merge_manifest_parts(part.union(part)).count() > 0
-    # mixed fingerprints must fail typed, not first()-merge silently
-    from copybook_rs_spark.errors import PipelineContractError
-
-    with pytest.raises(PipelineContractError, match="schema fingerprints"):
-        mani.merge_manifest_parts(part.union(other))
-
-
-def test_watermarked_window_finalizes_and_drops_late(spark, tmp_path):
-    # append-mode watermarked windows: a window emits exactly once when the
-    # watermark passes its end, and data later than the watermark is dropped
-    from copybook_rs_spark.streaming import windowed_event_counts
-
-    import os
-
-    in_dir = str(tmp_path / "ev_in")
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "win_out")
-    schema = "ts timestamp, event_type string, value double"
-
-    def mk(rows):
-        return spark.createDataFrame(rows, schema)
-
-    def run_stream():
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-
-        def sink(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            windowed_event_counts(stream, window="1 hour", watermark="30 minutes")
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        if not os.path.isdir(out_dir):
-            return []
-        return spark.read.parquet(out_dir).collect()
-
-    import datetime as dt
-
-    T = lambda h, m: dt.datetime(2026, 1, 1, h, m)
-    # batch 1: three on-time events in [10:00, 11:00) + one at 12:00 that
-    # advances the watermark to 11:30 > 11:00, finalizing the 10:00 window
-    mk([(T(10, 5), "click", 1.0), (T(10, 20), "click", 2.0),
-        (T(10, 40), "view", 3.0), (T(12, 0), "click", 0.5)]).write.mode(
-        "append"
-    ).parquet(in_dir)
-    out1 = {(r["window_start"].hour, r["event_type"]): r["n_events"] for r in run_stream()}
-    assert out1[(10, "click")] == 2 and out1[(10, "view")] == 1
-    assert (12, "click") not in out1  # its window is not finalized yet
-
-    # batch 2: a LATE 10:30 event (watermark is 11:30) must be dropped;
-    # a 14:00 event finalizes the 12:00 window
-    mk([(T(10, 30), "click", 9.0), (T(14, 0), "view", 1.0)]).write.mode(
-        "append"
-    ).parquet(in_dir)
-    rows2 = run_stream()  # cumulative parquet: run-1 emissions + run-2 delta
-    out2 = {(r["window_start"].hour, r["event_type"]): r["n_events"] for r in rows2}
-    # late row dropped: the finalized 10:00 window was NOT re-emitted or
-    # changed (append emits each window exactly once)
-    n_10_click = [
-        r["n_events"] for r in rows2
-        if r["window_start"].hour == 10 and r["event_type"] == "click"
-    ]
-    assert n_10_click == [2]
-    assert out2[(12, "click")] == 1
-
-
 def test_audit_all_ok(spark):
     df = synthetic_tokens(spark, "runs", 300)
     chunks = encode_tokens(df, CFG)
@@ -263,82 +117,6 @@ def test_audit_detects_corruption_without_failing(spark):
     assert total_err == len(errs)
     codes = [c for r in summary for c in r["sample_error_codes"] if c]
     assert any(c.startswith("CBSP") for c in codes)
-
-
-def test_manifest_part_compaction_bounds_and_preserves(spark, tmp_path):
-    # 10 commits with periodic part compaction: the live part-dir count must
-    # stay bounded at keep_last + 1, the merged manifest must equal the
-    # full-rebuild manifest, and superseded leftovers must be invisible
-    import os
-
-    from copybook_rs_spark.streaming.incremental import (
-        _live_part_dirs,
-        commit_batch,
-        compact_manifest_parts,
-        read_manifest_parts,
-    )
-
-    out_dir = str(tmp_path / "enc")
-    df = synthetic_tokens(spark, "mixed", 400).cache()
-    salts = plan_salts(df, CFG.target_values_per_part, CFG.max_salt)
-    for b in range(10):
-        part = df.filter(F.pmod(F.xxhash64("doc_id"), F.lit(10)) == b)
-        chunk_df = encode_tokens(part, CFG, salts=salts).withColumn(
-            "chunk_id", F.concat(F.lit(f"b{b:08d}/"), F.col("chunk_id"))
-        )
-        commit_batch(chunk_df, out_dir, b)
-        if b % 3 == 2:
-            compact_manifest_parts(spark, out_dir, keep_last=3)
-            live = _live_part_dirs(spark, os.path.join(out_dir, "manifest_parts"))
-            assert len(live) <= 3 + 1, live
-    # compaction is idempotent (re-run folds nothing new beyond keep_last)
-    compact_manifest_parts(spark, out_dir, keep_last=3)
-    n2 = compact_manifest_parts(spark, out_dir, keep_last=3)
-    assert n2 == 0
-    # merged manifest == full rebuild from the chunk table
-    chunks = mani.read_chunks(spark, out_dir)
-    full = mani.build_manifest(chunks)
-    merged = mani.read_manifest(spark, out_dir).select(*full.columns)
-    assert merged.exceptAll(full).count() == 0
-    assert full.exceptAll(merged).count() == 0
-    # a stale superseded dir left by a crashed cleanup is ignored at read
-    root = os.path.join(out_dir, "manifest_parts")
-    stale = os.path.join(root, "batch=b00000000")
-    mani.build_manifest(chunks.limit(5)).write.mode("overwrite").parquet(stale)
-    live = _live_part_dirs(spark, root)
-    assert stale not in live
-    again = mani.merge_manifest_parts(read_manifest_parts(spark, out_dir))
-    assert again.exceptAll(full).count() == 0 and full.exceptAll(again).count() == 0
-
-
-def test_partial_consolidated_dir_is_not_live(spark, tmp_path):
-    # a crash MID-consolidation leaves a cons dir without _SUCCESS; it must
-    # never become the live cover (it would shadow the real raw parts)
-    import os
-
-    from copybook_rs_spark.errors import PipelineContractError
-    from copybook_rs_spark.streaming.incremental import (
-        _live_part_dirs,
-        commit_batch,
-        read_manifest_parts,
-    )
-
-    out_dir = str(tmp_path / "enc")
-    df = synthetic_tokens(spark, "mixed", 100)
-    chunk_df = encode_tokens(df, CFG).withColumn(
-        "chunk_id", F.concat(F.lit("b00000000/"), F.col("chunk_id"))
-    )
-    commit_batch(chunk_df, out_dir, 0)
-    root = os.path.join(out_dir, "manifest_parts")
-    partial = os.path.join(root, "batch=c~b00000099")
-    os.makedirs(partial)  # simulated crashed write: no _SUCCESS, no data
-    live = _live_part_dirs(spark, root)
-    assert partial not in live and len(live) == 1
-    m = mani.merge_manifest_parts(read_manifest_parts(spark, out_dir))
-    assert m.agg(F.sum("n_docs")).collect()[0][0] == df.count()
-    # empty/unwritten location raises a typed contract error, not a crash
-    with pytest.raises(PipelineContractError, match="no live manifest parts"):
-        read_manifest_parts(spark, str(tmp_path / "nowhere"))
 
 
 def _rows(df):
@@ -431,47 +209,6 @@ def test_run_decode_resumable_empty_table(spark, tmp_path):
     got = read_decoded(spark, full)
     assert got.count() == 0
     assert [(f.name, f.dataType) for f in got.schema] == want
-
-
-def test_streaming_exact_dedup_stateful(spark, tmp_path):
-    # custom stateful operator (applyInPandasWithState): first occurrence
-    # per content digest passes through; duplicates are dropped both
-    # WITHIN a batch (deterministic min-doc_id winner) and ACROSS batches
-    # (checkpointed per-digest state survives stream restarts)
-    from copybook_rs_spark.streaming import streaming_exact_dedup
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "doc_id long, text string"
-
-    def run_batch(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-        stream = spark.readStream.schema(schema).parquet(in_dir)
-        q = (
-            streaming_exact_dedup(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(120):
-            q.stop()  # never leave a live query holding the checkpoint
-            pytest.fail("streaming dedup trigger did not finish in 120 s")
-
-    run_batch(
-        [(5, "alpha"), (3, "alpha"), (9, "beta"), (1, "gamma"), (7, "beta")]
-    )
-    got1 = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out_dir).collect()}
-    # min doc_id per digest within the batch
-    assert got1 == {(3, "alpha"), (7, "beta"), (1, "gamma")}
-    # second batch: cross-batch duplicates dropped via state; new text passes
-    run_batch([(2, "alpha"), (8, "delta"), (6, "gamma"), (4, "delta")])
-    got2 = {(r["doc_id"], r["text"]) for r in spark.read.parquet(out_dir).collect()}
-    assert got2 == got1 | {(4, "delta")}
 
 
 def test_run_decode_resumable_survives_mid_run_kill(spark, tmp_path, monkeypatch):
@@ -826,247 +563,6 @@ def test_run_decode_resumable_tighter_budget_not_recertified(spark, tmp_path):
             n_shards=2,
         )
     assert not os.path.exists(os.path.join(out, "_DECODE_COMPLETE"))
-
-
-def test_incremental_decode_stream(spark, tmp_path):
-    # consumer-side streaming: decode NEW chunk files per micro-batch into
-    # a growing token table; replays exactly-once, output bit-identical
-    import os
-
-    from copybook_rs_spark.streaming.incremental import incremental_decode
-
-    df = synthetic_tokens(spark, "mixed", 500).cache()
-    chunks_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "dectok")
-    a = df.filter("n_tok % 2 = 0")
-    b = df.filter("n_tok % 2 = 1")
-    # distinct batch prefixes keep table-wide chunk_id uniqueness (the
-    # chunk-table contract every engine write path enforces; the dedup
-    # ledger keys on it)
-    encode_tokens(a, CFG).withColumn(
-        "chunk_id", F.concat(F.lit("b0/"), F.col("chunk_id"))
-    ).write.mode("append").parquet(chunks_dir)
-    q = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    q.awaitTermination(120)
-    encode_tokens(b, CFG).withColumn(
-        "chunk_id", F.concat(F.lit("b1/"), F.col("chunk_id"))
-    ).write.mode("append").parquet(chunks_dir)
-    q2 = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    q2.awaitTermination(120)
-    got = spark.read.parquet(os.path.join(out_dir, "tokens"))
-    assert got.count() == df.count()  # exactly-once across batches
-    bad = (
-        df.select("doc_id", F.col("tokens").alias("ta"))
-        .join(got.select("doc_id", F.col("tokens").alias("tb")), "doc_id", "full_outer")
-        .filter(F.col("ta").isNull() | F.col("tb").isNull() | (F.col("ta") != F.col("tb")))
-        .count()
-    )
-    assert bad == 0
-
-
-def test_incremental_decode_survives_producer_rewrite(spark, tmp_path):
-    # review finding: a replayed producer commit re-delivers byte-identical
-    # chunks under NEW part-file names; the file-source checkpoint alone
-    # would decode them twice — the chunk_id ledger must drop them
-    import os
-
-    from copybook_rs_spark.streaming.incremental import incremental_decode
-
-    df = synthetic_tokens(spark, "mixed", 200).cache()
-    chunks = encode_tokens(df, CFG).cache()
-    chunks_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "dectok")
-    chunks.write.mode("append").parquet(chunks_dir)
-    q = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    q.awaitTermination(120)
-    # producer replay: SAME chunk content lands again as new files
-    chunks.write.mode("append").parquet(chunks_dir)
-    q2 = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    q2.awaitTermination(120)
-    got = spark.read.parquet(os.path.join(out_dir, "tokens"))
-    assert got.count() == df.count()  # no duplicates
-    # a partial decode batch is never visible: only committed batch= dirs
-    names = os.listdir(os.path.join(out_dir, "tokens"))
-    assert all(n.startswith("batch=") for n in names)
-
-
-def test_decode_ledger_compaction_preserves_dedup(spark, tmp_path):
-    # the ledger compactor must bound the per-trigger dirs while keeping
-    # replay dedup exact (row-union invariance, same machinery as manifest
-    # part compaction)
-    import os
-
-    from copybook_rs_spark.streaming.incremental import (
-        _live_part_dirs,
-        compact_decode_ledger,
-        incremental_decode,
-    )
-
-    df = synthetic_tokens(spark, "mixed", 300).cache()
-    chunks = encode_tokens(df, CFG).cache()
-    chunks_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "dectok")
-    # several small file batches -> several decode micro-batches
-    for i in range(4):
-        chunks.filter(F.pmod(F.xxhash64("chunk_id"), F.lit(4)) == i).withColumn(
-            "chunk_id", F.concat(F.lit(f"p{i}/"), F.col("chunk_id"))
-        ).write.mode("append").parquet(chunks_dir)
-        q = incremental_decode(spark, chunks_dir, out_dir, CFG)
-        q.awaitTermination(120)
-    folded = compact_decode_ledger(spark, out_dir, keep_last=1)
-    assert folded >= 1
-    live = _live_part_dirs(spark, os.path.join(out_dir, "ledger"))
-    assert len(live) <= 2
-    # replay everything after compaction: still no duplicates
-    for i in range(4):
-        chunks.filter(F.pmod(F.xxhash64("chunk_id"), F.lit(4)) == i).withColumn(
-            "chunk_id", F.concat(F.lit(f"p{i}/"), F.col("chunk_id"))
-        ).write.mode("append").parquet(chunks_dir)
-    q = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    q.awaitTermination(120)
-    got = spark.read.parquet(os.path.join(out_dir, "tokens"))
-    assert got.count() == df.count()
-
-
-def test_incremental_decode_chunk_id_collision_raises(spark, tmp_path):
-    # review finding: chunk_id is positional, not content-derived — two
-    # independent encode appends can reuse an id for DIFFERENT chunks.
-    # Dropping the second as "already decoded" would be silent data loss;
-    # the ledger carries the chunk crc32 and must raise typed instead
-    from copybook_rs_spark.errors import PipelineContractError
-    from copybook_rs_spark.streaming.incremental import incremental_decode
-
-    df = synthetic_tokens(spark, "mixed", 200).cache()
-    a = encode_tokens(df.filter("n_tok % 2 = 0"), CFG)
-    b = encode_tokens(df.filter("n_tok % 2 = 1"), CFG)  # ids COLLIDE with a
-    chunks_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "dectok")
-    a.write.mode("append").parquet(chunks_dir)
-    q = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    q.awaitTermination(120)
-    b.write.mode("append").parquet(chunks_dir)
-    q2 = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    with pytest.raises(Exception, match="uniqueness|StreamingQueryException") as ei:
-        q2.awaitTermination(120)
-        q2.processAllAvailable()
-    # the stream surfaces the typed contract error
-    assert "uniqueness" in str(ei.value) or "uniqueness" in str(
-        getattr(q2.exception(), "desc", "")
-    )
-
-
-def test_incremental_decode_legacy_ledger_refuses(spark, tmp_path):
-    # review finding: a ledger written before the blob_crc column (keyed
-    # by the body crc32) null-fills under the explicit read schema; were
-    # NULL treated as "unseen", a producer rewrite would re-decode every
-    # legacy chunk (silent duplicates) and the id-collision guard would be
-    # dead for them — must refuse typed instead
-    import os
-
-    from copybook_rs_spark.streaming.incremental import incremental_decode
-
-    df = synthetic_tokens(spark, "mixed", 200).cache()
-    chunks = encode_tokens(df, CFG).cache()
-    chunks_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "dectok")
-    chunks.write.mode("append").parquet(chunks_dir)
-    q = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    q.awaitTermination(120)
-    # rewrite the committed ledger dir in the LEGACY shape (body crc32)
-    ledger_root = os.path.join(out_dir, "ledger")
-    (tag,) = os.listdir(ledger_root)
-    ldir = os.path.join(ledger_root, tag)
-    legacy = (
-        spark.read.parquet(ldir)
-        .withColumnRenamed("blob_crc", "crc32")
-        .collect()
-    )
-    spark.createDataFrame(legacy).write.mode("overwrite").parquet(ldir)
-    # producer rewrite re-delivers the same chunks under new file names
-    chunks.write.mode("append").parquet(chunks_dir)
-    q2 = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    with pytest.raises(Exception, match="blob_crc|Streaming") as ei:
-        q2.awaitTermination(120)
-        q2.processAllAvailable()
-    assert "lack blob_crc" in str(ei.value) or "lack blob_crc" in str(
-        q2.exception()
-    )
-    # and nothing was decoded twice
-    got = spark.read.parquet(os.path.join(out_dir, "tokens"))
-    assert got.count() == df.count()
-
-
-def test_incremental_decode_legacy_chunk_table_refuses(spark, tmp_path):
-    # a pre-blob_crc chunk table read through the explicit stream schema
-    # null-fills the column; the ledger could then never certify content —
-    # refuse typed up front rather than populate a NULL-keyed ledger
-    import os
-
-    from copybook_rs_spark.streaming.incremental import incremental_decode
-
-    df = synthetic_tokens(spark, "mixed", 120).cache()
-    chunks_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "dectok")
-    encode_tokens(df, CFG).drop("blob_crc").write.mode("append").parquet(
-        chunks_dir
-    )
-    q = incremental_decode(spark, chunks_dir, out_dir, CFG)
-    with pytest.raises(Exception, match="blob_crc|Streaming") as ei:
-        q.awaitTermination(120)
-        q.processAllAvailable()
-    assert "NULL blob_crc" in str(ei.value) or "NULL blob_crc" in str(
-        q.exception()
-    )
-    assert not os.path.exists(os.path.join(out_dir, "tokens"))
-
-
-def test_decode_ledger_compaction_keeps_blob_crc(spark, tmp_path):
-    # review finding: compaction folds dirs with spark.read.parquet and
-    # mergeSchema off — over mixed-era dirs, inference may pick a legacy
-    # footer and silently DROP blob_crc for every newer entry. The
-    # explicit-schema fold must preserve every new entry's crc.
-    import os
-
-    from copybook_rs_spark.streaming.incremental import (
-        compact_decode_ledger,
-        incremental_decode,
-    )
-
-    df = synthetic_tokens(spark, "mixed", 200).cache()
-    chunks = encode_tokens(df, CFG).cache()
-    chunks_dir = str(tmp_path / "chunks")
-    out_dir = str(tmp_path / "dectok")
-    for i in range(2):
-        chunks.filter(F.pmod(F.xxhash64("chunk_id"), F.lit(2)) == i).withColumn(
-            "chunk_id", F.concat(F.lit(f"p{i}/"), F.col("chunk_id"))
-        ).write.mode("append").parquet(chunks_dir)
-        q = incremental_decode(spark, chunks_dir, out_dir, CFG)
-        q.awaitTermination(120)
-    # rewrite the FIRST ledger dir in the legacy shape (body crc32, no
-    # blob_crc): it sorts first, so schema inference starting from its
-    # footer would shed blob_crc for the whole fold
-    ledger_root = os.path.join(out_dir, "ledger")
-    ldir = os.path.join(ledger_root, "batch=b00000000")
-    n0 = spark.read.parquet(ldir).count()
-    legacy = (
-        spark.read.parquet(ldir)
-        .withColumnRenamed("blob_crc", "crc32")
-        .collect()
-    )
-    spark.createDataFrame(legacy).write.mode("overwrite").parquet(ldir)
-    folded = compact_decode_ledger(spark, out_dir, keep_last=0)
-    assert folded == 2
-    cons = [d for d in os.listdir(ledger_root) if d.startswith("batch=c~b")]
-    assert len(cons) == 1
-    out = spark.read.parquet(os.path.join(ledger_root, cons[0]))
-    assert "blob_crc" in out.columns
-    # every post-upgrade entry kept its crc; legacy rows fold as NULL
-    # (which the per-trigger guard then refuses typed)
-    assert out.where(F.col("blob_crc").isNull()).count() == n0
-    assert (
-        out.where(F.col("blob_crc").isNotNull()).count()
-        == chunks.count() - n0
-    )
 
 
 def test_run_decode_resumable_detects_extras_append(spark, tmp_path):

@@ -220,124 +220,6 @@ def test_index_row_shape(index):
     assert r["n_distinct"] > 0 and len(r["bits"]) > 0
 
 
-def test_refresh_equals_full_rebuild_after_mutation(spark, tok_df, chunks, index):
-    from copybook_rs_spark.operators import refresh_token_index
-
-    victims = [r["doc_id"] for r in tok_df.select("doc_id").limit(30).collect()]
-    mutated = delete_docs(chunks, victims, cfg=CFG).cache()
-    try:
-        refreshed = refresh_token_index(mutated, index)
-        full = build_token_index(mutated)
-
-        def canon(df):
-            return sorted(
-                (r["chunk_id"], r["blob_crc"], r["kind"], r["ref"],
-                 r["n_distinct"], bytes(r["bits"]))
-                for r in df.collect()
-            )
-
-        assert canon(refreshed) == canon(full)
-        # the refresh only rebuilt the chunks the old index doesn't
-        # describe (rewritten or new); everything else was kept verbatim
-        meta = mutated.select("chunk_id", "blob_crc")
-        n_pending = meta.subtract(
-            index.select("chunk_id", "blob_crc")
-        ).count()
-        assert 0 < n_pending < mutated.count()
-    finally:
-        mutated.unpersist()
-
-
-def test_all_tokens_conjunction_matches_brute_force(spark, chunks, index):
-    from copybook_rs_spark.operators import docs_with_all_tokens
-
-    dec = decode_tokens(chunks, cfg=CFG)
-    # a real co-occurring pair: two tokens from one actual document
-    some = dec.select("doc_id", "tokens").where(F.size("tokens") >= 2).first()
-    t1, t2 = int(some["tokens"][0]), int(some["tokens"][-1])
-
-    def brute(ts):
-        def has(t):
-            return F.exists(F.col("tokens"), lambda x: x == F.lit(t))
-
-        pred = F.lit(True)
-        for t in ts:
-            pred = pred & has(t)
-        return sorted(
-            (r["doc_id"], r["source"])
-            for r in dec.where(pred).select("doc_id", "source").collect()
-        )
-
-    for ts in ([t1], [t1, t2], [t1, t2, 10**9]):
-        got = sorted(
-            (r["doc_id"], r["source"])
-            for r in docs_with_all_tokens(chunks, index, ts, cfg=CFG).collect()
-        )
-        assert got == brute(ts), ts
-        # positive control: the sampled doc itself must appear whenever
-        # every needle came from it (guards a value-blind brute twin)
-        if 10**9 not in ts:
-            assert some["doc_id"] in {d for d, _ in got}, ts
-        else:
-            assert got == []
-    # conjunction candidates never exceed a single needle's candidates
-    from copybook_rs_spark.operators.token_index import _candidate_ids
-    c1 = _candidate_ids(chunks, index, [t1]).count()
-    c12 = _candidate_ids(chunks, index, [t1, t2]).count()
-    assert 0 < c12 <= c1
-    # impossible needle -> provably empty without decoding
-    assert docs_with_all_tokens(chunks, index, [t1, 2**64], cfg=CFG).count() == 0
-    with pytest.raises(PipelineContractError):
-        docs_with_all_tokens(chunks, index, [], cfg=CFG)
-
-
-def test_any_token_disjunction_matches_brute_force(spark, chunks, index):
-    from copybook_rs_spark.operators import docs_with_any_token
-
-    dec = decode_tokens(chunks, cfg=CFG)
-    some = dec.select("doc_id", "tokens").where(F.size("tokens") >= 2).first()
-    other = (
-        dec.select("doc_id", "tokens")
-        .where(F.col("doc_id") != some["doc_id"])
-        .first()
-    )
-    t1, t2 = int(some["tokens"][0]), int(other["tokens"][-1])
-
-    def brute(ts):
-        def has(t):
-            return F.exists(F.col("tokens"), lambda x: x == F.lit(t))
-
-        pred = F.lit(False)
-        for t in ts:
-            pred = pred | has(t)
-        return sorted(
-            (r["doc_id"], r["source"])
-            for r in dec.where(pred).select("doc_id", "source").collect()
-        )
-
-    for ts in ([t1], [t1, t2], [t1, t2, 10**9]):
-        got = sorted(
-            (r["doc_id"], r["source"])
-            for r in docs_with_any_token(chunks, index, ts, cfg=CFG).collect()
-        )
-        assert got == brute(ts), ts
-        # positive controls: both sampled docs appear once their token is
-        # in the disjunction
-        names = {d for d, _ in got}
-        assert some["doc_id"] in names
-        if t2 in ts:
-            assert other["doc_id"] in names
-    # out-of-int64 needles drop out of the disjunction (not an error)
-    got2 = sorted(
-        (r["doc_id"], r["source"])
-        for r in docs_with_any_token(chunks, index, [t1, 2**64], cfg=CFG).collect()
-    )
-    assert got2 == brute([t1])
-    assert docs_with_any_token(chunks, index, [2**64], cfg=CFG).count() == 0
-    with pytest.raises(PipelineContractError):
-        docs_with_any_token(chunks, index, [], cfg=CFG)
-
-
 def _maybe_contains(kind: int, ref: int, bits: bytes, token: int) -> bool:
     """Scalar reference probe of one index row: kind 0 is exact; kind 1
     may answer a false 'maybe' (bounded by the Bloom sizing) but never a
@@ -362,9 +244,8 @@ def _maybe_contains(kind: int, ref: int, bits: bytes, token: int) -> bool:
 
 def test_probe_batch_matches_scalar_reference():
     # round-6 vectorization: _probe_batch must answer bit-for-bit like the
-    # per-row _maybe_contains fold it replaced, across bitmap rows, Bloom
-    # rows of several m_bits sizes, empty-bits rows and out-of-range
-    # needles, for both the conjunctive and disjunctive folds
+    # per-row _maybe_contains it replaced, across bitmap rows, Bloom rows
+    # of several m_bits sizes, empty-bits rows and out-of-range needles
     from copybook_rs_spark.operators.token_index import (
         _presence_bits,
         _probe_batch,
@@ -405,16 +286,9 @@ def test_probe_batch_matches_scalar_reference():
         [-(2**63), -(2**63) + 5, 2**63 - 1],
     ]
     for needles in needles_sets:
-        for conj in (True, False):
-            fold = all if conj else any
+        for t in needles:
             want = np.array(
-                [
-                    fold(
-                        _maybe_contains(int(k), int(r), b, t)
-                        for t in needles
-                    )
-                    for k, r, b in zip(kinds, refs, bits)
-                ]
+                [_maybe_contains(int(k), int(r), b, t) for k, r, b in zip(kinds, refs, bits)]
             )
-            got = _probe_batch(kinds, refs, bits, needles, conj)
-            assert np.array_equal(got, want), (needles, conj)
+            got = _probe_batch(kinds, refs, bits, t)
+            assert np.array_equal(got, want), t

@@ -284,27 +284,3 @@ def test_conservative_decimal_bounds():
         Decimal("1999.5")
     )
     assert _int_bounds(None, 7, 0) == (None, 7)
-
-
-def test_refresh_extras_index_equals_rebuild_and_guards_columns(
-    spark, tok_df, chunks, index
-):
-    from copybook_rs_spark.operators import refresh_extras_index
-
-    victims = [r["doc_id"] for r in tok_df.select("doc_id").limit(25).collect()]
-    mutated = delete_docs(chunks, victims, cfg=CFG).cache()
-    try:
-        cols = ["aux", "price", "w"]
-        refreshed = refresh_extras_index(mutated, index, cols, cfg=CFG)
-        full = build_extras_index(mutated, cols, cfg=CFG)
-
-        def canon(df):
-            return sorted(
-                tuple(r[c] for c in sorted(df.columns)) for r in df.collect()
-            )
-
-        assert canon(refreshed) == canon(full)
-        with pytest.raises(PipelineContractError, match="covers columns"):
-            refresh_extras_index(mutated, index, ["aux"], cfg=CFG)
-    finally:
-        mutated.unpersist()
