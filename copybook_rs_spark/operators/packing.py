@@ -16,88 +16,137 @@ need between "deduped token table" and "training loader":
   runs, cluster sizes, and engines (the same arithmetic is expressible in
   ANSI SQL, so the driver oracle recomputes it independently).
 
-Scale notes: the per-source running token count defaults to a two-phase
-DISTRIBUTED prefix sum over the narrow (source, order, length) triples
-(`_distributed_prefix_sum`) — no one-task-per-source window anywhere. The heavy data movement (token slices -> sequences)
-is seq-keyed and fully parallel.
+Document positions (each doc's end offset in its source's token stream)
+come from the narrow (source, doc_order, length) triples, never from the
+token arrays:
 
-Single-fat-exchange paths (round-4 verdict #3, tightened round 6): only
-the seq-keyed reassembly exchange of the token arrays is fundamental.
-The positions join avoids moving the arrays two ways —
-- default (round 6): when the doc count (known exactly from the offsets
-  aggregate) is under ~4M, the narrow cumsum table is BROADCAST into the
-  join, so unprepared input also packs with a single fat exchange;
-- at scale: `write_bucketed_tokens` materializes the token table
-  bucketed + sorted by exactly the join key; Spark's bucketed scan then
-  reports the HashPartitioning the forced sort-merge join needs
-  (alias-aware, so the internal (source, __ord) rename is transparent),
-  and the positions join runs with NO exchange or sort on the fat side
-  (only the narrow cumsum rows shuffle to the bucket layout). At 100 TB
-  the bucketing cost is paid once by the table writer and amortized over
-  every pack/epoch that reads it.
+- small input (at most _PACK_BROADCAST_MAX_DOCS docs; the benchmark and
+  the driver queries): ONE capped collect of the triples to the driver, a sort and
+  per-source cumsum there, and the (source, __ord, __cum_end) table
+  broadcast into the fat pass. The input is read twice: the capped
+  collect and the fat pass.
+- at scale (above the ceiling): range bounds from one seeded driver
+  sample become literals that assign each doc a partition id `__pid`;
+  one aggregate job yields the per-(__pid, source) token offsets and
+  the key contract; a (__pid, source) window over the fat rows adds
+  offset + local running sum.
+
+Neither path checkpoints. A recomputed task (lost executor, retried
+stage) sees the same positions: on the small path they are driver-held
+broadcast data; at scale the pid is a pure function of the row's key
+against literal bounds, the offsets are broadcast literals, and the
+window's running sum is a pure function of its group because the
+(source, doc_order) keys are unique (checked before any position is
+used).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-# Auto-broadcast ceiling for the positions join: one cumsum row per doc,
-# so row count == doc count and ~4M rows build a few-hundred-MB hashed
-# relation (guide §3.1's comfortable zone under the 8 GB broadcast cap).
-# Above it the join falls back to a shuffle join of the fat side — the
-# case the write_bucketed_tokens layout exists for.
+# Driver-positions ceiling: the capped collect holds up to this many
+# (source, __ord, __len) rows on the driver and the broadcast positions
+# table one row per doc (~4M rows build a few-hundred-MB hashed relation,
+# guide §3.1's comfortable zone under the 8 GB broadcast cap). Above it
+# the at-scale path runs.
 _PACK_BROADCAST_MAX_DOCS = 4_000_000
 
 
-def _distributed_prefix_sum(base: DataFrame) -> DataFrame:
-    """Per-source running token count WITHOUT a one-task-per-source window:
-    the classic two-phase distributed prefix sum, on the NARROW (source,
-    __ord, __len) triples only (token arrays never ride through it).
+def _check_keys(n: int, n_null: int, n_key: int) -> None:
+    """The key contract: positions are keyed by (source, doc_order), so a
+    null or duplicate key would drop or duplicate documents while their
+    lengths still shift every later position — typed error instead."""
+    if n_null:
+        raise ValueError(
+            f"pack_sequences: {n_null} row(s) with null source/order "
+            "key — packing needs non-null (source, doc_order)"
+        )
+    if n_key != n:
+        raise ValueError(
+            f"pack_sequences: duplicate (source, doc_order) keys "
+            f"({n} rows, {n_key} distinct) — the concat order "
+            "would be ambiguous and the position join many-to-many"
+        )
 
-    1. Range-partition by (source, __ord), stamp partition ids, and cut the
-       lineage (LAZY localCheckpoint, materialized by step 2's aggregation
-       in the same job) — boundaries come from Spark's sampling, so
-       PARALLELISM varies run to run, but the running sums are a pure
-       function of the total order and therefore deterministic; the
-       truncated lineage pins the sampled pids before this function
-       returns (block loss fails the job rather than recompute against
-       re-sampled boundaries).
-    2. ONE tiny aggregate (partitions x sources rows) collected to the
-       driver yields the per-(partition, source) offsets AND the key
-       contract (null/duplicate (source, __ord) keys fail typed — range
-       partitioning colocates equal keys, so per-group distinct counts sum
-       to the global one).
-    3. A local window inside each range partition adds offset + local
-       cumsum; token arrays are joined back on the (source, __ord) key.
 
-    Join strategy (guide §3.1/§8.4): the fat side must NEVER be broadcast —
-    the planner cannot estimate the checkpointed narrow side and has been
-    observed to broadcast the token arrays instead (plans/r06/
-    sequence_pack_before.txt node 11). Default: broadcast the NARROW cumsum
-    side when the now-known doc count allows, so the arrays are not
-    shuffled at all; above the ceiling, force a shuffle join (which a
-    bucketed fat table satisfies without moving the arrays either).
-    """
+def _driver_positions(keys: pa.Table) -> pa.Table:
+    """(source, __ord, __len) rows -> (source, __ord, __cum_end), sorted by
+    (source, __ord), after the key contract. Arrow sorts strings by UTF-8
+    bytes and integers numerically, as Spark does."""
+    keys = keys.combine_chunks()
+    src, ord_ = keys["source"], keys["__ord"]
+    n = keys.num_rows
+    n_null = pc.sum(pc.or_(pc.is_null(src), pc.is_null(ord_))).as_py() or 0
+    _check_keys(n, n_null, n)
+    keys = keys.take(
+        pc.sort_indices(
+            keys, sort_keys=[("source", "ascending"), ("__ord", "ascending")]
+        )
+    )
+    src, ord_ = keys["source"], keys["__ord"]
+    # a null token array has no tokens, as in Spark's sum
+    lens = pc.fill_null(keys["__len"], 0).to_numpy()
+    if n > 1:
+        same_src = pc.equal(src[1:], src[:-1]).to_numpy(zero_copy_only=False)
+        same_ord = pc.equal(ord_[1:], ord_[:-1]).to_numpy(zero_copy_only=False)
+        _check_keys(n, 0, n - int(np.count_nonzero(same_src & same_ord)))
+        new_src = np.r_[True, ~same_src]
+    else:
+        new_src = np.ones(n, dtype=bool)
+    # per-source running sum: the global cumsum minus the running total
+    # before each source's first row
+    cum = np.cumsum(lens, dtype=np.int64)
+    starts = np.flatnonzero(new_src)
+    before = np.repeat((cum - lens)[starts], np.diff(np.r_[starts, n]))
+    return pa.table({
+        "source": src, "__ord": ord_, "__cum_end": pa.array(cum - before),
+    })
+
+
+def _range_pid(base: DataFrame):
+    """`__pid` column from range bounds drawn by one seeded sample of the
+    (source, __ord) keys: the bounds are literals, so the pid is a pure
+    function of the key and a recomputed task assigns the same one. Any
+    bounds keep positions exact (the pid is monotone in the key order);
+    the sample only balances the partitions."""
     spark = base.sparkSession
     p = max(spark.sparkContext.defaultParallelism, 2)
-    # lazy checkpoint: the offsets aggregation right below touches every
-    # partition, so it materializes the checkpoint in the SAME job (one
-    # job fewer than eager). Lineage is truncated either way — the stamped
-    # pids can never be recomputed against re-sampled range boundaries
-    # (block loss fails the job rather than recompute, which is the safe
-    # direction for determinism).
-    narrow = (
-        base.select("source", "__ord", "__len")
-        .repartitionByRange(p, "source", "__ord")
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    # the input holds more than the ceiling, so this fraction samples at
+    # least ~100 keys per partition
+    frac = min(1.0, 100 * p / (_PACK_BROADCAST_MAX_DOCS + 1))
+    sample = sorted(
+        (r["source"], r["__ord"])
+        for r in base.select("source", "__ord").dropna()
+        .sample(fraction=frac, seed=0).collect()
     )
-    # offsets + key contract in one pass: the positions join back on
-    # (source, __ord), so null or duplicate keys would silently DROP or
-    # duplicate documents while their lengths still shift every later
-    # position (review finding) — typed error instead
+    cuts = [sample[len(sample) * i // p] for i in range(1, p)] if sample else []
+    bounds = sorted(set(cuts))
+    src, ord_ = F.col("source"), F.col("__ord")
+    pid = F.lit(0)
+    for s, o in bounds:
+        after = (src > F.lit(s)) | ((src == F.lit(s)) & (ord_ > F.lit(o)))
+        pid = pid + F.when(after, 1).otherwise(0)
+    return pid.cast("int")
+
+
+def _scaled_positions(base: DataFrame) -> DataFrame:
+    """At-scale positions: one aggregate job for the per-(__pid, source)
+    offsets and the key contract, then a (__pid, source) window over the
+    fat rows adds offset + local running sum."""
+    spark = base.sparkSession
+    keyed = base.withColumn("__pid", _range_pid(base))
     grouped = (
-        narrow.groupBy("__pid", "source")
+        keyed.groupBy("__pid", "source")
         .agg(
             F.sum("__len").alias("__t"),
             F.count("*").alias("__n"),
@@ -108,61 +157,50 @@ def _distributed_prefix_sum(base: DataFrame) -> DataFrame:
         )
         .collect()
     )
-    n = sum(int(r["__n"]) for r in grouped)
-    n_null = sum(int(r["__n_null"]) for r in grouped)
-    # on the typed-error paths below, the checkpointed narrow blocks (3
-    # small columns per doc) are released by the ContextCleaner once the
-    # RDD is unreachable — localCheckpoint has no explicit free, and both
-    # raises are immediate caller errors
-    if n_null:
-        raise ValueError(
-            f"pack_sequences: {n_null} row(s) with null source/order "
-            "key — packing needs non-null (source, doc_order)"
-        )
-    # equal (source, __ord) keys share a range partition, so summing the
-    # per-(pid, source) distinct counts is the global distinct count
-    n_key = sum(int(r["__n_key"]) for r in grouped)
-    if n_key != n:
-        raise ValueError(
-            f"pack_sequences: duplicate (source, doc_order) keys "
-            f"({n} rows, {n_key} distinct) — the concat order "
-            "would be ambiguous and the position join many-to-many"
-        )
+    # equal keys share a pid, so the per-group distinct counts sum to the
+    # global one
+    _check_keys(
+        sum(int(r["__n"]) for r in grouped),
+        sum(int(r["__n_null"]) for r in grouped),
+        sum(int(r["__n_key"]) for r in grouped),
+    )
     by_src: dict = {}
-    offsets = {}
+    offsets = []
     for r in sorted(grouped, key=lambda r: (r["source"], r["__pid"])):
-        key = (r["__pid"], r["source"])
-        offsets[key] = by_src.get(r["source"], 0)
-        by_src[r["source"]] = offsets[key] + int(r["__t"])
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, src, off) for (pid, src), off in offsets.items()],
-            "__pid int, source string, __off long",
-        )
+        off = by_src.get(r["source"], 0)
+        offsets.append((r["__pid"], r["source"], off))
+        by_src[r["source"]] = off + int(r["__t"])
+    pids, srcs, offs = zip(*offsets)
+    off_df = spark.createDataFrame(
+        pa.table({"__pid": pids, "source": srcs, "__off": offs}),
+        "__pid int, source string, __off long",
     )
     wl = (
         Window.partitionBy("__pid", "source")
         .orderBy("__ord")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # lazy checkpoint: correctness never needs it (narrow, pids included,
-    # is already checkpointed data and the window is a pure function of
-    # it) — but multi-action callers would otherwise re-run the window +
-    # offsets join and rebuild the broadcast per action; eager=False
-    # materializes on the FIRST action and reuses after, without paying an
-    # extra job at pack() time
-    cum_narrow = (
-        narrow.join(off_df, ["__pid", "source"])
-        .withColumn("__cum_end", F.col("__off") + F.sum("__len").over(wl))
-        .select("source", "__ord", "__cum_end")
-        .localCheckpoint(eager=False)
+    return keyed.join(F.broadcast(off_df), ["__pid", "source"]).withColumn(
+        "__cum_end", F.col("__off") + F.sum("__len").over(wl)
     )
-    if n <= _PACK_BROADCAST_MAX_DOCS:
-        return base.join(F.broadcast(cum_narrow), ["source", "__ord"])
-    # merge hint pins a sort-merge join: never lets the planner broadcast
-    # the un-estimatable side (= the token arrays) by mistake; a bucketed
-    # fat scan satisfies it with no exchange on the arrays
-    return base.join(cum_narrow.hint("merge"), ["source", "__ord"])
+
+
+def _positions(base: DataFrame) -> DataFrame:
+    """`base` plus each doc's `__cum_end`: its end offset in its source's
+    concatenated token stream."""
+    keys = (
+        base.select("source", "__ord", "__len")
+        .limit(_PACK_BROADCAST_MAX_DOCS + 1)
+        .toArrow()
+    )
+    if keys.num_rows > _PACK_BROADCAST_MAX_DOCS:
+        return _scaled_positions(base)
+    schema = StructType([
+        base.schema["source"], base.schema["__ord"],
+        StructField("__cum_end", LongType(), False),
+    ])
+    cum = base.sparkSession.createDataFrame(_driver_positions(keys), schema)
+    return base.join(F.broadcast(cum), ["source", "__ord"])
 
 
 def pack_sequences(
@@ -180,61 +218,69 @@ def pack_sequences(
     running sum, and the per-sequence reassembly sorts slices by their
     global start offset. Every sequence has exactly seq_len tokens except
     the last one per source. Zero-token documents contribute nothing.
+    Null or duplicate (source, doc_order) keys raise ValueError.
 
-    The narrow cumsum table is broadcast into the positions join when the
-    doc count is at most _PACK_BROADCAST_MAX_DOCS (the token arrays then
-    move through ONE exchange, the seq-keyed reassembly); above it a
-    shuffle join runs (the bucketed-table path)."""
+    Input passes: up to _PACK_BROADCAST_MAX_DOCS docs, the input is read
+    twice — one capped collect of the narrow (source, doc_order, length)
+    triples, whose positions are computed on the driver and broadcast,
+    and the fat pass, whose token arrays move through ONE exchange (the
+    seq-keyed reassembly). Above the ceiling the at-scale path reads it
+    four times (capped collect, range sample, offsets aggregate, fat
+    pass) and the fat rows also cross a (__pid, source) window exchange.
+    No path checkpoints; see the module docstring for why a recompute
+    yields the same positions.
+
+    doc_order must order the same in Spark and in Arrow: string (UTF-8
+    byte order in both, which is also Python's code-point order),
+    integer, decimal, date and timestamp columns do. Floating-point
+    doc_order raises TypeError: Spark groups NaN with NaN and -0.0 with
+    0.0, Arrow's equality does not, so the key contract could differ
+    between the two paths."""
     if seq_len < 1:
         raise ValueError("seq_len must be >= 1")
+    if isinstance(df.schema[doc_order].dataType, (FloatType, DoubleType)):
+        raise TypeError(
+            f"pack_sequences: doc_order {doc_order!r} is floating point — "
+            "use an integer, string, decimal, date or timestamp column"
+        )
     L = F.lit(int(seq_len)).cast("long")
     base = df.select(
         "source", F.col(doc_order).alias("__ord"), "tokens",
         F.size("tokens").cast("long").alias("__len"),
     )
-    cum = _distributed_prefix_sum(base).withColumn(
-        "__cum_start", F.col("__cum_end") - F.col("__len")
-    )
+    end = F.col("__cum_end")
+    start = end - F.col("__len")
+    seq = F.col("__seq")
+    # slice of THIS doc's array landing in sequence __seq (bounds clamped
+    # to the doc and to the sequence window)
+    frm = F.greatest(seq * L - start, F.lit(0))
+    to = F.least((seq + 1) * L, end) - start
     parts = (
-        cum.filter(F.col("__len") > 0)
-        .withColumn(
-            "__seq",
+        _positions(base)
+        .filter(F.col("__len") > 0)
+        .select(
+            "source", "tokens", "__cum_end", "__len",
             # integer `div`, not float division: exact at any token count
             # (float64 would wobble past 2^53 global positions)
             F.explode(
                 F.sequence(
-                    F.expr(f"__cum_start div {int(seq_len)}"),
+                    F.expr(f"(__cum_end - __len) div {int(seq_len)}"),
                     F.expr(f"(__cum_end - 1) div {int(seq_len)}"),
                 )
-            ),
-        )
-        # slice of THIS doc's array landing in sequence __seq (1-based
-        # slice(); bounds clamped to the doc and to the sequence window)
-        .withColumn(
-            "__from",
-            F.greatest(F.col("__seq") * L - F.col("__cum_start"), F.lit(0)),
-        )
-        .withColumn(
-            "__to",
-            F.least((F.col("__seq") + 1) * L, F.col("__cum_end"))
-            - F.col("__cum_start"),
+            ).alias("__seq"),
         )
         .select(
             "source",
-            F.col("__seq").alias("seq_id"),
-            F.col("__cum_start").alias("__start"),
-            F.expr(
-                "slice(tokens, cast(__from + 1 as int), "
-                "cast(__to - __from as int))"
-            ).alias("__part"),
-            # where a NEW document begins inside this sequence (__from == 0
+            seq.alias("seq_id"),
+            start.alias("__start"),
+            # slice() is 1-based
+            F.slice("tokens", (frm + 1).cast("int"), (to - frm).cast("int"))
+            .alias("__part"),
+            # where a NEW document begins inside this sequence (frm == 0
             # means the slice is the doc's first token): its in-sequence
             # offset — trainers need these for block-diagonal attention
             # masks over packed sequences
-            F.when(
-                F.col("__from") == 0,
-                (F.col("__cum_start") - F.col("__seq") * L).cast("int"),
-            ).alias("__bnd"),
+            F.when(frm == 0, (start - seq * L).cast("int")).alias("__bnd"),
         )
     )
     return (
@@ -249,37 +295,11 @@ def pack_sequences(
             F.array_sort(F.collect_list("__bnd")).alias("boundaries"),
             F.count("*").alias("n_docs"),
         )
-        .withColumn("n_tokens", F.size("tokens"))
         .select(
-            "source", "seq_id", "tokens", "n_tokens", "n_docs", "boundaries"
+            "source", "seq_id", "tokens", F.size("tokens").alias("n_tokens"),
+            "n_docs", "boundaries",
         )
     )
-
-
-def write_bucketed_tokens(
-    df: DataFrame,
-    table_name: str,
-    n_buckets: int,
-    doc_order: str = "doc_id",
-) -> DataFrame:
-    """Materialize a token table bucketed AND sorted by (source, doc_order)
-    — the exact join key of pack_sequences' positions join — and return the
-    catalog-backed table.
-
-    A pack_sequences over the returned table moves the token arrays
-    through a single exchange (the unavoidable seq-keyed reassembly): the
-    bucketed file scan already satisfies the join's distribution + ordering
-    requirement, so the fat side joins in place and only the narrow cumsum
-    rows shuffle. Write once, amortize over every pack that follows."""
-    if n_buckets < 1:
-        raise ValueError("n_buckets must be >= 1")
-    (
-        df.write.bucketBy(n_buckets, "source", doc_order)
-        .sortBy("source", doc_order)
-        .mode("overwrite")
-        .saveAsTable(table_name)
-    )
-    return df.sparkSession.table(table_name)
 
 
 def split_train_val(

@@ -1,7 +1,8 @@
 """Seeded synthetic token tables, one codec-stress profile each (FIXTURES.md
 profiles; the analogue of the reference's copybook-gen templates,
 tools/copybook-gen/src/data.rs:24-110). Output feeds tests/golden_sha256.json,
-so any change to the generators changes the goldens."""
+so any change to the generators changes the goldens. Also the plain-Python
+sequence-packing reference the pack tests compare against."""
 
 import numpy as np
 import pyarrow as pa
@@ -87,3 +88,46 @@ def synthetic_tokens(spark, profile: str, n_docs: int, seed: int = 42):
         "doc_id": pa.array(doc_ids, pa.string()), "tokens": tokens,
         "n_tok": pa.array(lens, pa.int32()), "source": pa.array(sources, pa.string()),
     }, schema=TOKEN_SCHEMA))
+
+
+PACK_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
+
+
+def pack_rows(n_docs: int, n_sources: int, max_len: int = 30, seed: int = 13):
+    """Seeded (doc_id, tokens, n_tok, source) rows for the pack tests."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n_docs):
+        toks = [int(x) for x in rng.integers(0, 500, int(rng.integers(1, max_len)))]
+        rows.append((f"d{i:04d}", toks, len(toks), f"s{i % n_sources}"))
+    return rows
+
+
+def pack_reference(rows, seq_len):
+    """Plain-Python packing: per source, docs sorted by doc_id,
+    concatenated, cut every seq_len tokens ->
+    {(source, seq_id): (tokens, boundaries, n_docs)}."""
+    out = {}
+    for src in sorted({r[3] for r in rows}):
+        flat, starts = [], []
+        for doc_id, toks, _, _ in sorted(r for r in rows if r[3] == src):
+            starts.append((len(flat), len(toks)))
+            flat.extend(toks)
+        for seq in range((len(flat) + seq_len - 1) // seq_len):
+            lo, hi = seq * seq_len, (seq + 1) * seq_len
+            out[(src, seq)] = (
+                flat[lo:hi],
+                [p - lo for p, n in starts if n and lo <= p < hi],
+                sum(1 for p, n in starts if n and p < hi and p + n > lo),
+            )
+    return out
+
+
+def packed(rows):
+    """Collected pack_sequences rows in pack_reference's shape."""
+    return {
+        (r["source"], r["seq_id"]): (
+            list(r["tokens"]), list(r["boundaries"]), r["n_docs"]
+        )
+        for r in rows
+    }

@@ -12,6 +12,7 @@ from copybook_rs_spark.operators.dedup import (
 )
 from copybook_rs_spark.operators.multimodal import FEATURE_DIM, extract_features
 from copybook_rs_spark.operators.similarity import cosine_topk, lsh_topk
+from synthetic import PACK_SCHEMA, pack_reference, pack_rows, packed
 
 SF = "/root/testdata/sf0.001"
 
@@ -519,50 +520,73 @@ def test_split_train_val_deterministic_and_stratified(spark, docs):
         split_train_val(docs, train_pct=95, val_pct=10)
 
 
-def _pack_reference(rows, seq_len):
-    """Plain-Python packing: per source, docs sorted by doc_id,
-    concatenated, cut every seq_len tokens ->
-    {(source, seq_id): (tokens, boundaries, n_docs)}."""
-    out = {}
-    for src in sorted({r[3] for r in rows}):
-        flat, starts = [], []
-        for doc_id, toks, _, _ in sorted(r for r in rows if r[3] == src):
-            starts.append((len(flat), len(toks)))
-            flat.extend(toks)
-        for seq in range((len(flat) + seq_len - 1) // seq_len):
-            lo, hi = seq * seq_len, (seq + 1) * seq_len
-            out[(src, seq)] = (
-                flat[lo:hi],
-                [p - lo for p, n in starts if n and lo <= p < hi],
-                sum(1 for p, n in starts if n and p < hi and p + n > lo),
-            )
-    return out
-
-
 def test_pack_sequences_distributed_cumsum_matches_reference(spark):
-    # the two-phase distributed prefix sum must produce exactly the
-    # plain-Python concat-and-cut packing, at several parallelisms
+    # driver positions must produce exactly the plain-Python
+    # concat-and-cut packing, at several parallelisms
     from copybook_rs_spark.operators.packing import pack_sequences
 
-    rng = np.random.default_rng(13)
-    rows = [
-        (f"d{i:04d}", [int(x) for x in rng.integers(0, 500, int(rng.integers(1, 30)))],
-         0, f"s{i % 4}")
-        for i in range(200)
-    ]
-    rows = [(d, t, len(t), s) for d, t, _, s in rows]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string"
-    )
-    want = _pack_reference(rows, 32)
+    rows = pack_rows(200, 4)
+    df = spark.createDataFrame(rows, PACK_SCHEMA)
+    want = pack_reference(rows, 32)
     for reparts in (1, 5, 23):
-        got = {
-            (r["source"], r["seq_id"]): (
-                list(r["tokens"]), list(r["boundaries"]), r["n_docs"]
-            )
-            for r in pack_sequences(df.repartition(reparts), 32).collect()
-        }
+        got = packed(pack_sequences(df.repartition(reparts), 32).collect())
         assert got == want, reparts
+
+
+@pytest.fixture(params=["small", "at_scale"])
+def pack_path(request, monkeypatch):
+    """Run the test on both position paths: a zero ceiling sends every
+    non-empty input down the at-scale path."""
+    from copybook_rs_spark.operators import packing
+
+    if request.param == "at_scale":
+        monkeypatch.setattr(packing, "_PACK_BROADCAST_MAX_DOCS", 0)
+    return request.param
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [
+        (("d1", [4], 1, None), r"null source/order"),
+        ((None, [4], 1, "s0"), r"null source/order"),
+        (("d0", [4], 1, "s0"), r"duplicate \(source, doc_order\)"),
+    ],
+    ids=["null-source", "null-doc-order", "duplicate-key"],
+)
+def test_pack_sequences_key_contract(spark, pack_path, bad, match):
+    # positions are keyed by (source, doc_order): a null or duplicate key
+    # fails typed, on both paths, before any position is used
+    from copybook_rs_spark.operators.packing import pack_sequences
+
+    rows = [("d0", [1, 2], 2, "s0"), ("d2", [3], 1, "s1"), bad]
+    with pytest.raises(ValueError, match=match):
+        pack_sequences(spark.createDataFrame(rows, PACK_SCHEMA), 4)
+
+
+def test_pack_sequences_sort_order_parity(spark, pack_path):
+    # the small path sorts keys in Arrow, the at-scale path in Spark, the
+    # reference in Python: mixed case, multi-byte UTF-8 and negative longs
+    # must order the same in all three (UTF-8 byte order == code points)
+    from copybook_rs_spark.operators.packing import pack_sequences
+
+    str_rows = [
+        (d, [10 * i + k for k in range(i + 1)], i + 1, f"s{j}")
+        for j in range(2) for i, d in enumerate(["Z", "a", "ä", "é", "z"])
+    ]
+    long_rows = [
+        (o, [o % 97, 7], 2, "s0") for o in (-(2**40), -3, -1, 0, 2, 2**40)
+    ]
+    long_schema = PACK_SCHEMA.replace("doc_id string", "doc_id long")
+    for rows, schema in [(str_rows, PACK_SCHEMA), (long_rows, long_schema)]:
+        df = spark.createDataFrame(rows, schema).repartition(3)
+        got = packed(pack_sequences(df, 3).collect())
+        assert got == pack_reference(rows, 3), schema
+    # float keys would group NaN and -0.0 differently in Arrow and Spark
+    fdf = spark.createDataFrame(
+        [(0.5, [1], 1, "s0")], PACK_SCHEMA.replace("doc_id string", "doc_id double")
+    )
+    with pytest.raises(TypeError, match="floating point"):
+        pack_sequences(fdf, 3)
 
 
 def test_pack_sequences_boundaries(spark):

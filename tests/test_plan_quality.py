@@ -169,12 +169,30 @@ def test_pregrouped_encode_plan_has_no_exchange(spark):
     assert n_ex == base_plan.count("Exchange"), plan
 
 
+def _broadcast_subtrees(plan: str):
+    """The text of every BroadcastExchange node's subtree in a plan dump
+    (its own line plus every deeper-indented line below it)."""
+    lines = plan.splitlines()
+    out = []
+    for k, line in enumerate(lines):
+        if "BroadcastExchange" not in line:
+            continue
+        depth = line.index("BroadcastExchange")
+        sub = [line]
+        for nxt in lines[k + 1:]:
+            body = nxt.lstrip(" :+-")
+            if not body or len(nxt) - len(body) <= depth:
+                break
+            sub.append(nxt)
+        out.append("\n".join(sub))
+    return out
+
+
 def test_pack_sequences_plan_quality(spark):
     # nothing in the packing plan may fall back to a cartesian or
-    # nested-loop join, and the default positions join must broadcast the
-    # NARROW cumsum side — NEVER the token arrays (round-6 finding: the
-    # planner cannot estimate the checkpointed narrow side and broadcast
-    # the estimated-small FAT side instead, shipping the arrays).
+    # nested-loop join; the positions come from the driver and are
+    # BROADCAST as the narrow (source, __ord, __cum_end) table, so the
+    # token arrays cross exactly one exchange, the seq-keyed reassembly
     from copybook_rs_spark.operators.packing import pack_sequences
 
     rows = [(f"d{i:03d}", list(range(i % 7 + 1)), i % 7 + 1, f"s{i % 2}")
@@ -184,88 +202,31 @@ def test_pack_sequences_plan_quality(spark):
     )
     plan = pack_sequences(df, 8)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    # positions join: broadcast build side is the narrow (__cum_end) table,
-    # so the fat side's only exchange is the seq-keyed reassembly
     assert "BroadcastHashJoin" in plan, plan
-    bcast_sections = [
-        sec for sec in plan.split("BroadcastExchange") if "__cum_end" in sec
-    ]
-    assert bcast_sections, plan  # the cumsum table is the broadcast side
-    assert "tokens" not in plan.split("BroadcastExchange", 1)[1].split(
-        "BroadcastHashJoin"
-    )[0], "token arrays must not ride a BroadcastExchange"
+    bcast = _broadcast_subtrees(plan)
+    assert bcast and all("__cum_end" in b for b in bcast), plan
+    assert not any("tokens" in b for b in bcast), plan
     ex = [ln for ln in plan.splitlines() if "Exchange hashpartitioning" in ln]
-    assert sum("seq_id" in ln for ln in ex) == 1, ex  # the ONE fat exchange
-    # every other hashpartitioning exchange is narrow-side machinery (the
-    # window's (__pid, source) clustering inside the broadcast subtree)
-    assert all("seq_id" in ln or "__pid" in ln for ln in ex), ex
-    # offsets-join fragment: an explicit F.broadcast on a tiny keyed table
-    # must plan as a BroadcastHashJoin
-    narrow = df.selectExpr("source", "doc_id as __ord", "n_tok as __len")
-    off = F.broadcast(spark.createDataFrame(
-        [(0, "s0", 0), (0, "s1", 3)], "__pid int, source string, __off long"
-    ))
-    frag = narrow.withColumn("__pid", F.lit(0)).join(off, ["__pid", "source"])
-    fplan = frag._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in fplan or "BroadcastQueryStage" in fplan
+    assert len(ex) == 1 and "seq_id" in ex[0], ex  # the ONE fat exchange
 
 
-def test_pack_sequences_bucketed_single_fat_exchange(spark, tmp_path, monkeypatch):
-    # round-4 verdict #3: over a table bucketed+sorted by the order key,
-    # the positions join runs with NO exchange on the fat (token-array)
-    # side — the plan's only hashpartitioning exchanges are the narrow
-    # cumsum rows shuffling to the bucket layout and the unavoidable
-    # seq-keyed reassembly; and the packed output is identical to the
-    # unbucketed path
+def test_pack_sequences_at_scale_path(spark, monkeypatch):
+    # a zero ceiling pins the at-scale path (literal range bounds, one
+    # offsets aggregate, a (__pid, source) window over the fat rows): its
+    # output equals the plain-Python reference at any parallelism, and
+    # only the narrow offsets table is broadcast, never the token arrays
     from copybook_rs_spark.operators import packing
-    from copybook_rs_spark.operators.packing import (
-        pack_sequences,
-        write_bucketed_tokens,
-    )
+    from synthetic import PACK_SCHEMA, pack_reference, pack_rows, packed
 
-    rows = [(f"d{i:03d}", list(range(i % 7 + 1)), i % 7 + 1, f"s{i % 2}")
-            for i in range(120)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, tokens array<int>, n_tok int, source string"
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        spark.sql("DROP TABLE IF EXISTS __test_tok_bucketed")
-        bt = write_bucketed_tokens(df, "__test_tok_bucketed", 4)
-        # a zero broadcast ceiling pins the at-scale fallback (the plan
-        # write_bucketed_tokens exists for); the default would broadcast
-        # the narrow side at this row count and skip the join exchange
-        # entirely (asserted in test_pack_sequences_plan_quality). The
-        # join strategy is fixed when pack_sequences is called.
-        with monkeypatch.context() as m:
-            m.setattr(packing, "_PACK_BROADCAST_MAX_DOCS", 0)
-            packed = pack_sequences(bt, 16)
-        plan = packed._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan  # fat scan supplies the join layout
-        ex = [
-            ln for ln in plan.splitlines()
-            if "Exchange hashpartitioning" in ln
-        ]
-        assert sum("seq_id" in ln for ln in ex) == 1  # the ONE fat exchange
-        assert sum("__ord" in ln for ln in ex) == 1  # narrow cumsum rows
-        # anything else is the narrow window's (__pid, source) clustering
-        # (visible in the lazy plan since round 6 moved the lineage cut
-        # upstream); the arrays never ride it
-        assert all(
-            "seq_id" in ln or "__ord" in ln or "__pid" in ln for ln in ex
-        ), ex
-        want = {
-            (r["source"], r["seq_id"], tuple(r["tokens"]),
-             tuple(r["boundaries"]), r["n_docs"])
-            for r in pack_sequences(df, 16).collect()
-        }
-        got = {
-            (r["source"], r["seq_id"], tuple(r["tokens"]),
-             tuple(r["boundaries"]), r["n_docs"])
-            for r in packed.collect()
-        }
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS __test_tok_bucketed")
+    rows = pack_rows(200, 4)
+    df = spark.createDataFrame(rows, PACK_SCHEMA)
+    want = pack_reference(rows, 32)
+    monkeypatch.setattr(packing, "_PACK_BROADCAST_MAX_DOCS", 0)
+    for reparts in (1, 5, 23):
+        out = packing.pack_sequences(df.repartition(reparts), 32)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+        bcast = _broadcast_subtrees(plan)
+        assert bcast and all("__off" in b for b in bcast), plan
+        assert not any("tokens" in b for b in bcast), plan
+        assert packed(out.collect()) == want, reparts
