@@ -18,4 +18,9 @@ re-expressed Spark-first:
 
 __version__ = "0.1.0"
 
+from copybook_rs_spark import _pyworker
 from copybook_rs_spark.config import EncodeConfig  # noqa: F401
+
+# every kernel unpickles through this import, so each Python worker (local,
+# cluster or --py-files) installs the refresh fix before its next task
+_pyworker.install_in_worker()

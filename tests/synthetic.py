@@ -2,7 +2,8 @@
 profiles; the analogue of the reference's copybook-gen templates,
 tools/copybook-gen/src/data.rs:24-110). Output feeds tests/golden_sha256.json,
 so any change to the generators changes the goldens. Also the plain-Python
-sequence-packing reference the pack tests compare against."""
+sequence-packing reference the pack tests compare against, and the per-task
+zip re-read probe the Python-worker tests share."""
 
 import numpy as np
 import pyarrow as pa
@@ -131,3 +132,48 @@ def packed(rows):
         )
         for r in rows
     }
+
+
+def zip_rereads_per_task(spark, tasks: int, rounds: int):
+    """Run a `tasks`-task mapInArrow `rounds` times. Each task reports
+    whether its Python worker had imported copybook_rs_spark before the
+    task began, and how many archive directories one
+    `importlib.invalidate_caches()` (the refresh pyspark's worker makes
+    before every task) re-read once the task had imported the package, as
+    every engine kernel does. Returns [(had_package, reads)] per task."""
+
+    # nested, so cloudpickle ships it by value: workers need not import tests
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        had_package = "copybook_rs_spark" in sys.modules
+        import copybook_rs_spark  # noqa: F401
+
+        read_directory = zipimport._read_directory
+        reads = []
+
+        def counted(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"had_package": [had_package], "reads": [len(reads)]}
+        )
+
+    df = spark.range(0, tasks, 1, numPartitions=tasks)
+    return [
+        (row.had_package, row.reads)
+        for _ in range(rounds)
+        for row in df.mapInArrow(probe, "had_package boolean, reads long").collect()
+    ]

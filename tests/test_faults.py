@@ -26,13 +26,18 @@ def test_pack_sequences_survives_executor_loss(path):
     # pack_sequences is called (its positions are computed), executor 0 is
     # killed, and only then is the packed table collected: the lost
     # executor's blocks and shuffle files must be recomputable, and the
-    # output must still equal the plain-Python reference
+    # output must still equal the plain-Python reference. Then the
+    # surviving executor's fresh Python workers, which never ran the
+    # session warm-up, must not re-read zip directories per task
     env = dict(os.environ, PYTHONPATH=os.pathsep.join([ROOT, TESTS]))
     run = subprocess.run(
         [sys.executable, os.path.abspath(__file__), path],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert run.returncode == 0 and "PACK_OK" in run.stdout, (
+        run.stdout[-2000:] + run.stderr[-4000:]
+    )
+    assert "ZIP_REREADS_OK" in run.stdout, (
         run.stdout[-2000:] + run.stderr[-4000:]
     )
 
@@ -52,7 +57,9 @@ def main(path: str) -> None:
     from pyspark.sql import SparkSession
 
     from copybook_rs_spark.operators import packing
-    from synthetic import PACK_SCHEMA, pack_reference, pack_rows, packed
+    from synthetic import (
+        PACK_SCHEMA, pack_reference, pack_rows, packed, zip_rereads_per_task,
+    )
 
     spark = (
         SparkSession.builder.master("local-cluster[2,1,1024]")
@@ -74,6 +81,12 @@ def main(path: str) -> None:
         want = pack_reference(rows, 64)
         assert got == want, f"{len(got)} sequences, {len(want)} expected"
         print("PACK_OK", len(got))
+        # a worker's first task imports the package and installs the
+        # refresh; from its next task on, a refresh re-reads nothing
+        tasks = zip_rereads_per_task(spark, tasks=4, rounds=2)
+        warm = [reads for had_package, reads in tasks if had_package]
+        assert warm and set(warm) == {0}, tasks
+        print("ZIP_REREADS_OK", tasks)
     finally:
         spark.stop()
 
