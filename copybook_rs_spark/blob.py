@@ -81,7 +81,6 @@ from copybook_rs_spark.codecs import bitpack as bp
 from copybook_rs_spark.codecs import core
 from copybook_rs_spark.codecs import fsst as fsst_mod
 from copybook_rs_spark.codecs import varint as vi
-from copybook_rs_spark.config import decimal_params
 from copybook_rs_spark.errors import (
     BadMagicError,
     BadVersionError,
@@ -91,6 +90,12 @@ from copybook_rs_spark.errors import (
     PayloadCorruptError,
     TruncatedBlobError,
     ValueOverflowError,
+)
+from copybook_rs_spark.etypes import (
+    ExtraType,
+    blob_header_len,
+    extra_type,
+    from_blob_header,
 )
 
 MAGIC = b"CBS1"
@@ -206,11 +211,10 @@ def _values_parts(sec: memoryview) -> tuple[int, tuple[memoryview, ...]]:
     return 1, (firsts, sec[off:])
 
 
-def _extras_columns(tail: memoryview) -> list[tuple[str, str, memoryview, memoryview]]:
-    """Extras section -> [(name, etype, lens payload, values section)] in
-    section order; etype is "int64"/"float32"/"float64"/"string"/
-    "decimal(p,s)". Verifies the section crc and walks the grammar with
-    bounds, etype and decimal(p,s) checks; nothing is decompressed."""
+def _extras_columns(tail: memoryview) -> list[tuple[str, ExtraType, memoryview, memoryview]]:
+    """Extras section -> [(name, etypes row, lens payload, values section)]
+    in section order. Verifies the section crc and walks the grammar with
+    bounds and etype-header checks; nothing is decompressed."""
     if len(tail) == 0:
         return []
     if len(tail) < 5:
@@ -232,23 +236,19 @@ def _extras_columns(tail: memoryview) -> list[tuple[str, str, memoryview, memory
             name = bytes(body[off : off + nl]).decode("utf-8")
         except UnicodeDecodeError as e:
             raise HeaderInvalidError("extras column name not utf-8") from e
-        etype = body[off + nl]
-        off += nl + 1
-        if etype == ETYPE_DECIMAL:
-            if len(body) < off + 2:
-                raise TruncatedBlobError("extras decimal params truncated")
-            p_, s_ = body[off], body[off + 1]
-            off += 2
-            if not (1 <= p_ <= 18) or not (0 <= s_ <= p_):
-                raise HeaderInvalidError(f"extras[{name}]: invalid decimal({p_},{s_})")
-            ename = f"decimal({p_},{s_})"
-        elif etype in ETYPE_NAMES:
-            ename = ETYPE_NAMES[etype]
-        else:
-            raise HeaderInvalidError(f"extras[{name}]: unknown etype {etype}")
-        lbuf, off = _sized(body, off, "extras lengths")
+        off += nl
+        hl = blob_header_len(body[off])
+        if hl is None:
+            raise HeaderInvalidError(f"extras[{name}]: unknown etype {body[off]}")
+        if len(body) < off + hl:
+            raise TruncatedBlobError("extras etype params truncated")
+        try:
+            t = from_blob_header(bytes(body[off : off + hl]))
+        except ValueError as e:
+            raise HeaderInvalidError(f"extras[{name}]: invalid etype: {e}") from None
+        lbuf, off = _sized(body, off + hl, "extras lengths")
         vbuf, off = _sized(body, off, "extras values")
-        cols.append((name, ename, lbuf, vbuf))
+        cols.append((name, t, lbuf, vbuf))
     return cols
 
 
@@ -797,21 +797,6 @@ def _telescoped_rebase(
     return np.cumsum(d, dtype=dt)
 
 
-ETYPE_INT64 = 0
-ETYPE_FLOAT32 = 1
-ETYPE_FLOAT64 = 2
-ETYPE_STRING = 3
-ETYPE_DECIMAL = 4  # unscaled int64 + (precision, scale) header bytes
-ETYPE_IDS = {
-    "int64": ETYPE_INT64,
-    "float32": ETYPE_FLOAT32,
-    "float64": ETYPE_FLOAT64,
-    "string": ETYPE_STRING,
-}
-ETYPE_NAMES = {v: k for k, v in ETYPE_IDS.items()}
-_FLOAT_DTYPES = {ETYPE_FLOAT32: np.float32, ETYPE_FLOAT64: np.float64}
-
-
 def _encode_float_section(vals: np.ndarray) -> bytes:
     """Lossless lightweight float lane — never via decimal/rounding, so
     every bit pattern (incl. NaN payloads, -0.0, denormals) survives
@@ -852,8 +837,7 @@ def _encode_float_section(vals: np.ndarray) -> bytes:
     return best
 
 
-def _decode_float_section(buf: memoryview, n: int, etype: int) -> np.ndarray:
-    dtype = _FLOAT_DTYPES[etype]
+def _decode_float_section(buf: memoryview, n: int, dtype) -> np.ndarray:
     itemsize = np.dtype(dtype).itemsize
     if len(buf) < 1:
         raise HeaderInvalidError("float section mode byte missing")
@@ -883,6 +867,12 @@ def _decode_float_section(buf: memoryview, n: int, etype: int) -> np.ndarray:
     return out.view(dtype).ravel()
 
 
+def _exceeds_precision(t: ExtraType, vals: np.ndarray) -> bool:
+    """An unscaled decimal value outside the row's precision digits."""
+    lim = 10**t.precision
+    return bool(t.precision and len(vals) and ((vals >= lim) | (vals <= -lim)).any())
+
+
 def _encode_extras(
     extras: list[tuple[str, str, np.ndarray, np.ndarray]],
     fsst_cache: dict | None = None,
@@ -895,7 +885,7 @@ def _encode_extras(
       extra := crc32:u32 n_extra:u8 then per column:
                name_len:u8 name etype:u8 [precision:u8 scale:u8 if etype=4]
                lens_len:u32 lens-payload vals_len:u32 vals-section
-      etype/vals-section:
+      etype/vals-section (ids and lanes: the rows of etypes.extra_type):
         0 int64 array   -> int payload
         1 float32 array -> float section (raw-bits / byte-plane, lossless)
         2 float64 array -> float section
@@ -918,22 +908,16 @@ def _encode_extras(
         nb = name.encode()
         if len(nb) > 255:
             raise HeaderInvalidError(f"extra column name too long: {name!r}")
-        dp = decimal_params(etype_name)
-        etype = ETYPE_DECIMAL if dp is not None else ETYPE_IDS[etype_name]
+        t = extra_type(etype_name)
         pl, _ = core.encode_array(lens, codec="auto", depth=1)
-        if etype == ETYPE_INT64 or dp is not None:
-            if dp is not None and len(vals):
-                lim = 10 ** dp[0]
-                v64 = np.ascontiguousarray(vals, dtype=np.int64)
-                if ((v64 >= lim) | (v64 <= -lim)).any():
-                    # refuse to write a blob its own decoder would reject
-                    raise ValueOverflowError(
-                        f"extras[{name}]: unscaled value exceeds "
-                        f"decimal({dp[0]},{dp[1]}) precision"
-                    )
-            # decimal rides the int payload grammar on its unscaled int64s
+        if t.lane == "int":  # int64, or decimal(p,s) as its unscaled int64s
+            if _exceeds_precision(t, vals):
+                # refuse to write a blob its own decoder would reject
+                raise ValueOverflowError(
+                    f"extras[{name}]: unscaled value exceeds {t.name} precision"
+                )
             pv, _ = core.encode_array(vals, codec="auto")
-        elif etype in _FLOAT_DTYPES:
+        elif t.lane == "float":
             pv = _encode_float_section(vals)
         else:  # string: vals is the concatenated utf8 byte stream (uint8)
             cached = fsst_cache.get(name) if fsst_cache is not None else None
@@ -945,7 +929,7 @@ def _encode_extras(
             (
                 bytes([len(nb)]),
                 nb,
-                bytes([etype]) + (bytes(dp) if dp is not None else b""),
+                t.blob_header,
                 _U32.pack(len(pl)),
                 pl,
                 _U32.pack(len(pv)),
@@ -1054,7 +1038,7 @@ def _decode_extras(
 ) -> dict[str, tuple[str, np.ndarray, np.ndarray]]:
     n_rows = f.n_rows
     out: dict[str, tuple[str, np.ndarray, np.ndarray]] = {}
-    for name, etype, lbuf, vbuf in _extras_columns(f.tail):
+    for name, t, lbuf, vbuf in _extras_columns(f.tail):
         if names is not None and name not in names:
             continue  # projection: nothing decompressed for skipped columns
         lens = core.decode_array(lbuf)
@@ -1063,22 +1047,19 @@ def _decode_extras(
         if n_rows and (lens < 0).any():
             raise PayloadCorruptError(f"extras[{name}]: negative length")
         n_vals = int(lens.sum()) if n_rows else 0
-        if etype == "string":
+        if t.lane == "bytes":
             vals = np.frombuffer(_decode_doc_bytes(vbuf, n_vals), dtype=np.uint8)
-        elif etype in ("float32", "float64"):
-            vals = _decode_float_section(vbuf, n_vals, ETYPE_IDS[etype])
+        elif t.lane == "float":
+            vals = _decode_float_section(vbuf, n_vals, t.np_dtype)
         else:  # int64, or decimal(p,s) as its unscaled int64s
             vals = core.decode_array(vbuf)
-            dp = decimal_params(etype)
-            if dp is not None and len(vals):
-                lim = 10 ** dp[0]
-                if ((vals >= lim) | (vals <= -lim)).any():
-                    raise PayloadCorruptError(
-                        f"extras[{name}]: unscaled value exceeds {etype} precision"
-                    )
+            if _exceeds_precision(t, vals):
+                raise PayloadCorruptError(
+                    f"extras[{name}]: unscaled value exceeds {t.name} precision"
+                )
         if n_vals != len(vals):
             raise CountMismatchError(f"extras[{name}]: values count mismatch")
-        out[name] = (etype, lens, vals)
+        out[name] = (t.name, lens, vals)
     return out
 
 
@@ -1267,14 +1248,14 @@ def describe_chunk(blob_bytes: bytes | memoryview) -> dict:
     }
     if len(f.tail):
         out["extras"] = []
-        for name, etype, lbuf, vbuf in _extras_columns(f.tail):
+        for name, t, lbuf, vbuf in _extras_columns(f.tail):
             col = {
                 "name": name,
-                "etype": etype,
+                "etype": t.name,
                 "lens": core.describe_payload(lbuf),
                 "values_bytes": len(vbuf),
             }
-            if etype == "int64" or etype.startswith("decimal"):
+            if t.lane == "int":
                 col["values"] = core.describe_payload(vbuf)  # one int payload
             out["extras"].append(col)
     return out

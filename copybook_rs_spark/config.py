@@ -8,20 +8,9 @@ from __future__ import annotations
 
 import hashlib
 import json
-import re
 from dataclasses import dataclass, field
 
-_DECIMAL_RE = re.compile(r"^decimal\((\d{1,2}),(\d{1,2})\)$")
-
-
-def decimal_params(etype: str) -> "tuple[int, int] | None":
-    """(precision, scale) for a 'decimal(p,s)' extra-column type string,
-    None for every other type. Bounds are validated by EncodeConfig."""
-    m = _DECIMAL_RE.match(etype)
-    if m is None:
-        return None
-    return int(m.group(1)), int(m.group(2))
-
+from copybook_rs_spark.etypes import extra_type
 
 TOKEN_TABLE_FIELDS = (
     ("doc_id", "string"),
@@ -61,23 +50,19 @@ class EncodeConfig:
     max_salt: int = 1 << 21
     shuffle_partitions: int | None = None
     # schema knobs (the reference's type-authority analogue,
-    # crates/copybook-arrow/src/schema_convert.rs:87-147, incl. its float
-    # coverage FloatSingle/FloatDouble at crates/copybook-core/src/
-    # schema.rs:110-117): tokens may be int32 (default) or int64, and
-    # additional typed columns ride along in the same chunk (each with its
-    # own per-doc lengths). An extra_columns entry is "name" (int64 array,
-    # the historical default) or "name:type" with type in
-    # {int64, float32, float64, string}; float arrays round-trip BIT-exact
-    # (raw-bits lanes, never via decimal/rounding) and string columns go
-    # through the byte-stream codecs (FSST/alphabet-pack). The fingerprint
-    # covers the EFFECTIVE schema, so chunk tables written under different
-    # schemas can never be silently mixed.
+    # crates/copybook-arrow/src/schema_convert.rs:87-147): tokens may be
+    # int32 (default) or int64, and additional typed columns ride along in
+    # the same chunk (each with its own per-doc lengths). An extra_columns
+    # entry is "name" (int64 array, the historical default) or "name:type"
+    # with type one of int64, float32, float64, string or decimal(p,s),
+    # p <= 18 — the rows of etypes.extra_type, which holds every per-type
+    # fact. The fingerprint covers the EFFECTIVE schema, so chunk tables
+    # written under different schemas can never be silently mixed.
     token_dtype: str = "int32"
     extra_columns: tuple[str, ...] = ()
     fingerprint: str = ""
 
     _RESERVED = ("doc_id", "tokens", "n_tok", "source", "part_id", "blob")
-    _EXTRA_TYPES = ("int64", "float32", "float64", "string")
 
     def __post_init__(self):
         if self.token_dtype not in ("int32", "int64"):
@@ -86,28 +71,10 @@ class EncodeConfig:
         for name, etype in self.extra_specs():
             if not name:
                 raise ValueError("extra_columns: empty column name")
-            dp = decimal_params(etype)
-            if dp is not None:
-                # the reference's type authority maps zoned/packed decimals
-                # to Decimal128(p, s) with an int64+scale IR ("never via
-                # float") — crates/copybook-arrow/src/schema_convert.rs:129,
-                # crates/copybook-codec/src/numeric.rs:397 SmallDecimal. The
-                # engine stores the unscaled int64, so p is capped at 18.
-                p, s = dp
-                if not (1 <= p <= 18):
-                    raise ValueError(
-                        f"extra_columns: {name!r} precision {p} out of range "
-                        "(1..18 — unscaled values are int64)"
-                    )
-                if not (0 <= s <= p):
-                    raise ValueError(
-                        f"extra_columns: {name!r} scale {s} out of range (0..{p})"
-                    )
-            elif etype not in self._EXTRA_TYPES:
-                raise ValueError(
-                    f"extra_columns: unknown type {etype!r} for {name!r} "
-                    f"(expected one of {self._EXTRA_TYPES} or 'decimal(p,s)')"
-                )
+            try:
+                extra_type(etype)
+            except ValueError as e:
+                raise ValueError(f"extra_columns: {name!r}: {e}") from None
             if name in self._RESERVED:
                 raise ValueError(
                     f"extra_columns: {name!r} collides with a reserved "
@@ -129,7 +96,7 @@ class EncodeConfig:
             if sep and not etype:
                 raise ValueError(
                     f"extra_columns: {c!r} has an empty type after ':' "
-                    f"(use a bare name for int64, or one of {self._EXTRA_TYPES})"
+                    "(use a bare name for int64)"
                 )
             out.append((name, etype or "int64"))
         return tuple(out)
@@ -145,14 +112,5 @@ class EncodeConfig:
             ("n_tok", "int"),
             ("source", "string"),
         ]
-        sql_types = {
-            "int64": "array<bigint>",
-            "float32": "array<float>",
-            "float64": "array<double>",
-            "string": "string",
-        }
-        out.extend(
-            (n, t if decimal_params(t) is not None else sql_types[t])
-            for n, t in self.extra_specs()
-        )
+        out.extend((n, extra_type(t).sql) for n, t in self.extra_specs())
         return tuple(out)

@@ -15,19 +15,13 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import ArrayType, StructField, StructType
 
 from dataclasses import dataclass
 
 from copybook_rs_spark import blob
-from copybook_rs_spark.config import decimal_params
+from copybook_rs_spark.etypes import _list_to_arrow, _string_to_arrow, extra_type
 from copybook_rs_spark.errors import (
     EngineError,
     ErrorBudgetExceededError,
@@ -59,77 +53,28 @@ _COALESCE_ROWS = 16384
 _COALESCE_BYTES = 16 << 20
 
 
+def _spark_type(at: pa.DataType):
+    """Spark type of an Arrow column type; the engine's arrays never hold
+    nulls, so an Arrow list maps to array<T> with containsNull=False."""
+    t = from_arrow_type(at)
+    return ArrayType(t.elementType, False) if isinstance(t, ArrayType) else t
+
+
 def _build_schemas(cfg, cols: tuple[str, ...]):
     """(arrow schema, spark schema) for the requested columns under the
     config's token dtype + typed extra columns."""
-    from pyspark.sql.types import DecimalType, DoubleType, FloatType
-
     tok64 = cfg is not None and cfg.token_dtype == "int64"
-    specs = dict(cfg.extra_specs()) if cfg is not None else {}
-    extra_sp = {
-        "int64": ArrayType(LongType(), False),
-        "float32": ArrayType(FloatType(), False),
-        "float64": ArrayType(DoubleType(), False),
-        "string": StringType(),
+    types = {
+        "doc_id": pa.string(),
+        "tokens": pa.list_(pa.int64() if tok64 else pa.int32()),
+        "n_tok": pa.int32(),
+        "source": pa.string(),
     }
-
-    def _sp_type(et):
-        dp = decimal_params(et)
-        return DecimalType(*dp) if dp is not None else extra_sp[et]
-    pa_fields, sp_fields = [], []
-    for c in cols:
-        if c == "doc_id" or c == "source":
-            pa_fields.append((c, pa.string()))
-            sp_fields.append(StructField(c, StringType(), False))
-        elif c == "tokens":
-            t = pa.int64() if tok64 else pa.int32()
-            pa_fields.append((c, pa.list_(t)))
-            sp_fields.append(
-                StructField(
-                    c,
-                    ArrayType(LongType() if tok64 else IntegerType(), False),
-                    False,
-                )
-            )
-        elif c == "n_tok":
-            pa_fields.append((c, pa.int32()))
-            sp_fields.append(StructField(c, IntegerType(), False))
-        else:  # typed extra column
-            et = specs.get(c, "int64")
-            pa_fields.append((c, _extra_pa_type(et)))
-            sp_fields.append(StructField(c, _sp_type(et), False))
-    return pa.schema(pa_fields), StructType(sp_fields)
-
-
-_EXTRA_PA_TYPES = {
-    "int64": pa.list_(pa.int64()),
-    "float32": pa.list_(pa.float32()),
-    "float64": pa.list_(pa.float64()),
-    "string": pa.string(),
-}
-
-
-def _extra_pa_type(etype: str) -> pa.DataType:
-    dp = decimal_params(etype)
-    return pa.decimal128(*dp) if dp is not None else _EXTRA_PA_TYPES[etype]
-
-
-def _offsets32(lens: np.ndarray, n: int, what: str) -> np.ndarray:
-    """int32 Arrow offsets from per-row lengths, with an overflow guard:
-    a chunk whose column totals >= 2^31 elements/bytes would silently wrap
-    the int32 offsets and emit a corrupt array — invariant 3 demands a
-    typed error instead (chunk cuts keep whole documents, so one oversized
-    document can legally exceed the weight budget)."""
-    total = int(lens.sum()) if n else 0  # numpy promotes to int64
-    if total >= 1 << 31:
-        raise EngineError(
-            f"{what} totals {total} elements in one chunk — exceeds the "
-            "2^31 Arrow int32 offset limit",
-            code="CBSP203",
-        )
-    off = np.zeros(n + 1, dtype=np.int32)
-    np.cumsum(lens, out=off[1:])
-    return off
+    if cfg is not None:
+        types.update((n, extra_type(t).arrow) for n, t in cfg.extra_specs())
+    return pa.schema([(c, types[c]) for c in cols]), StructType(
+        [StructField(c, _spark_type(types[c]), False) for c in cols]
+    )
 
 
 def _decode_one(
@@ -161,69 +106,20 @@ def _decode_one(
                     f"blob carries no extra column {col!r}", code="CBSP203"
                 )
             etype, el, ev = extras[col]
+            t = extra_type(etype)
             # the blob self-describes its element type; decoding under a
             # config that declares a DIFFERENT type for this column is a
             # caller error that must surface as a typed mismatch, not a raw
             # pyarrow ArrowInvalid from from_arrays
-            if not out_schema.field(col).type.equals(_extra_pa_type(etype)):
+            if not out_schema.field(col).type.equals(t.arrow):
                 raise EngineError(
                     f"extra column {col!r} is {etype!r} in the blob but the "
                     f"decode config declares {out_schema.field(col).type}",
                     code="CBSP203",
                 )
-            dp = decimal_params(etype)
-            if dp is not None:
-                # scalar decimal: exactly one unscaled int64 per row, laid
-                # out as 16-byte little-endian two's complement for Arrow
-                if n and not (el == 1).all():
-                    raise EngineError(
-                        f"extra column {col!r}: decimal rows must have "
-                        "exactly one value",
-                        code="CBSP203",
-                    )
-                v = np.ascontiguousarray(ev, dtype=np.int64)
-                raw = np.empty((len(v), 2), dtype="<i8")
-                raw[:, 0] = v
-                raw[:, 1] = v >> 63  # sign extension
-                arrays.append(
-                    pa.Array.from_buffers(
-                        pa.decimal128(*dp),
-                        len(v),
-                        [None, pa.py_buffer(raw.tobytes())],
-                    )
-                )
-                continue
-            ex_off = _offsets32(el, n, f"extra column {col!r}")
-            if etype == "string":
-                arrays.append(
-                    pa.StringArray.from_buffers(
-                        n,
-                        pa.py_buffer(ex_off.tobytes()),
-                        pa.py_buffer(np.ascontiguousarray(ev, dtype=np.uint8).tobytes()),
-                    )
-                )
-            else:
-                pa_t = {
-                    "int64": pa.int64(),
-                    "float32": pa.float32(),
-                    "float64": pa.float64(),
-                }[etype]
-                arrays.append(
-                    pa.ListArray.from_arrays(
-                        pa.array(ex_off),
-                        pa.array(np.ascontiguousarray(ev), type=pa_t),
-                    )
-                )
+            arrays.append(t.to_arrow(el, ev, n, f"extra column {col!r}"))
         elif col == "doc_id":
-            # StringArray straight from (offsets, bytes) — no per-row Python
-            doc_offsets = _offsets32(doc_lens, n, "doc_id bytes")
-            arrays.append(
-                pa.StringArray.from_buffers(
-                    n,
-                    pa.py_buffer(doc_offsets.tobytes()),
-                    pa.py_buffer(doc_bytes),
-                )
-            )
+            arrays.append(_string_to_arrow(doc_lens, doc_bytes, n, "doc_id bytes"))
         elif col == "tokens":
             if tok64:
                 vals_out = values if values.dtype == np.int64 else values.astype(np.int64)
@@ -238,13 +134,7 @@ def _decode_one(
                     raise ValueOverflowError("decoded token outside int32 range")
                 vals_out = values.astype(np.int32)
                 out_t = pa.int32()
-            tok_offsets = _offsets32(lengths, n, "token values")
-            arrays.append(
-                pa.ListArray.from_arrays(
-                    pa.array(tok_offsets),
-                    pa.array(vals_out, type=out_t),
-                )
-            )
+            arrays.append(_list_to_arrow(out_t, lengths, vals_out, n, "token values"))
         elif col == "n_tok":
             arrays.append(pa.array(lengths.astype(np.int32), type=pa.int32()))
         else:  # source: constant string — build from buffers (tiled bytes),

@@ -34,12 +34,10 @@ from pyspark.sql.types import (
 )
 
 from copybook_rs_spark import blob
-from copybook_rs_spark.config import EncodeConfig, decimal_params
-from copybook_rs_spark.errors import (
-    CodecError,
-    PipelineContractError,
-    ValueOverflowError,
-)
+from copybook_rs_spark.config import EncodeConfig
+from copybook_rs_spark.errors import PipelineContractError
+from copybook_rs_spark.etypes import _list_parts, _string_parts, extra_type
+from copybook_rs_spark.operators.decode import _spark_type
 from copybook_rs_spark.plans.partition import (
     plan_salts,
     repartition_for_encode,
@@ -93,109 +91,6 @@ _CHUNK_PA_SCHEMA = pa.schema(
 )
 
 
-def _string_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(byte_lengths int64, raw bytes uint8) of a utf8 array, zero-copy."""
-    if arr.null_count:
-        raise CodecError("doc_id/source must be non-null")
-    if pa.types.is_large_string(arr.type):
-        odt = np.int64
-    else:
-        odt = np.int32
-    bufs = arr.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
-    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.empty(0, np.uint8)
-    lens = np.diff(offsets).astype(np.int64)
-    raw = data[offsets[0] : offsets[-1]]
-    return lens, raw
-
-
-def _list_parts(arr: pa.Array, dtype=np.int64) -> tuple[np.ndarray, np.ndarray]:
-    """(per-row lengths int64, flattened values as `dtype`) of a list array."""
-    if arr.null_count:
-        raise CodecError("tokens must be non-null")
-    if pa.types.is_large_list(arr.type):
-        odt = np.int64
-    else:
-        odt = np.int32
-    bufs = arr.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1]
-    child = arr.values  # whole child array; index with absolute offsets
-    child_np = child.to_numpy(zero_copy_only=False)
-    vals = np.ascontiguousarray(
-        child_np[offsets[0] : offsets[-1]], dtype=dtype
-    )
-    lens = np.diff(offsets).astype(np.int64)
-    return lens, vals
-
-
-_EXTRA_NP_DTYPES = {
-    "int64": np.int64,
-    "float32": np.float32,
-    "float64": np.float64,
-    "string": np.uint8,  # concatenated utf8 byte stream
-}
-
-
-def _extra_np_dtype(etype: str):
-    """Kernel-side numpy dtype of an extra column's flat value stream;
-    decimals travel as unscaled int64 (never via float)."""
-    if decimal_params(etype) is not None:
-        return np.int64
-    return _EXTRA_NP_DTYPES[etype]
-
-
-def _extra_raw_width(etype: str) -> int:
-    """Native per-element width the blob replaces (raw_bytes accounting):
-    Decimal128 is 16 bytes in Arrow/Spark; strings count their utf8 bytes."""
-    if decimal_params(etype) is not None:
-        return 16
-    return np.dtype(_EXTRA_NP_DTYPES[etype]).itemsize
-
-
-def _decimal_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(all-ones lengths, unscaled int64 values) of a decimal128 array.
-    Arrow stores each value as a 16-byte little-endian two's-complement
-    int; precision <= 18 guarantees the value fits int64, so the high word
-    must be the sign extension of the low word — anything else is data
-    outside the declared precision."""
-    if arr.null_count:
-        raise CodecError("decimal extras must be non-null")
-    n = len(arr)
-    bufs = arr.buffers()
-    raw = np.frombuffer(bufs[1], dtype=np.int64).reshape(-1, 2)[
-        arr.offset : arr.offset + n
-    ]
-    lo, hi = raw[:, 0], raw[:, 1]
-    if n and (hi != (lo >> 63)).any():
-        raise ValueOverflowError(
-            "decimal value outside int64 unscaled range (precision > 18?)"
-        )
-    return np.ones(n, dtype=np.int64), np.ascontiguousarray(lo)
-
-
-def _extra_parts(batch: pa.RecordBatch, name: str, etype: str):
-    """(per-row lengths, flat value stream) for one extra column. Array
-    types come from list offsets; strings come from the utf8 buffers (lens
-    are per-row BYTE lengths); scalar decimals are one unscaled int64 per
-    row (lens all 1)."""
-    col = batch.column(name)
-    if etype == "string":
-        return _string_parts(col)
-    if decimal_params(etype) is not None:
-        return _decimal_parts(col)
-    return _list_parts(col, _EXTRA_NP_DTYPES[etype])
-
-
-def _extra_weight(etype: str, lens: np.ndarray) -> np.ndarray:
-    """Per-doc contribution of an extra column to the chunk value budget:
-    one unit per array element; string bytes count at 4 bytes/unit (the
-    token-value equivalence), so a chunk's memory footprint stays bounded
-    by ~4*chunk_values regardless of how wide the extras are."""
-    if etype == "string":
-        return (lens + 3) // 4
-    return lens
-
-
 def chunk_row(
     cfg: EncodeConfig,
     source: str,
@@ -222,7 +117,7 @@ def chunk_row(
     tok_w = 8 if cfg.token_dtype == "int64" else 4
     raw = tok_w * len(vals)
     for _n, t, _el, ev in extras:
-        raw += _extra_raw_width(t) * len(ev)
+        raw += extra_type(t).raw_width * len(ev)
     return {
         "chunk_id": (
             f"{source}/{part_id:05d}/{seq:06d}" if chunk_id is None else chunk_id
@@ -277,9 +172,7 @@ class _GroupBuffer:
         # is processed by exactly one task in deterministic doc_id order);
         # ex_fsst is the same contract per string-typed extra column
         self.doc_fsst: list | None = None
-        self.ex_fsst: dict[str, list | None] = {
-            n: None for n, t in extra_specs if t == "string"
-        }
+        self.ex_fsst: dict[str, list | None] = {}
         self.extra_specs = extra_specs
         self.doc_bytes: list[np.ndarray] = []
         self.doc_lens: list[np.ndarray] = []
@@ -305,7 +198,7 @@ class _GroupBuffer:
         for (name, etype), (el, ev) in zip(self.extra_specs, extras):
             self.ex_lens[name].append(el)
             self.ex_vals[name].append(ev)
-            w += int(_extra_weight(etype, el).sum()) if len(el) else 0
+            w += int(extra_type(etype).weight(el).sum()) if len(el) else 0
         self.pending_values += w
 
     @staticmethod
@@ -326,7 +219,7 @@ class _GroupBuffer:
         ex = {
             n: (
                 self._cat(self.ex_lens[n]),
-                self._cat(self.ex_vals[n], _extra_np_dtype(t)),
+                self._cat(self.ex_vals[n], extra_type(t).np_dtype),
             )
             for n, t in self.extra_specs
         }
@@ -343,7 +236,7 @@ class _GroupBuffer:
             np.cumsum(el, out=ce[1:])
             cum_ex[n] = ce
             if len(el):
-                weight += _extra_weight(t, el)
+                weight += extra_type(t).weight(el)
         cum_w = np.zeros(n_docs + 1, dtype=np.int64)
         np.cumsum(weight, out=cum_w[1:])
         rows: list[dict] = []
@@ -438,7 +331,8 @@ def make_encode_kernel(cfg: EncodeConfig, verify_grouping: bool = False):
             dl_all, db_all = _string_parts(batch.column("doc_id"))
             tl_all, tv_all = _list_parts(batch.column("tokens"))
             ex_all = [
-                _extra_parts(batch, name, etype) for name, etype in extra_specs
+                extra_type(etype).parts(batch.column(name))
+                for name, etype in extra_specs
             ]
             cum_v = np.zeros(n + 1, dtype=np.int64)
             np.cumsum(tl_all, out=cum_v[1:])
@@ -568,6 +462,22 @@ def prepare_grouped(
     )
 
 
+def check_extra_types(df: DataFrame, cfg: EncodeConfig, op: str) -> None:
+    """Driver-side gate: each extra column must arrive with exactly the
+    Spark type its extra_columns row declares (nullability aside) — the
+    kernels read the Arrow buffers as that type, so a decimal(12,4)
+    column under decimal(12,2) would decode 1.2345 as 123.45."""
+    have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    for name, etype in cfg.extra_specs():
+        want = _spark_type(extra_type(etype).arrow).simpleString()
+        if have.get(name) != want:
+            raise PipelineContractError(
+                f"{op}: extra column {name!r} is {have.get(name, 'missing')} "
+                f"but extra_columns declares {etype!r} ({want}) — cast it "
+                f"first: F.col({name!r}).cast({want!r})"
+            )
+
+
 def encode_tokens(
     df: DataFrame,
     cfg: EncodeConfig | None = None,
@@ -589,6 +499,7 @@ def encode_tokens(
     exchange path because chunks are a pure function of group content.
     """
     cfg = cfg or EncodeConfig()
+    check_extra_types(df, cfg, "encode_tokens")
     if pregrouped:
         if "part_id" not in df.columns:
             raise PipelineContractError(

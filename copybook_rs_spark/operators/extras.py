@@ -41,24 +41,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from copybook_rs_spark import blob
-from copybook_rs_spark.config import EncodeConfig, decimal_params
+from copybook_rs_spark.config import EncodeConfig
 from copybook_rs_spark.errors import CountMismatchError, PipelineContractError
-from copybook_rs_spark.operators.decode import _offsets32
-from copybook_rs_spark.operators.encode import (
-    _CHUNK_PA_SCHEMA,
-    _EXTRA_NP_DTYPES,
-    _decimal_parts,
-    _extra_raw_width,
-    _string_parts,
-    CHUNK_SCHEMA,
-)
-
-_SPARK_VALUE_TYPES = {
-    "int64": "long",
-    "float32": "float",
-    "float64": "double",
-    "string": "string",
-}
+from copybook_rs_spark.etypes import _string_to_arrow, extra_type
+from copybook_rs_spark.operators.decode import _spark_type
+from copybook_rs_spark.operators.encode import _CHUNK_PA_SCHEMA, CHUNK_SCHEMA
 
 
 def widen_config(cfg: EncodeConfig, colspec: str) -> EncodeConfig:
@@ -87,35 +74,14 @@ def _doc_map_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
                 memoryview(blobs[i].as_buffer()), need_values=False
             )
             n = len(doc_l)
-            offs = _offsets32(doc_l, n, "doc_id bytes")
-            doc_arr = pa.StringArray.from_buffers(
-                n, pa.py_buffer(offs.tobytes()), pa.py_buffer(doc_b)
-            )
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.repeat(cids[i], n),
-                    doc_arr,
+                    _string_to_arrow(doc_l, doc_b, n, "doc_id bytes"),
                     pa.array(np.arange(n, dtype=np.int32)),
                 ],
                 schema=schema,
             )
-
-
-def _column_arrays(etype: str, structs: pa.Array):
-    """One chunk's sorted (ord, value) StructArray -> (lens, vals) numpy
-    arrays in the blob extras convention for `etype`."""
-    vals = structs.field("value")
-    if vals.null_count:
-        raise PipelineContractError(
-            "append_extra_column: null value after cast — the values table "
-            "must cover every doc_id with a castable value"
-        )
-    if etype == "string":
-        return _string_parts(vals)
-    lens = np.ones(len(vals), dtype=np.int64)
-    if decimal_params(etype) is not None:
-        return lens, _decimal_parts(vals)[1]
-    return lens, vals.to_numpy(zero_copy_only=False).astype(_EXTRA_NP_DTYPES[etype])
 
 
 def make_append_kernel(name: str, etype: str, base_fp: str, widened_fp: str):
@@ -124,6 +90,7 @@ def make_append_kernel(name: str, etype: str, base_fp: str, widened_fp: str):
     whose schema_fp is the widened config's fingerprint."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        t = extra_type(etype)
         for b in batches:
             cols = {c: b.column(c) for c in b.schema.names}
             rows = []
@@ -156,14 +123,19 @@ def make_append_kernel(name: str, etype: str, base_fp: str, widened_fp: str):
                         f"for {n_rows} docs in chunk {cid!r} — the values "
                         "table has duplicate doc_ids"
                     )
-                lens, vals = _column_arrays(etype, pl)
+                # one value per doc, in doc order; array types hold it
+                # as a one-element list
+                vals = pl.field("value")
+                if not t.scalar:
+                    offs = pa.array(np.arange(n_rows + 1, dtype=np.int32))
+                    vals = pa.ListArray.from_arrays(offs, vals)
+                lens, ev = t.parts(vals)
                 new_blob = blob.append_extras(
-                    cols["blob"][i].as_py(), [(name, etype, lens, vals)]
+                    cols["blob"][i].as_py(), [(name, etype, lens, ev)]
                 )
                 rows.append(
                     _rebuilt_row(
-                        cols, i, new_blob,
-                        _extra_raw_width(etype) * len(vals), widened_fp,
+                        cols, i, new_blob, t.raw_width * len(ev), widened_fp
                     )
                 )
             if rows:
@@ -237,7 +209,7 @@ def drop_extra_column(
     with a cross-chunk FSST cache (see blob.drop_extras) — then the
     restored table is decode-equal with per-chunk-trained tails."""
     narrowed = narrow_config(cfg, name)
-    etype = dict(cfg.extra_specs())[name]
+    width = extra_type(dict(cfg.extra_specs())[name]).raw_width
     base_fp, narrow_fp = cfg.fingerprint, narrowed.fingerprint
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in CHUNK_SCHEMA.fields
@@ -258,10 +230,7 @@ def drop_extra_column(
                 )
                 n_elems = len(dropped[name][2])
                 rows.append(
-                    _rebuilt_row(
-                        cols, i, new_blob,
-                        -(_extra_raw_width(etype) * n_elems), narrow_fp,
-                    )
+                    _rebuilt_row(cols, i, new_blob, -width * n_elems, narrow_fp)
                 )
             if rows:
                 yield pa.RecordBatch.from_pylist(rows, schema=_CHUNK_PA_SCHEMA)
@@ -294,8 +263,8 @@ def append_extra_column(
     cfg = cfg or EncodeConfig()
     widened = widen_config(cfg, colspec)  # validates the colspec too
     ((name, etype),) = widened.extra_specs()[len(cfg.extra_specs()):]
-    dp = decimal_params(etype)
-    sql_t = f"decimal({dp[0]},{dp[1]})" if dp else _SPARK_VALUE_TYPES[etype]
+    t = extra_type(etype)
+    sql_t = _spark_type(t.arrow if t.scalar else t.arrow.value_type).simpleString()
     # try_cast, not cast: under ANSI (Spark 4 default) a malformed value
     # would abort the stage with a raw NumberFormatException mid-job;
     # try_cast nulls it instead and the per-chunk counter below turns it

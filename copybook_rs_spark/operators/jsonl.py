@@ -12,64 +12,31 @@ struct field order is fixed, so the JSON bytes are stable for a given row
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from copybook_rs_spark.config import EncodeConfig
+from copybook_rs_spark.operators.decode import _build_schemas
 
 ENVELOPE_SCHEMA_NAME = "cbsp.v1"
-
-_TYPE_MAP = {
-    "string": StringType(),
-    "int": IntegerType(),
-    "array<int>": ArrayType(IntegerType(), False),
-    "array<bigint>": ArrayType(LongType(), False),
-    # round-3 float lanes (review finding: these were missing, so the JSONL
-    # envelope crashed with a raw KeyError for float extra columns)
-    "array<float>": ArrayType(FloatType(), False),
-    "array<double>": ArrayType(DoubleType(), False),
-}
 
 
 def _payload_fields(cfg: EncodeConfig) -> list[str]:
     # fixed emission order: canonical fields first (doc_id, n_tok, source,
     # tokens — the round-1 envelope layout, kept stable), then extras
-    extras = [c for c, _ in cfg.fields() if c not in
-              ("doc_id", "tokens", "n_tok", "source")]
-    return ["doc_id", "n_tok", "source", "tokens"] + extras
-
-
-def _field_type(t: str):
-    from pyspark.sql.types import DecimalType
-
-    from copybook_rs_spark.config import decimal_params
-
-    dp = decimal_params(t)
-    if dp is not None:
-        # JSON numbers parse exactly into DecimalType (Spark's JSON reader
-        # keeps the literal digits) — no float detour
-        return DecimalType(*dp)
-    return _TYPE_MAP[t]
+    return ["doc_id", "n_tok", "source", "tokens", *cfg.extra_names()]
 
 
 def _envelope_struct(cfg: EncodeConfig) -> StructType:
-    types = dict(cfg.fields())
-    fields = [
-        StructField("schema", StringType(), False),
-        StructField("schema_fingerprint", StringType(), False),
-    ]
-    fields.extend(
-        StructField(c, _field_type(types[c]), False) for c in _payload_fields(cfg)
+    # payload types are the decode output's (etypes rows; decimals parse
+    # exactly from JSON numbers into DecimalType — no float detour)
+    payload = _build_schemas(cfg, tuple(_payload_fields(cfg)))[1]
+    return StructType(
+        [
+            StructField("schema", StringType(), False),
+            StructField("schema_fingerprint", StringType(), False),
+            *payload.fields,
+        ]
     )
-    return StructType(fields)
 
 
 def to_jsonl(df: DataFrame, cfg: EncodeConfig | None = None) -> DataFrame:

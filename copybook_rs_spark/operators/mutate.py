@@ -57,16 +57,18 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, Window, functions as F
 
 from copybook_rs_spark import blob
-from copybook_rs_spark.config import EncodeConfig, decimal_params
+from copybook_rs_spark.config import EncodeConfig
 from copybook_rs_spark.errors import PipelineContractError
-from copybook_rs_spark.operators.decode import _offsets32
-from copybook_rs_spark.operators.encode import (
-    _CHUNK_PA_SCHEMA,
-    _EXTRA_NP_DTYPES,
-    _decimal_parts,
+from copybook_rs_spark.etypes import (
     _list_parts,
     _string_parts,
+    _string_to_arrow,
+    extra_type,
+)
+from copybook_rs_spark.operators.encode import (
+    _CHUNK_PA_SCHEMA,
     CHUNK_SCHEMA,
+    check_extra_types,
     chunk_row,
     encode_tokens,
 )
@@ -92,14 +94,6 @@ def _passthrough(cols, i) -> dict:
     return {f.name: cols[f.name][i].as_py() for f in _CHUNK_PA_SCHEMA}
 
 
-def _doc_id_array(doc_b: bytes, doc_l: np.ndarray) -> pa.StringArray:
-    """Decoded doc-id section -> Arrow string array (no per-doc Python)."""
-    offs = _offsets32(doc_l, len(doc_l), "doc_id bytes")
-    return pa.StringArray.from_buffers(
-        len(doc_l), pa.py_buffer(offs.tobytes()), pa.py_buffer(doc_b)
-    )
-
-
 def _ragged_mask(keep: np.ndarray, lens: np.ndarray, flat: np.ndarray):
     """Per-doc keep mask applied to a flat stream segmented by lens."""
     return flat[np.repeat(keep, lens)]
@@ -120,16 +114,6 @@ def _permute_ragged(
         offs[-1], dtype=np.int64
     )
     return lens_p, flat_all[idx]
-
-
-def _struct_field_parts(field: pa.Array, etype: str):
-    """(lens, flat values) of one extras field from the collected insert
-    structs — the struct-side mirror of encode._extra_parts."""
-    if etype == "string":
-        return _string_parts(field)
-    if decimal_params(etype) is not None:
-        return _decimal_parts(field)
-    return _list_parts(field, _EXTRA_NP_DTYPES[etype])
 
 
 def _too_many(op: str, cid: str, n: int, what: str) -> None:
@@ -175,9 +159,8 @@ def _make_mutation_kernel(cfg: EncodeConfig, op: str):
                 keep = None
                 if del_valid:
                     _too_many(op, cid, len(dels.values), "delete keys")
-                    hit = pc.is_in(
-                        _doc_id_array(doc_b, doc_l), value_set=dels.values
-                    )
+                    ids = _string_to_arrow(doc_l, doc_b, len(doc_l), "doc_id bytes")
+                    hit = pc.is_in(ids, value_set=dels.values)
                     k = ~np.asarray(hit)
                     if not k.all():
                         keep = k
@@ -220,7 +203,7 @@ def _make_mutation_kernel(cfg: EncodeConfig, op: str):
                             "duplicate ids is content-tiebroken by the "
                             "encode path; pass one row per doc_id"
                         )
-                    old_ids = _doc_id_array(doc_b, doc_l)
+                    old_ids = _string_to_arrow(doc_l, doc_b, len(doc_l), "doc_id bytes")
                     clash = pc.any(
                         pc.is_in(new_ids, value_set=old_ids)
                     ).as_py()
@@ -255,9 +238,7 @@ def _make_mutation_kernel(cfg: EncodeConfig, op: str):
                     )
                     merged = []
                     for name, etype, el, ev in extras:
-                        nel, nev = _struct_field_parts(
-                            structs.field(name), etype
-                        )
+                        nel, nev = extra_type(etype).parts(structs.field(name))
                         mel, mev = _permute_ragged(
                             np.concatenate([el, nel]),
                             np.concatenate(
@@ -469,7 +450,9 @@ def upsert_docs(
     and the new rows merged in the SAME per-chunk rewrite (fused — no
     intermediate table, each affected blob decodes and re-encodes once).
     Ids not present simply insert."""
+    cfg = cfg or EncodeConfig()
+    check_extra_types(new_df, cfg, "upsert_docs")  # before any job runs
     return _apply_mutation(
-        chunk_df, new_df.select("source", "doc_id"), new_df,
-        cfg or EncodeConfig(), salts, "upsert_docs",
+        chunk_df, new_df.select("source", "doc_id"), new_df, cfg, salts,
+        "upsert_docs",
     )

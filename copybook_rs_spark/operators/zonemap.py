@@ -65,10 +65,10 @@ from pyspark.sql.types import (
 )
 
 from copybook_rs_spark import blob as blob_mod
-from copybook_rs_spark.config import decimal_params
 import zlib
 
 from copybook_rs_spark.errors import PipelineContractError
+from copybook_rs_spark.etypes import extra_type
 from copybook_rs_spark.operators.lookup import split_candidates
 
 INDEX_SCHEMA = StructType(
@@ -77,9 +77,10 @@ INDEX_SCHEMA = StructType(
         StructField("blob_crc", LongType(), False),
         StructField("column", StringType(), False),
         StructField("etype", StringType(), False),
-        # exact typed bounds: int64/decimal(unscaled) use the _int pair,
-        # float32/float64 the _flt pair (float64 cannot represent every
-        # int64 — a rounded bound could wrongly EXCLUDE a chunk)
+        # exact typed bounds by the column's etypes lane: "int" (int64,
+        # unscaled decimal) uses the _int pair, "float" the _flt pair
+        # (float64 cannot represent every int64 — a rounded bound could
+        # wrongly EXCLUDE a chunk)
         StructField("vmin_int", LongType(), True),
         StructField("vmax_int", LongType(), True),
         StructField("vmin_flt", DoubleType(), True),
@@ -133,6 +134,14 @@ def certify_blob_crc(chunk_id, stored, mv) -> int:
     return actual
 
 
+def _check_numeric(column: str, etype: str) -> None:
+    if extra_type(etype).lane == "bytes":
+        raise PipelineContractError(
+            f"extras[{column}] is a {etype} column — zone maps index "
+            "numeric extras only"
+        )
+
+
 def _make_index_kernel(cols: tuple[str, ...]):
     want = set(cols)
 
@@ -159,17 +168,13 @@ def _make_index_kernel(cols: tuple[str, ...]):
                     )
                 for c in cols:
                     etype, _lens, vals = ex[c]
-                    if etype == "string":
-                        raise PipelineContractError(
-                            f"extras[{c}] is a string column — zone maps "
-                            "index numeric extras only"
-                        )
+                    _check_numeric(c, etype)
                     n_vals = int(len(vals))
                     vmin_i = vmax_i = None
                     vmin_f = vmax_f = None
                     has_nan = False
                     if n_vals:
-                        if vals.dtype.kind == "f":
+                        if extra_type(etype).lane == "float":
                             has_nan = bool(np.isnan(vals).any())
                             if not (has_nan and np.isnan(vals).all()):
                                 vmin_f = float(np.nanmin(vals))
@@ -216,11 +221,7 @@ def build_extras_index(
                     f"extras[{c}] is not declared in the config "
                     f"(extra columns: {sorted(specs)})"
                 )
-            if specs[c] == "string":
-                raise PipelineContractError(
-                    f"extras[{c}] is a string column — zone maps index "
-                    "numeric extras only"
-                )
+            _check_numeric(c, specs[c])
     src = chunk_df.select("chunk_id", "blob_crc", "blob")
     return src.mapInArrow(_make_index_kernel(cols), INDEX_SCHEMA)
 
@@ -283,13 +284,12 @@ def filter_chunks_by_extras(
             f"extras[{column}]: declared etype {etype!r} does not match "
             f"the index's {ets[0]!r} — wrong cfg for this table?"
         )
-    etype = ets[0]
-    dp = decimal_params(etype)
-    if etype == "int64" or dp is not None:
-        lo_b, hi_b = _int_bounds(lo, hi, dp[1] if dp is not None else 0)
+    t = extra_type(ets[0])
+    if t.lane == "int":
+        lo_b, hi_b = _int_bounds(lo, hi, t.scale)
         vmin, vmax = F.col("vmin_int"), F.col("vmax_int")
         nan_keeps = F.lit(False)
-    elif etype in ("float32", "float64"):
+    elif t.lane == "float":
         lo_b = None if lo is None else float(lo)
         hi_b = None if hi is None else float(hi)
         vmin, vmax = F.col("vmin_flt"), F.col("vmax_flt")
@@ -298,7 +298,7 @@ def filter_chunks_by_extras(
         nan_keeps = F.col("has_nan") & F.lit(hi is None)
     else:
         raise PipelineContractError(
-            f"extras[{column}] etype {etype!r} is not range-filterable"
+            f"extras[{column}] etype {t.name!r} is not range-filterable"
         )
     overlap = F.lit(True)
     if lo_b is not None:
@@ -370,7 +370,7 @@ def decode_where(
         None if columns is None else list(dict.fromkeys([*columns, column]))
     )
     dec = decode_tokens(pruned, columns=dec_cols, cfg=cfg)
-    if decimal_params(etype) is not None:
+    if extra_type(etype).scalar:
         c = F.col(column)
         cond = F.lit(True)
         if lo is not None:

@@ -398,19 +398,19 @@ def test_float_section_roundtrip_property(bits, wide):
     # wide lane; the narrow lane masks to its 32-bit space.
     if wide:
         vals = np.array(bits, dtype=np.uint64).view(np.float64)
-        etype = blob.ETYPE_FLOAT64
+        dtype = np.float64
     else:
         vals = np.array(
             [b & 0xFFFFFFFF for b in bits], dtype=np.uint32
         ).view(np.float32)
-        etype = blob.ETYPE_FLOAT32
+        dtype = np.float32
     enc = blob._encode_float_section(vals)
-    dec = blob._decode_float_section(memoryview(enc), len(vals), etype)
+    dec = blob._decode_float_section(memoryview(enc), len(vals), dtype)
     assert dec.tobytes() == vals.tobytes()
     # truncation never yields wrong data
     for cut in (0, 1, len(enc) // 2):
         try:
-            out = blob._decode_float_section(memoryview(enc[:cut]), len(vals), etype)
+            out = blob._decode_float_section(memoryview(enc[:cut]), len(vals), dtype)
             assert out.tobytes() == vals.tobytes()
         except EngineError as e:
             assert str(e).startswith("CBSP")

@@ -193,3 +193,63 @@ def test_reachability_scan_on_planted_tree():
     # reached through a reached def (_helper, LIMIT): not reported; named
     # only by a test, or only re-exported by __init__: reported
     assert unreached == ["ops.py:only_tests", "ops.py:reexported"]
+
+
+# The extra-column type table is the one place that knows a type: no
+# other package module may use the decimal parser or a blob etype id, or
+# compare a value against a type name (token_dtype's "int64" aside).
+TYPE_TABLE = "copybook_rs_spark/etypes.py"
+TYPE_TABLE_NAMES = {"decimal_params", "_DECIMAL_RE", "_DECIMAL_ID"}
+TYPE_NAMES = {"int64", "float32", "float64", "string"}
+
+
+def _type_facts(tree):
+    """Every per-type fact a module holds of its own: a use of a name only
+    the type table may hold, or a comparison against a type-name literal."""
+    for node in ast.walk(tree):
+        name = getattr(node, "id", None) or getattr(node, "attr", None)
+        if isinstance(node, ast.alias):
+            name = node.name
+        if name in TYPE_TABLE_NAMES or (name or "").startswith("ETYPE_"):
+            yield name
+        if isinstance(node, ast.Compare):
+            if getattr(node.left, "attr", None) == "token_dtype":
+                continue
+            for side in (node.left, *node.comparators):
+                for c in ast.walk(side):
+                    if isinstance(c, ast.Constant) and isinstance(c.value, str) and (
+                        c.value in TYPE_NAMES or c.value.startswith("decimal")
+                    ):
+                        yield c.value
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "startswith"
+            and any(getattr(a, "value", None) == "decimal" for a in node.args)
+        ):
+            yield "startswith('decimal')"
+
+
+def test_extra_type_facts_live_in_the_type_table():
+    found = sorted(
+        (rel, fact)
+        for rel, tree in _sources(ROOT / PACKAGE)
+        if rel != TYPE_TABLE
+        for fact in _type_facts(tree)
+    )
+    assert found == [], f"per-type facts outside {TYPE_TABLE}: {found}"
+
+
+def test_type_fact_scan_on_planted_module():
+    src = (
+        "from copybook_rs_spark.config import decimal_params\n"
+        "def width(etype, cfg):\n"
+        "    if cfg.token_dtype == 'int64':\n        return 8\n"
+        "    if etype == 'string' or etype in ('float32', 'float64'):\n"
+        "        return blob.ETYPE_STRING\n"
+        "    return decimal_params(etype) or etype.startswith('decimal')\n"
+    )
+    # token_dtype's comparison is not a type fact; everything else is
+    assert sorted(_type_facts(ast.parse(src))) == sorted([
+        "decimal_params", "decimal_params", "string", "float32", "float64",
+        "ETYPE_STRING", "startswith('decimal')",
+    ])

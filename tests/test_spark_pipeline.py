@@ -650,7 +650,7 @@ def test_offsets32_overflow_guard():
     # lengths whose total crosses 2^31 must raise a typed error, never wrap
     # the int32 Arrow offsets into corrupt output (round-3 ADVICE)
     from copybook_rs_spark.errors import EngineError
-    from copybook_rs_spark.operators.decode import _offsets32
+    from copybook_rs_spark.etypes import _offsets32
 
     ok = _offsets32(np.array([3, 0, 5], dtype=np.int64), 3, "x")
     assert ok.tolist() == [0, 3, 3, 8] and ok.dtype == np.int32
