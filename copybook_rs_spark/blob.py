@@ -29,8 +29,9 @@ Layout (little-endian):
       typed error), and (c) enables chunk-skip pushdown on token-range
       predicates without touching the payload.
   doc_id section:
-    dl_len  : u32 byte length of the doc-id-lengths payload
-    payload (doc_id byte lengths, int payload grammar)
+    dl_len  : u32 byte length of the doc-id-lengths payload; 0 exactly when
+                  enc == 5, whose doc lengths are derived from the id fields
+    payload (doc_id byte lengths, int payload grammar; absent when enc == 5)
     enc     : u8  0 = raw, 1 = FSST, 2 = front-coded (smallest wins; ids are
                   sorted within a chunk, so consecutive ids share long
                   prefixes — front-coding then FSST on the suffix stream)
@@ -51,6 +52,13 @@ Layout (little-endian):
       the reference's edited-PIC codec, crates/copybook-codec/src/
       edited_pic.rs:88/:295/:642.)
       then per field: len:u32 values-payload len:u32 digit-lens-payload
+    | k:u8 seg_lens[k+1]:u8 literal bytes          (enc == 5; template-
+      derived: the enc-4 template when every field of every id is a
+      canonical integer — no leading zero, "0" itself allowed. A canonical
+      run's digit length is ndigits(value) and each doc length is the
+      literal length plus its fields' digit lengths, so neither is stored:
+      the mask alone fixes the widths, as in edited_pic.rs.)
+      then per field: len:u32 values-payload
   lengths section: int payload (n_tok per document)
   values section : mode:u8 then
     mode 0: int payload (all token values, document-major)
@@ -169,18 +177,22 @@ def _sized(buf: memoryview, off: int, what: str) -> tuple[memoryview, int]:
     return buf[off : off + ln], off + ln
 
 
+_ENC_TEMPLATE = 4
+_ENC_DERIVED = 5  # template-derived: no digit lengths, no doc lengths
 _DOC_ENC_NAMES = {
     0: "raw",
     1: "fsst",
     2: "front-coded",
     3: "alphabet-pack",
     4: "template",
+    5: "template-derived",
 }
 
 
 def _doc_parts(doc_sec: memoryview) -> tuple[memoryview, memoryview]:
     """Doc section -> (doc-lengths payload, doc byte stream); the stream
-    starts with a known encoding id."""
+    starts with a known encoding id, and the payload is empty exactly when
+    that id is _ENC_DERIVED."""
     if len(doc_sec) < 4:
         raise HeaderInvalidError("doc section too short")
     (dl_len,) = _U32.unpack_from(doc_sec)
@@ -191,6 +203,11 @@ def _doc_parts(doc_sec: memoryview) -> tuple[memoryview, memoryview]:
         raise HeaderInvalidError("doc-bytes encoding flag missing")
     if stream[0] not in _DOC_ENC_NAMES:
         raise HeaderInvalidError(f"unknown doc-bytes encoding {stream[0]}")
+    if (stream[0] == _ENC_DERIVED) != (dl_len == 0):
+        raise HeaderInvalidError(
+            f"doc-bytes encoding {stream[0]} with a {dl_len}-byte doc-length "
+            f"payload (empty exactly for encoding {_ENC_DERIVED})"
+        )
     return doc_sec[4 : 4 + dl_len], stream
 
 
@@ -417,9 +434,10 @@ _POW10 = 10 ** np.arange(_TEMPLATE_MAX_DIGITS + 1, dtype=np.int64)
 
 
 def _encode_template(doc_bytes: bytes, doc_lens: np.ndarray) -> bytes | None:
-    """Template codec (enc=4) — None when the chunk's ids don't share one
-    literal template. All detection/parse work is vectorized over the flat
-    byte stream; no per-id Python."""
+    """Template codec (enc 4, or enc 5 when every field is canonical) — None
+    when the chunk's ids don't share one literal template. All
+    detection/parse work is vectorized over the flat byte stream; no per-id
+    Python."""
     n = len(doc_lens)
     if n == 0 or len(doc_bytes) == 0:
         return None
@@ -468,7 +486,11 @@ def _encode_template(doc_bytes: bytes, doc_lens: np.ndarray) -> bytes | None:
     if lit_len and not (nond.reshape(n, lit_len) == nond.reshape(n, lit_len)[0]).all():
         return None
     literal = nond[:lit_len].tobytes()
-    parts = [b"\x04", bytes([k]), seg[0].astype(np.uint8).tobytes(), literal]
+    # a canonical run (no leading zero; "0" itself is one) is exactly
+    # str(value), so its digit length is ndigits(value): enc 5 stores none
+    derived = not ((data[s2] == 48) & (runlens > 1)).any()
+    enc = _ENC_DERIVED if derived else _ENC_TEMPLATE
+    parts = [bytes([enc, k]), seg[0].astype(np.uint8).tobytes(), literal]
     cols = np.arange(_TEMPLATE_MAX_DIGITS, dtype=np.int64)
     for j in range(k):
         L = runlens[:, j]
@@ -486,13 +508,20 @@ def _encode_template(doc_bytes: bytes, doc_lens: np.ndarray) -> bytes | None:
         # depth=1: sub-payload semantics (no top-level FSST gate — these are
         # small int streams where training can never pay for its table)
         pv, _ = core.encode_array(vals, codec="auto", depth=1)
-        pl, _ = core.encode_array(L, codec="auto", depth=1)
-        parts.extend((_U32.pack(len(pv)), pv, _U32.pack(len(pl)), pl))
+        parts.extend((_U32.pack(len(pv)), pv))
+        if not derived:
+            pl, _ = core.encode_array(L, codec="auto", depth=1)
+            parts.extend((_U32.pack(len(pl)), pl))
     return b"".join(parts)
 
 
-def _decode_template(buf: memoryview, doc_lens: np.ndarray) -> bytes:
-    n = len(doc_lens)
+def _template_fields(
+    buf: memoryview, n: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Enc 4/5 stream -> (segment lengths, literal, field values n x k,
+    digit lengths n x k), every count and range checked. Enc 5's digit
+    lengths are ndigits(value), with 0 taking one digit."""
+    derived = buf[0] == _ENC_DERIVED
     if len(buf) < 2:
         raise TruncatedBlobError("template header truncated")
     k = buf[1]
@@ -508,29 +537,48 @@ def _decode_template(buf: memoryview, doc_lens: np.ndarray) -> bytes:
         raise TruncatedBlobError("template literal truncated")
     lit = np.frombuffer(buf, dtype=np.uint8, count=lit_len, offset=off)
     off += lit_len
-    vals_l, lens_l = [], []
-    for _ in range(int(k)):
-        for dest in (vals_l, lens_l):
-            payload, off = _sized(buf, off, "template payload")
-            dest.append(core.decode_array(payload))
-    for arr in vals_l + lens_l:
+    per_field = 1 if derived else 2  # values [, digit lengths]
+    arrs = []
+    for _ in range(k * per_field):
+        payload, off = _sized(buf, off, "template payload")
+        arrs.append(core.decode_array(payload))
+    for arr in arrs:
         if len(arr) != n:
             raise CountMismatchError("template payload count != n_rows")
-    wl = np.stack(lens_l, axis=1) if k else np.zeros((n, 0), dtype=np.int64)
+    vv = np.stack(arrs[::per_field], axis=1)
+    if derived:
+        if (vv < 0).any():
+            raise PayloadCorruptError("template negative field value")
+        if (vv >= _POW10[-1]).any():
+            raise PayloadCorruptError("template-derived value over 18 digits")
+        return seg, lit, vv, np.maximum(np.searchsorted(_POW10, vv, side="right"), 1)
+    wl = np.stack(arrs[1::2], axis=1)
     if (wl < 1).any() or (wl > _TEMPLATE_MAX_DIGITS).any():
         raise PayloadCorruptError("template digit length out of range")
-    vv = np.stack(vals_l, axis=1) if k else np.zeros((n, 0), dtype=np.int64)
     if (vv < 0).any():
         raise PayloadCorruptError("template negative field value")
     # width check via a 20-entry pow10 lookup — 10**wl on the full n×k
     # matrix costs an int-power per cell
     if (vv >= _POW10[wl]).any():
         raise PayloadCorruptError("template value wider than its digit length")
+    return seg, lit, vv, wl
+
+
+def _decode_template(
+    buf: memoryview, n: int, doc_lens: np.ndarray | None = None
+) -> tuple[bytes, np.ndarray]:
+    """Enc 4/5 stream -> (doc bytes, doc lengths); given doc_lens (enc 4
+    always has them) must equal the lengths the fields imply."""
+    seg, lit, vv, wl = _template_fields(buf, n)
+    k = len(seg) - 1
+    lit_len = len(lit)
     total = lit_len + wl.sum(axis=1)
-    if not (total == np.ascontiguousarray(doc_lens, dtype=np.int64)).all():
+    if doc_lens is not None and not (
+        total == np.ascontiguousarray(doc_lens, dtype=np.int64)
+    ).all():
         raise CountMismatchError("template lengths disagree with doc_lens")
     if n == 0:
-        return b""
+        return b"", total
     # assemble: per id the layout is seg0 d0 seg1 d1 ... d(k-1) segk.
     # Fixed-column padded matrix (the masked-matrix move of _front_code):
     # literal segments broadcast into constant columns, each digit field
@@ -573,8 +621,8 @@ def _decode_template(buf: memoryview, doc_lens: np.ndarray) -> bytes:
                 valid[:, col : col + m] = cols[None, :] >= shortfall[:, None]
             col += m
     if valid is None:
-        return pad.tobytes()
-    return pad[valid].tobytes()
+        return pad.tobytes(), total
+    return pad[valid].tobytes(), total
 
 
 def _encode_doc_section(
@@ -622,10 +670,10 @@ def _decode_doc_bytes(
         suf_expected = int((np.asarray(doc_lens, dtype=np.int64) - lcp).sum()) if len(lcp) == len(doc_lens) else -1
         suf = _decode_doc_bytes(body[off:], max(suf_expected, 0))
         return _front_decode(lcp, doc_lens, suf)
-    if enc == 4:
+    if enc in (_ENC_TEMPLATE, _ENC_DERIVED):
         if doc_lens is None:
             raise HeaderInvalidError("template doc bytes need doc_lens")
-        return _decode_template(buf, doc_lens)
+        return _decode_template(buf, len(doc_lens), doc_lens)[0]
     if enc == 3:
         if len(body) < 2:
             raise TruncatedBlobError("alphabet-pack header truncated")
@@ -1093,8 +1141,10 @@ def encode_chunk(
     stats = core.ChunkStats.analyze(values)
     val_payload, vcodec = _encode_values(values, lengths, codec, stats)
     len_payload, _ = core.encode_array(lengths, codec="auto", depth=1)
-    dl_payload, _ = core.encode_array(doc_lens, codec="auto", depth=1)
     doc_enc, doc_tables = _encode_doc_section(doc_bytes, doc_lens, doc_fsst_cache)
+    dl_payload = b""  # enc 5 derives the doc lengths from the id fields
+    if doc_enc[0] != _ENC_DERIVED:
+        dl_payload, _ = core.encode_array(doc_lens, codec="auto", depth=1)
     doc_sec = _U32.pack(len(dl_payload)) + dl_payload + doc_enc
     body = doc_sec + len_payload + val_payload
     vmin = stats.vmin if n_values else 0
@@ -1152,15 +1202,18 @@ def decode_chunk(
     doc_lens: np.ndarray | None = None
     if need_docs:
         dl_payload, stream = _doc_parts(f.doc)
-        doc_lens = core.decode_array(dl_payload)
-        if len(doc_lens) != n_rows:
-            raise CountMismatchError("doc_lens count != n_rows")
-        if n_rows and (doc_lens < 0).any():
-            raise PayloadCorruptError("negative doc_id length")
-        expected_doc_len = int(doc_lens.sum()) if n_rows else 0
-        doc_bytes = _decode_doc_bytes(stream, expected_doc_len, doc_lens)
-        if len(doc_bytes) != expected_doc_len:
-            raise CountMismatchError("doc_id bytes length mismatch")
+        if stream[0] == _ENC_DERIVED:
+            doc_bytes, doc_lens = _decode_template(stream, n_rows)
+        else:
+            doc_lens = core.decode_array(dl_payload)
+            if len(doc_lens) != n_rows:
+                raise CountMismatchError("doc_lens count != n_rows")
+            if n_rows and (doc_lens < 0).any():
+                raise PayloadCorruptError("negative doc_id length")
+            expected_doc_len = int(doc_lens.sum()) if n_rows else 0
+            doc_bytes = _decode_doc_bytes(stream, expected_doc_len, doc_lens)
+            if len(doc_bytes) != expected_doc_len:
+                raise CountMismatchError("doc_id bytes length mismatch")
     lengths = core.decode_array(f.lengths)
     if len(lengths) != n_rows:
         raise CountMismatchError("lengths count != n_rows")
@@ -1200,10 +1253,20 @@ def describe_chunk(blob_bytes: bytes | memoryview) -> dict:
     (body and extras crcs verified — a description of corrupt bytes would
     be a lie), so it raises the same typed CBSP error on every framing
     fault they reject; payload-declared counts are also cross-checked
-    against the header."""
+    against the header. A template-derived (enc 5) doc section has no
+    doc-lengths payload: its id fields are read instead, and "doc_lens"
+    reports codec "derived"."""
     f = _frame(blob_bytes)
     dl_payload, stream = _doc_parts(f.doc)
     mode, parts = _values_parts(f.values)
+    if stream[0] == _ENC_DERIVED:
+        # no payload to describe: the lengths follow from the id fields,
+        # which are read (ids only, no token values) so that a fault there
+        # raises what decode raises
+        _template_fields(stream, f.n_rows)
+        doc_lens = {"codec": "derived", "bytes": 0, "n": f.n_rows}
+    else:
+        doc_lens = core.describe_payload(dl_payload)
     out: dict = {
         "version": f.version,
         "n_rows": f.n_rows,
@@ -1218,7 +1281,7 @@ def describe_chunk(blob_bytes: bytes | memoryview) -> dict:
             "values_section": len(f.values),
             "extras_section": len(f.tail),
         },
-        "doc_lens": core.describe_payload(dl_payload),
+        "doc_lens": doc_lens,
         "doc_bytes": {"encoding": _DOC_ENC_NAMES[stream[0]], "bytes": len(stream)},
         "lengths": core.describe_payload(f.lengths),
     }

@@ -194,6 +194,13 @@ def extra_type(name: str) -> ExtraType:
     # crates/copybook-arrow/src/schema_convert.rs:129, crates/copybook-
     # codec/src/numeric.rs:397 SmallDecimal. The engine stores the
     # unscaled int64 (Decimal128 is 16 bytes natively), so p is capped at 18.
+    # blobs store (p, s) and read back the canonical spelling, so a
+    # zero-padded one would fingerprint and declare a type no blob has
+    if any(len(d) > 1 and d[0] == "0" for d in (m[1], m[2])):
+        raise ValueError(
+            f"{name!r} has a leading zero; spell it "
+            f"'decimal({int(m[1])},{int(m[2])})'"
+        )
     p, s = int(m[1]), int(m[2])
     if not 1 <= p <= 18:
         raise ValueError(

@@ -257,33 +257,35 @@ def _plan_decode(chunk_df: DataFrame, columns: list[str] | None, cfg):
     tok64 = cfg is not None and cfg.token_dtype == "int64"
     src = chunk_df.select("blob", "source")
     want = 2 * chunk_df.sparkSession.sparkContext.defaultParallelism
-    nparts = src.rdd.getNumPartitions()
-    if nparts < want:
-        # size-aware rebalance: the shuffle only pays when it unlocks real
-        # decode work (~512 KiB compressed ≈ 2M tokens ≈ 0.1 s per task).
-        # For file-backed tables the total is the summed file sizes —
-        # driver-side, no job; blobs don't re-compress, so parquet size ~
-        # blob bytes. A tiny table (e.g. sf0.1 is ~5 MB) keeps its scan
-        # partitioning: the shuffle barrier costs more than the
-        # parallelism it buys. Unknown size (in-memory lineage) keeps the
-        # old behavior — rebalance to `want`.
-        target = want
-        total = _input_bytes(chunk_df)
-        if total is not None:
-            target = min(want, max(nparts, -(-total // _TARGET_BYTES_PER_TASK)))
-        if target > nparts:
-            src = src.repartition(target)
+    # size-aware rebalance: the shuffle only pays when it unlocks real
+    # decode work (~512 KiB compressed ≈ 2M tokens ≈ 0.1 s per task).
+    # For file-backed tables the total is the summed file sizes —
+    # driver-side, no job; blobs don't re-compress, so parquet size ~
+    # blob bytes. A tiny table (e.g. sf0.1 is ~5 MB) keeps its scan
+    # partitioning: the shuffle barrier costs more than the parallelism
+    # it buys. Unknown size (in-memory lineage) rebalances to `want`.
+    # stat files only until the bound saturates at `want`
+    total = _input_bytes(chunk_df, stop_at=want * _TARGET_BYTES_PER_TASK)
+    bound = want if total is None else min(want, -(-total // _TARGET_BYTES_PER_TASK))
+    # a scan with files has at least one partition, so a bound of 1 never
+    # repartitions and the RDD (tens of ms of driver planning per call) is
+    # not built
+    if bound > 1:
+        nparts = src.rdd.getNumPartitions()
+        if bound > nparts:
+            src = src.repartition(bound)
     return src, cols, out_pa, out_spark, tok64
 
 
 _TARGET_BYTES_PER_TASK = 512 << 10
 
 
-def _input_bytes(df: DataFrame) -> int | None:
+def _input_bytes(df: DataFrame, stop_at: int | None = None) -> int | None:
     """Total size of the parquet files behind df (driver-side stat of the
-    already-listed scan files; no Spark job). None when the plan is not
-    file-backed. Filtered tables overcount — an upper bound, which only
-    errs toward more parallelism."""
+    already-listed scan files; no Spark job), or the running total once it
+    reaches stop_at. None when the plan is not file-backed. Filtered
+    tables overcount — an upper bound, which only errs toward more
+    parallelism."""
     try:
         files = df.inputFiles()
     except Exception:
@@ -299,6 +301,8 @@ def _input_bytes(df: DataFrame) -> int | None:
             total += os.path.getsize(path)
         except OSError:
             return None
+        if stop_at is not None and total >= stop_at:
+            break
     return total
 
 

@@ -23,7 +23,8 @@ token arrays:
 - small input (at most _PACK_BROADCAST_MAX_DOCS docs; the benchmark and
   the driver queries): ONE capped collect of the triples to the driver, a sort and
   per-source cumsum there, and the (source, __ord, __cum_end) table
-  broadcast into the fat pass. The input is read twice: the capped
+  broadcast into the fat pass (shipped as a few array rows per source and
+  expanded under the broadcast). The input is read twice: the capped
   collect and the fat pass.
 - at scale (above the ceiling): range bounds from one seeded driver
   sample become literals that assign each doc a partition id `__pid`;
@@ -47,6 +48,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     FloatType,
     LongType,
@@ -79,10 +81,18 @@ def _check_keys(n: int, n_null: int, n_key: int) -> None:
         )
 
 
+# docs per row of the broadcast positions table (see _driver_positions)
+_POSITIONS_PER_ROW = 1 << 16
+
+
 def _driver_positions(keys: pa.Table) -> pa.Table:
-    """(source, __ord, __len) rows -> (source, __ord, __cum_end), sorted by
-    (source, __ord), after the key contract. Arrow sorts strings by UTF-8
-    bytes and integers numerically, as Spark does."""
+    """(source, __ord, __len) rows -> (source, __ords, __cum_ends): each
+    doc's end offset, sorted by (source, __ord) and checked against the
+    key contract, packed as one row per source run of at most
+    _POSITIONS_PER_ROW docs. Building, planning and filtering a one-row-
+    per-doc LocalRelation costs the driver several times more than these
+    few array rows. Arrow sorts strings by UTF-8 bytes and integers
+    numerically, as Spark does."""
     keys = keys.combine_chunks()
     src, ord_ = keys["source"], keys["__ord"]
     n = keys.num_rows
@@ -107,9 +117,15 @@ def _driver_positions(keys: pa.Table) -> pa.Table:
     # before each source's first row
     cum = np.cumsum(lens, dtype=np.int64)
     starts = np.flatnonzero(new_src)
-    before = np.repeat((cum - lens)[starts], np.diff(np.r_[starts, n]))
+    counts = np.diff(np.r_[starts, n])
+    before = np.repeat((cum - lens)[starts], counts)
+    rank = np.arange(n) - np.repeat(starts, counts)
+    rows = np.flatnonzero(new_src | (rank % _POSITIONS_PER_ROW == 0))
+    offsets = pa.array(np.r_[rows, n], pa.int32())
     return pa.table({
-        "source": src, "__ord": ord_, "__cum_end": pa.array(cum - before),
+        "source": src.take(rows),
+        "__ords": pa.ListArray.from_arrays(offsets, ord_.combine_chunks()),
+        "__cum_ends": pa.ListArray.from_arrays(offsets, pa.array(cum - before)),
     })
 
 
@@ -196,10 +212,17 @@ def _positions(base: DataFrame) -> DataFrame:
     if keys.num_rows > _PACK_BROADCAST_MAX_DOCS:
         return _scaled_positions(base)
     schema = StructType([
-        base.schema["source"], base.schema["__ord"],
-        StructField("__cum_end", LongType(), False),
+        base.schema["source"],
+        StructField("__ords", ArrayType(base.schema["__ord"].dataType, False), False),
+        StructField("__cum_ends", ArrayType(LongType(), False), False),
     ])
-    cum = base.sparkSession.createDataFrame(_driver_positions(keys), schema)
+    rows = base.sparkSession.createDataFrame(_driver_positions(keys), schema)
+    cum = rows.select(
+        "source",
+        F.inline(F.arrays_zip(
+            F.col("__ords").alias("__ord"), F.col("__cum_ends").alias("__cum_end")
+        )),
+    )
     return base.join(F.broadcast(cum), ["source", "__ord"])
 
 
@@ -257,17 +280,19 @@ def pack_sequences(
     to = F.least((seq + 1) * L, end) - start
     parts = (
         _positions(base)
-        .filter(F.col("__len") > 0)
         .select(
             "source", "tokens", "__cum_end", "__len",
             # integer `div`, not float division: exact at any token count
-            # (float64 would wobble past 2^53 global positions)
-            F.explode(
+            # (float64 would wobble past 2^53 global positions). A zero-
+            # token doc explodes a null into no rows: its sequence(a, a-1)
+            # would count down instead
+            F.explode(F.when(
+                F.col("__len") > 0,
                 F.sequence(
                     F.expr(f"(__cum_end - __len) div {int(seq_len)}"),
                     F.expr(f"(__cum_end - 1) div {int(seq_len)}"),
-                )
-            ).alias("__seq"),
+                ),
+            )).alias("__seq"),
         )
         .select(
             "source",

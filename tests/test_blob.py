@@ -8,11 +8,13 @@ corruption detectors (crates/copybook-corruption-detectors/src/lib.rs:17,41).
 import hashlib
 import struct
 import zlib
+from pathlib import Path
 
 import numpy as np
 import pytest
 
 from copybook_rs_spark import blob
+from copybook_rs_spark.codecs import core
 from copybook_rs_spark.errors import (
     BadMagicError,
     BlobFormatError,
@@ -729,6 +731,49 @@ def _append(c):
     return blob.append_extras(c, [("new", "int64", one, one)])
 
 
+# a template-derived (enc 5) chunk: "doc_<a>_<b>" with canonical fields
+_DER_A = np.arange(_N_AGREE, dtype=np.int64)
+_DER_B = 7 * _DER_A + 100
+
+
+def _derived_blob() -> bytes:
+    ids = [f"doc_{a}_{b}" for a, b in zip(_DER_A, _DER_B)]
+    b, _ = blob.encode_chunk(
+        "".join(ids).encode(),
+        np.array([len(d) for d in ids], dtype=np.int64),
+        np.full(_N_AGREE, 3, dtype=np.int64),
+        np.arange(3 * _N_AGREE, dtype=np.int64),
+    )
+    return b
+
+
+def _payload(vals) -> bytes:
+    p = core.encode_array(np.asarray(vals, dtype=np.int64), depth=1)[0]
+    return struct.pack("<I", len(p)) + p
+
+
+def _with_doc_stream(stream: bytes, dl: bytes = b"") -> bytes:
+    """_derived_blob with its doc section replaced by dl_len dl stream,
+    the header's section length and the body crc recomputed."""
+    raw = bytearray(_derived_blob())
+    sd = struct.unpack_from("<I", raw, 22)[0]
+    doc = struct.pack("<I", len(dl)) + dl + stream
+    raw[blob.HEADER_LEN : blob.HEADER_LEN + sd] = doc
+    struct.pack_into("<I", raw, 22, len(doc))
+    vmin, vmax = struct.unpack_from("<qq", raw, 34)
+    crc = zlib.crc32(struct.pack("<qq", vmin, vmax), zlib.crc32(bytes(raw[blob.HEADER_LEN:])))
+    struct.pack_into("<I", raw, 18, crc & 0xFFFFFFFF)
+    return bytes(raw)
+
+
+# after the encoding id: k=2, segment lengths 4 1 0, literal "doc_" + "_"
+_DER_HEAD = bytes([2, 4, 1, 0]) + b"doc__"
+
+
+def _derived(a=_DER_A, b=_DER_B, head=_DER_HEAD, enc=5, dl=b"") -> bytes:
+    return _with_doc_stream(bytes([enc]) + head + _payload(a) + _payload(b), dl)
+
+
 _AGREEMENT_CASES = {
     # id: (expected code, crafted input, decode side, describe/rewrite side)
     "version-append_extras": ("CBSP102", lambda: _craft(_VERSION), blob.decode_chunk, _append),
@@ -740,6 +785,25 @@ _AGREEMENT_CASES = {
     "extras-decimal-40-2": ("CBSP105", lambda: _craft(_PRECISION), blob.decode_extras,
                             blob.describe_chunk),
     "doc-encoding-9": ("CBSP105", lambda: _craft(_DOC_ENC), blob.decode_chunk, blob.describe_chunk),
+    "derived-k-0": ("CBSP105", lambda: _derived(head=b"\x00"), blob.decode_chunk,
+                    blob.describe_chunk),
+    "derived-k-13": ("CBSP105", lambda: _derived(head=b"\x0d" + bytes(14)),
+                     blob.decode_chunk, blob.describe_chunk),
+    "derived-literal-truncated": ("CBSP104", lambda: _with_doc_stream(b"\x05" + _DER_HEAD[:-3]),
+                                  blob.decode_chunk, blob.describe_chunk),
+    "derived-field-count": ("CBSP203", lambda: _derived(b=_DER_B[:-1]), blob.decode_chunk,
+                            blob.describe_chunk),
+    "derived-negative-value": ("CBSP204", lambda: _derived(a=np.r_[_DER_A[:-1], -1]),
+                               blob.decode_chunk, blob.describe_chunk),
+    "derived-19-digits": ("CBSP204", lambda: _derived(b=np.r_[_DER_B[:-1], 10**18]),
+                          blob.decode_chunk, blob.describe_chunk),
+    "derived-doc-lengths-stored": (
+        "CBSP105",
+        lambda: _derived(dl=core.encode_array(np.full(_N_AGREE, 9), depth=1)[0]),
+        blob.decode_chunk, blob.describe_chunk,
+    ),
+    "template-doc-lengths-empty": ("CBSP105", lambda: _derived(enc=4), blob.decode_chunk,
+                                   blob.describe_chunk),
     "plain-width-3": ("CBSP204", lambda: b"\x00" + struct.pack("<IB", 4, 3) + bytes(12),
                       "decode_array", "describe_payload"),
     "bitpack-width-70": ("CBSP204", lambda: b"\x01" + struct.pack("<IB", 4, 70) + bytes(64),
@@ -801,3 +865,137 @@ def test_inspect_chunk_cli_blob_file(tmp_path):
     )
     assert err.returncode != 0
     assert "CBSP105" in err.stderr
+
+
+# ------------------------------------------------------ template-derived (enc 5)
+
+_FIXTURES = Path(__file__).resolve().parent / "fixtures"
+
+
+def _content_sha(decoded) -> str:
+    doc_bytes, doc_lens, lengths, values = decoded
+    h = hashlib.sha256(doc_bytes)
+    for a in (doc_lens, lengths, values):
+        h.update(np.ascontiguousarray(a, dtype=np.int64).tobytes())
+    return h.hexdigest()
+
+
+_canonical_field = st.one_of(
+    st.sampled_from([0, 1, 9, 10, 10**17, 10**18 - 1]),
+    st.integers(0, 10**18 - 1),
+)
+
+
+@st.composite
+def _canonical_templates(draw):
+    k = draw(st.integers(1, blob._TEMPLATE_MAX_FIELDS))
+    lit = st.text("_-/.:xyz", min_size=1, max_size=4)
+    # literal-only prefix and suffix may be empty; inner literals may not,
+    # or two digit runs would merge into one
+    segs = [draw(st.sampled_from(["", "doc_", "a/"]))]
+    segs += [draw(lit) for _ in range(k - 1)]
+    segs.append(draw(st.sampled_from(["", "_tail", ".x"])))
+    n = draw(st.integers(1, 40))
+    rows = [[draw(_canonical_field) for _ in range(k)] for _ in range(n)]
+    return segs, rows
+
+
+@given(_canonical_templates())
+@settings(max_examples=120, deadline=None)
+def test_derived_template_roundtrip_property(tmpl):
+    # every field of every id canonical -> enc 5, whose stream alone gives
+    # back the ids AND their lengths; a single-doc chunk included
+    segs, rows = tmpl
+    ids = [
+        "".join(seg + str(v) for seg, v in zip(segs, r)) + segs[-1] for r in rows
+    ]
+    db = "".join(ids).encode()
+    dl = np.array([len(i) for i in ids], dtype=np.int64)
+    stream = blob._encode_template(db, dl)
+    assert stream is not None and stream[0] == 5
+    odb, odl = blob._decode_template(memoryview(stream), len(ids))
+    assert odb == db
+    np.testing.assert_array_equal(odl, dl)
+    tl = np.ones(len(ids), dtype=np.int64)
+    b, _ = blob.encode_chunk(db, dl, tl, np.arange(len(ids), dtype=np.int64))
+    out = blob.decode_chunk(b)
+    assert out[0] == db
+    np.testing.assert_array_equal(out[1], dl)
+    d = blob.describe_chunk(b)
+    if _doc_enc_flag(b) == 5:
+        assert d["doc_bytes"]["encoding"] == "template-derived"
+        assert d["doc_lens"] == {"codec": "derived", "bytes": 0, "n": len(ids)}
+
+
+def test_zero_padded_field_keeps_template_bytes():
+    # one zero-padded field anywhere keeps the chunk on enc 4, byte for
+    # byte as before enc 5 existed (sha of the blob written then)
+    ids = [f"doc_{i}_{3 * i + 1}" for i in range(1, 201)]
+    ids[57] = "doc_58_0175"
+    db = "".join(ids).encode()
+    dl = np.array([len(s) for s in ids], dtype=np.int64)
+    b, _ = blob.encode_chunk(
+        db, dl, np.full(200, 3, dtype=np.int64), np.arange(600, dtype=np.int64)
+    )
+    assert _doc_enc_flag(b) == 4
+    assert hashlib.sha256(b).hexdigest() == (
+        "a27fc90d615313fec8d45af0ac8abeefb347d10512b385423658710e1a97c548"
+    )
+    assert blob.decode_chunk(b)[0] == db
+
+
+def test_enc4_blob_with_canonical_ids_still_decodes():
+    # written before enc 5 existed: canonical ids stored as enc 4 (with
+    # digit lengths and doc lengths) decode to the same content
+    b = (_FIXTURES / "template_enc4_canonical.bin").read_bytes()
+    assert _doc_enc_flag(b) == 4
+    assert _content_sha(blob.decode_chunk(b)) == (
+        "15307d782f1a00ba7215120b9921d08eec406f709335d93d36b772a2e5aa9ad9"
+    )
+    assert blob.describe_chunk(b)["doc_bytes"]["encoding"] == "template"
+    # the same content encodes as enc 5 today, and smaller
+    again, _ = blob.encode_chunk(*blob.decode_chunk(b))
+    assert _doc_enc_flag(again) == 5 and len(again) < len(b)
+    assert _content_sha(blob.decode_chunk(again)) == _content_sha(blob.decode_chunk(b))
+
+
+def test_derived_template_resealed_fuzz_typed_or_clean():
+    # enc 5 parses its own field payloads to derive the lengths: any
+    # checksum-valid mutation of its doc section decodes or fails typed
+    rng = np.random.default_rng(5)
+    b = _derived_blob()
+    sd = struct.unpack_from("<I", b, 22)[0]
+    doc = b[blob.HEADER_LEN : blob.HEADER_LEN + sd]
+    assert doc[:5] == b"\x00\x00\x00\x00\x05"
+    bad = []
+    for trial in range(600):
+        raw = bytearray(doc[4:])
+        for _ in range(int(rng.integers(1, 3))):
+            raw[int(rng.integers(1, len(raw)))] = int(rng.integers(0, 256))
+        crafted = _with_doc_stream(bytes(raw))
+        for fn in (blob.decode_chunk, blob.describe_chunk):
+            try:
+                fn(crafted)
+            except EngineError:
+                pass
+            except Exception as e:  # noqa: BLE001 - the assertion itself
+                bad.append((trial, fn.__name__, type(e).__name__, str(e)[:80]))
+    assert not bad, bad[:5]
+
+
+def test_inspect_chunk_cli_names_derived_template(tmp_path):
+    import json
+    import subprocess
+    import sys
+
+    script = Path(__file__).resolve().parent.parent / "scripts" / "inspect_chunk.py"
+    f = tmp_path / "derived.bin"
+    f.write_bytes(_derived_blob())
+    ok = subprocess.run(
+        [sys.executable, str(script), "--blob-file", str(f)],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert ok.returncode == 0, ok.stderr
+    desc = json.loads(ok.stdout)
+    assert desc["doc_bytes"]["encoding"] == "template-derived"
+    assert desc["doc_lens"]["codec"] == "derived"

@@ -4,6 +4,7 @@ feeds stay pinned, and an input column whose Spark type differs from its
 row's fails typed on the driver before any kernel reads its buffers."""
 
 import hashlib
+import re
 from decimal import Decimal
 
 import pytest
@@ -193,3 +194,20 @@ def test_mistyped_extra_column_is_rejected(spark, spec, sql, value):
     chunks = encode_tokens(good, cfg)
     with pytest.raises(PipelineContractError, match="upsert_docs: extra column 'p'"):
         upsert_docs(chunks, bad.withColumn("doc_id", F.lit("d2")), cfg, salts={"web": 1})
+
+
+@pytest.mark.parametrize(
+    "spec, canonical",
+    [("decimal(05,2)", "decimal(5,2)"), ("decimal(5,02)", "decimal(5,2)"),
+     ("decimal(12,00)", "decimal(12,0)")],
+)
+def test_zero_padded_decimal_spec_is_rejected(spec, canonical):
+    # blobs read back the canonical spelling, so a zero-padded spec once
+    # fingerprinted and declared a type no blob carries (decode_where then
+    # failed CBSP300 on a table that encoded and decoded fine)
+    with pytest.raises(ValueError, match=re.escape(f"spell it '{canonical}'")):
+        EncodeConfig(extra_columns=(f"p:{spec}",))
+    assert EncodeConfig(extra_columns=(f"p:{canonical}",)).extra_specs() == (("p", canonical),)
+    # a lone zero is canonical: it reaches the range checks as before
+    with pytest.raises(ValueError, match="precision"):
+        EncodeConfig(extra_columns=("p:decimal(0,0)",))

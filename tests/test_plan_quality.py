@@ -230,3 +230,59 @@ def test_pack_sequences_at_scale_path(spark, monkeypatch):
         assert bcast and all("__off" in b for b in bcast), plan
         assert not any("tokens" in b for b in bcast), plan
         assert packed(out.collect()) == want, reparts
+
+
+def _partitions_by_rule(want: int, nparts: int, total: int | None) -> int:
+    """decode's input partition count by the size rule: rebalance a scan
+    with fewer than `want` partitions to min(want, max(nparts,
+    ceil(bytes / target))), or to `want` when the size is unknown."""
+    from copybook_rs_spark.operators import decode as dec
+
+    if nparts >= want:
+        return nparts
+    target = want
+    if total is not None:
+        target = min(want, max(nparts, -(-total // dec._TARGET_BYTES_PER_TASK)))
+    return max(target, nparts)
+
+
+def test_decode_partitioning_needs_no_rdd_when_nothing_can_repartition(
+    spark, written, monkeypatch
+):
+    # the size bound comes first: a table no larger than one task's target
+    # cannot repartition, so planning it never builds the RDD; every input
+    # still gets the partition count of the size rule
+    from pyspark.sql import DataFrame
+
+    from copybook_rs_spark.operators import decode as dec
+
+    want = 2 * spark.sparkContext.defaultParallelism
+
+    def by_rule(df):
+        nparts = df.select("blob", "source").rdd.getNumPartitions()
+        return _partitions_by_rule(want, nparts, dec._input_bytes(df))
+
+    def planned(df):
+        return dec._plan_decode(df, None, None)[0].rdd.getNumPartitions()
+
+    tiny = mani.read_chunks(spark, written)
+    assert dec._input_bytes(tiny) <= dec._TARGET_BYTES_PER_TASK
+    with monkeypatch.context() as m:
+        def no_rdd(self):
+            raise AssertionError("a one-task table built its RDD")
+
+        m.setattr(DataFrame, "rdd", property(no_rdd))
+        src = dec._plan_decode(tiny, None, None)[0]
+    assert src.rdd.getNumPartitions() == by_rule(tiny)
+
+    in_memory = spark.createDataFrame(
+        tiny.select("blob", "source").collect(), "blob binary, source string"
+    )
+    assert dec._input_bytes(in_memory) is None
+    assert planned(in_memory) == by_rule(in_memory) == want
+
+    # a size bound above the scan's partition count (and below `want`)
+    monkeypatch.setattr(dec, "_TARGET_BYTES_PER_TASK", 32 << 10)
+    nparts = tiny.select("blob", "source").rdd.getNumPartitions()
+    assert nparts < by_rule(tiny) < want
+    assert planned(tiny) == by_rule(tiny)
