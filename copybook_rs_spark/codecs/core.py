@@ -1,5 +1,6 @@
-"""Self-describing integer-array payloads: plain / bitpack / FOR / delta /
-RLE / dict / FSST, with cascades and honest try-encode auto-selection.
+"""Self-describing integer-array payloads: plain / bitpack / blockpack / FOR /
+delta / RLE / dict / FSST, with cascades and honest try-encode
+auto-selection.
 
 Payload grammar (all little-endian, `codec_id:u8` first — the analogue of the
 reference's FieldKind dispatch in decode_record, crates/copybook-codec/src/
@@ -30,6 +31,14 @@ crates/copybook-codec/src/numeric.rs:308-396):
               spikes no longer blow up the pack width of everything
   fsst     := n:u32 nbytes:u32 table len:u32 codes[len]
               (values -> zigzag -> varint byte stream -> fsst codes)
+  blockpack := n:u32 len:u32 sub:payload(block widths) packed-groups
+              (values >= 0) — per-block bit widths, the miniblock layout of
+              FastPFor and Parquet's DELTA_BINARY_PACKED: 64-value blocks
+              (the last one zero-padded), each at bit_length(block max); the
+              blocks of each distinct non-zero width are packed together, in
+              ascending width order, as ONE bitpack data block. The packed
+              groups run to the end of the payload and hold exactly
+              8 * sum(widths) bytes.
 
 Cascades come from sub-payloads choosing their own codec (depth-limited so
 encoding terminates): delta->RLE crushes arithmetic sequences, dict values
@@ -70,6 +79,7 @@ CODEC_PATCH = 7
 CODEC_PFOR = 8
 CODEC_DOCDELTA = 9  # blob-level values-section mode 1 (blob.py); reported
 # in the chunk header/manifest, never a payload codec id
+CODEC_BLOCKPACK = 10
 
 CODEC_NAMES = {
     CODEC_PLAIN: "plain",
@@ -82,18 +92,20 @@ CODEC_NAMES = {
     CODEC_PATCH: "patch",
     CODEC_PFOR: "pfor",
     CODEC_DOCDELTA: "docdelta",
+    CODEC_BLOCKPACK: "blockpack",
 }
 CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
 
 # candidate order = deterministic tie-break (earlier wins on equal size)
 _DEPTH_CANDIDATES = {
-    0: ("bitpack", "for", "delta", "rle", "dict", "patch", "pfor", "plain"),
-    1: ("bitpack", "for", "delta", "rle", "patch", "pfor", "plain"),
+    0: ("bitpack", "blockpack", "for", "delta", "rle", "dict", "patch", "pfor",
+        "plain"),
+    1: ("bitpack", "blockpack", "for", "delta", "rle", "patch", "pfor", "plain"),
     # no delta at depth 2: third differences never paid in measurement and
     # the nested 64Ki-stream cascade cost ~10 ms/chunk (delta-of-delta is
     # still reachable via depth 0 -> 1)
-    2: ("bitpack", "for", "patch", "pfor", "plain"),
-    3: ("bitpack", "for", "plain"),
+    2: ("bitpack", "blockpack", "for", "patch", "pfor", "plain"),
+    3: ("bitpack", "blockpack", "for", "plain"),
 }
 _MAX_DEPTH = 3
 
@@ -104,6 +116,11 @@ _HDR_RLE = struct.Struct("<II")
 
 _FSST_SAMPLE = 2048
 _FSST_MIN_N = 64
+
+_BLOCK = 64  # values per blockpack block: part of the format, not a knob
+_BLOCKPACK_MIN_N = 2 * _BLOCK
+_HDR_BLOCKPACK = struct.Struct("<II")  # n, widths sub-payload length
+_MIN_PAYLOAD = 6  # codec id + the smallest header (plain/bitpack, n = 0)
 
 
 @dataclass
@@ -135,6 +152,24 @@ class ChunkStats:
     # _run_break_idx: only ever attached to stats analyzed from the same
     # array the encoder receives)
     _zz_full: np.ndarray | None = field(default=None, repr=False)
+    # per-64-value-block maxima (streams of >= _BLOCKPACK_MIN_N values):
+    # blockpack's widths and FOR's blockpack sub-payload widths both derive
+    # from them, so the candidates' exact data sizes cost no further pass
+    _block_max: np.ndarray | None = field(default=None, repr=False)
+    _widths_at: dict = field(default_factory=dict, repr=False)
+
+    def block_widths(self, ref: int) -> np.ndarray | None:
+        """bit_length(block max - ref) per 64-value block, or None below
+        _BLOCKPACK_MIN_N values: ref 0 gives blockpack's widths, ref vmin
+        those of FOR's blockpack sub-payload (subtracting the minimum keeps
+        every block's order, so its max stays its max). Cached per ref."""
+        if self._block_max is None:
+            return None
+        w = self._widths_at.get(ref)
+        if w is None:
+            bm = self._block_max.view(np.uint64) - np.uint64(ref % (1 << 64))
+            w = self._widths_at[ref] = bp.bit_lengths(bm)
+        return w
 
     def zz_p99_value(self) -> int:
         """Resolve the (possibly deferred) robust delta width. The max(1,
@@ -279,7 +314,21 @@ class ChunkStats:
             _uniq=uniq,
             _run_break_idx=breaks,
             _zz_full=zz_full,
+            _block_max=_block_max(v) if n >= _BLOCKPACK_MIN_N else None,
         )
+
+
+def _block_max(v: np.ndarray) -> np.ndarray:
+    """Per-block maxima of a 1-d array (64-value blocks, the last one
+    short): one reshape-and-max pass."""
+    n = len(v)
+    full = n // _BLOCK
+    out = np.empty(-(-n // _BLOCK), dtype=v.dtype)
+    if full:
+        out[:full] = v[: full * _BLOCK].reshape(full, _BLOCK).max(axis=1)
+    if n % _BLOCK:
+        out[full] = v[full * _BLOCK :].max()
+    return out
 
 
 # ----------------------------------------------------------------- encoders
@@ -308,20 +357,61 @@ def _encode_bitpack(vals: np.ndarray, width: int | None = None) -> bytes:
     )
 
 
-def _encode_sub_u64(vals_u: np.ndarray, max_val: int) -> bytes:
-    """Terminal sub-payload for logically-unsigned uint64 values:
-    the smaller of bitpack / plain (stored as the int64 bit view)."""
+def _encode_blockpack(vals_u: np.ndarray, widths: np.ndarray | None = None) -> bytes:
+    """Blockpack of logically-unsigned uint64 values. `widths` (the
+    per-block bit widths of exactly these values) skips the max pass."""
     u = np.ascontiguousarray(vals_u, dtype=np.uint64)
     n = len(u)
-    if n:
-        w = bp.bit_width(max_val)
-        plain_w = 4 if max_val < 2**31 else 8
-        if bp.packed_size(n, w) <= plain_w * n:
-            return bytes([CODEC_BITPACK]) + _HDR_PLAIN.pack(n, w) + bp.pack(u, w)
+    if widths is None:
+        widths = bp.bit_lengths(_block_max(u))
+    nb = len(widths)
+    pad = nb * _BLOCK - n
+    blocks = (np.concatenate([u, np.zeros(pad, np.uint64)]) if pad else u).reshape(
+        nb, _BLOCK
+    )
+    # the widths go straight to the terminal tier, as dict's indices do: a
+    # full cascade found ~0.06% more on perfbench's ingest corpora at about
+    # 8x the try cost (3.8 of 4.5 ms per 64Ki-value blockpack try)
+    sub, _ = encode_array(widths, codec="auto", depth=_MAX_DEPTH)
+    out = [bytes([CODEC_BLOCKPACK]), _HDR_BLOCKPACK.pack(n, len(sub)), sub]
+    for w in np.unique(widths).tolist():
+        if w:
+            out.append(bp.pack(blocks[widths == w].reshape(-1), w))
+    return b"".join(out)
+
+
+def _blockpack_floor(widths: np.ndarray) -> int:
+    """Blockpack's size, exact but for the widths sub-payload, which is
+    taken at its smallest possible framing."""
+    return 1 + _HDR_BLOCKPACK.size + _MIN_PAYLOAD + 8 * int(widths.sum())
+
+
+def _encode_sub_u64(
+    vals_u: np.ndarray, max_val: int, widths: np.ndarray | None = None
+) -> bytes:
+    """Terminal sub-payload for logically-unsigned uint64 values: the
+    smallest of bitpack / blockpack (>= _BLOCKPACK_MIN_N values) / plain
+    (stored as the int64 bit view), earlier on a tie."""
+    u = np.ascontiguousarray(vals_u, dtype=np.uint64)
+    n = len(u)
+    if not n:
+        return _encode_plain(u.view(np.int64))
+    w = bp.bit_width(max_val)
+    plain_w = 4 if max_val < 2**31 else 8
+    best_len = 1 + _HDR_PLAIN.size + min(bp.packed_size(n, w), plain_w * n)
+    if n >= _BLOCKPACK_MIN_N:
+        if widths is None:
+            widths = bp.bit_lengths(_block_max(u))
+        if _blockpack_floor(widths) < best_len:
+            enc = _encode_blockpack(u, widths)
+            if len(enc) < best_len:
+                return enc
+    if bp.packed_size(n, w) <= plain_w * n:
+        return bytes([CODEC_BITPACK]) + _HDR_PLAIN.pack(n, w) + bp.pack(u, w)
     return _encode_plain(u.view(np.int64))
 
 
-def _encode_for(vals: np.ndarray, depth: int) -> bytes:
+def _encode_for(vals: np.ndarray, depth: int, stats: ChunkStats | None = None) -> bytes:
     v = np.ascontiguousarray(vals, dtype=np.int64)
     n = len(v)
     ref = int(v.min()) if n else 0
@@ -329,7 +419,12 @@ def _encode_for(vals: np.ndarray, depth: int) -> bytes:
         v.view(np.uint64) - np.uint64(ref % (1 << 64)) if n else v.view(np.uint64)
     )
     mx = (int(v.max()) - ref) if n else 0
-    return bytes([CODEC_FOR]) + _HDR_FOR.pack(n, ref) + _encode_sub_u64(shifted_u, mx)
+    widths = stats.block_widths(ref) if stats is not None and stats.n == n else None
+    return (
+        bytes([CODEC_FOR])
+        + _HDR_FOR.pack(n, ref)
+        + _encode_sub_u64(shifted_u, mx, widths)
+    )
 
 
 def _encode_delta(
@@ -550,8 +645,13 @@ def _encode_named(name: str, v: np.ndarray, stats: ChunkStats | None, depth: int
         return _encode_plain(v)
     if name == "bitpack":
         return _encode_bitpack(v)
+    if name == "blockpack":
+        if len(v) and int(v.min()) < 0:
+            raise ValueOverflowError("blockpack requires non-negative values")
+        widths = stats.block_widths(0) if stats is not None and stats.n == len(v) else None
+        return _encode_blockpack(v.view(np.uint64), widths)
     if name == "for":
-        return _encode_for(v, depth)
+        return _encode_for(v, depth, stats)
     if name == "delta":
         return _encode_delta(v, depth, stats)
     if name == "rle":
@@ -579,18 +679,19 @@ def _delta_skip_confirmed(
     size estimates, that the delta candidate cannot beat `best_len`.
 
     Layers (any one failing -> no skip, the full delta cascade runs):
-      1. zz sorted, run-dense, or near-majority mode -> the sub-cascade's
-         rle/patch branches stay in play (they can reach O(1) bytes on such
-         streams, so no closed-form floor is sound) -> never skip. The mode
-         check is EXACT (max run in sorted zz), matching the sub-cascade's
-         own patch gate on the same stream — this closes the round-3 ADVICE
-         hole where a two-value oscillating delta stream (patch O(1)) was
-         skipped at a measured 385x size cost.
+      1. zz sorted, run-dense, or a mode that opens the patch gate -> the
+         sub-cascade's rle/patch branches stay in play (they can reach O(1)
+         bytes on such streams, so no closed-form floor is sound) -> never
+         skip. The mode check is EXACT (max run in sorted zz) and runs the
+         sub-cascade's own patch gate (_patch_may_pay) on the same stream —
+         this closes the round-3 ADVICE hole where a two-value oscillating
+         delta stream (patch O(1)) was skipped at a measured 385x size cost.
       2. Width-frontier floor over SORTED zz with min-subtraction: best of
          direct bitpack, FOR(+bitpack), and every pfor split w with the
          exception high-bits themselves FOR-packed (gap streams taken as
-         free). Min-subtraction matters: zigzag maps cancelling +/- deltas
-         to ADJACENT codes, so run-free oscillations become a narrow
+         free); plus the blockpack floors of zz in stream order, direct and
+         under FOR. Min-subtraction matters: zigzag maps cancelling +/-
+         deltas to ADJACENT codes, so run-free oscillations become a narrow
          re-referenced band the old absolute-width histogram priced at full
          magnitude.
       3. Prefix-sample real encode (the FSST-gate pattern): the actual
@@ -623,8 +724,8 @@ def _delta_skip_confirmed(
     brk = np.flatnonzero(szz[1:] != szz[:-1])
     run_bounds = np.concatenate(([-1], brk, [n - 1]))
     mode_count = int(np.diff(run_bounds).max())
-    if n - mode_count <= max(n // 2, 4):
-        return False  # near-majority: sub-cascade patch can reach O(1)
+    if _patch_may_pay(n, mode_count, int(szz[-1]) - int(szz[0])):
+        return False  # the sub-cascade tries patch, which can reach O(1)
     # --- layer 2: width-frontier floor (min-referenced, sorted residuals)
     resid = szz - szz[0]
     top = bp.bit_width(int(resid[-1]))
@@ -632,6 +733,12 @@ def _delta_skip_confirmed(
         return False
     floor = 6 + bp.packed_size(n, bp.bit_width(int(szz[-1])))
     floor = min(floor, 13 + 6 + bp.packed_size(n, top))
+    bmax = _block_max(zz)
+    floor = min(
+        floor,
+        _blockpack_floor(bp.bit_lengths(bmax)),
+        13 + _blockpack_floor(bp.bit_lengths(bmax - szz[0])),
+    )
     # count of residuals with bit length <= w == count < 2**w: one
     # vectorized searchsorted over the SORTED residuals replaces the
     # O(n) per-element bit_lengths pass (identical counts by definition)
@@ -679,10 +786,11 @@ def encode_array(
     lb = _lower_bounds(stats)
     # best-estimate-first with lower-bound pruning. The lb skips are exact
     # (a skipped candidate provably cannot be strictly smaller than the
-    # current best); the rle/dict gates below are deliberate heuristics —
-    # the structures they might miss (periodic/low-cardinality streams)
-    # are exactly what patch/pfor capture directly. Deterministic either
-    # way: every decision is a pure function of the data.
+    # current best); the rle/dict/patch gates below are deliberate
+    # heuristics — the structures rle/dict might miss (periodic/low-
+    # cardinality streams) are exactly what patch/pfor capture directly.
+    # Deterministic either way: every decision is a pure function of the
+    # data.
     ordered = [
         nm for _, _, nm in sorted(
             (est.get(nm, 1 << 60), i, nm) for i, nm in enumerate(names)
@@ -693,6 +801,8 @@ def encode_array(
     for name in ordered:
         if name == "bitpack" and stats.n and stats.vmin < 0:
             continue
+        if name == "blockpack" and (stats._block_max is None or stats.vmin < 0):
+            continue  # below two blocks, the widths framing cannot pay
         if name == "rle" and stats.n_runs > max(stats.n // 2, 4) and (
             not stats.is_sorted
         ):
@@ -714,9 +824,13 @@ def encode_array(
             # values, which the direct candidates already capture
         if name == "for" and stats.n and stats.vmin >= 0 and (
             bp.bit_width(stats.vmax) == bp.bit_width(stats.vmax - stats.vmin)
+        ) and (
+            stats._block_max is None
+            or stats.block_widths(stats.vmin).sum() == stats.block_widths(0).sum()
         ):
-            continue  # EXACT dominance: equal widths make FOR's terminal
-            # sub-payload byte-identical to direct bitpack/plain plus a
+            continue  # EXACT dominance: equal widths (overall, and summed
+            # over the blocks, so equal per block) make FOR's terminal
+            # sub-payload the size of direct bitpack/blockpack/plain plus a
             # 13-byte reference header — it can never win
         if name == "delta" and best is not None and (
             stats.n_delta_runs > max(stats.n // 2, 4)
@@ -730,11 +844,10 @@ def encode_array(
             # optimistic estimates (min-referenced width frontier AND a
             # prefix-sample real encode) — see its docstring for the one
             # documented heuristic residue (suffix-only structure).
-        if name == "patch" and (
-            stats.mode_count == 0  # mode unknown (shallow stats): skip
-            or stats.n - stats.mode_count > max(stats.n // 2, 4)
+        if name == "patch" and not _patch_may_pay(
+            stats.n, stats.mode_count, stats.vmax - stats.vmin
         ):
-            continue  # 2 sub-values per exception can't beat bitpack
+            continue  # heuristic, see _patch_may_pay
         if name == "pfor" and (
             stats.n < 16 or bp.bit_width(stats.vmax - stats.vmin) <= 1
         ):
@@ -758,12 +871,23 @@ def encode_array(
     return best, best_name
 
 
+def _patch_may_pay(n: int, mode_count: int, rng: int) -> bool:
+    """The patch gate: try patch only when the bits that dropping the mode
+    saves (bit_width(range) per mode occurrence, against a bitpack of the
+    whole stream) pay for about 2 bits of gap per exception. A heuristic:
+    on a zipf-like stream it admits patch long before the mode is a
+    majority, and on a near-uniform stream it keeps patch off. A stream of
+    unknown mode (shallow stats, mode_count 0) never tries patch."""
+    return mode_count > 0 and mode_count * bp.bit_width(rng) >= 2 * (n - mode_count)
+
+
 def _lower_bounds(s: ChunkStats) -> dict[str, int]:
     """Safe per-codec size minima (cascades included): used to SKIP a
     candidate only when it provably cannot beat the current best.
 
-    plain/bitpack/for/pfor are closed-form exact for their non-cascaded
-    part (pfor packs >= 1 bit per value by construction — its w=0
+    plain/bitpack/blockpack/for/pfor are closed-form exact for their
+    non-cascaded part (blockpack's packed groups are 8 bytes per bit of
+    block width; pfor packs >= 1 bit per value by construction — its w=0
     degenerate case is patch). The cascading codecs (delta/rle/dict/patch)
     get only their fixed framing as the bound: with patch/pfor in the
     cascade, a periodic sub-stream can legally compress to O(1) bytes
@@ -775,9 +899,13 @@ def _lower_bounds(s: ChunkStats) -> dict[str, int]:
     out["plain"] = 1 + 6 + (4 * n if -(2**31) <= s.vmin and s.vmax < 2**31 else 8 * n)
     if s.vmin >= 0:
         out["bitpack"] = 1 + 6 + bp.packed_size(n, bp.bit_width(s.vmax))
+        if s._block_max is not None:
+            out["blockpack"] = _blockpack_floor(s.block_widths(0))
     out["for"] = 1 + 13 + min(
         6 + bp.packed_size(n, bp.bit_width(s.vmax - s.vmin)),
         6 + (4 * n if s.vmax - s.vmin < 2**31 else 8 * n),
+        _blockpack_floor(s.block_widths(s.vmin))
+        if s._block_max is not None else 1 << 62,
     ) if n else 20
     out["delta"] = 11
     out["rle"] = 21
@@ -788,8 +916,10 @@ def _lower_bounds(s: ChunkStats) -> dict[str, int]:
 
 
 def estimate_sizes(s: ChunkStats) -> dict[str, int]:
-    """Closed-form size estimates (non-cascaded layouts) — used for tests and
-    observability, NOT for selection (selection try-encodes)."""
+    """Closed-form size estimates of the non-cascaded layouts. Selection
+    still try-encodes; encode_array uses these to order the candidates
+    (smallest estimate first, so the lower bounds prune more) and to
+    est-prune dict."""
     n = s.n
 
     def sub(k: int, mx: int) -> int:
@@ -801,12 +931,20 @@ def estimate_sizes(s: ChunkStats) -> dict[str, int]:
         # and the extra frame was visible in the round-5.2 profile
         return min(plain, 6 + bp.packed_size(k, mx.bit_length()))
 
+    def blockpack(ref: int) -> int:
+        w = s.block_widths(ref)
+        return 1 + _HDR_BLOCKPACK.size + sub(len(w), int(w.max())) + 8 * int(w.sum())
+
     est: dict[str, int] = {}
     est["plain"] = 1 + 6 + (4 * n if -(2**31) <= s.vmin and s.vmax < 2**31 else 8 * n)
     if s.vmin >= 0:
         est["bitpack"] = 1 + 6 + bp.packed_size(n, bp.bit_width(s.vmax))
+        if s._block_max is not None:
+            est["blockpack"] = blockpack(0)
     rng = s.vmax - s.vmin
     est["for"] = 1 + 13 + (sub(n, rng) if n else 6)
+    if s._block_max is not None:
+        est["for"] = min(est["for"], 1 + 13 + blockpack(s.vmin))
     est["delta"] = 1 + 5 + sub(n, s.max_zz_delta)
     r = s.n_runs
     est["rle"] = 1 + 9 + (1 + 13 + sub(r, rng)) + 4 + sub(r, s.max_run_len) + 4
@@ -839,6 +977,7 @@ _HEADERS = {
     CODEC_PATCH: _HDR_PATCH,
     CODEC_PFOR: _HDR_PFOR,
     CODEC_FSST: _HDR_PLAIN,  # n:u32 passes:u8
+    CODEC_BLOCKPACK: _HDR_BLOCKPACK,
 }
 # describe_payload's names for the header fields _parse returns
 _FIELD_NAMES = {
@@ -851,6 +990,7 @@ _FIELD_NAMES = {
     CODEC_PATCH: ("mode", "n_exceptions"),
     CODEC_PFOR: ("ref", "width", "n_exceptions", "packed_bytes"),
     CODEC_FSST: ("passes",),  # the stream lengths stay internal
+    CODEC_BLOCKPACK: ("packed_bytes",),
 }
 
 
@@ -870,7 +1010,9 @@ def _parse(payload: bytes | memoryview):
     header-field ranges and the extents of data and sub-payloads, so
     decode_array and describe_payload reject the same framing faults.
     Nothing is decompressed. For fsst the header fields are (passes,
-    stream lengths) and data holds the tables followed by the codes.
+    stream lengths) and data holds the tables followed by the codes; for
+    blockpack (packed bytes,) with data = the packed groups, whose size
+    depends on the widths and is checked by the decoder.
     Runs once per payload on the decode hot path, hence the inline checks."""
     buf = memoryview(payload)
     if not len(buf):
@@ -907,6 +1049,10 @@ def _parse(payload: bytes | memoryview):
         return cid, n, [passes, lens], rest[4 * (passes + 1) :], ()
     if cid in (CODEC_FOR, CODEC_DELTA):
         return cid, n, hdr, rest[:0], (rest,)
+    if cid == CODEC_BLOCKPACK:
+        (l1,) = hdr
+        _need(rest, l1, "blockpack widths")
+        return cid, n, [len(rest) - l1], rest[l1:], (rest[:l1],)
     return cid, n, hdr, rest[:0], _two_subs(rest, CODEC_NAMES[cid])  # rle, dict, patch
 
 
@@ -927,6 +1073,43 @@ def describe_payload(payload: bytes | memoryview) -> dict:
     return out
 
 
+def _decode_blockpack(n: int, data: memoryview, sub: memoryview, u32: bool):
+    """The blockpack body -> uint64 values (uint32 when u32, or None when a
+    width exceeds 32): one unpack per distinct width plus one scatter.
+    Content checks: the widths count and range, the packed size, and zero
+    padding in the last block."""
+    widths = decode_array(sub)
+    nb = -(-n // _BLOCK)
+    if len(widths) != nb:
+        raise CountMismatchError(f"blockpack: {len(widths)} widths for {nb} blocks")
+    if nb and (int(widths.min()) < 0 or int(widths.max()) > 64):
+        raise PayloadCorruptError("blockpack: block width outside 0..64")
+    need = 8 * int(widths.sum())
+    if len(data) != need:
+        raise PayloadCorruptError(f"blockpack: {len(data)} packed bytes, widths need {need}")
+    if u32 and nb and int(widths.max()) > 32:
+        return None
+    unpack = bp.unpack32 if u32 else bp.unpack
+    dtype = np.uint32 if u32 else np.uint64
+    groups = [w for w in np.unique(widths).tolist() if w]
+    if len(groups) == 1 and need == 8 * groups[0] * nb:
+        out = unpack(data, nb * _BLOCK, groups[0])  # one width, every block
+    else:
+        out = np.zeros(nb * _BLOCK, dtype=dtype)
+        blocks = out.reshape(nb, _BLOCK)
+        off = 0
+        for w in groups:
+            sel = np.flatnonzero(widths == w)
+            size = 8 * w * len(sel)
+            blocks[sel] = unpack(data[off : off + size], _BLOCK * len(sel), w).reshape(
+                -1, _BLOCK
+            )
+            off += size
+    if (out[n:] != 0).any():
+        raise PayloadCorruptError("blockpack: non-zero padding in the last block")
+    return out[:n]
+
+
 def decode_array(payload: bytes | memoryview) -> np.ndarray:
     """Inverse of encode_array; returns int64 array. Raises structured errors
     on corruption (never returns wrong data silently)."""
@@ -936,6 +1119,8 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
     if cid == CODEC_BITPACK:
         u = bp.unpack(data, n, hdr[0])
         return u.view(np.int64) if u.flags.owndata else u.astype(np.int64)
+    if cid == CODEC_BLOCKPACK:
+        return _decode_blockpack(n, data, subs[0], u32=False).view(np.int64)
     if cid == CODEC_FOR:
         sub = decode_array(subs[0])
         if len(sub) != n:
@@ -1009,17 +1194,20 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
 
 def try_decode_u32(payload: bytes | memoryview) -> np.ndarray | None:
     """Decode a payload natively into uint32 when it is a terminal bitpack
-    of width <= 32, or a FOR wrapper (non-negative reference, certified
-    in-range) around one — the dominant shapes on token-scale data; None
-    otherwise. Values are < 2**32 and non-negative by construction, so the
-    caller's 32-bit arithmetic lane needs no further certification. Half
-    the memory traffic of decode_array + astype on the decode hot path."""
+    or blockpack of width <= 32, or a FOR wrapper (non-negative reference,
+    certified in-range) around one — the dominant shapes on token-scale
+    data; None otherwise. Values are < 2**32 and non-negative by
+    construction, so the caller's 32-bit arithmetic lane needs no further
+    certification. Half the memory traffic of decode_array + astype on the
+    decode hot path."""
     buf = memoryview(payload)
-    if not len(buf) or buf[0] not in (CODEC_FOR, CODEC_BITPACK):
+    if not len(buf) or buf[0] not in (CODEC_FOR, CODEC_BITPACK, CODEC_BLOCKPACK):
         return None
     cid, n, hdr, data, subs = _parse(buf)
     if cid == CODEC_BITPACK:
         return bp.unpack32(data, n, hdr[0]) if hdr[0] <= 32 else None
+    if cid == CODEC_BLOCKPACK:
+        return _decode_blockpack(n, data, subs[0], u32=True)
     (ref,) = hdr
     if not 0 <= ref < (1 << 32):
         return None

@@ -812,7 +812,36 @@ _AGREEMENT_CASES = {
                       "decode_array", "describe_payload"),
     "plain-short-data": ("CBSP104", lambda: b"\x00" + struct.pack("<IB", 1000, 4) + bytes(16),
                          "decode_array", "describe_payload"),
+    # blockpack := n:u32 len:u32 widths-sub[len] packed-groups
+    "blockpack-widths-overrun": ("CBSP104",
+                                 lambda: b"\x0a" + struct.pack("<II", 128, 50) + bytes(20),
+                                 "decode_array", "describe_payload"),
+    "blockpack-truncated-header": ("CBSP104", lambda: b"\x0a" + struct.pack("<I", 128) + b"\x06",
+                                   "decode_array", "describe_payload"),
 }
+
+
+def _blockpack(n: int, widths, data: bytes) -> bytes:
+    sub = core.encode_array(np.asarray(widths, dtype=np.int64), "plain")[0]
+    return bytes([core.CODEC_BLOCKPACK]) + struct.pack("<II", n, len(sub)) + sub + data
+
+
+@pytest.mark.parametrize("case", ["data-short", "data-long", "width-65", "widths-count"])
+def test_blockpack_content_faults_fail_decode_only(case):
+    # the packed size and the widths' values are content: decode_array
+    # rejects them typed, while describe_payload (framing only, per the
+    # Readers rule in docs/FORMAT.md) reports the payload as it stands
+    crafted, code = {
+        "data-short": (_blockpack(128, [3, 5], bytes(8 * 8 - 1)), "CBSP204"),
+        "data-long": (_blockpack(128, [3, 5], bytes(8 * 8 + 1)), "CBSP204"),
+        "width-65": (_blockpack(128, [65, 0], bytes(8 * 65)), "CBSP204"),
+        "widths-count": (_blockpack(128, [3], bytes(8 * 3)), "CBSP203"),
+    }[case]
+    assert _raised_code(core.decode_array, crafted) == code
+    assert _raised_code(core.try_decode_u32, crafted) == code
+    assert core.describe_payload(crafted)["codec"] == "blockpack"
+    ok = _blockpack(128, [3, 5], bytes(8 * 8))
+    np.testing.assert_array_equal(core.decode_array(ok), np.zeros(128, np.int64))
 
 
 def _raised_code(fn, arg):
@@ -957,6 +986,22 @@ def test_enc4_blob_with_canonical_ids_still_decodes():
     again, _ = blob.encode_chunk(*blob.decode_chunk(b))
     assert _doc_enc_flag(again) == 5 and len(again) < len(b)
     assert _content_sha(blob.decode_chunk(again)) == _content_sha(blob.decode_chunk(b))
+
+
+def test_for_bitpack_ingest_chunk_still_decodes():
+    # written before blockpack existed: 11 narrow_range docs of the
+    # benchmark's ingest corpus (seed 1), values as FOR -> one 12-bit
+    # bitpack, decode to the same content; today the same content takes
+    # FOR -> blockpack (each doc's own width) and is smaller
+    b = (_FIXTURES / "ingest_narrow_range_parent.bin").read_bytes()
+    want = "fce95bf98f049ebcf129871d78099dd48963ee5ff481df15f16eceba07ad3ca0"
+    assert _content_sha(blob.decode_chunk(b)) == want
+    sub = blob.describe_chunk(b)["values"]["payload"]["children"][0]
+    assert (sub["codec"], sub["width"]) == ("bitpack", 12)
+    again, _ = blob.encode_chunk(*blob.decode_chunk(b))
+    assert blob.describe_chunk(again)["values"]["payload"]["children"][0]["codec"] == "blockpack"
+    assert len(again) < 0.7 * len(b)
+    assert _content_sha(blob.decode_chunk(again)) == want
 
 
 def test_derived_template_resealed_fuzz_typed_or_clean():

@@ -3,6 +3,8 @@
 Mirrors the reference's per-codec in-module tests + proptest round-trips
 (tests/proptest/prop_codec_roundtrip.rs:25-117 in /root/reference)."""
 
+import struct
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -16,10 +18,15 @@ from copybook_rs_spark.codecs.core import (
     decode_array,
     encode_array,
 )
-from copybook_rs_spark.errors import CodecError, EngineError
+from copybook_rs_spark.errors import (
+    CodecError,
+    EngineError,
+    PayloadCorruptError,
+    ValueOverflowError,
+)
 
 RNG = np.random.default_rng(42)
-ALL_CODECS = ["plain", "bitpack", "for", "delta", "rle", "dict", "fsst"]
+ALL_CODECS = ["plain", "bitpack", "blockpack", "for", "delta", "rle", "dict", "fsst"]
 
 
 def choose_codec(vals: np.ndarray, stats: ChunkStats | None = None) -> str:
@@ -155,6 +162,10 @@ def test_codec_roundtrip_matrix(codec, profile):
     vals = PROFILES[profile]
     if codec == "bitpack" and (len(vals) and vals.min() < 0):
         pytest.skip("bitpack requires non-negative")
+    if codec == "blockpack" and (len(vals) and vals.min() < 0):
+        with pytest.raises(ValueOverflowError):
+            encode_array(vals, codec=codec)
+        return
     payload, used = encode_array(vals, codec=codec)
     out = decode_array(payload)
     np.testing.assert_array_equal(out, vals)
@@ -540,5 +551,146 @@ def test_analyze_fast_paths_match_brute_force():
                 np.testing.assert_array_equal(
                     rebuilt.view(np.int64), vv
                 )
+            if n >= core._BLOCKPACK_MIN_N:
+                np.testing.assert_array_equal(
+                    s._block_max,
+                    [vv[i : i + 64].max() for i in range(0, n, 64)],
+                )
+            else:
+                assert s._block_max is None
         enc, name = core.encode_array(vv, "auto")
         np.testing.assert_array_equal(core.decode_array(enc), vv)
+
+
+# ---------- blockpack (per-64-value-block bit widths) ----------
+
+
+@st.composite
+def _blockpack_streams(draw):
+    """uint64 streams of 0-1,000 values whose 64-value blocks each have a
+    drawn width (0-64; a width-w block holds a value with bit w-1 set)."""
+    n = draw(st.integers(0, 1000))
+    nb = -(-n // 64)
+    widths = draw(st.lists(
+        st.sampled_from([0, 0, 1, 2, 7, 8, 13, 31, 32, 33, 63, 64]),
+        min_size=nb, max_size=nb,
+    ))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    u = rng.integers(0, 2**64 - 1, n, dtype=np.uint64, endpoint=True)
+    for b, w in enumerate(widths):
+        blk = u[64 * b : 64 * (b + 1)]
+        if w == 0:
+            blk[:] = 0
+        else:
+            blk >>= np.uint64(64 - w)
+            blk[int(rng.integers(0, len(blk)))] |= np.uint64(1 << (w - 1))
+    return u
+
+
+@given(_blockpack_streams())
+@settings(max_examples=200, deadline=None)
+def test_blockpack_roundtrip_property(u):
+    p = core._encode_blockpack(u)
+    assert p[0] == core.CODEC_BLOCKPACK
+    out = decode_array(p)
+    np.testing.assert_array_equal(out.view(np.uint64), u)
+    # the u32 lane decodes every stream whose widths fit 32 bits, to the
+    # same values, and declines the rest
+    u32 = core.try_decode_u32(p)
+    if len(u) and int(u.max()) >= 2**32:
+        assert u32 is None
+    else:
+        assert u32 is not None and u32.dtype == np.uint32
+        np.testing.assert_array_equal(u32, out)
+    desc = core.describe_payload(p)
+    assert (desc["codec"], desc["n"], desc["bytes"]) == ("blockpack", len(u), len(p))
+    if len(u) == 0 or int(u.max()) < 2**63:  # as int64: non-negative
+        v = u.view(np.int64)
+        for codec in ("blockpack", "auto"):
+            q, _ = encode_array(v, codec=codec)
+            np.testing.assert_array_equal(decode_array(q), v)
+
+
+def test_blockpack_packs_each_width_once_and_beats_bitpack():
+    # blocks at 3, 0, 17 and 3 bits: one bitpack group per non-zero width,
+    # 8 bytes per bit of block width; a 17-bit bitpack pays 17 bits for all
+    rng = np.random.default_rng(3)
+    u = np.concatenate([
+        rng.integers(4, 8, 64), np.zeros(64, np.int64),
+        rng.integers(2**16, 2**17, 64), rng.integers(4, 8, 10),
+    ]).astype(np.uint64)
+    p = core._encode_blockpack(u)
+    sub_len = core._HDR_BLOCKPACK.unpack_from(p, 1)[1]
+    assert len(p) == 1 + 8 + sub_len + 8 * (3 + 0 + 17 + 3)
+    np.testing.assert_array_equal(decode_array(p).view(np.uint64), u)
+    assert len(p) < len(core._encode_bitpack(u.view(np.int64)))
+    v = u.view(np.int64)
+    q, name = encode_array(v)
+    assert len(q) <= len(p)
+    np.testing.assert_array_equal(decode_array(q), v)
+
+
+def test_blockpack_truncation_at_every_prefix_fails_typed():
+    rng = np.random.default_rng(8)
+    u = np.concatenate([
+        rng.integers(0, 2**40, 200), np.zeros(64, np.int64), rng.integers(0, 5, 99),
+    ]).astype(np.uint64)
+    p = core._encode_blockpack(u)
+    for k in range(len(p)):
+        with pytest.raises(EngineError):
+            decode_array(p[:k])
+        if k:  # an empty payload is simply not a u32-lane shape
+            with pytest.raises(EngineError):
+                core.try_decode_u32(p[:k])
+
+
+def test_blockpack_nonzero_padding_raises():
+    # 128 values whose second block is non-zero only at lane 5, relabelled
+    # n = 65: the two widths still match, lane 5 of block 2 becomes padding
+    u = np.zeros(128, np.uint64)
+    u[64 + 5] = 9
+    p = bytearray(core._encode_blockpack(u))
+    struct.pack_into("<I", p, 1, 65)
+    with pytest.raises(PayloadCorruptError):
+        decode_array(bytes(p))
+    with pytest.raises(PayloadCorruptError):
+        core.try_decode_u32(bytes(p))
+    struct.pack_into("<I", p, 1, 70)  # lane 5 is a real value again
+    np.testing.assert_array_equal(decode_array(bytes(p)).view(np.uint64), u[:70])
+
+
+def test_for_over_blockpack_stays_on_the_u32_lane():
+    # per-doc widths above a shared base: FOR's terminal sub-payload is a
+    # blockpack, and the 32-bit lane reads it without the int64 path
+    rng = np.random.default_rng(12)
+    v = np.concatenate([
+        100_000 + rng.integers(0, 1 << k, 640) for k in (4, 12, 8, 4)
+    ]).astype(np.int64)
+    p, name = encode_array(v)
+    assert name == "for"
+    tree = core.describe_payload(p)
+    assert tree["children"][0]["codec"] == "blockpack"
+    u32 = core.try_decode_u32(p)
+    assert u32 is not None and u32.dtype == np.uint32
+    np.testing.assert_array_equal(u32, v)
+    np.testing.assert_array_equal(decode_array(p), v)
+
+
+def test_patch_gate_opens_on_zipf_not_on_uniform():
+    # the closed-form gate: patch is tried when the bits dropping the mode
+    # saves pay for ~2 bits of gap per exception. A zipf-mod-256 stream
+    # (mode ~30%: the old majority gate never tried it) opens it, and patch
+    # wins there; a near-uniform 16-bit stream keeps it shut
+    rng = np.random.default_rng(13)
+    zipf = ((rng.zipf(1.3, 65536) - 1) % 256).astype(np.int64)
+    uniform_hi = rng.integers(0, 50257, 65536).astype(np.int64)
+    s = ChunkStats.analyze(zipf)
+    assert s.n - s.mode_count > s.n // 2
+    assert core._patch_may_pay(s.n, s.mode_count, s.vmax - s.vmin)
+    p, name = encode_array(zipf)
+    assert name == "patch"
+    assert len(p) < len(core._encode_bitpack(zipf))
+    np.testing.assert_array_equal(decode_array(p), zipf)
+    s = ChunkStats.analyze(uniform_hi)
+    assert not core._patch_may_pay(s.n, s.mode_count, s.vmax - s.vmin)
+    assert encode_array(uniform_hi)[1] != "patch"

@@ -112,7 +112,7 @@ def test_golden_typed_extras(golden, computed):
 def test_auto_selection_expected_codecs(golden):
     # FIXTURES.md invariant 5: the right codec family wins per profile
     assert golden["runs/auto"]["used"] == "rle"
-    assert golden["lowcard/auto"]["used"] in ("dict", "bitpack", "rle", "fsst")
+    assert golden["lowcard/auto"]["used"] in ("dict", "bitpack", "rle", "fsst", "patch")
     assert golden["narrow_range/auto"]["used"] in ("for", "dict", "delta")
 
 
