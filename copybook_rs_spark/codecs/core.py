@@ -44,10 +44,14 @@ Cascades come from sub-payloads choosing their own codec (depth-limited so
 encoding terminates): delta->RLE crushes arithmetic sequences, dict values
 (sorted) take delta->bitpack, RLE run lengths take FOR->bitpack, etc.
 
-Auto-selection *encodes* every depth-appropriate candidate and keeps the
-smallest (the reference's try-encode-and-measure stance); FSST is gated by a
-sampled estimate because training is the one expensive candidate. Selection
-is deterministic: fixed candidate order, strict-improvement replacement.
+Auto-selection try-encodes the depth-appropriate candidates and keeps the
+smallest (the reference's try-encode-and-measure stance). A candidate is
+skipped only when its exact lower bound cannot beat the best so far, when it
+is provably dominated (FOR at bitpack's widths), or by one of the measured
+heuristic gates listed in docs/FORMAT.md (rle run density, dict est-prune,
+patch, pfor); FSST is gated by a sampled estimate because training is the
+one expensive candidate. Selection is deterministic: fixed candidate order,
+strict-improvement replacement.
 """
 
 from __future__ import annotations
@@ -137,11 +141,6 @@ class ChunkStats:
     is_sorted: bool
     max_run_len: int
     max_zz_delta: int
-    n_delta_runs: int = 0  # runs in the (modular) diff stream
-    zz_delta_p99: int = 0  # 99th-percentile zigzag delta (0 = unknown,
-    # -1 = deferred: analyze found the delta-gate precondition holds but
-    # left the partition pass to zz_p99_value(), which most callers never
-    # reach — round-5 profile: ~3/4 of the p99 partitions were unconsumed)
     mode_count: int = 0  # frequency of the most common value (0 = unknown)
     mode_value: int = 0  # the most common value (valid iff mode_count > 0;
     # ties broken toward the SMALLEST value on every stats path)
@@ -171,20 +170,6 @@ class ChunkStats:
             w = self._widths_at[ref] = bp.bit_lengths(bm)
         return w
 
-    def zz_p99_value(self) -> int:
-        """Resolve the (possibly deferred) robust delta width. The max(1,
-        ...) keeps the outlier exclusion meaningful at small n, where a
-        plain p99 degenerates to the max and re-includes the outlier.
-        Identical to the value analyze used to compute eagerly; caches
-        into zz_delta_p99 so repeat reads are free."""
-        if self.zz_delta_p99 == -1 and self._zz_full is not None:
-            zz_rest = self._zz_full[1:]
-            k = len(zz_rest) - 1 - max(1, len(zz_rest) // 100)
-            self.zz_delta_p99 = (
-                int(np.partition(zz_rest, k)[k]) if k >= 0 else 0
-            )
-        return max(self.zz_delta_p99, 0)
-
     @classmethod
     def analyze(
         cls, vals: np.ndarray, deep: bool = True, with_uniq: bool = True
@@ -210,7 +195,6 @@ class ChunkStats:
             return cls(
                 n=1, vmin=x, vmax=x, n_distinct=1, n_runs=1,
                 is_sorted=True, max_run_len=1, max_zz_delta=int(zz_full[0]),
-                zz_delta_p99=int(zz_full[0]), n_delta_runs=1,
                 mode_count=1 if deep else 0, mode_value=x if deep else 0,
                 # .copy(): the general path's np.unique always returns a
                 # fresh array; aliasing the caller's buffer here would let
@@ -237,11 +221,6 @@ class ChunkStats:
             run_bounds = np.concatenate(([-1], breaks, [n - 1]))
             max_run = int(np.diff(run_bounds).max())
         is_sorted = bool((v[1:] >= v[:-1]).all()) if n > 1 else True
-        # lower bound on runs in the zigzag-delta stream (zigzag injective,
-        # so runs(diffs) lower-bounds runs of the full [v0]+diffs stream)
-        n_delta_runs = (
-            int((diffs_u[1:] != diffs_u[:-1]).sum()) + 1 if n > 2 else min(n, 1)
-        )
         mode_val = 0
         n_dist = n
         if deep and n > 64 and 0 <= vmax - vmin <= max(4 * n, 1 << 16):
@@ -284,20 +263,6 @@ class ChunkStats:
         if n > 1:
             vi.zigzag_encode(diffs_u.view(np.int64), out=zz_full[1:])
         max_zz = int(zz_full.max())
-        # robust delta width: largest zigzag delta EXCLUDING the top
-        # max(1, 1%) outliers (exact kth via partition) — distinguishes
-        # "uniformly wide deltas" (delta can't win) from "small deltas +
-        # a few outlier jumps" (delta+pfor territory). Relevant only when
-        # the delta gate's run-density precondition holds (0 disables the
-        # gate, which would not have fired anyway) — and even then the
-        # O(n) partition is DEFERRED to zz_p99_value(): the gate consults
-        # it only when delta is still a live candidate with a best-so-far.
-        if n > 2 and n_delta_runs > max(n // 2, 4):
-            zz_p99 = -1  # deferred
-        elif n > 2:
-            zz_p99 = 0
-        else:
-            zz_p99 = max_zz
         return cls(
             n=n,
             vmin=vmin,
@@ -307,8 +272,6 @@ class ChunkStats:
             is_sorted=is_sorted,
             max_run_len=max_run,
             max_zz_delta=max_zz,
-            zz_delta_p99=zz_p99,
-            n_delta_runs=n_delta_runs,
             mode_count=mode_cnt,
             mode_value=mode_val,
             _uniq=uniq,
@@ -667,99 +630,6 @@ def _encode_named(name: str, v: np.ndarray, stats: ChunkStats | None, depth: int
     raise UnknownCodecError(f"unknown codec {name!r}")
 
 
-_DELTA_GATE_SAMPLE = 4096
-
-
-def _delta_skip_confirmed(
-    v: np.ndarray, best_len: int, depth: int, stats: ChunkStats | None = None
-) -> bool:
-    """Confirm the run-free-wide-delta skip: build the EXACT zigzag stream
-    `_encode_delta` would hand to the sub-cascade and certify, with checks
-    that mirror the sub-cascade's own gates plus two independent optimistic
-    size estimates, that the delta candidate cannot beat `best_len`.
-
-    Layers (any one failing -> no skip, the full delta cascade runs):
-      1. zz sorted, run-dense, or a mode that opens the patch gate -> the
-         sub-cascade's rle/patch branches stay in play (they can reach O(1)
-         bytes on such streams, so no closed-form floor is sound) -> never
-         skip. The mode check is EXACT (max run in sorted zz) and runs the
-         sub-cascade's own patch gate (_patch_may_pay) on the same stream —
-         this closes the round-3 ADVICE hole where a two-value oscillating
-         delta stream (patch O(1)) was skipped at a measured 385x size cost.
-      2. Width-frontier floor over SORTED zz with min-subtraction: best of
-         direct bitpack, FOR(+bitpack), and every pfor split w with the
-         exception high-bits themselves FOR-packed (gap streams taken as
-         free); plus the blockpack floors of zz in stream order, direct and
-         under FOR. Min-subtraction matters: zigzag maps cancelling +/-
-         deltas to ADJACENT codes, so run-free oscillations become a narrow
-         re-referenced band the old absolute-width histogram priced at full
-         magnitude.
-      3. Prefix-sample real encode (the FSST-gate pattern): the actual
-         sub-cascade on zz[:4096], linearly extrapolated. Catches global
-         structure no closed form models — delta-of-delta, structured
-         exception values. Skip only if BOTH estimates are >= best_len.
-
-    Remaining escape: structure confined to the stream's suffix (regime
-    change past the sample) that also defeats every exact check above —
-    a deliberate heuristic residue, same stance as the rle/dict gates.
-    Deterministic: a pure function of the data. Costs ~one sort + a
-    4096-value encode vs the full try's analyze + recursive try-encodes."""
-    n = len(v)
-    if n <= _DELTA_GATE_SAMPLE:
-        return False  # sample == whole stream: gate saves nothing
-    if stats is not None and stats._zz_full is not None and stats.n == n:
-        zz = stats._zz_full  # read-only below (np.sort copies)
-    else:
-        vu = np.ascontiguousarray(v, dtype=np.int64).view(np.uint64)
-        d = np.empty(n, dtype=np.uint64)
-        d[0] = vu[0]
-        np.subtract(vu[1:], vu[:-1], out=d[1:])  # modular, as _encode_delta
-        zz = vi.zigzag_encode(d.view(np.int64)).view(np.uint64)
-    # --- layer 1: sub-cascade rle/patch branches must be provably closed
-    if bool((zz[1:] >= zz[:-1]).all()):
-        return False  # sorted zz: rle/delta-friendly downstream
-    if np.count_nonzero(zz[1:] != zz[:-1]) + 1 <= max(n // 2, 4):
-        return False  # run-dense zz: rle stays in play
-    szz = np.sort(zz)
-    brk = np.flatnonzero(szz[1:] != szz[:-1])
-    run_bounds = np.concatenate(([-1], brk, [n - 1]))
-    mode_count = int(np.diff(run_bounds).max())
-    if _patch_may_pay(n, mode_count, int(szz[-1]) - int(szz[0])):
-        return False  # the sub-cascade tries patch, which can reach O(1)
-    # --- layer 2: width-frontier floor (min-referenced, sorted residuals)
-    resid = szz - szz[0]
-    top = bp.bit_width(int(resid[-1]))
-    if top == 0:
-        return False
-    floor = 6 + bp.packed_size(n, bp.bit_width(int(szz[-1])))
-    floor = min(floor, 13 + 6 + bp.packed_size(n, top))
-    bmax = _block_max(zz)
-    floor = min(
-        floor,
-        _blockpack_floor(bp.bit_lengths(bmax)),
-        13 + _blockpack_floor(bp.bit_lengths(bmax - szz[0])),
-    )
-    # count of residuals with bit length <= w == count < 2**w: one
-    # vectorized searchsorted over the SORTED residuals replaces the
-    # O(n) per-element bit_lengths pass (identical counts by definition)
-    le_counts = np.searchsorted(resid, _POW2[1:top]) if top > 1 else None
-    for w in range(1, top):
-        k = n - int(le_counts[w - 1])
-        if k == 0:
-            continue
-        w_exc = bp.bit_width((int(resid[-1]) >> w) - (int(resid[n - k]) >> w))
-        floor = min(floor, 18 + bp.packed_size(n, w) + bp.packed_size(k, w_exc))
-    if 5 + floor < best_len:
-        return False
-    # --- layer 3: prefix-sample real sub-cascade, extrapolated
-    sub, _ = encode_array(
-        zz[:_DELTA_GATE_SAMPLE].view(np.int64), codec="auto", depth=depth + 1
-    )
-    if 5 + len(sub) * (n / _DELTA_GATE_SAMPLE) < best_len:
-        return False
-    return True
-
-
 def encode_array(
     vals: np.ndarray,
     codec: str = "auto",
@@ -776,19 +646,20 @@ def encode_array(
                 return plain, "plain"
         return out, codec
     if stats is None:
-        # deep stats (unique + counts) through depth 2 so dict gating is
-        # exact and patch can see the mode of delta/index sub-streams
+        # deep stats (unique + counts) through depth 2 so dict's estimate
+        # is exact and patch can see the mode of delta/index sub-streams
         stats = ChunkStats.analyze(
             v, deep=(depth <= 2), with_uniq=(depth == 0)
         )
     names = _DEPTH_CANDIDATES[min(depth, _MAX_DEPTH)]
     est = estimate_sizes(stats)
     lb = _lower_bounds(stats)
-    # best-estimate-first with lower-bound pruning. The lb skips are exact
-    # (a skipped candidate provably cannot be strictly smaller than the
-    # current best); the rle/dict/patch gates below are deliberate
-    # heuristics — the structures rle/dict might miss (periodic/low-
-    # cardinality streams) are exactly what patch/pfor capture directly.
+    # best-estimate-first with lower-bound pruning. The lb skips and the FOR
+    # dominance skip are exact (a skipped candidate provably cannot be
+    # strictly smaller than the current best); the rle, dict, patch and
+    # pfor gates are heuristics, each kept because dropping it costs far
+    # more encode time than the bytes it would find (receipts in
+    # docs/FORMAT.md). Every other candidate, delta included, is tried.
     # Deterministic either way: every decision is a pure function of the
     # data.
     ordered = [
@@ -812,8 +683,6 @@ def encode_array(
             # their run-values are monotone, so rle's value sub-stream
             # delta-compresses (e.g. sorted timestamps with duplicate
             # bursts beat delta-on-raw by ~15%)
-        if name == "dict" and stats.n_distinct > max(stats.n // 2, 4):
-            continue  # heuristic, same reasoning
         if name == "dict" and best is not None and (
             est.get("dict", 0) > 1.25 * len(best) + 64
         ):
@@ -832,18 +701,6 @@ def encode_array(
             # over the blocks, so equal per block) make FOR's terminal
             # sub-payload the size of direct bitpack/blockpack/plain plus a
             # 13-byte reference header — it can never win
-        if name == "delta" and best is not None and (
-            stats.n_delta_runs > max(stats.n // 2, 4)
-            and 0 < stats.zz_p99_value()
-            and stats.zz_p99_value() >= stats.vmax - stats.vmin
-        ) and _delta_skip_confirmed(v, len(best), depth, stats):
-            continue  # a run-free delta stream whose typical (p99) width
-            # already covers the value range usually offers the cascade
-            # nothing; _delta_skip_confirmed certifies that with exact
-            # mirrors of the sub-cascade's rle/patch gates plus TWO
-            # optimistic estimates (min-referenced width frontier AND a
-            # prefix-sample real encode) — see its docstring for the one
-            # documented heuristic residue (suffix-only structure).
         if name == "patch" and not _patch_may_pay(
             stats.n, stats.mode_count, stats.vmax - stats.vmin
         ):

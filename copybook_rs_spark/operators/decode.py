@@ -32,19 +32,18 @@ from copybook_rs_spark.errors import (
 @dataclass(frozen=True)
 class DecodeOptions:
     """Error policy for decode jobs — the engine face of the reference's
-    DecodeOptions strict/lenient + max_errors + fail_fast knobs
+    DecodeOptions strict/lenient + max_errors knobs
     (crates/copybook-options/src/lib.rs:48-83).
 
     policy: "strict" (default — first corrupt chunk fails the job) or
     "lenient" (corrupt chunks are skipped and counted).
     max_errors: lenient error budget; run_decode_resumable fails typed
-    (CBSP205) once the total corrupt-chunk count exceeds it.
-    fail_fast: lenient, but abort on the first error after counting it
-    (report-then-stop, vs strict's raw raise)."""
+    (CBSP205) once the total corrupt-chunk count exceeds it; max_errors=0
+    aborts at the first corrupt chunk after counting it (report-then-stop,
+    vs strict's raw raise)."""
 
     policy: str = "strict"
     max_errors: int = 0
-    fail_fast: bool = False
 
 
 _ALL_COLUMNS = ("doc_id", "tokens", "n_tok", "source")
@@ -171,7 +170,7 @@ def make_decode_kernel(
     into err_acc; each task additionally self-aborts once ITS error count
     alone exceeds max_errors (task-local count lower-bounds the global one,
     so a massively-corrupt table fails mid-flight instead of scanning to the
-    end), and fail_fast aborts on the first error after counting it.
+    end).
 
     Output batches are coalesced to ~16Ki rows before crossing the
     Arrow IPC boundary: one ~2k-row batch per chunk made the JVM-side
@@ -197,10 +196,6 @@ def make_decode_kernel(
                         err_acc.add(1)
                     if sample_acc is not None and task_errors <= 5:
                         sample_acc.add([f"{sources[i]}: {e}"])
-                    if opts.fail_fast:
-                        raise ErrorBudgetExceededError(
-                            f"fail_fast: first corrupt chunk aborts ({e})"
-                        ) from e
                     if task_errors > opts.max_errors:
                         raise ErrorBudgetExceededError(
                             f"task exceeded max_errors={opts.max_errors} "

@@ -64,7 +64,6 @@ def main() -> int:
     ap.add_argument("--columns", default="", help="comma-separated projection")
     ap.add_argument("--policy", default="strict", choices=["strict", "lenient"])
     ap.add_argument("--max-errors", type=int, default=0)
-    ap.add_argument("--fail-fast", action="store_true")
     ap.add_argument("--shards", type=int, default=1)
     ap.add_argument(
         "--token-dtype", default="int32", choices=["int32", "int64"],
@@ -92,9 +91,7 @@ def main() -> int:
     extras = tuple(c.strip() for c in args.extra_columns.split(",") if c.strip())
     cfg = EncodeConfig(token_dtype=args.token_dtype, extra_columns=extras)
     columns = [c.strip() for c in args.columns.split(",") if c.strip()] or None
-    opts = DecodeOptions(
-        policy=args.policy, max_errors=args.max_errors, fail_fast=args.fail_fast
-    )
+    opts = DecodeOptions(policy=args.policy, max_errors=args.max_errors)
 
     chunk_df = spark.read.parquet(args.input)
     t0 = time.time()

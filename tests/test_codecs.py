@@ -309,13 +309,17 @@ def test_exception_gap_overflow_raises_typed_error():
 
 
 def test_selection_gates_never_cost_much():
-    # the r3 candidate-pruning gates (FOR dominance, dict est-prune,
-    # floor-confirmed delta skip) must keep auto within a whisker of the
-    # best NAMED codec on adversarial stream shapes — including the ones
-    # each gate was designed around
+    # the candidate-pruning gates (FOR dominance, rle run density, dict
+    # est-prune, patch, pfor) must keep auto within a whisker of the best
+    # NAMED codec on adversarial stream shapes — including the ones each
+    # gate was designed around
     rng = np.random.default_rng(5)
     streams = {
         "uniform_wide": rng.integers(0, 32000, 20000).astype(np.int64),
+        # wide run-free deltas with no structure: every cascade loses to a
+        # plain bitpack, and auto must find it
+        "uniform_31bit": np.random.default_rng(11).integers(
+            0, 2**31, 64000).astype(np.int64),
         "sorted_rand": np.sort(rng.integers(0, 10**9, 20000)).astype(np.int64),
         "staircase_2step": np.cumsum(rng.choice([7, 13], 20000)).astype(np.int64),
         "oscillate_2pt": rng.choice([0, 32000], 20000).astype(np.int64),
@@ -331,7 +335,7 @@ def test_selection_gates_never_cost_much():
             np.where(rng.random(20000) < 0.01, 10**12, rng.integers(0, 9, 20000))
         ).astype(np.int64),
     }
-    exact = {"uniform_wide", "sorted_rand", "staircase_2step",
+    exact = {"uniform_wide", "uniform_31bit", "sorted_rand", "staircase_2step",
              "oscillate_2pt", "sorted_extreme_gaps", "small_delta_outliers"}
     for name, v in streams.items():
         auto, used = core.encode_array(v, codec="auto")
@@ -347,12 +351,11 @@ def test_selection_gates_never_cost_much():
         assert len(auto) <= best_named * 1.25 + 64, (name, used, len(auto), best_named)
 
 
-def test_delta_skip_gate_sees_structured_zigzag_streams():
-    # round-3 ADVICE (medium): the old _delta_floor only modeled
-    # bitpack/pfor layouts of the zigzag stream at ABSOLUTE widths, so a
-    # run-free low-cardinality delta stream (two-level oscillation with
-    # drift) was skipped while delta would have won 385x. The rebuilt gate
-    # must keep the delta candidate in play on every such shape.
+def test_auto_never_loses_to_forced_delta():
+    # run-free delta streams whose zigzag stream still has structure (a
+    # two-level oscillation with drift, where delta wins 385x; periodic,
+    # near-arithmetic and clustered deltas): auto must never lose to
+    # forcing delta on any of them
     n = 10000
     i = np.arange(n, dtype=np.int64)
     adversarial = {
@@ -363,11 +366,11 @@ def test_delta_skip_gate_sees_structured_zigzag_streams():
         "periodic_3": np.cumsum(np.tile(
             np.array([2**39, 2**39, -(2**40)], dtype=np.int64), n // 3)),
         # alternating-sign growing deltas: zz is near-arithmetic ->
-        # delta-of-delta (depth-1 delta) wins; only the sample layer sees it
+        # delta-of-delta (depth-1 delta) wins
         "alt_sign_growing": np.cumsum(
             np.where(i % 2 == 0, 1, -1) * (i * 2**19 + 1)),
         # deltas in two tight magnitude clusters of both signs: zz is a
-        # narrow band after min-referencing (layer-2 territory)
+        # narrow band after min-referencing
         "two_cluster": np.cumsum(
             np.where(i % 2 == 0, 2**39 + (i % 7), -(2**39) - ((i + 3) % 5))),
     }
@@ -381,22 +384,6 @@ def test_delta_skip_gate_sees_structured_zigzag_streams():
     # sanity on the headline case: delta is a HUGE win and auto takes it
     v = adversarial["oscillation_drift"]
     assert len(core.encode_array(v, codec="auto")[0]) < 1000
-
-
-def test_delta_skip_gate_still_fires_on_high_entropy():
-    # the gate's home turf: wide run-free deltas with no structure — the
-    # skip must confirm (this is the 4x-auto speedup case) and auto must
-    # still match the best named codec exactly
-    rng = np.random.default_rng(11)
-    v = rng.integers(0, 2**31, 64000).astype(np.int64)
-    stats = core.ChunkStats.analyze(v)
-    assert stats.n_delta_runs > max(stats.n // 2, 4)
-    assert stats.zz_p99_value() >= stats.vmax - stats.vmin
-    best = core.encode_array(v, codec="bitpack")[0]
-    assert core._delta_skip_confirmed(v, len(best), 0)
-    auto, used = core.encode_array(v, codec="auto")
-    np.testing.assert_array_equal(core.decode_array(auto), v)
-    assert len(auto) <= len(best)
 
 
 def test_bincount_stats_path_matches_unique_path():
