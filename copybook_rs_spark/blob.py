@@ -541,10 +541,7 @@ def _template_fields(
     arrs = []
     for _ in range(k * per_field):
         payload, off = _sized(buf, off, "template payload")
-        arrs.append(core.decode_array(payload))
-    for arr in arrs:
-        if len(arr) != n:
-            raise CountMismatchError("template payload count != n_rows")
+        arrs.append(core.decode_array(payload, n))
     vv = np.stack(arrs[::per_field], axis=1)
     if derived:
         if (vv < 0).any():
@@ -666,8 +663,8 @@ def _decode_doc_bytes(
         if doc_lens is None:
             raise HeaderInvalidError("front-coded doc bytes need doc_lens")
         lcp_payload, off = _sized(body, 0, "front-code lcp")
-        lcp = core.decode_array(lcp_payload)
-        suf_expected = int((np.asarray(doc_lens, dtype=np.int64) - lcp).sum()) if len(lcp) == len(doc_lens) else -1
+        lcp = core.decode_array(lcp_payload, len(doc_lens))
+        suf_expected = int((np.asarray(doc_lens, dtype=np.int64) - lcp).sum())
         suf = _decode_doc_bytes(body[off:], max(suf_expected, 0))
         return _front_decode(lcp, doc_lens, suf)
     if enc in (_ENC_TEMPLATE, _ENC_DERIVED):
@@ -767,15 +764,10 @@ def _decode_values(
             # materialization, no downstream astype (values >= 0 and
             # < 2**31 by construction, so the int32 view is exact; the
             # caller's min/max cross-check still guards the header)
-            v32 = core.try_decode_u32(parts[0])
+            v32 = core.try_decode_u32(parts[0], n_values)
             if v32 is not None and (len(v32) == 0 or int(v32.max()) < (1 << 31)):
                 return v32.view(np.int32)
-        return core.decode_array(parts[0])
-    firsts = core.decode_array(parts[0])
-    # u32-native intra decode when the payload is a terminal bitpack
-    # (w <= 32 guarantees the 32-bit-lane eligibility below for free)
-    intra32 = core.try_decode_u32(parts[1]) if cert32 else None
-    intra_zz = intra32 if intra32 is not None else core.decode_array(parts[1])
+        return core.decode_array(parts[0], n_values)
     lens = np.ascontiguousarray(lengths, dtype=np.int64)
     n_docs = len(lens)
     starts = np.zeros(n_docs, dtype=np.int64)
@@ -787,10 +779,13 @@ def _decode_values(
         # no nonempty doc can own these values — a crafted section must
         # fail typed, never cumsum fabricated data (review finding)
         raise CountMismatchError("doc-aware values: values without docs")
-    if len(firsts) != k:
-        raise CountMismatchError("doc-aware values: firsts count mismatch")
-    if len(intra_zz) != n_values - k:
-        raise CountMismatchError("doc-aware values: intra count mismatch")
+    firsts = core.decode_array(parts[0], k)
+    # u32-native intra decode when the payload is a terminal bitpack
+    # (w <= 32 guarantees the 32-bit-lane eligibility below for free)
+    intra32 = core.try_decode_u32(parts[1], n_values - k) if cert32 else None
+    intra_zz = (
+        intra32 if intra32 is not None else core.decode_array(parts[1], n_values - k)
+    )
     # single mask, already negated: both lanes only ever scatter into the
     # NON-start positions (saves a second n-sized bool array + negation)
     nonstart = np.ones(n_values, dtype=bool)
@@ -892,9 +887,7 @@ def _decode_float_section(buf: memoryview, n: int, dtype) -> np.ndarray:
     mode = buf[0]
     body = buf[1:]
     if mode == 0:
-        bits = core.decode_array(body)
-        if len(bits) != n:
-            raise CountMismatchError("float section: bits count mismatch")
+        bits = core.decode_array(body, n)
         if itemsize == 4:
             if n and (int(bits.min()) < 0 or int(bits.max()) >= 1 << 32):
                 raise PayloadCorruptError("float32 bits outside 32-bit range")
@@ -906,9 +899,7 @@ def _decode_float_section(buf: memoryview, n: int, dtype) -> np.ndarray:
     off = 0
     for j in range(itemsize):
         payload, off = _sized(body, off, "float plane")
-        plane = core.decode_array(payload)
-        if len(plane) != n:
-            raise CountMismatchError("float plane count mismatch")
+        plane = core.decode_array(payload, n)
         if n and (int(plane.min()) < 0 or int(plane.max()) > 255):
             raise PayloadCorruptError("float plane byte out of range")
         out[:, j] = plane.astype(np.uint8)
@@ -1089,9 +1080,7 @@ def _decode_extras(
     for name, t, lbuf, vbuf in _extras_columns(f.tail):
         if names is not None and name not in names:
             continue  # projection: nothing decompressed for skipped columns
-        lens = core.decode_array(lbuf)
-        if len(lens) != n_rows:
-            raise CountMismatchError(f"extras[{name}]: lengths count != n_rows")
+        lens = core.decode_array(lbuf, n_rows)
         if n_rows and (lens < 0).any():
             raise PayloadCorruptError(f"extras[{name}]: negative length")
         n_vals = int(lens.sum()) if n_rows else 0
@@ -1100,7 +1089,7 @@ def _decode_extras(
         elif t.lane == "float":
             vals = _decode_float_section(vbuf, n_vals, t.np_dtype)
         else:  # int64, or decimal(p,s) as its unscaled int64s
-            vals = core.decode_array(vbuf)
+            vals = core.decode_array(vbuf, n_vals)
             if _exceeds_precision(t, vals):
                 raise PayloadCorruptError(
                     f"extras[{name}]: unscaled value exceeds {t.name} precision"
@@ -1205,18 +1194,14 @@ def decode_chunk(
         if stream[0] == _ENC_DERIVED:
             doc_bytes, doc_lens = _decode_template(stream, n_rows)
         else:
-            doc_lens = core.decode_array(dl_payload)
-            if len(doc_lens) != n_rows:
-                raise CountMismatchError("doc_lens count != n_rows")
+            doc_lens = core.decode_array(dl_payload, n_rows)
             if n_rows and (doc_lens < 0).any():
                 raise PayloadCorruptError("negative doc_id length")
             expected_doc_len = int(doc_lens.sum()) if n_rows else 0
             doc_bytes = _decode_doc_bytes(stream, expected_doc_len, doc_lens)
             if len(doc_bytes) != expected_doc_len:
                 raise CountMismatchError("doc_id bytes length mismatch")
-    lengths = core.decode_array(f.lengths)
-    if len(lengths) != n_rows:
-        raise CountMismatchError("lengths count != n_rows")
+    lengths = core.decode_array(f.lengths, n_rows)
     if n_rows and (lengths < 0).any():
         raise PayloadCorruptError("negative token count")
     # no n_rows guard: empty lengths sum to 0, so a crafted header with
@@ -1228,8 +1213,6 @@ def decode_chunk(
     if need_values:
         cert32 = -(2**31) <= f.vmin and f.vmax < 2**31
         values = _decode_values(f.values, n_values, lengths, cert32)
-        if len(values) != n_values:
-            raise CountMismatchError("values count != n_values")
         if n_values and (int(values.min()) != f.vmin or int(values.max()) != f.vmax):
             # defense in depth: v3 puts vmin/vmax INSIDE the body crc
             # (_body_crc), so header tampering already fails the checksum;

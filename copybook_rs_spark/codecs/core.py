@@ -1,5 +1,5 @@
 """Self-describing integer-array payloads: plain / bitpack / blockpack / FOR /
-delta / RLE / dict / FSST, with cascades and honest try-encode
+delta / RLE / dict / FSST / huffman, with cascades and honest try-encode
 auto-selection.
 
 Payload grammar (all little-endian, `codec_id:u8` first — the analogue of the
@@ -39,6 +39,11 @@ crates/copybook-codec/src/numeric.rs:308-396):
               ascending width order, as ONE bitpack data block. The packed
               groups run to the end of the payload and hold exactly
               8 * sum(widths) bytes.
+  huffman  := n:u32 d:u32 len1:u32 sub1:payload(sorted distinct values)
+              len2:u32 sub2:payload(code lengths, 1..16)
+              len3:u32 sub3:payload(bits per 64-value block) stream —
+              canonical Huffman, codes ordered by (length, symbol), the
+              stream MSB-first and exactly ceil(sum(bits) / 8) bytes
 
 Cascades come from sub-payloads choosing their own codec (depth-limited so
 encoding terminates): delta->RLE crushes arithmetic sequences, dict values
@@ -49,9 +54,9 @@ smallest (the reference's try-encode-and-measure stance). A candidate is
 skipped only when its exact lower bound cannot beat the best so far, when it
 is provably dominated (FOR at bitpack's widths), or by one of the measured
 heuristic gates listed in docs/FORMAT.md (rle run density, dict est-prune,
-patch, pfor); FSST is gated by a sampled estimate because training is the
-one expensive candidate. Selection is deterministic: fixed candidate order,
-strict-improvement replacement.
+patch, pfor, the huffman alphabet cap); FSST is gated by a sampled estimate
+because training is the one expensive candidate. Selection is deterministic:
+fixed candidate order, strict-improvement replacement.
 """
 
 from __future__ import annotations
@@ -84,6 +89,7 @@ CODEC_PFOR = 8
 CODEC_DOCDELTA = 9  # blob-level values-section mode 1 (blob.py); reported
 # in the chunk header/manifest, never a payload codec id
 CODEC_BLOCKPACK = 10
+CODEC_HUFFMAN = 11
 
 CODEC_NAMES = {
     CODEC_PLAIN: "plain",
@@ -97,13 +103,14 @@ CODEC_NAMES = {
     CODEC_PFOR: "pfor",
     CODEC_DOCDELTA: "docdelta",
     CODEC_BLOCKPACK: "blockpack",
+    CODEC_HUFFMAN: "huffman",
 }
 CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
 
 # candidate order = deterministic tie-break (earlier wins on equal size)
 _DEPTH_CANDIDATES = {
     0: ("bitpack", "blockpack", "for", "delta", "rle", "dict", "patch", "pfor",
-        "plain"),
+        "huffman", "plain"),
     1: ("bitpack", "blockpack", "for", "delta", "rle", "patch", "pfor", "plain"),
     # no delta at depth 2: third differences never paid in measurement and
     # the nested 64Ki-stream cascade cost ~10 ms/chunk (delta-of-delta is
@@ -125,6 +132,11 @@ _BLOCK = 64  # values per blockpack block: part of the format, not a knob
 _BLOCKPACK_MIN_N = 2 * _BLOCK
 _HDR_BLOCKPACK = struct.Struct("<II")  # n, widths sub-payload length
 _MIN_PAYLOAD = 6  # codec id + the smallest header (plain/bitpack, n = 0)
+
+_HUFFMAN_MIN_N = 2 * _BLOCK
+_HUFFMAN_MAX_D = 4096  # alphabet cap of the candidate (the format takes 2^16)
+_HUFFMAN_MAX_LEN = 16  # code length limit: part of the format
+_HDR_HUFFMAN = struct.Struct("<II")  # n, d
 
 
 @dataclass
@@ -156,6 +168,27 @@ class ChunkStats:
     # from them, so the candidates' exact data sizes cost no further pass
     _block_max: np.ndarray | None = field(default=None, repr=False)
     _widths_at: dict = field(default_factory=dict, repr=False)
+    # occurrence count of each of _uniq (depth-0 stats only): the histogram
+    # that prices huffman exactly (entropy bound) and gives its code lengths
+    _counts: np.ndarray | None = field(default=None, repr=False)
+    _entropy_bits: float | None = field(default=None, repr=False)
+
+    def huffman_ok(self) -> bool:
+        """huffman is a candidate: a depth-0 histogram, at least two blocks
+        of values, and 2.._HUFFMAN_MAX_D distinct values."""
+        return (
+            self._counts is not None
+            and self.n >= _HUFFMAN_MIN_N
+            and 2 <= self.n_distinct <= _HUFFMAN_MAX_D
+        )
+
+    def entropy_bits(self) -> float:
+        """n times the order-0 entropy of the histogram: no prefix code
+        (huffman's stream) holds the values in fewer bits. Cached."""
+        if self._entropy_bits is None:
+            c = self._counts.astype(np.float64)
+            self._entropy_bits = float(c @ np.log2(self.n / c))
+        return self._entropy_bits
 
     def block_widths(self, ref: int) -> np.ndarray | None:
         """bit_length(block max - ref) per 64-value block, or None below
@@ -237,6 +270,7 @@ class ChunkStats:
             if with_uniq:
                 nz = np.flatnonzero(counts)
                 uniq = nz + vmin
+                ucounts = counts[nz]
                 n_dist = len(nz)
             else:
                 uniq = None
@@ -254,6 +288,8 @@ class ChunkStats:
         else:
             uniq = None
             mode_cnt = 0
+        if uniq is None:
+            ucounts = None
         zz_full = np.empty(n, dtype=np.uint64)
         # scalar zigzag for the first element (python-int two's-complement
         # arithmetic + 64-bit mask == the vector op; saves a 1-element
@@ -278,6 +314,7 @@ class ChunkStats:
             _run_break_idx=breaks,
             _zz_full=zz_full,
             _block_max=_block_max(v) if n >= _BLOCKPACK_MIN_N else None,
+            _counts=ucounts,
         )
 
 
@@ -603,6 +640,110 @@ def _encode_fsst(vals: np.ndarray) -> bytes:
     return b"".join(out)
 
 
+def _huffman_lengths(counts: np.ndarray) -> np.ndarray:
+    """Code length of each symbol, a pure function of the histogram.
+    Huffman's two-queue merge runs over the leaves sorted by (count,
+    symbol), taking the leaf on equal weight; the JPEG adjustment of the
+    length histogram (ITU-T T.81 Annex K.3) then limits the depths to
+    _HUFFMAN_MAX_LEN, and the lengths go out shortest first in (count
+    descending, symbol) order."""
+    d = len(counts)
+    ids = np.arange(d)
+    w = counts[np.lexsort((ids, counts))].tolist() + [0] * (d - 1)
+    parent = [0] * (2 * d - 1)
+    i, j = 0, d  # next leaf, next internal node
+    for k in range(d, 2 * d - 1):
+        if i < d and (j >= k or w[i] <= w[j]):
+            a, i = i, i + 1
+        else:
+            a, j = j, j + 1
+        if i < d and (j >= k or w[i] <= w[j]):
+            b, i = i, i + 1
+        else:
+            b, j = j, j + 1
+        w[k] = w[a] + w[b]
+        parent[a] = parent[b] = k
+    depth = [0] * (2 * d - 1)
+    for x in range(2 * d - 3, d - 1, -1):
+        depth[x] = depth[parent[x]] + 1
+    leaf_depth = np.asarray(depth)[np.asarray(parent[:d])] + 1
+    bl = np.bincount(leaf_depth).tolist()
+    for i in range(len(bl) - 1, _HUFFMAN_MAX_LEN, -1):
+        while bl[i]:
+            j = i - 2
+            while not bl[j]:
+                j -= 1
+            bl[i] -= 2
+            bl[i - 1] += 1
+            bl[j + 1] += 2
+            bl[j] -= 1
+    lengths = np.empty(d, dtype=np.int64)
+    lengths[np.lexsort((ids, -counts))] = np.repeat(np.arange(len(bl)), bl)
+    return lengths
+
+
+def _canonical(lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray, int]:
+    """Canonical code order of a complete code: symbol indices sorted by
+    (length, symbol), each code's span in a table of 2^maxlen entries
+    (its codes are the consecutive spans), and maxlen."""
+    top = int(lengths.max())
+    order = np.lexsort((np.arange(len(lengths)), lengths))
+    return order, np.left_shift(1, top - lengths[order]), top
+
+
+def _encode_huffman(vals: np.ndarray, stats: ChunkStats | None = None) -> bytes:
+    """Canonical Huffman over the sorted distinct values. The stream is
+    MSB-first, block after block of 64 values; the bit count of each block
+    is stored so the decoder can start every block at once."""
+    v = np.ascontiguousarray(vals, dtype=np.int64)
+    n = len(v)
+    if stats is not None and stats._counts is not None and stats.n == n:
+        uniq, counts = stats._uniq, stats._counts
+    else:
+        uniq, counts = np.unique(v, return_counts=True)
+    d = len(uniq)
+    if not 2 <= d <= 1 << _HUFFMAN_MAX_LEN:
+        raise ValueOverflowError(f"huffman needs 2 to 65536 distinct values, got {d}")
+    lengths = _huffman_lengths(counts)
+    order, span, top = _canonical(lengths)
+    codes = np.empty(d, dtype=np.int64)
+    codes[order] = (np.cumsum(span) - span) >> (top - lengths[order])
+    lo = int(uniq[0])
+    if int(uniq[-1]) - lo <= max(4 * n, 1 << 16):
+        lut = np.zeros(int(uniq[-1]) - lo + 1, dtype=np.int32)
+        lut[uniq - lo] = np.arange(d, dtype=np.int32)
+        idx = lut[v - lo]
+    else:
+        idx = np.searchsorted(uniq, v)
+    lv = lengths[idx]
+    start = np.cumsum(lv) - lv
+    total = int(start[-1] + lv[-1])
+    nbytes = -(-total // 8)
+    # each code spans at most 3 bytes from byte start >> 3: the three byte
+    # lanes are summed per byte (their bits are disjoint, so sum == or)
+    word = codes[idx] << (24 - (start & 7) - lv)
+    q = start >> 3
+    stream = np.zeros(nbytes + 2, dtype=np.float64)
+    for k in range(3):
+        stream += np.bincount(
+            q + k, weights=(word >> (16 - 8 * k)) & 0xFF, minlength=nbytes + 2
+        )
+    nb = -(-n // _BLOCK)
+    block_bits = np.zeros(nb * _BLOCK, dtype=np.int64)
+    block_bits[:n] = lv
+    sub_s, _ = encode_array(uniq, codec="auto", depth=1)
+    sub_l, _ = encode_array(lengths, codec="auto", depth=_MAX_DEPTH)
+    sub_b, _ = encode_array(
+        block_bits.reshape(nb, _BLOCK).sum(axis=1), codec="auto", depth=_MAX_DEPTH
+    )
+    return b"".join((
+        bytes([CODEC_HUFFMAN]), _HDR_HUFFMAN.pack(n, d),
+        _U32.pack(len(sub_s)), sub_s, _U32.pack(len(sub_l)), sub_l,
+        _U32.pack(len(sub_b)), sub_b,
+        stream[:nbytes].astype(np.uint8).tobytes(),
+    ))
+
+
 def _encode_named(name: str, v: np.ndarray, stats: ChunkStats | None, depth: int) -> bytes:
     if name == "plain":
         return _encode_plain(v)
@@ -627,6 +768,8 @@ def _encode_named(name: str, v: np.ndarray, stats: ChunkStats | None, depth: int
         return _encode_pfor(v, depth)
     if name == "fsst":
         return _encode_fsst(v)
+    if name == "huffman":
+        return _encode_huffman(v, stats)
     raise UnknownCodecError(f"unknown codec {name!r}")
 
 
@@ -656,9 +799,9 @@ def encode_array(
     lb = _lower_bounds(stats)
     # best-estimate-first with lower-bound pruning. The lb skips and the FOR
     # dominance skip are exact (a skipped candidate provably cannot be
-    # strictly smaller than the current best); the rle, dict, patch and
-    # pfor gates are heuristics, each kept because dropping it costs far
-    # more encode time than the bytes it would find (receipts in
+    # strictly smaller than the current best); the rle, dict, patch, pfor
+    # and huffman gates are heuristics, each kept because dropping it costs
+    # far more encode time than the bytes it would find (receipts in
     # docs/FORMAT.md). Every other candidate, delta included, is tried.
     # Deterministic either way: every decision is a pure function of the
     # data.
@@ -709,6 +852,8 @@ def encode_array(
             stats.n < 16 or bp.bit_width(stats.vmax - stats.vmin) <= 1
         ):
             continue  # nothing to patch below 2 bits of range
+        if name == "huffman" and not stats.huffman_ok():
+            continue  # below two blocks or outside 2..4096 distinct values
         if best is not None and lb.get(name, 0) >= len(best):
             continue
         enc = _encode_named(name, v, stats, depth)
@@ -738,6 +883,16 @@ def _patch_may_pay(n: int, mode_count: int, rng: int) -> bool:
     return mode_count > 0 and mode_count * bp.bit_width(rng) >= 2 * (n - mode_count)
 
 
+# codec id, n, d, three sub-payload lengths and three minimal sub-payloads
+_HUFFMAN_FRAME = 1 + _HDR_HUFFMAN.size + 3 * (4 + _MIN_PAYLOAD)
+
+
+def _huffman_stream_floor(s: ChunkStats) -> int:
+    """Bytes of huffman's code stream, from below: a prefix code spends at
+    least the order-0 entropy (less a float rounding margin)."""
+    return int(s.entropy_bits() * (1 - 1e-9)) // 8
+
+
 def _lower_bounds(s: ChunkStats) -> dict[str, int]:
     """Safe per-codec size minima (cascades included): used to SKIP a
     candidate only when it provably cannot beat the current best.
@@ -750,7 +905,9 @@ def _lower_bounds(s: ChunkStats) -> dict[str, int]:
     cascade, a periodic sub-stream can legally compress to O(1) bytes
     (constant exception gaps + constant exception values -> FOR width 0),
     so any per-element term would wrongly prune a winning candidate —
-    measured: tile([0,7], 32768) patch-encodes to 82 bytes."""
+    measured: tile([0,7], 32768) patch-encodes to 82 bytes. huffman's code
+    stream is a prefix code of the values themselves, so the entropy bound
+    holds for it whatever its sub-payloads do."""
     n = s.n
     out: dict[str, int] = {}
     out["plain"] = 1 + 6 + (4 * n if -(2**31) <= s.vmin and s.vmax < 2**31 else 8 * n)
@@ -769,6 +926,8 @@ def _lower_bounds(s: ChunkStats) -> dict[str, int]:
     out["dict"] = 21
     out["patch"] = 29
     out["pfor"] = 30 + n // 8
+    if s.huffman_ok():
+        out["huffman"] = _HUFFMAN_FRAME + _huffman_stream_floor(s)
     return out
 
 
@@ -813,6 +972,14 @@ def estimate_sizes(s: ChunkStats) -> dict[str, int]:
     if s.mode_count:
         e = n - s.mode_count
         est["patch"] = 1 + 16 + 8 + sub(e, n) + sub(e, rng)
+    if s.huffman_ok():
+        # the entropy floor plus about 1/8 bit per value of code redundancy
+        d = s.n_distinct
+        nb = -(-n // _BLOCK)
+        est["huffman"] = (
+            1 + 20 + (1 + 13 + sub(d, rng)) + sub(d, _HUFFMAN_MAX_LEN)
+            + sub(nb, _BLOCK * _HUFFMAN_MAX_LEN) + _huffman_stream_floor(s) + n // 64
+        )
     return est
 
 
@@ -835,6 +1002,7 @@ _HEADERS = {
     CODEC_PFOR: _HDR_PFOR,
     CODEC_FSST: _HDR_PLAIN,  # n:u32 passes:u8
     CODEC_BLOCKPACK: _HDR_BLOCKPACK,
+    CODEC_HUFFMAN: _HDR_HUFFMAN,
 }
 # describe_payload's names for the header fields _parse returns
 _FIELD_NAMES = {
@@ -848,17 +1016,22 @@ _FIELD_NAMES = {
     CODEC_PFOR: ("ref", "width", "n_exceptions", "packed_bytes"),
     CODEC_FSST: ("passes",),  # the stream lengths stay internal
     CODEC_BLOCKPACK: ("packed_bytes",),
+    CODEC_HUFFMAN: ("n_distinct",),
 }
 
 
-def _two_subs(rest: memoryview, what: str) -> tuple[memoryview, memoryview]:
-    """The len1 sub1 len2 sub2 tail shared by rle, dict, patch and pfor."""
-    _need(rest, 4, what, "len1")
-    (l1,) = _U32.unpack_from(rest)
-    _need(rest, 8 + l1, what, "sub1")
-    (l2,) = _U32.unpack_from(rest, 4 + l1)
-    _need(rest, 8 + l1 + l2, what, "sub2")
-    return rest[4 : 4 + l1], rest[8 + l1 : 8 + l1 + l2]
+def _subs(rest: memoryview, what: str, k: int = 2) -> tuple[tuple, memoryview]:
+    """k (len:u32 sub) pairs -> (the sub-payloads, the bytes after them):
+    the tail of rle, dict, patch and pfor (k = 2) and of huffman (k = 3)."""
+    out, off = [], 0
+    for i in range(1, k + 1):
+        _need(rest, off + 4, what, f"len{i}")
+        (ln,) = _U32.unpack_from(rest, off)
+        off += 4
+        _need(rest, off + ln, what, f"sub{i}")
+        out.append(rest[off : off + ln])
+        off += ln
+    return tuple(out), rest[off:]
 
 
 def _parse(payload: bytes | memoryview):
@@ -869,7 +1042,8 @@ def _parse(payload: bytes | memoryview):
     Nothing is decompressed. For fsst the header fields are (passes,
     stream lengths) and data holds the tables followed by the codes; for
     blockpack (packed bytes,) with data = the packed groups, whose size
-    depends on the widths and is checked by the decoder.
+    depends on the widths and is checked by the decoder; for huffman data
+    is the code stream, checked by _huffman_parts.
     Runs once per payload on the decode hot path, hence the inline checks."""
     buf = memoryview(payload)
     if not len(buf):
@@ -896,7 +1070,7 @@ def _parse(payload: bytes | memoryview):
             raise TruncatedBlobError(f"payload truncated reading {CODEC_NAMES[cid]} data")
         if cid != CODEC_PFOR:
             return cid, n, hdr, rest[:size], ()
-        return cid, n, hdr + [size], rest[:size], _two_subs(rest[size:], "pfor")
+        return cid, n, hdr + [size], rest[:size], _subs(rest[size:], "pfor")[0]
     if cid == CODEC_FSST:
         passes = hdr[0]
         if passes > _FSST_MAX_PASSES:
@@ -910,7 +1084,10 @@ def _parse(payload: bytes | memoryview):
         (l1,) = hdr
         _need(rest, l1, "blockpack widths")
         return cid, n, [len(rest) - l1], rest[l1:], (rest[:l1],)
-    return cid, n, hdr, rest[:0], _two_subs(rest, CODEC_NAMES[cid])  # rle, dict, patch
+    if cid == CODEC_HUFFMAN:
+        subs, stream = _subs(rest, "huffman", 3)
+        return cid, n, hdr, stream, subs
+    return cid, n, hdr, rest[:0], _subs(rest, CODEC_NAMES[cid])[0]  # rle, dict, patch
 
 
 def describe_payload(payload: bytes | memoryview) -> dict:
@@ -921,10 +1098,14 @@ def describe_payload(payload: bytes | memoryview) -> dict:
     Reads the payload through the same parser as decode_array, so it
     raises the same typed CBSP error on every framing fault decode_array
     rejects before decompressing (codec id, header bounds, field ranges,
-    data and sub-payload extents)."""
-    cid, n, hdr, _data, subs = _parse(payload)
+    data and sub-payload extents). A huffman payload also goes through
+    _huffman_parts, the reader its decoders use, so its code and stream
+    faults are rejected here alike."""
+    cid, n, hdr, data, subs = _parse(payload)
     out: dict = {"codec": CODEC_NAMES[cid], "bytes": len(payload), "n": n}
     out.update(zip(_FIELD_NAMES[cid], hdr))
+    if cid == CODEC_HUFFMAN:
+        out["max_len"] = int(_huffman_parts(n, hdr[0], data, subs)[1].max())
     if subs:
         out["children"] = [describe_payload(s) for s in subs]
     return out
@@ -935,10 +1116,8 @@ def _decode_blockpack(n: int, data: memoryview, sub: memoryview, u32: bool):
     width exceeds 32): one unpack per distinct width plus one scatter.
     Content checks: the widths count and range, the packed size, and zero
     padding in the last block."""
-    widths = decode_array(sub)
     nb = -(-n // _BLOCK)
-    if len(widths) != nb:
-        raise CountMismatchError(f"blockpack: {len(widths)} widths for {nb} blocks")
+    widths = decode_array(sub, nb)
     if nb and (int(widths.min()) < 0 or int(widths.max()) > 64):
         raise PayloadCorruptError("blockpack: block width outside 0..64")
     need = 8 * int(widths.sum())
@@ -967,10 +1146,97 @@ def _decode_blockpack(n: int, data: memoryview, sub: memoryview, u32: bool):
     return out[:n]
 
 
-def decode_array(payload: bytes | memoryview) -> np.ndarray:
+def _huffman_parts(n: int, d: int, stream: memoryview, subs: tuple):
+    """The one huffman reader past the framing -> (symbols, code lengths,
+    block bit bounds). Decodes the three sub-payloads and checks: d in
+    2..min(n, 2^16); d symbols, strictly increasing; d code lengths in
+    1..16 forming a complete prefix code (Kraft sum exactly 1); one bit
+    count per 64-value block, each within its values' shortest and longest
+    code; a stream of exactly ceil(bits / 8) bytes with zero padding."""
+    if not 2 <= d <= min(n, 1 << _HUFFMAN_MAX_LEN):
+        raise PayloadCorruptError(f"huffman: {d} symbols for {n} values")
+    nb = -(-n // _BLOCK)
+    symbols, lengths, bits = (decode_array(sb, k) for sb, k in zip(subs, (d, d, nb)))
+    if (symbols[1:] <= symbols[:-1]).any():
+        raise PayloadCorruptError("huffman: symbols not strictly increasing")
+    lo, hi = int(lengths.min()), int(lengths.max())
+    if lo < 1 or hi > _HUFFMAN_MAX_LEN:
+        raise PayloadCorruptError("huffman: code length outside 1..16")
+    if int(np.left_shift(1, _HUFFMAN_MAX_LEN - lengths).sum()) != 1 << _HUFFMAN_MAX_LEN:
+        raise PayloadCorruptError("huffman: code lengths are not a complete prefix code")
+    per = np.full(nb, _BLOCK, dtype=np.int64)
+    if nb:
+        per[-1] = n - _BLOCK * (nb - 1)
+    if ((bits < lo * per) | (bits > hi * per)).any():
+        raise PayloadCorruptError("huffman: block bit count outside its code lengths")
+    bounds = np.zeros(nb + 1, dtype=np.int64)
+    np.cumsum(bits, out=bounds[1:])
+    total = int(bounds[-1])
+    need = -(-total // 8)
+    if len(stream) < need:
+        raise TruncatedBlobError("payload truncated reading huffman stream")
+    if len(stream) > need:
+        raise PayloadCorruptError(f"huffman: {len(stream)} stream bytes, blocks need {need}")
+    if total % 8 and stream[need - 1] & ((1 << (8 - total % 8)) - 1):
+        raise PayloadCorruptError("huffman: non-zero stream padding")
+    return symbols, lengths, bounds
+
+
+def _decode_huffman(n: int, d: int, stream: memoryview, subs: tuple, u32: bool):
+    """The huffman body -> int64 values (uint32 when u32, or None when a
+    symbol is outside 0..2^32-1). Every 64-value block is decoded at once,
+    in 64 lockstep steps: each step peeks a maxlen-bit window per block and
+    looks up (symbol index, code length) in a 2^maxlen-entry table."""
+    symbols, lengths, bounds = _huffman_parts(n, d, stream, subs)
+    if u32 and (symbols[0] < 0 or symbols[-1] >= 1 << 32):
+        return None
+    nb = len(bounds) - 1
+    order, span, top = _canonical(lengths)
+    table = np.repeat((order << 5 | lengths[order]).astype(np.int32), span)
+    # big-endian 32-bit window at every byte offset; the zero tail covers
+    # a corrupt block running up to 64 maximal codes past the stream
+    buf = np.zeros(len(stream) + 8 * top + 4, dtype=np.uint32)
+    buf[: len(stream)] = np.frombuffer(stream, dtype=np.uint8)
+    win = buf[:-3] << 24 | buf[1:-2] << 16 | buf[2:-1] << 8 | buf[3:]
+    pos = bounds[:-1].copy()
+    rows = np.empty((_BLOCK, nb), dtype=np.int32)
+    last = n - _BLOCK * (nb - 1)
+    end_last = 0
+    shift, mask = 32 - top, (1 << top) - 1
+    for j in range(_BLOCK):
+        if j == last:
+            end_last = int(pos[-1])
+        e = rows[j] = table[(win[pos >> 3] >> (shift - (pos & 7))) & mask]
+        pos += e & 31
+    if last < _BLOCK:
+        pos[-1] = end_last
+    if (pos != bounds[1:]).any():
+        raise PayloadCorruptError("huffman: a block's codes overrun its bit count")
+    idx = rows.T.reshape(-1)[:n] >> 5
+    return (symbols.astype(np.uint32) if u32 else symbols)[idx]
+
+
+def _count(cid: int, n: int, count: int | None) -> None:
+    if count is not None and n != count:
+        raise CountMismatchError(
+            f"{CODEC_NAMES[cid]}: {n} values where its container holds {count}"
+        )
+
+
+def _within(k: int, n: int, what: str) -> None:
+    if k > n:
+        raise PayloadCorruptError(f"{what} above the {n} values")
+
+
+def decode_array(payload: bytes | memoryview, count: int | None = None) -> np.ndarray:
     """Inverse of encode_array; returns int64 array. Raises structured errors
-    on corruption (never returns wrong data silently)."""
+    on corruption (never returns wrong data silently). `count`, when given,
+    is the number of values the container holds: a header that says
+    otherwise fails CBSP203 before anything is allocated. Sub-payloads are
+    read the same way, with counts bounded by their parent's, so no header
+    can make a decoder allocate more than the outermost count allows."""
     cid, n, hdr, data, subs = _parse(payload)
+    _count(cid, n, count)
     if cid == CODEC_PLAIN:
         return np.frombuffer(data, dtype=f"<i{hdr[0]}", count=n).astype(np.int64)
     if cid == CODEC_BITPACK:
@@ -978,22 +1244,18 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
         return u.view(np.int64) if u.flags.owndata else u.astype(np.int64)
     if cid == CODEC_BLOCKPACK:
         return _decode_blockpack(n, data, subs[0], u32=False).view(np.int64)
+    if cid == CODEC_HUFFMAN:
+        return _decode_huffman(n, hdr[0], data, subs, u32=False)
     if cid == CODEC_FOR:
-        sub = decode_array(subs[0])
-        if len(sub) != n:
-            raise CountMismatchError(f"for: {len(sub)} != {n}")
+        sub = decode_array(subs[0], n)
         return (sub.view(np.uint64) + np.uint64(hdr[0] % (1 << 64))).view(np.int64)
     if cid == CODEC_DELTA:
-        zz = decode_array(subs[0])
-        if len(zz) != n:
-            raise CountMismatchError(f"delta: {len(zz)} != {n}")
-        deltas = vi.zigzag_decode(zz.view(np.uint64))
+        deltas = vi.zigzag_decode(decode_array(subs[0], n).view(np.uint64))
         return np.cumsum(deltas.view(np.uint64)).view(np.int64)
     if cid == CODEC_RLE:
         (n_runs,) = hdr
-        run_vals, run_lens = map(decode_array, subs)
-        if len(run_vals) != n_runs or len(run_lens) != n_runs:
-            raise CountMismatchError("rle: run count mismatch")
+        _within(n_runs, n, "rle: run count")
+        run_vals, run_lens = (decode_array(sb, n_runs) for sb in subs)
         if (run_lens < 0).any():
             raise PayloadCorruptError("rle: negative run length")
         if n_runs and int(run_lens.sum()) != n:
@@ -1001,35 +1263,26 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
         return np.repeat(run_vals, run_lens)
     if cid == CODEC_DICT:
         (d,) = hdr
-        uniq, idx = map(decode_array, subs)
-        if len(uniq) != d:
-            raise CountMismatchError("dict: dictionary size mismatch")
-        if len(idx) != n:
-            raise CountMismatchError("dict: index count mismatch")
+        _within(d, n, "dict: dictionary size")
+        uniq, idx = decode_array(subs[0], d), decode_array(subs[1], n)
         if n and ((idx < 0).any() or (idx >= d).any()):
             raise PayloadCorruptError("dict: index out of range")
         return uniq[idx]
     if cid == CODEC_PFOR:
         ref, w, n_exc, _ = hdr
-        resid = bp.unpack(data, n, w)
-        gaps, high = map(decode_array, subs)
-        if len(gaps) != n_exc or len(high) != n_exc:
-            raise CountMismatchError("pfor: exception count mismatch")
-        if n_exc > n:
-            raise PayloadCorruptError("pfor: more exceptions than values")
+        _within(n_exc, n, "pfor: exception count")
         if w == 64 and n_exc:
             raise PayloadCorruptError("pfor: exceptions at full width")
+        resid = bp.unpack(data, n, w)
+        gaps, high = (decode_array(sb, n_exc) for sb in subs)
         if n_exc:
             pos = _exc_positions(gaps, n, "pfor")
             resid[pos] |= high.view(np.uint64) << np.uint64(w)
         return (resid + np.uint64(ref % (1 << 64))).view(np.int64)
     if cid == CODEC_PATCH:
         mode, n_exc = hdr
-        gaps, exc_vals = map(decode_array, subs)
-        if len(gaps) != n_exc or len(exc_vals) != n_exc:
-            raise CountMismatchError("patch: exception count mismatch")
-        if n_exc > n:
-            raise PayloadCorruptError("patch: more exceptions than values")
+        _within(n_exc, n, "patch: exception count")
+        gaps, exc_vals = (decode_array(sb, n_exc) for sb in subs)
         out = np.full(n, mode, dtype=np.int64)
         if n_exc:
             pos = _exc_positions(gaps, n, "patch")
@@ -1049,30 +1302,35 @@ def decode_array(payload: bytes | memoryview) -> np.ndarray:
     return vi.zigzag_decode(u)
 
 
-def try_decode_u32(payload: bytes | memoryview) -> np.ndarray | None:
+_U32_LANE = (CODEC_FOR, CODEC_BITPACK, CODEC_BLOCKPACK, CODEC_HUFFMAN)
+
+
+def try_decode_u32(payload: bytes | memoryview, count: int | None = None) -> np.ndarray | None:
     """Decode a payload natively into uint32 when it is a terminal bitpack
-    or blockpack of width <= 32, or a FOR wrapper (non-negative reference,
+    or blockpack of width <= 32, a huffman whose symbols are in
+    0..2^32-1, or a FOR wrapper (non-negative reference,
     certified in-range) around one — the dominant shapes on token-scale
     data; None otherwise. Values are < 2**32 and non-negative by
     construction, so the caller's 32-bit arithmetic lane needs no further
     certification. Half the memory traffic of decode_array + astype on the
     decode hot path."""
     buf = memoryview(payload)
-    if not len(buf) or buf[0] not in (CODEC_FOR, CODEC_BITPACK, CODEC_BLOCKPACK):
+    if not len(buf) or buf[0] not in _U32_LANE:
         return None
     cid, n, hdr, data, subs = _parse(buf)
+    _count(cid, n, count)
     if cid == CODEC_BITPACK:
         return bp.unpack32(data, n, hdr[0]) if hdr[0] <= 32 else None
     if cid == CODEC_BLOCKPACK:
         return _decode_blockpack(n, data, subs[0], u32=True)
+    if cid == CODEC_HUFFMAN:
+        return _decode_huffman(n, hdr[0], data, subs, u32=True)
     (ref,) = hdr
     if not 0 <= ref < (1 << 32):
         return None
-    sub = try_decode_u32(subs[0])
+    sub = try_decode_u32(subs[0], n)
     if sub is None:
         return None
-    if len(sub) != n:
-        raise CountMismatchError(f"for: {len(sub)} != {n}")
     if len(sub) and ref + int(sub.max()) >= (1 << 32):
         return None  # would wrap the 32-bit lane; take the 64-bit path
     return sub + np.uint32(ref)

@@ -514,19 +514,34 @@ def test_describe_chunk_exhaustive_bitflip_never_lies():
                  np.ones(n, dtype=np.int64),
                  rng.integers(-9999, 9999, n).astype(np.int64))],
     )
-    clean = blob.describe_chunk(b)
     lied = []
-    for pos in range(len(b)):
-        for bit in (1, 2, 4, 8, 16, 32, 64, 128):
-            t = bytearray(b)
-            t[pos] ^= bit
-            try:
-                d = blob.describe_chunk(bytes(t))
-                if d != clean:
-                    lied.append((pos, bit))
-            except EngineError:
-                pass
+    for chunk in (b, _huffman_blob()):
+        clean = blob.describe_chunk(chunk)
+        for pos in range(len(chunk)):
+            for bit in (1, 2, 4, 8, 16, 32, 64, 128):
+                t = bytearray(chunk)
+                t[pos] ^= bit
+                try:
+                    d = blob.describe_chunk(bytes(t))
+                    if d != clean:
+                        lied.append((len(chunk), pos, bit))
+                except EngineError:
+                    pass
     assert not lied, lied[:10]
+
+
+def _huffman_blob() -> bytes:
+    """A 757-value chunk whose values payload (mode 0) is huffman."""
+    rng = np.random.default_rng(12)
+    n = 40
+    lens = rng.integers(10, 30, n).astype(np.int64)
+    vals = ((rng.zipf(1.3, int(lens.sum())) - 1) % 64).astype(np.int64)
+    ids = [f"h{i:04d}" for i in range(n)]
+    b, info = blob.encode_chunk(
+        "".join(ids).encode(), np.full(n, 5, dtype=np.int64), lens, vals
+    )
+    assert info["codec"] == "huffman"
+    return b
 
 
 def test_describe_chunk_malformed_extras_valid_crc_typed():
@@ -654,8 +669,10 @@ def test_resealed_crc_mutation_fuzz_typed_or_clean():
         return bytes(raw)
 
     bad = []
-    for trial in range(2000):
-        raw = bytearray(b)
+    hb = _huffman_blob()
+    for trial in range(3000):
+        # one trial in three mutates the chunk whose values are huffman
+        raw = bytearray(hb if trial % 3 == 2 else b)
         for _ in range(int(rng.integers(1, 4))):
             pos = int(rng.integers(4, len(raw)))  # keep the magic intact
             raw[pos] = int(rng.integers(0, 256))
@@ -850,6 +867,136 @@ def _raised_code(fn, arg):
     except EngineError as e:
         return e.code
     return None
+
+
+# huffman := n:u32 d:u32 (len:u32 sub)x3 stream, crafted from parts: the
+# code 1 -> "0", 2 -> "10", 3 -> "11" over 128 values, 63 ones and a two
+# in block 0 (65 bits) and 64 twos in block 1 (128 bits): 193 bits, so the
+# last of the 25 stream bytes holds 7 bits of padding
+_H_VALUES = [1] * 63 + [2] * 65
+_H_CODE = {1: "0", 2: "10", 3: "11"}
+
+
+def _h_stream(vals) -> bytes:
+    bits = "".join(_H_CODE[v] for v in vals)
+    bits += "0" * (-len(bits) % 8)
+    return bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
+
+
+def _huffman(symbols=(1, 2, 3), lengths=(1, 2, 2), bits=(65, 128), stream=None,
+             n=128, d=None) -> bytes:
+    subs = [core.encode_array(np.asarray(a, dtype=np.int64), "plain")[0]
+            for a in (symbols, lengths, bits)]
+    return (
+        bytes([core.CODEC_HUFFMAN])
+        + struct.pack("<II", n, len(symbols) if d is None else d)
+        + b"".join(struct.pack("<I", len(p)) + p for p in subs)
+        + (_h_stream(_H_VALUES) if stream is None else stream)
+    )
+
+
+def _huffman_chunk(payload: bytes) -> bytes:
+    """A two-doc, 128-value chunk with its values section replaced by
+    (mode 0, payload), the section length and the body crc recomputed."""
+    b, _ = blob.encode_chunk(
+        b"hd01hd02", np.full(2, 4, dtype=np.int64), np.full(2, 64, dtype=np.int64),
+        np.asarray(_H_VALUES, dtype=np.int64),
+    )
+    raw = bytearray(b)
+    sd, sl, sv = struct.unpack_from("<III", raw, 22)
+    start = blob.HEADER_LEN + sd + sl
+    raw[start : start + sv] = b"\x00" + payload
+    struct.pack_into("<I", raw, 30, 1 + len(payload))
+    vmin, vmax = struct.unpack_from("<qq", raw, 34)
+    crc = zlib.crc32(struct.pack("<qq", vmin, vmax), zlib.crc32(bytes(raw[blob.HEADER_LEN:])))
+    struct.pack_into("<I", raw, 18, crc & 0xFFFFFFFF)
+    return bytes(raw)
+
+
+_HUFFMAN_FAULTS = {
+    "length-0": ("CBSP204", dict(lengths=(0, 1, 1))),
+    "length-17": ("CBSP204", dict(lengths=(1, 2, 17))),
+    "over-subscribed": ("CBSP204", dict(lengths=(1, 1, 2))),
+    "incomplete": ("CBSP204", dict(lengths=(1, 2, 3))),
+    "unsorted-symbols": ("CBSP204", dict(symbols=(2, 1, 3))),
+    "duplicate-symbols": ("CBSP204", dict(symbols=(1, 1, 3))),
+    "d-not-symbols": ("CBSP203", dict(d=4)),
+    "d-not-lengths": ("CBSP203", dict(lengths=(1, 2, 2, 2))),
+    "block-count": ("CBSP203", dict(bits=(193,))),
+    "bits-not-stream": ("CBSP204", dict(bits=(65, 120))),
+    "bits-past-codes": ("CBSP204", dict(bits=(65, 129))),
+    "nonzero-padding": ("CBSP204", dict(stream=_h_stream(_H_VALUES)[:-1] + b"\x81")),
+    "truncated-stream": ("CBSP104", dict(stream=_h_stream(_H_VALUES)[:-1])),
+}
+
+
+# inside a chunk, each fault is one more case of the agreement test below
+_AGREEMENT_CASES.update({
+    f"huffman-{name}": (
+        code, lambda parts=parts: _huffman_chunk(_huffman(**parts)),
+        blob.decode_chunk, blob.describe_chunk,
+    )
+    for name, (code, parts) in _HUFFMAN_FAULTS.items()
+})
+
+
+@pytest.mark.parametrize("case", sorted(_HUFFMAN_FAULTS))
+def test_huffman_faults_fail_alike_in_decode_u32_and_describe(case):
+    # every huffman code and stream fault goes through the one reader
+    # (core._huffman_parts): both payload decoders and describe_payload
+    # reject it with the same typed code
+    code, parts = _HUFFMAN_FAULTS[case]
+    crafted = _huffman(**parts)
+    got = {
+        fn.__name__: _raised_code(fn, crafted)
+        for fn in (core.decode_array, core.try_decode_u32, core.describe_payload)
+    }
+    assert set(got.values()) == {code}, got
+
+
+def test_huffman_crafted_payload_decodes_and_checks_block_ends():
+    good = _huffman()
+    want = np.asarray(_H_VALUES, dtype=np.int64)
+    np.testing.assert_array_equal(core.decode_array(good), want)
+    np.testing.assert_array_equal(core.try_decode_u32(good), want)
+    assert core.describe_payload(good)["max_len"] == 2
+    chunk = _huffman_chunk(good)
+    np.testing.assert_array_equal(blob.decode_chunk(chunk)[3], want)
+    assert blob.describe_chunk(chunk)["values"]["payload"]["codec"] == "huffman"
+    # bit counts that sum right but split the blocks wrong are content:
+    # only decoding the codes finds that block 0 ends at bit 65, not 66
+    shifted = _huffman(bits=(66, 127))
+    assert core.describe_payload(shifted)["codec"] == "huffman"
+    assert _raised_code(core.decode_array, shifted) == "CBSP204"
+    assert _raised_code(core.try_decode_u32, shifted) == "CBSP204"
+
+
+def test_huffman_payload_every_bitflip_typed_and_agreeing():
+    # every single-bit flip of a real huffman payload: each reader decodes
+    # or raises a typed error, and a fault describe_payload rejects is
+    # rejected with the same code by both decoders
+    rng = np.random.default_rng(4)
+    v = ((rng.zipf(1.3, 300) - 1) % 32).astype(np.int64)
+    p = core._encode_huffman(v)
+    bad = []
+    for pos in range(len(p)):
+        for bit in (1, 2, 4, 8, 16, 32, 64, 128):
+            t = bytearray(p)
+            t[pos] ^= bit
+            codes = {}
+            for fn in (core.describe_payload, core.decode_array, core.try_decode_u32):
+                try:
+                    fn(bytes(t))
+                    codes[fn.__name__] = None
+                except EngineError as e:
+                    codes[fn.__name__] = e.code
+                except Exception as e:  # noqa: BLE001 - the assertion itself
+                    bad.append((pos, bit, fn.__name__, type(e).__name__))
+            c = codes.get("describe_payload")
+            decoders = {codes.get("decode_array"), codes.get("try_decode_u32")}
+            if pos and c is not None and decoders != {c}:
+                bad.append((pos, bit, codes))
+    assert not bad, bad[:5]
 
 
 @pytest.mark.parametrize("case", sorted(_AGREEMENT_CASES))

@@ -676,17 +676,188 @@ def test_patch_gate_opens_on_zipf_not_on_uniform():
     # the closed-form gate: patch is tried when the bits dropping the mode
     # saves pay for ~2 bits of gap per exception. A zipf-mod-256 stream
     # (mode ~30%: the old majority gate never tried it) opens it, and patch
-    # wins there; a near-uniform 16-bit stream keeps it shut
+    # beats bitpack there (huffman, the entropy coder, beats both); a
+    # near-uniform 16-bit stream keeps it shut
     rng = np.random.default_rng(13)
     zipf = ((rng.zipf(1.3, 65536) - 1) % 256).astype(np.int64)
     uniform_hi = rng.integers(0, 50257, 65536).astype(np.int64)
     s = ChunkStats.analyze(zipf)
     assert s.n - s.mode_count > s.n // 2
     assert core._patch_may_pay(s.n, s.mode_count, s.vmax - s.vmin)
+    patch = encode_array(zipf, "patch")[0]
+    assert len(patch) < len(core._encode_bitpack(zipf))
     p, name = encode_array(zipf)
-    assert name == "patch"
-    assert len(p) < len(core._encode_bitpack(zipf))
+    assert name == "huffman" and len(p) < len(patch)
+    np.testing.assert_array_equal(decode_array(patch), zipf)
     np.testing.assert_array_equal(decode_array(p), zipf)
     s = ChunkStats.analyze(uniform_hi)
     assert not core._patch_may_pay(s.n, s.mode_count, s.vmax - s.vmin)
     assert encode_array(uniform_hi)[1] != "patch"
+
+
+# ---------- huffman (canonical, length-limited, 64-value lockstep blocks) ----------
+
+
+def _zipf_lowcard(n: int, seed: int = 3) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    return ((rng.zipf(1.3, n) - 1) % 256).astype(np.int64)
+
+
+def _fib_stream(k: int) -> np.ndarray:
+    """Symbol 5*i repeated fib(i) times, shuffled: unlimited Huffman
+    gives the rarest symbols depth k - 1."""
+    fib = [1, 1]
+    while len(fib) < k:
+        fib.append(fib[-1] + fib[-2])
+    v = np.repeat(5 * np.arange(k, dtype=np.int64), fib)
+    np.random.default_rng(8).shuffle(v)
+    return v
+
+
+def _optimal_bits(counts) -> int:
+    """Total bits of an unlimited optimal prefix code (sum of the merged
+    weights of any Huffman tree)."""
+    import heapq
+
+    h = [int(c) for c in counts]
+    heapq.heapify(h)
+    total = 0
+    while len(h) > 1:
+        w = heapq.heappop(h) + heapq.heappop(h)
+        total += w
+        heapq.heappush(h, w)
+    return total
+
+
+def _huffman_roundtrip(v: np.ndarray) -> bytes:
+    p, used = encode_array(v, "huffman")
+    assert used == "huffman" and p[0] == core.CODEC_HUFFMAN
+    np.testing.assert_array_equal(decode_array(p), v)
+    u32 = core.try_decode_u32(p)
+    assert u32 is not None and u32.dtype == np.uint32
+    np.testing.assert_array_equal(u32, v)
+    desc = core.describe_payload(p)
+    assert (desc["codec"], desc["n"], desc["bytes"]) == ("huffman", len(v), len(p))
+    assert desc["n_distinct"] == len(np.unique(v))
+    return p
+
+
+@pytest.mark.parametrize("case", ["n128", "n129", "d2", "d4096", "lowcard", "skewed"])
+def test_huffman_roundtrip_shapes(case):
+    rng = np.random.default_rng(17)
+    v = {
+        "n128": _zipf_lowcard(128),
+        "n129": _zipf_lowcard(129),  # one value in the last block
+        "d2": rng.integers(0, 2, 1000).astype(np.int64) * 1000 + 7,
+        "d4096": np.concatenate([np.arange(4096), rng.integers(0, 4096, 60_000)]),
+        "lowcard": _zipf_lowcard(65536),
+        "skewed": _fib_stream(22),
+    }[case].astype(np.int64)
+    p = _huffman_roundtrip(v)
+    if case == "skewed":
+        # an unlimited Huffman code is 21 deep here: the stored lengths are
+        # limited to 16 and still form a complete code
+        s = ChunkStats.analyze(v)
+        lengths = core._huffman_lengths(s._counts)
+        assert int(lengths.max()) == 16 == core.describe_payload(p)["max_len"]
+        assert (2.0 ** -lengths.astype(float)).sum() == 1.0
+
+
+def test_huffman_lengths_are_optimal_below_the_limit():
+    # below the 16-bit limit the code spends exactly the bits of an
+    # optimal (unlimited) Huffman code, never fewer than the entropy
+    rng = np.random.default_rng(5)
+    for counts in (
+        np.array([1, 1]), np.array([5, 5, 5, 5, 5]), np.array([1, 2, 4, 8, 16]),
+        rng.integers(1, 1000, 300), rng.integers(20, 400, 2000), 2 ** np.arange(15),
+    ):
+        lengths = core._huffman_lengths(counts)
+        assert int(lengths.max()) <= 16
+        assert (2.0 ** -lengths.astype(float)).sum() == 1.0
+        assert int(counts @ lengths) == _optimal_bits(counts)
+
+
+def test_huffman_tied_counts_break_by_symbol():
+    # five symbols of equal count: the two longest codes go to the two
+    # largest symbols, whatever order the values come in
+    assert core._huffman_lengths(np.full(5, 7)).tolist() == [2, 2, 2, 3, 3]
+    v = np.repeat(np.array([3, 9, 11, 40, 41], dtype=np.int64), 40)
+    rng = np.random.default_rng(1)
+    a = rng.permutation(v)
+    b = rng.permutation(v)
+    pa, pb = core._encode_huffman(a), core._encode_huffman(b)
+    assert pa == core._encode_huffman(a.copy())
+    # same histogram -> same symbol and length sub-payloads (the header
+    # through the lengths payload): only the block bits and stream differ
+    cut = 9 + 4 + core._U32.unpack_from(pa, 9)[0]
+    cut += 4 + core._U32.unpack_from(pa, cut)[0]
+    assert pa[:cut] == pb[:cut]
+    _huffman_roundtrip(a)
+
+
+def test_huffman_bytes_identical_for_int32_int64_and_reencode():
+    v = _zipf_lowcard(70_000)
+    p64, n64 = encode_array(v)
+    p32, n32 = encode_array(v.astype(np.int32))
+    assert n64 == n32 == "huffman" and p64 == p32
+    again, _ = encode_array(decode_array(p64))
+    assert again == p64
+    assert encode_array(core.try_decode_u32(p64))[0] == p64
+
+
+def test_huffman_declines_outside_its_alphabet():
+    with pytest.raises(ValueOverflowError):
+        encode_array(np.full(300, 4, dtype=np.int64), "huffman")
+    # negative symbols decode on the int64 path; the u32 lane declines
+    v = _zipf_lowcard(1000) - 100
+    p = encode_array(v, "huffman")[0]
+    np.testing.assert_array_equal(decode_array(p), v)
+    assert core.try_decode_u32(p) is None
+    # the candidate needs 2..4096 distinct values and two blocks
+    assert not ChunkStats.analyze(np.arange(5000)).huffman_ok()
+    assert not ChunkStats.analyze(_zipf_lowcard(127)).huffman_ok()
+    assert ChunkStats.analyze(_zipf_lowcard(128)).huffman_ok()
+    assert not ChunkStats.analyze(_zipf_lowcard(5000), deep=False).huffman_ok()
+
+
+def test_huffman_lower_bound_is_exact_and_auto_never_loses():
+    # the entropy floor never exceeds the encoded size, and auto is never
+    # larger than forced huffman or plain (invariant 5)
+    rng = np.random.default_rng(23)
+    phrases = [rng.integers(0, 4096, int(rng.integers(2, 9))) for _ in range(512)]
+    picks = (rng.zipf(1.2, 40_000) - 1) % 512
+    streams = [
+        _zipf_lowcard(65536),
+        np.concatenate([phrases[p] for p in picks])[:65536].astype(np.int64),
+        100_000 + rng.integers(0, 1 << 12, 65536),
+        rng.integers(0, 2, 5000) * 3,
+        _fib_stream(20),
+        np.repeat(rng.integers(0, 3000, 3000), rng.geometric(0.05, 3000))[:50_000],
+    ]
+    for v in streams:
+        v = np.asarray(v, dtype=np.int64)
+        s = ChunkStats.analyze(v)
+        assert s.huffman_ok()
+        forced = encode_array(v, "huffman")[0]
+        assert core._lower_bounds(s)["huffman"] <= len(forced)
+        auto, _ = encode_array(v)
+        assert len(auto) <= len(forced)
+        assert len(auto) <= len(encode_array(v, "plain")[0])
+        np.testing.assert_array_equal(decode_array(auto), v)
+
+
+def test_huffman_stream_matches_a_bit_string_reference():
+    # the vectorized writer against a plain string of canonical codes,
+    # built per value from the lengths alone
+    v = _zipf_lowcard(1000, seed=9)
+    p = core._encode_huffman(v)
+    uniq, counts = np.unique(v, return_counts=True)
+    lengths = core._huffman_lengths(counts).tolist()
+    code, prev, codes = -1, 0, {}
+    for ln, sym in sorted(zip(lengths, uniq.tolist())):
+        code = (code + 1) << (ln - prev)
+        prev, codes[sym] = ln, format(code, f"0{ln}b")
+    bits = "".join(codes[x] for x in v.tolist())
+    bits += "0" * (-len(bits) % 8)
+    want = bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
+    assert p.endswith(want) and len(want) > 500

@@ -2,7 +2,9 @@
 reference's checked-in golden files (fixtures/golden/*.sha256,
 docs/GOLDEN_FIXTURES_GUIDE.md): any unintended change to codec byte layout
 or selection policy fails here loudly. Regenerate intentionally with
-`python tests/test_golden.py --regen` after a deliberate format change.
+`python tests/test_golden.py --regen` after a deliberate format change;
+`python tests/test_golden.py` compares every entry and exits 1 on a
+mismatch.
 """
 
 import hashlib
@@ -13,14 +15,18 @@ import sys
 import numpy as np
 import pytest
 
-from copybook_rs_spark import blob
-from copybook_rs_spark.codecs import encode_array
+_HERE = os.path.dirname(os.path.abspath(__file__))
+if __name__ == "__main__":  # run as a script: the repo root and tests/
+    sys.path[:0] = [os.path.dirname(_HERE), _HERE]
 
-from synthetic import synthetic_arrays
+from copybook_rs_spark import blob  # noqa: E402
+from copybook_rs_spark.codecs import encode_array  # noqa: E402
 
-GOLDEN_PATH = os.path.join(os.path.dirname(__file__), "golden_sha256.json")
+from synthetic import synthetic_arrays  # noqa: E402
+
+GOLDEN_PATH = os.path.join(_HERE, "golden_sha256.json")
 PROFILES = ["uniform_hi", "lowcard", "runs", "narrow_range", "texty", "mixed", "edge"]
-CODECS = ["auto", "plain", "bitpack", "for", "delta", "rle", "dict", "fsst"]
+CODECS = ["auto", "plain", "bitpack", "for", "delta", "rle", "dict", "fsst", "huffman"]
 
 
 def _profile_values(profile: str) -> np.ndarray:
@@ -112,7 +118,7 @@ def test_golden_typed_extras(golden, computed):
 def test_auto_selection_expected_codecs(golden):
     # FIXTURES.md invariant 5: the right codec family wins per profile
     assert golden["runs/auto"]["used"] == "rle"
-    assert golden["lowcard/auto"]["used"] in ("dict", "bitpack", "rle", "fsst", "patch")
+    assert golden["lowcard/auto"]["used"] == "huffman"
     assert golden["narrow_range/auto"]["used"] in ("for", "dict", "delta")
 
 
@@ -121,3 +127,13 @@ if __name__ == "__main__":
         with open(GOLDEN_PATH, "w") as f:
             json.dump(_compute(), f, indent=1, sort_keys=True)
         print(f"regenerated {GOLDEN_PATH}")
+        sys.exit(0)
+    with open(GOLDEN_PATH) as f:
+        want = json.load(f)
+    got = _compute()
+    keys = want.keys() | got.keys()
+    bad = sorted(k for k in keys if want.get(k) != got.get(k))
+    for k in bad:
+        print(f"MISMATCH {k}: golden {want.get(k)} computed {got.get(k)}")
+    print(f"{len(keys) - len(bad)} of {len(keys)} goldens match")
+    sys.exit(1 if bad else 0)
